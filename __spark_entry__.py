@@ -1977,7 +1977,7 @@ _REFINERS: list[tuple[str, str, dict | None, str]] = [
      "$$'re$$, ' are', 'g'), $$'ve$$, ' have', 'g'), $$'ll$$, ' will', 'g'),"
      "$$'m$$, ' am', 'g')"),
     ("r_text_normalization", "TextNormalizationRefiner", None,
-     r"trim(regexp_replace(translate(text, '‘’“”–—', $$''""--$$), '\s+', ' ', 'g'))"),
+     r"""trim(regexp_replace(translate(text, '‘’“”–—', $$''""--$$), '\s+', ' ', 'g'))"""),
     ("r_remove_stopwords", "RemoveStopwordsRefiner", None,
      f"array_to_string(list_filter({W('text')}, x -> NOT list_contains({SW_SQL}, lower(x))), ' ')"),
 ]

@@ -8,7 +8,17 @@ debuggability. Spark-first differences:
   - snapshots are *partitioned Parquet directories*, not single json files,
     so a step at 100 TB is still a parallel write/read;
   - checkpointing is OPT-IN per pipeline: by default the chain stays a
-    single lazy Catalyst plan (the reference materializes every step).
+    single lazy Catalyst plan (the reference materializes every step);
+  - each step's schema is recorded in ``_steps.json``, so reading a step
+    back plans no schema-inference job (a parquet-footer scan).
+
+A write is crash-safe: the step goes to a temporary sibling directory,
+is renamed into place, and only then is ``_steps.json`` updated (the
+reference's ``LazyFileStorage`` tmp + ``os.replace`` pattern). A job
+that fails mid-write leaves the previous snapshot of that step and the
+metadata as they were. The renames and the metadata update are not one
+atomic step: a process killed between them can leave step k missing or
+newer than its metadata entry.
 """
 
 from __future__ import annotations
@@ -19,6 +29,7 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class StepStore:
@@ -52,20 +63,44 @@ class StepStore:
     # -- read/write -------------------------------------------------------
     def write(self, df: DataFrame, step: int, op_name: str = "") -> str:
         path = self.step_path(step)
-        df.write.mode("overwrite").parquet(path)
+        tmp, old = path + ".tmp", path + ".old"
+        for leftover in (tmp, old):  # from a write that crashed midway
+            shutil.rmtree(leftover, ignore_errors=True)
+        try:
+            df.write.parquet(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        # a directory cannot be renamed over a non-empty one: move the
+        # previous snapshot aside first, drop it once the metadata points
+        # at the new one
+        if os.path.exists(path):
+            os.rename(path, old)
+        os.rename(tmp, path)
         meta = self._read_meta()
         meta["steps"] = [s for s in meta["steps"] if s["step"] != step]
         meta["steps"].append({"step": step, "path": path, "op": op_name,
-                              "ts": time.time()})
+                              "ts": time.time(),
+                              "schema": df.schema.json()})
         meta["steps"].sort(key=lambda s: s["step"])
         self._write_meta(meta)
+        shutil.rmtree(old, ignore_errors=True)
         return path
 
     def read(self, spark: SparkSession, step: int | None = None) -> DataFrame:
+        """Read step ``step`` (default: the last one) with its recorded
+        schema. Spark makes the columns of a file source nullable, which
+        is what inference would return; a step recorded without a schema
+        falls back to inference."""
         k = self.last_step if step is None else step
         if k < 0:
             raise FileNotFoundError(f"no steps in {self.cache_dir}")
-        return spark.read.parquet(self.step_path(k))
+        schema = next((s.get("schema") for s in self.lineage()
+                       if s["step"] == k), None)
+        reader = spark.read
+        if schema:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(self.step_path(k))
 
     def lineage(self) -> list[dict]:
         return self._read_meta()["steps"]

@@ -116,13 +116,15 @@ def quality_score(col: Column, stopwords: list[str]) -> Column:
     0.25*len_score + 0.25*stopword_score + 0.25*punct_score + 0.25*alpha
       - len_score: min(word_count/100, 1)
       - stopword_score: min(stopword_ratio/0.3, 1)
-      - punct_score: 1 if text ends with . ! or ?, else 0
+      - punct_score: 1 if the space-trimmed text's last character is
+        . ! or ?, else 0
       - alpha: alpha_word_ratio
     Deterministic, SQL-mirrorable; the shape follows published text
     quality heuristics (Gopher/C4-style rules).
     """
     len_score = F.least(word_count(col).cast("double") / 100.0, F.lit(1.0))
     sw_score = F.least(F.coalesce(stopword_ratio(col, stopwords), F.lit(0.0)) / 0.3, F.lit(1.0))
-    punct = F.when(F.trim(col).rlike(r"[.!?]$"), 1.0).otherwise(0.0)
+    # \z: absolute end (Java $ also matches before a final \r or \n)
+    punct = F.when(F.trim(col).rlike(r"[.!?]\z"), 1.0).otherwise(0.0)
     alpha = F.coalesce(alpha_word_ratio(col), F.lit(0.0))
     return 0.25 * len_score + 0.25 * sw_score + 0.25 * punct + 0.25 * alpha

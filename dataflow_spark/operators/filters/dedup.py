@@ -465,8 +465,11 @@ class _NearDupBase(_BaseDedup):
         in one shuffle instead. Only used where the signature is a
         single long (SimHash); array signatures (MinHash 64 longs,
         embeddings) would multiply the bucket collect_list buffers and
-        keep the join path.
+        keep the join path. ``verify`` and ``verify_expr`` are mutually
+        exclusive.
         """
+        if verify is not None and verify_expr is not None:
+            raise ValueError("pass verify or verify_expr, not both")
         # one shuffle (groupBy bucket) + in-bucket edge expansion instead
         # of a two-sided self-join on (band, h): same components, half
         # the shuffled bytes. Edge expansion per bucket of size k:
@@ -832,13 +835,18 @@ class IncrementalMinHashDedupFilter(MinHashDeduplicateFilter):
                    "(x, y) -> x = y), eq -> eq)) as double) / "
                    f"{int(self.num_perm)}")))
         # eager localCheckpoint scopes the two signature caches to THIS
-        # invocation (r10, see _collapse_exact): matched is the last
+        # invocation (see _collapse_exact): matched is the last
         # consumer of new_sigs/ex_sigs, and both are deterministic plans
         # a later run() over the same input would otherwise be silently
         # served by the CacheManager (sameResult match). The checkpoint
         # holds one long per matched row — strictly smaller than the
         # signature caches it releases; the returned survivors plan
         # references the checkpoint, never the caches.
+        # Lifetime: the checkpoint blocks sit in the executors' block
+        # managers until the driver garbage-collects the returned plan
+        # (Spark's ContextCleaner then removes them). They are not
+        # replicated: losing an executor loses its blocks, and the
+        # survivors plan then fails instead of recomputing.
         matched = (est.filter(F.col("_est") >= self.threshold)
                    .select("_nid").distinct()
                    .localCheckpoint(eager=True))

@@ -8,6 +8,13 @@ preserved positionally within the partition (no shuffle), so output
 alignment is exact. Concurrency = number of partitions; repartition
 upstream to match the serving backend's capacity.
 
+When the serving is deterministic (``LLMServing.deterministic``: greedy
+decoding, mocks), each distinct prompt of an Arrow batch is sent once
+and its answer fanned back out to every row that rendered it. The memo
+lives inside one batch: no shuffle, no reordering, nothing kept across
+batches, tasks or runs. Sampled generation keeps one call per row.
+Requests open one connection each (``serving/api.py``).
+
 Reference: PromptedGenerator (core_text/generate/prompted_generator.py:
 58-90), PromptedFilter (core_text/filter/prompted_filter.py:81),
 PromptedRefiner (core_text/refine/prompted_refiner.py), PromptedEvaluator
@@ -101,21 +108,26 @@ def llm_map(df: DataFrame, serving: LLMServing, prompt_template,
     else:
         out_schema = StructType(df.schema.fields + [StructField(output_key, StringType())])
     bs = serving.batch_size
-    prompt_cols = [input_key]
+    dedup = serving.deterministic
     render, prompt_system = _prompt_renderer(prompt_template, input_key)
     system_prompt = system_prompt or prompt_system
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            prompts = [
-                system_prompt + render(row[input_key])
-                for _, row in pdf[prompt_cols].iterrows()
-            ]
-            outputs: list[str] = []
-            for i in range(0, len(prompts), bs):
-                outputs.extend(serving.generate_with_retry(prompts[i:i + bs]))
+            prompts = [system_prompt + render(v)
+                       for v in pdf[input_key].tolist()]
+            if dedup:
+                # first-seen order; slot[i] is row i's distinct prompt
+                first: dict[str, int] = {}
+                slot = [first.setdefault(p, len(first)) for p in prompts]
+                sent = list(first)
+            else:
+                sent = prompts
+            answers: list[str] = []
+            for i in range(0, len(sent), bs):
+                answers.extend(serving.generate_with_retry(sent[i:i + bs]))
             pdf = pdf.copy()
-            pdf[output_key] = outputs
+            pdf[output_key] = [answers[j] for j in slot] if dedup else answers
             yield pdf
 
     return df.mapInPandas(gen, schema=out_schema)

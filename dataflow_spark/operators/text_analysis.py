@@ -153,7 +153,7 @@ def _quality_udf_build(stopwords: tuple):
     sw = frozenset(stopwords)
     ws_re = re.compile(r"\s+", re.ASCII)   # Java default \s == ASCII
     alpha_re = re.compile(r"[A-Za-z]")
-    punct_re = re.compile(r"[.!?]$")
+    punct_re = re.compile(r"[.!?]\Z")   # absolute end, as Java \z
 
     def one(t):
         if t is None:

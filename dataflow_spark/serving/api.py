@@ -11,12 +11,22 @@ closure, so the thread pool fans out PER EXECUTOR TASK over that task's
 micro-batch — aggregate concurrency scales with the cluster
 (tasks x max_workers), not with one driver-side pool. Only stdlib
 (urllib) is used so the closure stays dependency-free on executors.
+
+Each chat request retries on its own (``_post_json_retrying``): a 429,
+5xx, dropped connection or timeout re-sends only that prompt, never the
+batch siblings that already succeeded. Every request opens its own
+connection; keep-alive waits for a backend that does not hold one
+handler thread per open connection.
 """
 
 from __future__ import annotations
 
+import functools
+import http.client
 import json
 import os
+import time
+import urllib.error
 import urllib.request
 from concurrent.futures import ThreadPoolExecutor
 
@@ -29,6 +39,30 @@ def _post_json(url: str, payload: dict, headers: dict, timeout: float) -> dict:
         headers={"Content-Type": "application/json", **headers}, method="POST")
     with urllib.request.urlopen(req, timeout=timeout) as resp:
         return json.loads(resp.read().decode("utf-8"))
+
+
+def _post_json_retrying(url: str, payload: dict, headers: dict,
+                        timeout: float, attempts: int,
+                        base_delay: float) -> dict:
+    """``_post_json`` with retry for one request. HTTP 429 and 5xx,
+    refused or dropped connections, truncated bodies and timeouts are
+    retried after ``base_delay`` seconds, doubling per attempt; any
+    other HTTP status raises at once with its status and body."""
+    for attempt in range(attempts):
+        try:
+            return _post_json(url, payload, headers, timeout)
+        except (OSError, http.client.HTTPException) as e:
+            # HTTPError and URLError are OSErrors too
+            if isinstance(e, urllib.error.HTTPError):
+                with e:  # holds the open response
+                    body = e.read().decode("utf-8", "replace")
+                if e.code != 429 and e.code < 500:
+                    raise RuntimeError(
+                        f"POST {url} failed with HTTP {e.code}: {body}") from e
+            if attempt == attempts - 1:
+                raise
+        time.sleep(base_delay * 2 ** attempt)
+    raise ValueError(f"attempts must be positive, got {attempts}")
 
 
 class APILLMServing(LLMServing):
@@ -58,11 +92,16 @@ class APILLMServing(LLMServing):
         self.system_prompt = system_prompt
         self.max_tokens = max_tokens
 
+    @property
+    def deterministic(self) -> bool:
+        """Greedy decoding: equal prompts may share one request."""
+        return self.temperature == 0
+
     def _headers(self) -> dict:
         key = os.environ.get(self.key_name_of_api_key, "")
         return {"Authorization": f"Bearer {key}"} if key else {}
 
-    def _one(self, prompt: str) -> str:
+    def _one(self, prompt: str, attempts: int, base_delay: float) -> str:
         messages = []
         if self.system_prompt:
             messages.append({"role": "system", "content": self.system_prompt})
@@ -71,15 +110,25 @@ class APILLMServing(LLMServing):
                          "temperature": self.temperature}
         if self.max_tokens is not None:
             payload["max_tokens"] = self.max_tokens
-        out = _post_json(self.api_url, payload, self._headers(), self.read_timeout)
+        out = _post_json_retrying(self.api_url, payload, self._headers(),
+                                  self.read_timeout, attempts, base_delay)
         return out["choices"][0]["message"]["content"]
 
     def generate_batch(self, prompts: list[str]) -> list[str]:
+        return self.generate_with_retry(prompts)
+
+    def generate_with_retry(self, prompts: list[str], max_retries: int = 5,
+                            base_delay: float = 0.5) -> list[str]:
+        """Fan the prompts out over the thread pool. The retry budget
+        applies to each request separately, so one failing request never
+        re-sends the others."""
         if not prompts:
             return []
+        one = functools.partial(self._one, attempts=max_retries,
+                                base_delay=base_delay)
         with ThreadPoolExecutor(max_workers=min(self.max_workers,
                                                 len(prompts))) as pool:
-            return list(pool.map(self._one, prompts))
+            return list(pool.map(one, prompts))
 
 
 class APIEmbeddingServing(EmbeddingServing):

@@ -25,6 +25,11 @@ class LLMServing(ABC):
     #: rows per backend micro-batch inside a partition
     batch_size: int = 64
 
+    #: True when equal prompts always get equal outputs (greedy decoding,
+    #: pure functions). ``llm_map`` then sends each distinct prompt of an
+    #: Arrow batch once; sampled generation keeps one call per row.
+    deterministic: bool = False
+
     @abstractmethod
     def generate_batch(self, prompts: list[str]) -> list[str]:
         """Must return exactly len(prompts) outputs, aligned by index."""

@@ -25,6 +25,8 @@ class MockLLMServing(LLMServing):
     '<think>...</think><answer>...</answer>' post-processing surface.
     """
 
+    deterministic = True
+
     def __init__(self, mode: str = "hash", template: str = "OK: {prompt}",
                  fail_first: int = 0, wrap_answer: bool = False):
         self.mode = mode

@@ -3,9 +3,12 @@ stub server (no network, no keys) — proves the full executor-side path:
 mapInPandas closure -> thread-pool fan-out -> HTTP -> response parse.
 """
 
+import contextlib
 import json
+import random
 import threading
-from http.server import BaseHTTPRequestHandler, HTTPServer
+from collections import Counter
+from http.server import BaseHTTPRequestHandler, HTTPServer, ThreadingHTTPServer
 
 import pytest
 
@@ -46,6 +49,7 @@ def stub_url():
     t.start()
     yield f"http://127.0.0.1:{srv.server_address[1]}"
     srv.shutdown()
+    srv.server_close()
 
 
 def test_chat_batch(stub_url):
@@ -87,6 +91,118 @@ def test_embedding_generator_through_api(stub_url, spark):
         serving=APIEmbeddingServing(api_url=f"{stub_url}/v1/embeddings", dim=2))
     rows = {r["text"]: r["embedding"] for r in op.run(df).collect()}
     assert rows == {"abc": [3.0, 1.0], "de": [2.0, 1.0]}
+
+
+class _FaultyChat(BaseHTTPRequestHandler):
+    """Echo chat stub whose server fails each prompt's first attempts by
+    a plan: an HTTP status (429, 500, 400) or ``"drop"``, which closes
+    the connection halfway through a 200 response body."""
+
+    def do_POST(self):
+        srv = self.server
+        body = json.loads(self.rfile.read(int(self.headers["Content-Length"])))
+        prompt = body["messages"][-1]["content"]
+        with srv.lock:
+            srv.attempts[prompt] += 1
+            plan = srv.plan(prompt)
+            n = srv.attempts[prompt]
+        fault = plan[n - 1] if n <= len(plan) else None
+        if isinstance(fault, int):
+            with srv.lock:
+                srv.outcomes[fault] += 1
+            self.send_error(fault, explain=f"planned {fault} for {prompt}")
+            return
+        payload = json.dumps({"choices": [{"message": {
+            "content": f"echo:{prompt}"}}]}).encode()
+        self.send_response(200)
+        self.send_header("Content-Type", "application/json")
+        self.send_header("Content-Length", str(len(payload)))
+        self.end_headers()
+        if fault == "drop":
+            self.wfile.write(payload[:len(payload) // 2])
+            self.close_connection = True
+            with srv.lock:
+                srv.outcomes["drop"] += 1
+            return
+        self.wfile.write(payload)
+        with srv.lock:
+            srv.outcomes[200] += 1
+
+    def log_message(self, *a):  # quiet
+        pass
+
+
+@contextlib.contextmanager
+def _faulty_server(plan=lambda prompt: []):
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), _FaultyChat)
+    srv.daemon_threads = True
+    srv.lock = threading.Lock()
+    srv.attempts, srv.outcomes, srv.plan = Counter(), Counter(), plan
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    try:
+        yield srv, f"http://127.0.0.1:{srv.server_address[1]}/v1/chat/completions"
+    finally:
+        srv.shutdown()
+        srv.server_close()
+        t.join(timeout=10)
+        assert not t.is_alive()
+
+
+def _seeded_plan(seed):
+    """Per prompt, 0-2 leading faults drawn from a seed: fewer than the
+    5 attempts a request gets, so every prompt ends in one 200."""
+    def plan(prompt):
+        rng = random.Random(f"{seed}:{prompt}")
+        return [rng.choice((429, 500, "drop"))
+                for _ in range(rng.choice((0, 1, 1, 2)))]
+    return plan
+
+
+def test_llm_map_retries_per_request_under_faults(spark):
+    from dataflow_spark.operators.generate.llm_map import llm_map
+
+    texts = [f"p{i % 16}" for i in range(40)]  # 16 distinct prompts
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               ["doc_id", "text"]).coalesce(1)
+
+    def run(url):
+        s = APILLMServing(api_url=url, model_name="m", max_workers=8)
+        return [tuple(r) for r in
+                llm_map(df, s, "Q:{text}", "text", "resp").collect()]
+
+    with _faulty_server() as (srv, url):
+        clean = run(url)
+    with _faulty_server(_seeded_plan(seed=7)) as (srv, url):
+        faulty = run(url)
+    assert faulty == clean
+    assert clean == [(i, t, f"echo:Q:{t}") for i, t in enumerate(texts)]
+    # one Arrow batch: each distinct prompt succeeded exactly once, and
+    # no success was re-sent because a sibling request failed
+    assert srv.outcomes[200] == len(set(texts))
+    assert all(srv.outcomes[k] > 0 for k in (429, 500, "drop"))
+
+
+def test_sampled_generation_sends_one_request_per_row(spark):
+    from dataflow_spark.operators.generate.llm_map import llm_map
+
+    texts = ["x", "y", "x", "x"]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               ["doc_id", "text"]).coalesce(1)
+    with _faulty_server() as (srv, url):
+        s = APILLMServing(api_url=url, model_name="m", temperature=0.7)
+        assert not s.deterministic
+        rows = llm_map(df, s, "{text}", "text", "resp").collect()
+    assert [r["resp"] for r in rows] == [f"echo:{t}" for t in texts]
+    assert srv.outcomes[200] == len(texts)
+
+
+def test_client_error_fails_after_one_attempt():
+    with _faulty_server(lambda prompt: [400] * 5) as (srv, url):
+        s = APILLMServing(api_url=url, model_name="m")
+        with pytest.raises(RuntimeError, match=r"(?s)HTTP 400: .*planned 400 for bad"):
+            s.generate_batch(["bad"])
+    assert srv.attempts["bad"] == 1
 
 
 class TestLocalModelServingSeam:

@@ -1,5 +1,6 @@
 """Dedup semantics: first-occurrence-wins, near-dup clustering."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataflow_spark.core.registry import get_operator
@@ -123,9 +124,16 @@ def test_pair_expansion_modes_agree(spark):
 
 
 def test_simhash_pair_expansion_modes_agree(spark):
-    """Star and all-pairs expansion agree for SimHash under the r10
+    """Star and all-pairs expansion agree for SimHash under the
     carried-signature verify (the Hamming filter is fused into both
-    expansion forms, including the oversized-bucket chain fallback)."""
+    expansion forms, including the oversized-bucket chain fallback).
+
+    The agreement holds because of this corpus, not as a general rule:
+    each group is one pair of documents a single token apart, so a
+    bucket holds one pair and its star edge is its only edge. Star verifies only the edges
+    to the bucket minimum, so in a bucket of three or more a member that
+    verifies against another member but not against the minimum is
+    dropped by "all" and kept by "star"."""
     from dataflow_spark.operators.filters.dedup import SimHashDeduplicateFilter
 
     rows = []
@@ -153,6 +161,16 @@ def test_simhash_pair_expansion_modes_agree(spark):
     op_chain.max_bucket_size = 1
     assert [r.doc_id for r in
             op_chain.run(ddf).select("doc_id").collect()] == [0]
+
+
+def test_dedup_by_bands_rejects_both_verify_forms(spark):
+    from dataflow_spark.operators.filters.dedup import SimHashDeduplicateFilter
+
+    df = spark.createDataFrame([(1, "a")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="not both"):
+        SimHashDeduplicateFilter(order_key="doc_id")._dedup_by_bands(
+            df, df, "doc_id", verify=lambda cand: cand,
+            verify_expr="true")
 
 
 def test_star_contraction_matches_union_find(spark):

@@ -29,3 +29,23 @@ def test_tv_registers_expected_view_name(spark):
     name = em._tv(spark, "/root/testdata/sf0.001", "lineitem")
     assert name == "t_lineitem"
     assert spark.catalog.tableExists("t_lineitem")
+
+
+def test_text_normalization_oracle_on_curly_quotes(spark):
+    """The fixtures are ASCII, so the r_text_normalization oracle never
+    sees the characters it translates; run it on curly quotes and dashes
+    against the refiner directly."""
+    import duckdb
+
+    import __spark_entry__ as em
+    from dataflow_spark.core.registry import get_operator
+
+    text = "‘single’  “double” en–dash em—dash "
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id INTEGER, text VARCHAR)")
+    con.execute("INSERT INTO documents VALUES (1, ?)", [text])
+    want = con.execute(em.oracle_sql()["r_text_normalization"]).fetchall()
+    df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
+    got = [tuple(r) for r in get_operator(
+        "TextNormalizationRefiner", {"input_key": "text"}).run(df).collect()]
+    assert want == got == [(1, "'single' \"double\" en-dash em-dash")]

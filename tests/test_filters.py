@@ -109,7 +109,9 @@ def test_quality_score_udf_matches_expression_path(spark, docs):
     tricky = spark.createDataFrame(
         [(9001, "ends with bang!"), (9002, "tab end!\t"), (9003, "nl end!\n"),
          (9004, "  spaced.  "), (9005, ""), (9006, "THE the And ??"),
-         (9007, " nbsp the end."), (9008, "word " * 150)],
+         (9007, " nbsp the end."), (9008, "word " * 150),
+         # end punctuation counts only as the very last character
+         (9009, ".\r"), (9010, "cr end!\r"), (9011, "crlf end?\r\n")],
         ["doc_id", "text"])
     both = docs.select("doc_id", "text").unionByName(tricky)
     fast = get_operator("QualityScoreEvaluator", {}).run(both)
@@ -117,6 +119,7 @@ def test_quality_score_udf_matches_expression_path(spark, docs):
     a = {r["doc_id"]: r["quality_score"] for r in fast.collect()}
     b = {r["doc_id"]: r["quality_score"] for r in expr.collect()}
     assert a == b  # bit-identical, not approx
+    assert a[9009] == 0.25 * (1 / 100.0)  # no end-punctuation credit
 
 
 def test_compression_ratio(spark):

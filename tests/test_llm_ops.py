@@ -49,6 +49,41 @@ def test_serving_retry():
     assert out == ["p"]
 
 
+@pytest.mark.parametrize("deterministic", [True, False])
+def test_llm_map_sends_each_distinct_prompt_once(spark, tmp_path,
+                                                  deterministic):
+    from dataflow_spark.operators.generate.llm_map import llm_map
+
+    # defined here so cloudpickle ships the class by value to the worker
+    class LoggingServing(MockLLMServing):
+        """Template mock that appends every prompt it is sent to a file
+        (it runs in a Python worker, so the test reads the log back)."""
+
+        def __init__(self, log_path, deterministic):
+            super().__init__(mode="template", template="A:{prompt}")
+            self.log_path = log_path
+            self.deterministic = deterministic
+
+        def generate_batch(self, prompts):
+            with open(self.log_path, "a") as f:
+                f.writelines(p + "\n" for p in prompts)
+            return super().generate_batch(prompts)
+
+    texts = ["b", "a", "b", "c", "a", "b"]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               ["doc_id", "text"]).coalesce(1)
+    log = tmp_path / "prompts.txt"
+    serving = LoggingServing(str(log), deterministic)
+    rows = llm_map(df, serving, "Q:{text}", "text", "out").collect()
+    assert [(r["doc_id"], r["out"]) for r in rows] == \
+        [(i, f"A:Q:{t}") for i, t in enumerate(texts)]
+    sent = log.read_text().splitlines()
+    if deterministic:  # first-seen order, one request per distinct prompt
+        assert sent == ["Q:b", "Q:a", "Q:c"]
+    else:              # sampled generation: one request per row
+        assert sent == [f"Q:{t}" for t in texts]
+
+
 def test_embedding_generator_deterministic(spark):
     df = spark.createDataFrame([("t1",), ("t1",), ("t2",)], ["text"])
     op = get_operator("EmbeddingGenerator", {
