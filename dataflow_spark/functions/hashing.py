@@ -84,7 +84,7 @@ def minhash_signature(hashes: Column, num_perm: int = 64, seed: int = 42) -> Col
 def minhash64_udf(num_perm: int = 64, n: int = 5, seed: int = 42):
     """Session-memoized :func:`_minhash64_udf_build` — the UDF object
     (and its JVM registration) is reused across plan builds; the udf's
-    behavior is a pure function of the key params (r9, guide §1.2
+    behavior is a pure function of the key params (guide §1.2
     driver latency; see functions/udf_cache.py for the rules)."""
     return session_udf(("hashing.minhash64_udf", num_perm, n, seed),
                        lambda: _minhash64_udf_build(num_perm, n, seed))
@@ -217,7 +217,7 @@ def _minhash_md5_udf_build(num_perm: int = 64, n: int = 5, seed: int = 42):
     len < n, [0]*num_perm for empty/null. Permutation mins are one
     numpy matrix reduce per row; only the md5 calls are per-gram.
 
-    Iterator form (r9, guide §4.5): per-TASK memo dicts amortize the
+    Iterator form (guide §4.5): per-TASK memo dicts amortize the
     per-gram md5 across rows — natural-language n-gram vocabularies are
     zipfian, so most grams of a row were already hashed by an earlier
     row, and duplicate-heavy corpora (the dedup target) re-hit whole
@@ -314,7 +314,7 @@ def _simhash_md5_udf_build(n: int = 4):
     over bits 0-59 (bits 60-63 of the result are always 0 — still a
     valid simhash family, and every step is reproducible in DuckDB SQL).
 
-    Iterator form (r9, guide §4.5): per-task gram->hash and
+    Iterator form (guide §4.5): per-task gram->hash and
     text->simhash memos, same rationale and caps as
     ``minhash_md5_udf``. The sign-sum numpy block is verbatim
     ``simhash_md5_one``; the byte conversion is the same first-60-bits
@@ -373,8 +373,7 @@ def _simhash_md5_udf_build(n: int = 4):
 def band_keys_plain_sql(sig: str, num_bands: int, rows_per_band: int) -> str:
     """SQL-string twin of ``band_keys_plain`` for F.expr call sites.
 
-    One JVM parse instead of ~30 py4j round trips per band (r9
-    driver-latency audit); the parsed tree is the same unrolled
+    One JVM parse instead of ~30 py4j round trips per band; the parsed tree is the same unrolled
     array-of-structs, so plans and results are unchanged.
     ``sig`` is a (trusted, engine-internal) column name or SQL fragment.
     """

@@ -120,11 +120,32 @@ def quality_score(col: Column, stopwords: list[str]) -> Column:
         . ! or ?, else 0
       - alpha: alpha_word_ratio
     Deterministic, SQL-mirrorable; the shape follows published text
-    quality heuristics (Gopher/C4-style rules).
+    quality heuristics (Gopher/C4-style rules). NULL text scores NULL.
+
+    The text is tokenized once: one ``split`` and one ``aggregate`` that
+    counts tokens, stopword hits and ASCII-alpha tokens per non-empty
+    token. The stopword test is ``isin`` over literals, which Catalyst
+    turns into a hash ``InSet`` above 10 items.
     """
-    len_score = F.least(word_count(col).cast("double") / 100.0, F.lit(1.0))
-    sw_score = F.least(F.coalesce(stopword_ratio(col, stopwords), F.lit(0.0)) / 0.3, F.lit(1.0))
+    sw = list(stopwords)  # isin takes a list, not a tuple
+    zero = F.struct(F.lit(0).alias("n"), F.lit(0).alias("sw"),
+                    F.lit(0).alias("alpha"))
+
+    def count(acc: Column, x: Column) -> Column:
+        return F.when(x == F.lit(""), acc).otherwise(F.struct(
+            (acc["n"] + 1).alias("n"),
+            (acc["sw"] + F.lower(x).isin(sw).cast("int")).alias("sw"),
+            (acc["alpha"] + x.rlike("[A-Za-z]").cast("int")).alias("alpha")))
+
     # \z: absolute end (Java $ also matches before a final \r or \n)
     punct = F.when(F.trim(col).rlike(r"[.!?]\z"), 1.0).otherwise(0.0)
-    alpha = F.coalesce(alpha_word_ratio(col), F.lit(0.0))
-    return 0.25 * len_score + 0.25 * sw_score + 0.25 * punct + 0.25 * alpha
+
+    def score(acc: Column) -> Column:
+        n = acc["n"]
+        len_score = F.least(n.cast("double") / 100.0, F.lit(1.0))
+        sw_ratio = F.when(n > 0, acc["sw"].cast("double") / n).otherwise(0.0)
+        sw_score = F.least(sw_ratio / 0.3, F.lit(1.0))
+        alpha = F.when(n > 0, acc["alpha"].cast("double") / n).otherwise(0.0)
+        return 0.25 * len_score + 0.25 * sw_score + 0.25 * punct + 0.25 * alpha
+
+    return F.aggregate(F.split(col, WS_RE), zero, count, score)

@@ -7,7 +7,7 @@ wants clustering over ALL vectors. Lloyd's maps cleanly onto DataFrame
 ops and none of the heavy steps touch the driver:
 
   - assignment: squared-distance argmin over the k x dim centroid
-    literal folded INLINE per row (r9) — a pure narrow projection, zero
+    literal folded INLINE per row — a pure narrow projection, zero
     shuffle, zero join; above a literal-size cap it falls back to the
     broadcast-join + window-rank form with identical assignments;
   - update: posexplode dims -> groupBy (cluster, dim) avg — one shuffle
@@ -69,10 +69,10 @@ class KMeansClusteringOperator(Operator):
     def _assign_col(self, cents, vcol):
         """Column: argmin-cluster id for embedding column ``vcol``.
 
-        r9 (guide §2.4): the original assignment crossJoined the corpus
-        with the broadcast k-centroid frame and ranked with a window
-        partitioned by point id — an Exchange + sort of n*k rows per
-        assignment. The centroids are a k x dim literal the driver
+        Guide §2.4: crossJoining the corpus with the broadcast
+        k-centroid frame and ranking with a window partitioned by point
+        id would cost an Exchange + sort of n*k rows per assignment.
+        The centroids are a k x dim literal the driver
         already holds, so the argmin is a pure narrow projection: fold
         over the centroid array, keep the first strictly-smaller
         distance (ties keep the smaller cid, identical to the old
@@ -93,10 +93,11 @@ class KMeansClusteringOperator(Operator):
                 F.zip_with(vcol, s["v"], lambda a, b: (a - b) * (a - b)),
                 F.lit(0.0), lambda acc, x: acc + x)
 
-        # r10: evaluate each centroid's distance exactly once (the r9 fold
-        # re-evaluated d2(s) in both the when() condition and the taken
-        # struct — 2x distance compute at large k). Same fold condition on
-        # the precomputed struct, so assignments are bit-identical.
+        # evaluate each centroid's distance exactly once (a fold that
+        # evaluates d2(s) in both the when() condition and the taken
+        # struct doubles the distance compute at large k). Same fold
+        # condition on the precomputed struct, so assignments are
+        # bit-identical.
         dists = F.transform(
             carr, lambda s: F.struct(d2(s).alias("d"), s["c"].alias("c")))
         best = F.aggregate(
@@ -151,7 +152,7 @@ class KMeansClusteringOperator(Operator):
 
         for _ in range(self.n_iter):
             # narrow assignment keeps _v on the row, so the means pass
-            # needs no join back to pts (r9: one scan per iteration)
+            # needs no join back to pts (one scan per iteration)
             if sum(len(v) for _, v in cents) <= self._INLINE_LIT_CAP:
                 assigned = pts.withColumn(
                     "_cid", self._assign_col(cents, F.col("_v")))
@@ -178,8 +179,8 @@ class KMeansClusteringOperator(Operator):
     def run(self, df: DataFrame, **kw: Any) -> DataFrame:
         cents = list(enumerate(self.fit(df)))
         if sum(len(v) for _, v in cents) <= self._INLINE_LIT_CAP:
-            # narrow final assignment: no join back to df (r9); column
-            # order replicates the old join form (id_key leads)
+            # narrow final assignment: no join back to df; column
+            # order replicates the join form (id_key leads)
             vcol = F.col(self.embedding_key).cast("array<double>")
             cols = [self.id_key] + [c for c in df.columns
                                     if c != self.id_key] + ["cluster"]

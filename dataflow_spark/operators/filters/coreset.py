@@ -47,7 +47,7 @@ class KCenterGreedyFilter(Operator):
         if n > self.max_collect:
             pool = pool.sample(fraction=self.max_collect / n, seed=self.seed)
         # Arrow toPandas, not collect: per-Row pickling of embedding
-        # cells dominates the driver pull at max_collect (guide §6, r9)
+        # cells dominates the driver pull at max_collect (guide §6)
         pdf = pool.toPandas()
         ids = np.array(pdf[id_col].tolist())
         X = np.array([np.asarray(v, dtype=np.float64)

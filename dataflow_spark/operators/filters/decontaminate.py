@@ -7,7 +7,7 @@ reference has no decontamination operator — this is part of the
 training-data-pipeline surface the engine adds as first-class.
 
 Scale design (100 TB corpus vs MB-scale benchmark):
-  - Default path (r9): the benchmark's distinct gram set is collected
+  - Default path: the benchmark's distinct gram set is collected
     under a byte budget, broadcast as a python frozenset, and the
     corpus side becomes ONE narrow pandas-UDF pass — an early-exit
     membership test for the filter, a (matched, total) count pair for
@@ -234,7 +234,7 @@ class ContaminationScoreEvaluator(Operator):
             raise ValueError("ContaminationScoreEvaluator needs benchmark=")
         bc = self._bench_set_bc(benchmark)
         if bc is not None:
-            # broadcast-set path (r9): one pandas UDF computes both
+            # broadcast-set path: one pandas UDF computes both
             # distinct-gram counts — no gram arrays cross the boundary,
             # no explode/join; the overlap division stays a Spark
             # expression so float semantics match the join form exactly
@@ -311,7 +311,7 @@ class BenchmarkDecontaminationFilter(Operator):
         if self.max_matches == 0 and self.max_frac is None and not self.keep_scores:
             bc = s._bench_set_bc(benchmark)
             if bc is not None:
-                # broadcast-set path (r9): one early-exit boolean UDF —
+                # broadcast-set path: one early-exit boolean UDF —
                 # the whole stage is a narrow filter, zero shuffles
                 return df.filter(
                     ~_contaminated_udf(s.n, bc)(F.col(s.input_key)))

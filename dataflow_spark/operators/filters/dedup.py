@@ -69,7 +69,7 @@ def _keep_first(df: DataFrame, key: Column, order_col: str) -> DataFrame:
     needs. Map-side combine is unchanged — it is a property of the
     hash-aggregate, not of how many aggregate expressions it carries.
 
-    Tie coherence (r7): independent per-column min_by reconstitutes
+    Tie coherence: independent per-column min_by reconstitutes
     one real row only if the ordering key is unique. A caller-supplied
     ``order_key`` carries no such guarantee, so when the engine row id
     is present alongside it, every min_by orders on
@@ -78,7 +78,7 @@ def _keep_first(df: DataFrame, key: Column, order_col: str) -> DataFrame:
     of a synthetic mix of tied rows. The struct compare is two longs;
     map-side combine and per-column pruning are unaffected.
     """
-    # single-parse expr strings (r9): one JVM parse per aggregate
+    # single-parse expr strings: one JVM parse per aggregate
     # instead of the min_by/col/struct py4j chain — same trees, same
     # results, ~3x fewer driver round trips on wide inputs
     def bq(name: str) -> str:
@@ -117,15 +117,15 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     """
     # normalize column names positionally: callers may pass any
     # 2-column (src, dst) frame, and the pandas probe below reads by
-    # name (the pre-r9 collect() path read positionally)
+    # name
     edges = edges.toDF("src", "dst")
     # one-job probe: fetch up to the bound + 1; small graphs (the common
     # case) never pay a separate count action. Arrow toPandas, not
     # collect: per-Row pickling of a bound-sized edge list (2M rows)
     # costs seconds on the driver; one Arrow frame + python-int lists
-    # is ~10x cheaper (guide §6 "Arrow for driver transfers", r9).
-    # bounded_pull (r10) collapses the incremental-take scale-up into a
-    # single collect job (was 3 jobs per invocation at sf0.1).
+    # is ~10x cheaper (guide §6 "Arrow for driver transfers").
+    # bounded_pull fetches the probe in a single collect job (an
+    # incremental take scale-up cost 3 jobs per invocation at sf0.1).
     probe = bounded_pull(edges, driver_max_edges + 1)
     if len(probe) <= driver_max_edges:
         parent: dict[int, int] = {}
@@ -161,7 +161,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
         })
         # below spark.sql.execution.arrow.localRelationThreshold (48MB)
         # this is a LocalTableScan — the broadcast build reads it driver
-        # -side with no scan job (verified in the audited plan, r9)
+        # -side with no scan job (verified in the audited plan)
         return spark.createDataFrame(frame)
 
     return _star_contraction(edges, max_iter)
@@ -191,11 +191,11 @@ def _star_contraction(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     (count + sum of edge hashes) going stable — one extra cheap round
     instead of an exceptAll anti-join.
     """
-    # checkpoint the INITIAL edge set too (r8): every round references
+    # checkpoint the INITIAL edge set too: every round references
     # e twice through sym and again through the join, so an
     # unchckpointed first round re-executes the entire upstream
     # pipeline (signatures + banding + verify over the full corpus)
-    # 6-8x — at 5M docs that alone exceeded the r7-era 600s budget.
+    # 6-8x — at 5M docs that alone exceeded a 600s budget.
     # Rounds 2+ were already bounded by the end-of-round checkpoint.
     e = _canon_edges(edges.select(F.col("src").cast("long").alias("src"),
                                   F.col("dst").cast("long").alias("dst"))
@@ -254,7 +254,7 @@ class _BaseDedup(Operator):
     def _ordered(self, df: DataFrame) -> tuple[DataFrame, str]:
         # track whether with_row_id actually ADDS the column: an input
         # that legitimately carries a user _row_id alongside an explicit
-        # order_key must keep it through _finish (ADVICE r7)
+        # order_key must keep it through _finish
         self._row_id_added = ROW_ID not in df.columns
         if self.order_key and self.order_key in df.columns:
             if self.order_key == ROW_ID:
@@ -405,13 +405,13 @@ class _NearDupBase(_BaseDedup):
         identical verify outcomes, so a dup's connectivity through its
         rep equals its direct connectivity.
 
-        The window output is PERSISTED (r10): both returned frames (and
+        The window output is PERSISTED: both returned frames (and
         the caller's signature lookups — every candidate-pair id is a
         rep) read one cached pass. Unpersisted, Catalyst column-prunes
         the two branches differently (the reps branch carries the
         signature, the edges branch only ids), so the corpus-wide
-        signature UDF + window exchange + sort ran TWICE — verified in
-        the r9 executed plan as two separate ShuffleQueryStages. One
+        signature UDF + window exchange + sort would run TWICE — seen in
+        the executed plan as two separate ShuffleQueryStages. One
         exchange now carries strictly fewer total bytes than the two it
         replaces, at any scale; the cache adds 8 bytes/row over the
         signature persist it supersedes.
@@ -425,8 +425,8 @@ class _NearDupBase(_BaseDedup):
         serves it the previous invocation's rows — re-executions must
         recompute from source, and the cache must not outlive the run.
         """
-        # SQL-string window (r9): one parse instead of the Window-API
-        # py4j chain. min-over-partition (r10) replaces the r9
+        # SQL-string window: one parse instead of the Window-API
+        # py4j chain. min-over-partition rather than a
         # first-ordered form: identical value (the group's min id), but
         # ``first`` is a non-deterministic expression, which breaks
         # ``sameResult`` so the persist above it could never be matched
@@ -493,7 +493,7 @@ class _NearDupBase(_BaseDedup):
             .agg(F.expr(f"sort_array(collect_list({elem})) AS _ids"))
             .filter("size(_ids) > 1")
         )
-        # single-parse SQL strings (r9): the Column-lambda forms of these
+        # single-parse SQL strings: the Column-lambda forms of these
         # expansions cost ~100+ py4j round trips per plan build; one
         # string parses the identical tree in one JVM call. Results
         # unchanged. inline() = explode + struct-splat in one generator
@@ -549,7 +549,7 @@ class _NearDupBase(_BaseDedup):
         # propagation), so "first occurrence" == rows whose own id equals
         # their component label; unclustered rows (left-join miss) stay.
         out = df.join(comp.toDF("_nd_id", "component"), "_nd_id", "left")
-        # same coalesce tree as the old Column form, one parse (r9)
+        # same coalesce tree as the Column form, one parse
         if getattr(self, "assign_key", None):
             # assignment mode: keep every row, expose its cluster label
             # (= min order-id of its near-dup component; singletons get
@@ -631,7 +631,7 @@ class MinHashDeduplicateFilter(_NearDupBase):
         # exact-signature collapse: bounds bucket sizes on degenerate
         # (mass-duplicate) corpora; survivors provably unchanged
         # (single-parse expr strings here and below: same trees as the
-        # old Column-lambda forms, ~10x fewer py4j round trips — r9)
+        # Column-lambda forms, ~10x fewer py4j round trips)
         reps, exact_edges = self._collapse_exact(
             sigs, "md5(concat_ws(',', transform(_sig, x -> cast(x as string))))")
         # inline() = explode + struct-splat in one generator select
@@ -696,9 +696,9 @@ class SimHashDeduplicateFilter(_NearDupBase):
         # corpus bucket armor, survivors unchanged
         reps, exact_edges = self._collapse_exact(sims, "_simhash")
         # single-parse expr strings: same trees as the Column forms,
-        # ~10x fewer py4j round trips per plan build (r9); inline() =
+        # ~10x fewer py4j round trips per plan build; inline() =
         # explode + struct-splat in one generator select. The 8-byte
-        # simhash rides along as _v (r10): Hamming verify becomes a
+        # simhash rides along as _v: Hamming verify becomes a
         # filter fused into the pair-expansion stage instead of two
         # signature-lookup joins against the rep table (guide §2.4/§3
         # — at scale those joins re-shuffle the corpus-sized rep frame

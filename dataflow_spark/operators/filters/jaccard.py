@@ -52,7 +52,7 @@ class NgramJaccardDeduplicateFilter(_NearDupBase):
         # sparse-path blowup guard (0 disables): refuse predictably when
         # the prefix-bucket candidate UPPER BOUND says the corpus is too
         # low-entropy for exact PPJoin at this size — an actionable
-        # error beats the alternative the r7 sf10 sweep measured (a JVM
+        # error beats the alternative an sf10 sweep measured (a JVM
         # OutOfMemoryError 8 minutes into a ~40e9-pair shuffle)
         self.max_candidate_pairs = max_candidate_pairs
         # dense-path compute guard (0 disables): n^2 * nbits multiply-
@@ -60,7 +60,7 @@ class NgramJaccardDeduplicateFilter(_NearDupBase):
         # (~1e10 units/s/core incl unpackbits + threshold scan): 2e13 is
         # ~1-4 min parallel, admits the sf1 sweep's largest completing
         # shape (5.6e12) with headroom. Byte-feasible is not compute-
-        # feasible (the r7 containment lesson).
+        # feasible (a containment GEMV at sf10 showed it).
         self.dense_flop_budget = dense_flop_budget
         # 'raise' (default) or 'minhash': on a budget refusal, fall back
         # to MinHash-LSH candidates + EXACT Jaccard verify (precision
@@ -129,7 +129,7 @@ class NgramJaccardDeduplicateFilter(_NearDupBase):
 
         # bounded above: n rows whose packed bits fit dense_broadcast_mb.
         # Arrow toPandas, not collect: per-Row pickling of array<long>
-        # cells costs seconds at the budget bound (guide §6, r9)
+        # cells costs seconds at the budget bound (guide §6)
         pdf = with_sh.select("_nd_id", "_sh").toPandas()
         ids = pdf["_nd_id"].to_numpy(dtype=np.int64)
         sets = [np.asarray(v, dtype=np.int64) for v in pdf["_sh"]]
@@ -202,8 +202,6 @@ class NgramJaccardDeduplicateFilter(_NearDupBase):
         # EAGERLY (driver union-find probe, or per-round eager
         # localCheckpoint contraction), so every pinned frame can be
         # released before returning — no cached blocks outlive run()
-        # (ADVICE r7: the guard persist used to leak for the session
-        # lifetime)
         try:
             try:
                 verified = self._dense_edges(with_sh)

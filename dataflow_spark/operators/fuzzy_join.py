@@ -111,14 +111,14 @@ class FuzzyJoinOperator(Operator):
         self.dense_broadcast_mb = dense_broadcast_mb
         # sparse-path blowup guard (0 disables): refuse predictably on
         # corpora whose prefix buckets imply a ~quadratic candidate set
-        # (see NgramJaccardDeduplicateFilter — the r7 sf10 sweep JVM-OOM)
+        # (see NgramJaccardDeduplicateFilter — an sf10 sweep hit a JVM OOM)
         self.max_candidate_pairs = max_candidate_pairs
         # dense-path compute guard (0 disables): n_left*n_right*nbits
-        # multiply-adds. Calibrated in-container r8: the bitset kernel
+        # multiply-adds. Calibrated: the bitset kernel
         # (unpackbits + float32 GEMM + float64 threshold scan) sustains
         # ~1e10 budget-units/s per core, so 2e13 is ~1-4 min when the
         # right-side scan parallelizes (>=8 partitions typical) — the
-        # r7 default (4e15) was ~100x optimistic and let a 5.6e13-unit
+        # earlier default (4e15) was ~100x optimistic and let a 5.6e13-unit
         # containment GEMV burn a 600s timeout instead of refusing,
         # while 2e13 still admits every shape the sf1 sweep completes
         # (largest: 5.6e12).
@@ -194,7 +194,7 @@ class FuzzyJoinOperator(Operator):
         # packed-bit matrix AND the raw set payload must both fit
         if n_l == 0 or n_l * ((nbits + 7) // 8) > budget or tok_l * 8 > 8 * budget:
             return None
-        # FLOP budget (r7): byte-feasible is not compute-feasible — at
+        # FLOP budget: byte-feasible is not compute-feasible — at
         # sf10 a 50k x 500k x 2226 GEMM fit the broadcast budget but
         # needed 5.6e16 flops (engine timeout at 600s). And reaching
         # this point proves the left vocabulary is degenerate-small
@@ -221,7 +221,7 @@ class FuzzyJoinOperator(Operator):
 
         # bounded above: n_l rows whose packed bits fit dense_broadcast_mb.
         # Arrow toPandas, not collect: per-Row pickling of array<long>
-        # cells costs seconds at the budget bound (guide §6, r9)
+        # cells costs seconds at the budget bound (guide §6)
         lpdf = lraw.select("_id", "_sh").toPandas()
         lids = np.array(lpdf["_id"].tolist(), dtype=object)
         lsets = [np.asarray(v, dtype=np.int64) for v in lpdf["_sh"]]
@@ -323,8 +323,8 @@ class FuzzyJoinOperator(Operator):
         reads but released before returning: the result is eagerly
         localCheckpoint-ed (matched pairs — small), which consumes every
         pinned frame inside this call, so no cached blocks outlive the
-        run (ADVICE r7: the guard persist used to leak for the session
-        lifetime)."""
+        run (a guard persist would otherwise live for the whole
+        session)."""
         pins: list[DataFrame] = []
         try:
             return self._sparse_join_pinned(lraw, rraw, pins)
@@ -478,8 +478,8 @@ class FuzzyJoinOperator(Operator):
         ``metric='containment'`` does NOT use MinHash banding at all:
         MinHash collides on JACCARD, and the flagship containment shape
         (a 40-char quote inside a full document) has near-zero Jaccard
-        — banding recall there is ~0 (measured 0/57 pairs at sf0.01,
-        r9). It routes to ``_containment_fallback`` instead: pigeonhole
+        — banding recall there is ~0 (measured 0/57 pairs at
+        sf0.01). It routes to ``_containment_fallback`` instead: pigeonhole
         prefix probing with a capped inverted index, whose only recall
         loss is the per-bucket cap.
 
@@ -488,7 +488,7 @@ class FuzzyJoinOperator(Operator):
         shingle sets collapse to one per side before candidate
         generation and expand back at the end. Without this, a
         replicated corpus multiplies every candidate bucket by the
-        replica count (r9 at sf10: 250k quote rows = ~2.5k distinct
+        replica count (at sf10: 250k quote rows = ~2.5k distinct
         sets; uncollapsed, the verify join's candidate fan-out broke
         the driver's broadcast-collect budget).
         """
@@ -551,7 +551,7 @@ class FuzzyJoinOperator(Operator):
         so two right rows with equal projections are EXCHANGEABLE for
         this metric — verification against the projection is exact,
         not approximate. This is what lets a replicated corpus
-        collapse on the right even when raw sets differ (r9 at sf1:
+        collapse on the right even when raw sets differ (at sf1:
         per-replica text suffixes defeat the raw-set collapse, but no
         suffix shingle occurs in any quote, so all replicas of a base
         doc share one projection — right reps drop from 50k rows to

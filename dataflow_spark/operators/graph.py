@@ -101,11 +101,11 @@ class PageRankOperator(Operator):
     def run(self, df: DataFrame, **kw: Any) -> DataFrame:
         """Iterative power method with BOUNDED per-action plans.
 
-        r7's single lazy plan nested every iteration (9 sort-merge
+        A single lazy plan nests every iteration (9 sort-merge
         joins / 35 codegen spans in ONE plan at n_iter=3, PLANS.md) and
-        re-executed the whole lineage — including the caller's edge
+        re-executes the whole lineage — including the caller's edge
         construction — once per downstream action: the classic
-        iterative-algorithm scale-killer (sf10 engine timeout). r8:
+        iterative-algorithm scale-killer (sf10 engine timeout). So:
 
         - the degree-annotated edge list is persisted ONCE and reused
           by every iteration (an expensive caller edge construction

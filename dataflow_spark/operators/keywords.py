@@ -175,7 +175,7 @@ class BM25RetrievalOperator(Operator):
     mean token count over ALL docs (empty docs count with length 0).
 
     Shuffle plan (the 100 TB story): tokens are filtered to the tiny
-    query-term literal INSIDE the row (r9) — the exploded stream holds
+    query-term literal INSIDE the row — the exploded stream holds
     only query-term hits, never the corpus token stream, so the
     vocabulary is never materialized and no pruning join is needed;
     doc length rides the (doc, term) count key (functionally dependent
@@ -214,7 +214,7 @@ class BM25RetrievalOperator(Operator):
                         for t in self.tokenize(q)})
         qdf = spark.createDataFrame(pairs, ["query", "_term"])
 
-        # prune to query terms BEFORE the explode (r9, guide §2.3): the
+        # prune to query terms BEFORE the explode (guide §2.3): the
         # query-term set is a tiny literal, so an array-filter IN test
         # drops non-query tokens inside the row — the exploded stream
         # holds only query-term hits instead of the whole corpus token

@@ -39,7 +39,7 @@ from dataflow_spark.functions.udf_cache import session_udf
 
 _WS_RE = _re.compile(r"\s+", _re.ASCII)
 
-# duplicated-tail collect budget for the broadcast-rebuild path (r9):
+# duplicated-tail collect budget for the broadcast-rebuild path:
 # entries and approximate key bytes; past either bound the original
 # join + reassembly-shuffle plan runs unchanged
 _DUP_COLLECT_CAP = 1 << 21
@@ -189,7 +189,7 @@ class CorpusSegmentDedup(Operator):
             .select("_h", "_keeper")
         )
 
-        # broadcast-rebuild path (r9, guide §8 "decide with small rows"):
+        # broadcast-rebuild path (guide §8 "decide with small rows"):
         # the duplicated tail is typically tiny next to the corpus, so
         # collect it under a budget and reassemble every doc in ONE
         # narrow pandas-UDF pass — the occurrence-count shuffle is the

@@ -190,7 +190,7 @@ class UnicodeNormalizationRefiner(RefineOperator):
         self.form = form
 
     def refine_expr(self, col: Column) -> Column:
-        # session-memoized UDF object (r9): pure function of the form
+        # session-memoized UDF object: pure function of the form
         norm = session_udf(("refiners.unicode_norm", self.form),
                            lambda: _unicode_norm_udf_build(self.form))
         return norm(col)

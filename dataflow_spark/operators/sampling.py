@@ -190,8 +190,8 @@ class DomainMixtureSampler(Operator):
     filtered before the aggregate), per-group keep thresholds computed
     in plain Python, and the filter applied as a pure Column predicate
     over a literal group->threshold map — no join, no second shuffle of
-    the corpus. (r10: this replaces the r9 crossJoin + broadcast-join
-    rate attachment — same doubles, same rows, two fewer exchanges and
+    the corpus. (Against a crossJoin + broadcast-join rate attachment
+    this gives the same doubles and rows with two fewer exchanges and
     no broadcast build in the returned plan.)
 
     ``cache_input=True`` materializes the operator's input once (an
@@ -235,7 +235,7 @@ class DomainMixtureSampler(Operator):
         wsum = sum(self.weights.values())
         groups = sorted(self.weights)
         # counts: one row per listed group (bounded by len(weights));
-        # the same doubles the r9 join form produced — count cast to
+        # the same doubles a join form produces — count cast to
         # double, share = w / wsum, T = min(cnt / share), rate =
         # least(1, share * T / cnt) — evaluated in the same order on
         # the same float64 values, so every rate is bit-identical.
@@ -254,7 +254,7 @@ class DomainMixtureSampler(Operator):
             *[F.lit(x) for g in sorted(share) for x in (g, thr[g])])
         b = _bucket(F.col(self.key), self.buckets, self.salt, self.hash_impl)
         # null / unlisted group -> null threshold -> predicate null ->
-        # dropped, exactly the r9 inner join's semantics
+        # dropped, exactly an inner join's semantics
         return df.filter(b < thr_map[F.col(self.group_key)])
 
 

@@ -25,7 +25,7 @@ from dataflow_spark.functions.pulls import bounded_pull
 #: buffer = entries x 8 bytes = 128MB). Module-level so the allocation
 #: -pattern test can shrink it to force many blocks per batch and
 #: assert the buffer set is still allocated exactly once (ENGINE RULE,
-#: r8: preallocate block buffers once per batch, compute via out= —
+#: preallocate block buffers once per batch, compute via out= —
 #: freshly-mmapped numpy temporaries first-touch-fault at ~50MB/s, so
 #: per-block allocation across 32 workers is a 63x kernel page-fault
 #: storm; see PLANS.md "buffer reuse" and docs/engineering-notes.md).
@@ -48,7 +48,7 @@ def _dense_topk_worker(bc, k, include_self):
         dim_ = qm_.shape[1]
         # unit-normalized query matrix, built once per task:
         # the sims GEMM then yields cosines directly — no
-        # 128MB/block denom + np.where temporaries (the r8
+        # 128MB/block denom + np.where temporaries (once the
         # profile's top cost). Zero-norm rows stay all-zero and
         # are masked to -inf below. Candidate SELECTION only;
         # final scores still come from the per-pair rescore.
@@ -60,8 +60,8 @@ def _dense_topk_worker(bc, k, include_self):
         # qid_ is dtype=object, so cid[:,None] == qid_[None,:]
         # was 16M python __eq__ calls per block — the silent
         # dominator of the sf10 s_most_similar wall. Each id
-        # maps to ALL of its query-row positions (ADVICE r8: a
-        # last-wins dict masked only one row per duplicated id,
+        # maps to ALL of its query-row positions (a last-wins
+        # dict would mask only one row per duplicated id,
         # diverging from the join path's neighbor_id != query_id
         # filter on malformed non-unique-id input)
         if not include_self:
@@ -161,7 +161,7 @@ def _dense_topk_worker(bc, k, include_self):
                     np.copyto(p, sims)
                     p.partition(b - kk, axis=1)
                     kth = p[:, b - kk]
-                # vectorized candidate extraction (r8): the old
+                # vectorized candidate extraction: a
                 # per-query python loop (np.nonzero per strided
                 # column) plus the np.where cosine temporaries
                 # dominated the sf10 s_most_similar wall. One
@@ -246,7 +246,7 @@ def _merge_partial_topk(partials: DataFrame, k: int) -> DataFrame:
     # comparator built via F.when/array_sort Python lambdas cost ~300
     # py4j round trips per plan build (~0.2s of pure driver latency per
     # invocation, cluster or local); one F.expr parses the identical
-    # expression tree in a single JVM call (r9 driver-latency audit)
+    # expression tree in a single JVM call
     k = int(k)
     return (partials.groupBy("query_id")
             .agg(F.expr("collect_list(named_struct("
@@ -308,9 +308,9 @@ class BruteForceKNN(Operator):
         path: float64 cosine, ties to the smaller neighbor id,
         zero-norm vectors never match (cosine is null there).
 
-        SLABBING (r7): a query side larger than dense_broadcast_mb no
-        longer falls back to the quadratic-exchange join path (the r7
-        sf10 sweep caught exactly that: 200k self-kNN queries = 102 MB
+        SLABBING: a query side larger than dense_broadcast_mb does not
+        fall back to the quadratic-exchange join path (an sf10 sweep
+        caught exactly that: 200k self-kNN queries = 102 MB
         > the 64 MB budget -> join path -> 4e10-row window -> engine
         timeout). The query matrix is split into byte-bounded slabs —
         one broadcast + one corpus mapInPandas per slab, partials
@@ -330,7 +330,7 @@ class BruteForceKNN(Operator):
         # byte budget re-checks with the actual dim. Arrow toPandas,
         # not collect: per-Row pickling of a bound-sized query set costs
         # seconds on the driver at the 1M-row bound; one Arrow frame is
-        # ~10x cheaper (guide §6 "Arrow for driver transfers", r9)
+        # ~10x cheaper (guide §6 "Arrow for driver transfers")
         qpdf = qsrc.select(self.id_key, self.embedding_key).toPandas()
         # null/empty query vectors produce null cosine on the join path
         # (no output rows for that query) — drop them here; mixed query
@@ -502,7 +502,7 @@ class IVFKNN(Operator):
         import numpy as np
 
         # Arrow toPandas, not collect: per-Row pickling of the training
-        # sample's array cells is the slow path (guide §6, r9)
+        # sample's array cells is the slow path (guide §6)
         tpdf = (
             df.select(self.embedding_key)
             .filter(F.col(self.embedding_key).isNotNull())
@@ -618,7 +618,7 @@ class LSHKNN(Operator):
 
         # one bounded job: probe and collect fused (limit is the guard);
         # Arrow toPandas, not collect — per-Row pickling costs seconds
-        # at the 1M-row bound (guide §6, r9)
+        # at the 1M-row bound (guide §6)
         qpdf = bounded_pull(qsrc.select(self.id_key, self.embedding_key),
                             self.max_broadcast_queries + 1)
         if len(qpdf) > self.max_broadcast_queries:

@@ -1,8 +1,12 @@
 """Text-analysis operators for training-data pipelines: language ID,
 quality scoring, token counting, document fingerprinting.
 
-All pure Column expressions — deterministic, SQL-mirrorable, JVM-side.
-These are the "add a score column" Evaluator archetype (SURVEY.md §2.1).
+All are deterministic. The quality score, token counts, fingerprint and
+PII counts are pure Column expressions (JVM-side, SQL-mirrorable).
+Language ID, the n-gram ratio, the Gopher repetition scores and the
+compression ratio are Arrow-batched pandas UDFs, so a plan that uses
+them starts Python workers. These are the "add a score column"
+Evaluator archetype (SURVEY.md §2.1).
 """
 
 from __future__ import annotations
@@ -57,7 +61,7 @@ def langid_expr(col: Column) -> Column:
     with no CSE, re-tokenizing every row 4x (~3x slower at sf0.1). The
     SQL-mirrorable definition is pinned by the t_langid oracle.
 
-    Session-memoized UDF object (r9): the closure depends only on the
+    Session-memoized UDF object: the closure depends only on the
     module-constant marker vocabularies, so one JVM registration serves
     every plan build (functions/udf_cache.py).
     """
@@ -112,66 +116,21 @@ class LanguageIdEvaluator(Operator):
 class QualityScoreEvaluator(Operator):
     """Add a [0,1] composite quality score (functions/text.py:quality_score).
 
-    Default path is an Arrow-batched pandas_udf mirroring the Column
-    formula token-for-token (the Column form tokenizes three times
-    through CodegenFallback HOFs — measured ~5x slower at sf0.1;
-    ``use_expr=True`` keeps the pure-expression variant for plans that
-    must stay UDF-free). Same score bit-for-bit: identical operation
-    order, Java-\\s-equivalent ASCII tokenization, space-only trim.
+    One JVM-side Column expression: the text is tokenized once and a
+    single ``aggregate`` counts tokens, stopword hits and alpha tokens,
+    so the plan has no Python stage. NULL text scores NULL.
     """
 
     def __init__(self, input_key: str = "text", output_key: str = "quality_score",
-                 stopwords: list[str] | None = None, use_expr: bool = False):
+                 stopwords: list[str] | None = None):
         self.input_key, self.output_key = input_key, output_key
         self.stopwords = stopwords or EN_STOPWORDS
-        self.use_expr = use_expr
         self.input_keys = (input_key,)
         self.output_keys = (output_key,)
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        if self.use_expr:
-            return df.withColumn(
-                self.output_key,
-                T.quality_score(F.col(self.input_key), self.stopwords))
-        # session-memoized UDF object (r9): behavior is a pure function
-        # of the stopword list (functions/udf_cache.py)
-        sw = tuple(self.stopwords)
-        score = session_udf(("text_analysis.quality_score", sw),
-                            lambda: _quality_udf_build(sw))
-        return df.withColumn(self.output_key, score(F.col(self.input_key)))
-
-
-def _quality_udf_build(stopwords: tuple):
-    """Arrow-batched quality-score UDF; token-for-token mirror of
-    functions/text.py:quality_score (same score bit-for-bit: identical
-    operation order, Java-\\s-equivalent ASCII tokenization,
-    space-only trim)."""
-    import re
-
-    from pyspark.sql.functions import pandas_udf
-
-    sw = frozenset(stopwords)
-    ws_re = re.compile(r"\s+", re.ASCII)   # Java default \s == ASCII
-    alpha_re = re.compile(r"[A-Za-z]")
-    punct_re = re.compile(r"[.!?]\Z")   # absolute end, as Java \z
-
-    def one(t):
-        if t is None:
-            return None
-        w = [x for x in ws_re.split(t) if x]
-        n = len(w)
-        len_score = min(n / 100.0, 1.0)
-        sw_ratio = (sum(1 for x in w if x.lower() in sw) / n) if n else 0.0
-        sw_score = min(sw_ratio / 0.3, 1.0)
-        punct = 1.0 if punct_re.search(t.strip(" ")) else 0.0
-        alpha = (sum(1 for x in w if alpha_re.search(x)) / n) if n else 0.0
-        return 0.25 * len_score + 0.25 * sw_score + 0.25 * punct + 0.25 * alpha
-
-    @pandas_udf("double")
-    def score(s: pd.Series) -> pd.Series:
-        return s.map(one)
-
-    return score
+        return df.withColumn(
+            self.output_key, T.quality_score(F.col(self.input_key), self.stopwords))
 
 
 @OPERATOR_REGISTRY.register()
@@ -234,7 +193,7 @@ class NgramRepetitionEvaluator(Operator):
         # higher-order-function lambda tree is CodegenFallback in Spark
         # (no codegen CSE), so the gram array would be evaluated three
         # times per row (~6x slower measured at sf0.1). Session-memoized
-        # UDF object (r9): pure function of n (functions/udf_cache.py).
+        # UDF object: pure function of n (functions/udf_cache.py).
         ratio = session_udf(("text_analysis.ngram_ratio", self.n),
                             lambda: _ngram_ratio_udf_build(self.n))
         return df.withColumn(self.output_key, ratio(F.col(self.input_key)))
@@ -300,7 +259,7 @@ class GopherRepetitionEvaluator(Operator):
                             "dup_ngram_char_frac")
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        # session-memoized UDF object (r9): pure function of (n, k)
+        # session-memoized UDF object: pure function of (n, k)
         rep = session_udf(
             ("text_analysis.gopher_rep", self.n, self.segment_words),
             lambda: _gopher_rep_udf_build(self.n, self.segment_words))

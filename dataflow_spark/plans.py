@@ -39,7 +39,7 @@ engine's scale-hygiene contract for operator authors):
   Any mapInPandas/pandas_udf worker that allocates a large (100MB+)
   numpy temporary PER BLOCK pays the OS first-touch page-fault cost on
   every block — measured on this VM class at ~50MB/s under 32
-  concurrent workers (a 63x GEMM slowdown; the r8 ``s_most_similar``
+  concurrent workers (a 63x GEMM slowdown; the ``s_most_similar``
   dominator was mmap/munmap churn, not math). Allocate the buffer set
   once per batch (``np.empty`` outside the block loop), slice views
   per block, and route every kernel through ``out=``

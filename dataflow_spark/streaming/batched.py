@@ -106,7 +106,7 @@ def sessionize(events: DataFrame, user_key: str = "user_id", ts_key: str = "ts",
     ``tie_breaker``: extra order column for deterministic results when
     timestamps collide (recommended: the event primary key).
     """
-    # single-parse selectExpr (r9): the Window-API form cost ~220 py4j
+    # single-parse selectExpr: the Window-API form cost ~220 py4j
     # round trips per plan build; one SQL string parses the identical
     # tree (Catalyst dedups the repeated lag window expression exactly
     # as it did for the shared Column reference). unix_timestamp works

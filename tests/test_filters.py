@@ -103,23 +103,79 @@ def test_general_filter(spark):
     assert [r["id"] for r in op.run(df).collect()] == [1]
 
 
-def test_quality_score_udf_matches_expression_path(spark, docs):
-    from dataflow_spark.core.registry import get_operator
+def _quality_score_reference(stopwords):
+    """Pure-Python per-row quality score, the formula of
+    functions/text.py:quality_score in the same operation order: Java-\\s
+    tokenization (ASCII whitespace), space-only trim, end punctuation at
+    the absolute end."""
+    import re
+
+    sw = frozenset(stopwords)
+    ws_re = re.compile(r"\s+", re.ASCII)   # Java default \s == ASCII
+    alpha_re = re.compile(r"[A-Za-z]")
+    punct_re = re.compile(r"[.!?]\Z")   # absolute end, as Java \z
+
+    def one(t):
+        if t is None:
+            return None
+        w = [x for x in ws_re.split(t) if x]
+        n = len(w)
+        len_score = min(n / 100.0, 1.0)
+        sw_ratio = (sum(1 for x in w if x.lower() in sw) / n) if n else 0.0
+        sw_score = min(sw_ratio / 0.3, 1.0)
+        punct = 1.0 if punct_re.search(t.strip(" ")) else 0.0
+        alpha = (sum(1 for x in w if alpha_re.search(x)) / n) if n else 0.0
+        return 0.25 * len_score + 0.25 * sw_score + 0.25 * punct + 0.25 * alpha
+
+    return one
+
+
+def _generated_quality_corpus(n, seed):
+    """Seeded strings over ASCII whitespace (incl. \\x0b, \\x0c, \\r\\n),
+    mixed-case stopwords, non-ASCII letters, digits and punctuation;
+    about 3% NULL."""
+    import random
+
+    rng = random.Random(seed)
+    pieces = [" ", " ", "  ", "\t", "\n", "\x0b", "\x0c", "\r", "\r\n",
+              "the", "The", "THE", "aNd", "Of", "IS", "it", "iT", "bY",
+              "é", "ß", "Σ", "İ", "ǅ", "ﬁ", "İs", "İT", "Σtop", "straße",
+              "a", "x", "Zed", "word", "42", "7", ".", "!", "?", ",", ":"]
+    rows = []
+    for i in range(n):
+        if rng.random() < 0.03:
+            rows.append(None)
+            continue
+        rows.append("".join(rng.choice(pieces)
+                            for _ in range(rng.randrange(0, 160))))
+    return rows
+
+
+def test_quality_score_matches_python_reference(spark, docs):
+    from dataflow_spark.operators.filters.rule_based import EN_STOPWORDS
 
     tricky = spark.createDataFrame(
         [(9001, "ends with bang!"), (9002, "tab end!\t"), (9003, "nl end!\n"),
          (9004, "  spaced.  "), (9005, ""), (9006, "THE the And ??"),
-         (9007, " nbsp the end."), (9008, "word " * 150),
+         (9007, " nbsp the end."), (9008, "word " * 150),
          # end punctuation counts only as the very last character
-         (9009, ".\r"), (9010, "cr end!\r"), (9011, "crlf end?\r\n")],
-        ["doc_id", "text"])
-    both = docs.select("doc_id", "text").unionByName(tricky)
-    fast = get_operator("QualityScoreEvaluator", {}).run(both)
-    expr = get_operator("QualityScoreEvaluator", {"use_expr": True}).run(both)
-    a = {r["doc_id"]: r["quality_score"] for r in fast.collect()}
-    b = {r["doc_id"]: r["quality_score"] for r in expr.collect()}
-    assert a == b  # bit-identical, not approx
-    assert a[9009] == 0.25 * (1 / 100.0)  # no end-punctuation credit
+         (9009, ".\r"), (9010, "cr end!\r"), (9011, "crlf end?\r\n"),
+         (9012, None)],
+        "doc_id: long, text: string")
+    generated = spark.createDataFrame(
+        [(10_000 + i, t) for i, t in
+         enumerate(_generated_quality_corpus(2500, seed=7))],
+        "doc_id: long, text: string")
+    both = (docs.select("doc_id", "text").unionByName(tricky)
+            .unionByName(generated))
+    out = get_operator("QualityScoreEvaluator", {}).run(both)
+    got = {r["doc_id"]: r["quality_score"] for r in out.collect()}
+    one = _quality_score_reference(EN_STOPWORDS)
+    want = {r["doc_id"]: one(r["text"]) for r in both.collect()}
+    assert len(want) > 2500 + 12
+    assert got == want  # bit-identical, not approx
+    assert got[9009] == 0.25 * (1 / 100.0)  # no end-punctuation credit
+    assert got[9012] is None  # NULL text scores NULL
 
 
 def test_compression_ratio(spark):

@@ -170,3 +170,29 @@ def test_exact_dedup_aggregate_prunes_columns(spark, tmp_path):
     # and the pruned plan still computes keep-first correctly
     rows = {(r.doc_id, r.text) for r in out.collect()}
     assert rows == {(0, "t0"), (1, "t1"), (2, "t2")}
+
+
+def test_curate_chain_has_no_python_stage(spark, docs):
+    """The refine -> filter -> score -> filter -> dedup -> split chain runs
+    entirely in the JVM: no Python worker is needed to execute it."""
+    from dataflow_spark import Pipeline, get_operator
+
+    stopwords = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
+                 "for", "with"]
+    out = Pipeline([
+        get_operator("RemoveExtraSpacesRefiner", {"input_key": "text"}),
+        get_operator("ContentNullFilter", {"input_key": "text"}),
+        get_operator("WordNumberFilter", {"input_key": "text", "min_words": 5}),
+        get_operator("QualityScoreEvaluator",
+                     {"input_key": "text", "stopwords": stopwords}),
+        get_operator("GeneralFilter", {"predicates": ["quality_score >= 0.7"]}),
+        get_operator("HashDeduplicateFilter",
+                     {"input_keys": "text", "order_key": "doc_id"}),
+        get_operator("SplitAssignOperator",
+                     {"key": "doc_id",
+                      "splits": {"train": 0.9, "val": 0.05, "test": 0.05}}),
+    ]).forward(docs)
+    assert audit(out)["python_ops"] == []
+    # positive control: a pandas-UDF operator on the same chain is seen
+    langid = get_operator("LanguageIdEvaluator", {}).run(out)
+    assert audit(langid)["python_ops"] == ["ArrowEvalPython"]

@@ -42,10 +42,11 @@ def main() -> None:
     spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    from datetime import datetime
+    from datetime import datetime, timezone
 
-    def ts(s):
-        return datetime.strptime(s.split("GMT")[0], "%Y-%m-%dT%H:%M:%S.%f").timestamp()
+    def ts(s):  # the UI's timestamps are GMT
+        return datetime.strptime(s.split("GMT")[0], "%Y-%m-%dT%H:%M:%S.%f").replace(
+            tzinfo=timezone.utc).timestamp()
 
     for it in range(iters):
         seen = {j["jobId"] for j in jobs_json()}
