@@ -37,16 +37,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), d / (na * nb))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(to_double_array(a), to_double_array(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def normalize(a: Column) -> Column:
     """Unit-normalize; null-safe (returns original when norm == 0)."""
     n = norm(a)

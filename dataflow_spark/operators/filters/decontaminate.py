@@ -64,7 +64,7 @@ def word_ngrams(text: str | None, n: int) -> list[str]:
     """Single-row gram kernel (module-level so properties are testable
     without a SparkSession): sorted distinct non-empty word n-grams.
 
-    Mirrors ``hashing.word_shingles`` semantics: ASCII ``\\s+`` split,
+    Word n-grams joined by single spaces: ASCII ``\\s+`` split,
     empties dropped; texts shorter than ``n`` words contribute their
     whole word sequence as one gram, so a verbatim short benchmark
     answer still matches a verbatim copy.

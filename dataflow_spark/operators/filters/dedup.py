@@ -9,13 +9,13 @@ key or ingest ``_row_id``), never partition order.
 Scale design:
   - exact dedup: hash + row_number window — one shuffle on the hash key,
     map-side combinable, skew-safe (hash keys are uniform).
-  - near-dup: signature -> band explode -> bucket groupBy pair
+  - near-dup: signature -> band explode -> bucket groupBy star
     expansion -> verified candidate edges -> connected components
     (bounded-size driver union-find, distributed min-label propagation
     above the bound) -> keep rows whose id equals their component's min.
     No O(n^2) over the corpus anywhere, unlike the reference's greedy
     loops (simhash_deduplicate_filter.py:56-91) — quadratic work is
-    confined to within-bucket pair expansion, exactly as in LSH.
+    confined to the signature-verified candidate pairs, as in LSH.
 """
 
 from __future__ import annotations
@@ -38,11 +38,6 @@ from dataflow_spark.functions.spread import spread_for_udf
 def _bq(name: str) -> str:
     """Backtick-quote an identifier for trusted engine-built SQL text."""
     return "`" + name.replace("`", "``") + "`"
-
-
-# moved to functions/spread.py (shared with similarity/text kernels);
-# re-exported here for the existing call sites below
-_spread_for_udf = spread_for_udf
 
 
 def _keep_first(df: DataFrame, key: Column, order_col: str) -> DataFrame:
@@ -110,9 +105,8 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     large-star/small-star contraction (Kiveris et al., "Connected
     Components in MapReduce and Beyond"): O(log^2 n) rounds regardless
     of graph diameter — unlike naive min-label propagation, a chain
-    component (the shape the oversized-bucket fallback in
-    ``_dedup_by_bands`` emits) converges in logarithmic rounds, not
-    linear. Each round localCheckpoints to truncate lineage.
+    component (a drift of edits, each a near-dup of the next) converges
+    in logarithmic rounds, not linear. Each round localCheckpoints to truncate lineage.
     The edge list itself is always computed distributedly.
     """
     # normalize column names positionally: callers may pass any
@@ -376,11 +370,6 @@ class NgramHashDeduplicateFilter(_BaseDedup):
 class _NearDupBase(_BaseDedup):
     """Shared band-join -> components -> keep-first machinery."""
 
-    #: 'star' (default) emits size-1 min-anchored edges per bucket;
-    #: 'all' emits all pairs (precision mode), capped by max_bucket_size
-    pair_expansion = "star"
-    #: in 'all' mode, buckets above this size fall back to chain edges
-    max_bucket_size = 1000
     #: set (e.g. "cluster_id") to RETURN cluster assignments for every
     #: row instead of filtering to survivors — corpus exploration mode;
     #: survivors are exactly the rows where assign column == order id
@@ -472,54 +461,35 @@ class _NearDupBase(_BaseDedup):
             raise ValueError("pass verify or verify_expr, not both")
         # one shuffle (groupBy bucket) + in-bucket edge expansion instead
         # of a two-sided self-join on (band, h): same components, half
-        # the shuffled bytes. Edge expansion per bucket of size k:
-        #   star (default): k-1 edges anchoring every id to the bucket
-        #     min — identical connected components to all-pairs through
-        #     that bucket, linear not quadratic. (The reference's
-        #     datasketch-LSH greedy insert is the same star shape and
-        #     does not verify at all; our verify runs on the star edges,
-        #     so precision is still >= reference.)
-        #   all: k(k-1)/2 edges, for maximum verify precision; buckets
-        #     above max_bucket_size emit a consecutive chain instead so
-        #     adversarial near-identical corpora stay linear.
+        # the shuffled bytes. A bucket of size k expands to a star: k-1
+        # edges anchoring every id to the bucket min — the components of
+        # all pairs through that bucket, linear not quadratic. The
+        # reference's datasketch-LSH greedy insert is the same star shape
+        # and does not verify at all; verify runs on the star edges, so
+        # precision is still >= reference. A member that verifies against
+        # another member but not against the anchor is not linked by
+        # that bucket.
         carry = verify_expr is not None
         # sort_array over struct(_nd_id, _v) orders by _nd_id first —
-        # _nd_id is unique within a bucket (reps), so the element order
-        # (hence star anchor / chain shape) is identical to the id-only
-        # form and the same buckets emit the same (src, dst) pairs.
+        # _nd_id is unique within a bucket (reps), so the star anchor is
+        # the same as in the id-only form and the same buckets emit the
+        # same (src, dst) pairs.
         elem = "struct(_nd_id, _v)" if carry else "_nd_id"
         buckets = (
             banded.groupBy("band", "h")
             .agg(F.expr(f"sort_array(collect_list({elem})) AS _ids"))
             .filter("size(_ids) > 1")
         )
-        # single-parse SQL strings: the Column-lambda forms of these
-        # expansions cost ~100+ py4j round trips per plan build; one
-        # string parses the identical tree in one JVM call. Results
-        # unchanged. inline() = explode + struct-splat in one generator
-        # select (same trick as banding): the old explode -> project
-        # pair cost ~75 more round trips and left a dead struct
-        # projection in the plan.
+        # single-parse SQL string: one JVM parse instead of ~100+ py4j
+        # round trips for the Column-lambda form. inline() = explode +
+        # struct-splat in one generator select (same trick as banding).
+        x = "element_at(_ids, 1)"
         if carry:
-            def emit(x: str, y: str) -> str:
-                return (f"named_struct('src', {x}._nd_id, 'dst', {y}._nd_id,"
-                        f" '_va', {x}._v, '_vb', {y}._v)")
+            edge = (f"named_struct('src', {x}._nd_id, 'dst', y._nd_id,"
+                    f" '_va', {x}._v, '_vb', y._v)")
         else:
-            def emit(x: str, y: str) -> str:
-                return f"named_struct('src', {x}, 'dst', {y})"
-        if self.pair_expansion == "star":
-            pair_sql = (
-                "transform(slice(_ids, 2, size(_ids) - 1), "
-                f"y -> {emit('element_at(_ids, 1)', 'y')})")
-        else:
-            mbs = int(self.max_bucket_size)
-            pair_sql = (
-                f"CASE WHEN size(_ids) > {mbs} THEN "
-                "transform(slice(_ids, 1, size(_ids) - 1), (x, i) -> "
-                f"{emit('x', 'element_at(_ids, i + 2)')}) "
-                "ELSE flatten(transform(_ids, (x, i) -> "
-                "transform(slice(_ids, i + 2, size(_ids)), "
-                f"y -> {emit('x', 'y')}))) END")
+            edge = f"named_struct('src', {x}, 'dst', y)"
+        pair_sql = f"transform(slice(_ids, 2, size(_ids) - 1), y -> {edge})"
         if carry:
             # verify as a codegen'd filter fused into the expansion
             # stage — verify_expr is a pure function of (src, dst)
@@ -574,18 +544,15 @@ class MinHashDeduplicateFilter(_NearDupBase):
     MinHash over char-5-gram shingles, 4 bands x 16 rows (collision
     threshold ~(1/4)^(1/16) = 0.92), candidate pairs verified by
     signature-estimated Jaccard >= threshold, connected components, keep
-    min order-id per component. All signature math is JVM-side Column
-    expressions (functions/hashing.py); no Python in the hot path.
+    min order-id per component. Signatures are an Arrow pandas UDF and
+    band keys are SQL expressions (functions/hashing.py).
     """
 
     def __init__(self, input_key: str = "text", threshold: float = 0.9,
                  num_perm: int = 64, num_bands: int | str = 4,
-                 shingle_n: int = 5,
-                 order_key: str | None = None, verify_jaccard: bool = True,
-                 pair_expansion: str = "star", hash_impl: str = "fast",
-                 assign_key: str | None = None):
+                 shingle_n: int = 5, order_key: str | None = None,
+                 hash_impl: str = "fast", assign_key: str | None = None):
         super().__init__(input_key, order_key)
-        self.pair_expansion = pair_expansion
         self.assign_key = assign_key
         self.threshold = threshold
         self.num_perm = num_perm
@@ -599,33 +566,44 @@ class MinHashDeduplicateFilter(_NearDupBase):
             self.num_bands = num_bands
             self.rows_per_band = num_perm // num_bands
         self.shingle_n = shingle_n
-        self.verify_jaccard = verify_jaccard
         #: 'fast' = splitmix64 numpy rolling hash (production);
         #: 'md5' = md5-based shingle hashes + plain band keys, bit-exactly
         #: reproducible in external SQL engines (the oracle contract)
         self.hash_impl = hash_impl
 
+    def _kernels(self) -> tuple[Any, str]:
+        """(signature UDF, band-key SQL over ``_sig``) for ``hash_impl``."""
+        if self.hash_impl == "md5":
+            return (H.minhash_md5_udf(self.num_perm, self.shingle_n),
+                    H.band_keys_plain_sql(
+                        "_sig", self.num_bands, self.rows_per_band))
+        return (H.minhash64_udf(self.num_perm, self.shingle_n),
+                H.band_hashes_sql("_sig", self.num_bands, self.rows_per_band))
+
+    def _est_sql(self, a: str, b: str) -> str:
+        """Signature-estimated Jaccard of signature columns ``a``, ``b``."""
+        return (f"cast(size(filter(zip_with({a}, {b}, (x, y) -> x = y), "
+                f"eq -> eq)) as double) / {int(self.num_perm)}")
+
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
         df, order_col = self._ordered(df)
+        return self._dedup(df, order_col)
+
+    def _dedup(self, df: DataFrame, order_col: str) -> DataFrame:
+        """In-batch MinHash dedup of ``df``, already ordered by
+        :meth:`_ordered` on ``order_col``."""
         df = df.withColumn("_nd_id", F.expr(f"cast({_bq(order_col)} as long)"))
-        if self.hash_impl == "md5":
-            sig_udf = H.minhash_md5_udf(self.num_perm, self.shingle_n)
-            bands_sql = H.band_keys_plain_sql(
-                "_sig", self.num_bands, self.rows_per_band)
-        else:
-            sig_udf = H.minhash64_udf(self.num_perm, self.shingle_n)
-            bands_sql = H.band_hashes_sql(
-                "_sig", self.num_bands, self.rows_per_band)
+        sig_udf, bands_sql = self._kernels()
         # project-then-dedup: only (id, signature) flows through banding,
         # verify, and components — the scan on this branch reads just
         # [order_col, input_key]; full rows join back on survivors only.
         # The signature pass is persisted INSIDE _collapse_exact (window
         # output) — one cached materialization feeds banding, the exact
         # edges, and the verify lookups (every pair id is a rep).
-        # _spread_for_udf: under-split inputs (single-row-group files)
-        # would run the md5 kernel on one core; spreading the narrow
+        # spread_for_udf: under-split inputs (single-row-group files)
+        # would run the signature kernel on one core; spreading the narrow
         # projection is a no-op whenever the scan already parallelizes.
-        sigs = _spread_for_udf(
+        sigs = spread_for_udf(
             df.select("_nd_id", self.input_key)).select(
             F.col("_nd_id"), sig_udf(F.col(self.input_key)).alias("_sig"))
         # exact-signature collapse: bounds bucket sizes on degenerate
@@ -637,20 +615,16 @@ class MinHashDeduplicateFilter(_NearDupBase):
         # inline() = explode + struct-splat in one generator select
         banded = reps.selectExpr("_nd_id", f"inline({bands_sql})")
 
-        verify = None
-        if self.verify_jaccard:
-            est_sql = ("cast(size(filter(zip_with(_sig_a, _sig_b, "
-                       "(x, y) -> x = y), eq -> eq)) as double) / "
-                       f"{int(self.num_perm)} >= "
-                       f"cast({float(self.threshold)!r} as double)")
+        est_sql = (f"{self._est_sql('_sig_a', '_sig_b')} >= "
+                   f"cast({float(self.threshold)!r} as double)")
 
-            def verify(pairs: DataFrame) -> DataFrame:
-                return (
-                    pairs.join(reps.toDF("src", "_sig_a"), "src")
-                    .join(reps.toDF("dst", "_sig_b"), "dst")
-                    .filter(F.expr(est_sql))
-                    .select("src", "dst")
-                )
+        def verify(pairs: DataFrame) -> DataFrame:
+            return (
+                pairs.join(reps.toDF("src", "_sig_a"), "src")
+                .join(reps.toDF("dst", "_sig_b"), "dst")
+                .filter(F.expr(est_sql))
+                .select("src", "dst")
+            )
 
         return self._dedup_by_bands(df, banded, order_col, verify,
                                     extra_edges=exact_edges)
@@ -661,17 +635,15 @@ class SimHashDeduplicateFilter(_NearDupBase):
     """SimHash near-dup removal via band blocking + Hamming verify.
 
     Reference: general_text/filter/simhash_deduplicate_filter.py:56-91
-    (O(n^2) greedy). Ours: 64-bit simhash (Column expr), 4x16-bit bands
+    (O(n^2) greedy). Ours: 64-bit simhash (Arrow pandas UDF), 4x16-bit bands
     (pigeonhole guarantees recall for Hamming <= 3), xor/bit_count
     verify, components, keep earliest.
     """
 
     def __init__(self, input_key: str = "text", max_hamming: int = 3,
                  shingle_n: int = 4, order_key: str | None = None,
-                 pair_expansion: str = "star", hash_impl: str = "fast",
-                 assign_key: str | None = None):
+                 hash_impl: str = "fast", assign_key: str | None = None):
         super().__init__(input_key, order_key)
-        self.pair_expansion = pair_expansion
         self.assign_key = assign_key
         self.max_hamming = max_hamming
         self.shingle_n = shingle_n
@@ -687,9 +659,9 @@ class SimHashDeduplicateFilter(_NearDupBase):
         # project-then-dedup: only (id, simhash) feeds banding + Hamming
         # verify; the collapse window output is persisted inside
         # _collapse_exact — one cached pass feeds every consumer.
-        # _spread_for_udf: see MinHashDeduplicateFilter — cores-wide
+        # spread_for_udf: see MinHashDeduplicateFilter — cores-wide
         # signature stage on under-split inputs, no-op otherwise.
-        sims = _spread_for_udf(
+        sims = spread_for_udf(
             df.select("_nd_id", self.input_key)).select(
             F.col("_nd_id"), sim_udf(F.col(self.input_key)).alias("_simhash"))
         # exact-signature collapse (see _collapse_exact): degenerate-
@@ -729,9 +701,8 @@ class SemDeduplicateFilter(_NearDupBase):
     def __init__(self, embedding_key: str = "embedding", eps: float = 0.05,
                  num_planes: int = 16, num_bands: int = 4, dim: int | None = None,
                  order_key: str | None = None, seed: int = 42,
-                 pair_expansion: str = "star", assign_key: str | None = None):
+                 assign_key: str | None = None):
         super().__init__(embedding_key, order_key)
-        self.pair_expansion = pair_expansion
         self.assign_key = assign_key
         self.eps = eps
         self.num_planes = num_planes
@@ -791,15 +762,7 @@ class IncrementalMinHashDedupFilter(MinHashDeduplicateFilter):
             **kwargs: Any) -> DataFrame:
         if existing is None:
             raise ValueError("IncrementalMinHashDedupFilter needs existing=")
-        if self.hash_impl == "md5":
-            sig_udf = H.minhash_md5_udf(self.num_perm, self.shingle_n)
-            bands_sql = H.band_keys_plain_sql(
-                "_sig", self.num_bands, self.rows_per_band)
-        else:
-            sig_udf = H.minhash64_udf(self.num_perm, self.shingle_n)
-            bands_sql = H.band_hashes_sql(
-                "_sig", self.num_bands, self.rows_per_band)
-
+        sig_udf, bands_sql = self._kernels()
         df, order_col = self._ordered(df)
         new_sigs = (
             df.select(F.col(order_col).cast("long").alias("_nid"),
@@ -830,10 +793,7 @@ class IncrementalMinHashDedupFilter(MinHashDeduplicateFilter):
         est = (cand.join(new_sigs, "_nid")
                .join(ex_sigs.select("_eid", F.col("_sig").alias("_esig")),
                      "_eid")
-               .withColumn("_est", F.expr(
-                   "cast(size(filter(zip_with(_sig, _esig, "
-                   "(x, y) -> x = y), eq -> eq)) as double) / "
-                   f"{int(self.num_perm)}")))
+               .withColumn("_est", F.expr(self._est_sql("_sig", "_esig"))))
         # eager localCheckpoint scopes the two signature caches to THIS
         # invocation (see _collapse_exact): matched is the last
         # consumer of new_sigs/ex_sigs, and both are deterministic plans
@@ -854,7 +814,9 @@ class IncrementalMinHashDedupFilter(MinHashDeduplicateFilter):
         ex_sigs.unpersist()
         fresh = (df.withColumn("_nid", F.col(order_col).cast("long"))
                  .join(matched, "_nid", "left_anti").drop("_nid"))
-        return super().run(fresh)
+        # _dedup, not run(): a second _ordered() would see the _row_id
+        # added above as a user column and keep it in the output
+        return self._dedup(fresh, order_col)
 
 
 def _bloom_positions(h1, h2, m: int, k: int):

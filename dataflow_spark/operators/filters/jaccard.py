@@ -238,12 +238,9 @@ class NgramJaccardDeduplicateFilter(_NearDupBase):
         bands, rows = H.optimal_bands(min(max(self.threshold, 0.05), 0.95),
                                       self.fallback_num_perm)
         sig_udf = H.minhash_from_hashes_udf(self.fallback_num_perm)
-        b = with_sh.select(
-            "_nd_id",
-            F.explode(H.band_hashes(sig_udf(F.col("_sh")),
-                                    bands, rows)).alias("bh"))
-        b = b.select("_nd_id", F.col("bh.band").alias("band"),
-                     F.col("bh.h").alias("h"))
+        b = (with_sh.select("_nd_id", sig_udf(F.col("_sh")).alias("_sig"))
+             .selectExpr("_nd_id",
+                         f"inline({H.band_hashes_sql('_sig', bands, rows)})"))
         # star expansion via a streaming window (never a collect_list of
         # an unbounded bucket): anchor = bucket-min id
         w = Window.partitionBy("band", "h").orderBy("_nd_id")

@@ -595,12 +595,9 @@ class FuzzyJoinOperator(Operator):
         cap = self.fallback_max_bucket
 
         def banded(side: DataFrame) -> DataFrame:
-            b = side.select(
-                "_id",
-                F.explode(H.band_hashes(sig_udf(F.col("_sh")),
-                                        bands, rows)).alias("bh"))
-            b = b.select("_id", F.col("bh.band").alias("band"),
-                         F.col("bh.h").alias("h"))
+            b = (side.select("_id", sig_udf(F.col("_sh")).alias("_sig"))
+                 .selectExpr("_id",
+                             f"inline({H.band_hashes_sql('_sig', bands, rows)})"))
             # per-bucket cap via a window (external sorter streams the
             # group — never a collect_list of an unbounded bucket)
             w = Window.partitionBy("band", "h").orderBy("_id")

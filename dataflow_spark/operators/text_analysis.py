@@ -37,15 +37,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def lang_hit_counts(col: Column) -> dict[str, Column]:
-    w = F.transform(T.words(col), lambda x: F.lower(x))
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        arr = F.array(*[F.lit(m) for m in markers])
-        out[lang] = F.size(F.filter(w, lambda x: F.array_contains(arr, x)))
-    return out
-
-
 CJK_RE = "[一-鿿]"
 
 
@@ -189,7 +180,7 @@ class NgramRepetitionEvaluator(Operator):
         self.output_keys = (output_key,)
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        # pandas_udf rather than the word_shingles Column expression: the
+        # pandas_udf rather than a Column expression of word n-grams: the
         # higher-order-function lambda tree is CodegenFallback in Spark
         # (no codegen CSE), so the gram array would be evaluated three
         # times per row (~6x slower measured at sf0.1). Session-memoized

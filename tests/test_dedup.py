@@ -84,9 +84,10 @@ def test_connected_components(spark):
 
 
 def test_near_dup_bucket_cap_degenerate_corpus(spark):
-    """10k identical docs land in one LSH bucket; the bucket-size cap
-    switches to chain expansion (N-1 edges, not N^2/2) and still
-    collapses the cluster to its first row in bounded time."""
+    """10k identical docs share one signature: the exact-signature
+    collapse caps their LSH bucket at one rep (N-1 exact edges, not
+    N^2/2 pairs) and the cluster collapses to its first row in bounded
+    time."""
     import time
 
     from dataflow_spark.operators.filters.dedup import MinHashDeduplicateFilter
@@ -95,8 +96,7 @@ def test_near_dup_bucket_cap_degenerate_corpus(spark):
     df = spark.range(n).selectExpr(
         "id AS doc_id",
         "'the same exact document body repeated verbatim for every row' AS text")
-    op = MinHashDeduplicateFilter(order_key="doc_id", pair_expansion="all")
-    op.max_bucket_size = 100  # force the chain fallback inside 'all' mode
+    op = MinHashDeduplicateFilter(order_key="doc_id")
     t0 = time.time()
     out = op.run(df)
     kept = out.select("doc_id").collect()
@@ -104,63 +104,16 @@ def test_near_dup_bucket_cap_degenerate_corpus(spark):
     assert time.time() - t0 < 120
 
 
-def test_pair_expansion_modes_agree(spark):
-    """Star and all-pairs expansion find the same duplicate clusters on
-    a well-separated corpus."""
-    from dataflow_spark.operators.filters.dedup import MinHashDeduplicateFilter
-
-    rows = []
-    for g in range(20):
-        base = f"group {g} document about topic {g} with shared content body {'x' * g}"
-        for r in range(5):
-            rows.append((g * 10 + r, base + f" tail{r}"))
-    df = spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(2)
-    kept_star = {r.doc_id for r in MinHashDeduplicateFilter(
-        order_key="doc_id", threshold=0.5).run(df).collect()}
-    kept_all = {r.doc_id for r in MinHashDeduplicateFilter(
-        order_key="doc_id", threshold=0.5,
-        pair_expansion="all").run(df).collect()}
-    assert kept_star == kept_all
-
-
-def test_simhash_pair_expansion_modes_agree(spark):
-    """Star and all-pairs expansion agree for SimHash under the
-    carried-signature verify (the Hamming filter is fused into both
-    expansion forms, including the oversized-bucket chain fallback).
-
-    The agreement holds because of this corpus, not as a general rule:
-    each group is one pair of documents a single token apart, so a
-    bucket holds one pair and its star edge is its only edge. Star verifies only the edges
-    to the bucket minimum, so in a bucket of three or more a member that
-    verifies against another member but not against the minimum is
-    dropped by "all" and kept by "star"."""
+def test_simhash_identical_docs_collapse(spark):
+    """Identical docs collapse to the first row through the
+    exact-signature edges, whatever their buckets hold."""
     from dataflow_spark.operators.filters.dedup import SimHashDeduplicateFilter
 
-    rows = []
-    for g in range(12):
-        base = " ".join(
-            f"tok{g}_{i} word{(g * 31 + i) % 97}" for i in range(150))
-        rows.append((g * 10, base))
-        rows.append((g * 10 + 1, base.replace(f"tok{g}_7", "tokXX")))
-    df = spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(2)
-    kept_star = {r.doc_id for r in SimHashDeduplicateFilter(
-        order_key="doc_id").run(df).collect()}
-    op_all = SimHashDeduplicateFilter(order_key="doc_id",
-                                      pair_expansion="all")
-    kept_all = {r.doc_id for r in op_all.run(df).collect()}
-    assert kept_star == kept_all
-    # oversized-bucket chain fallback: chain edges verify pairwise, so
-    # it is a recall-bounded fallback (documented) — but identical docs
-    # still collapse through the exact-signature edges regardless of
-    # the expansion form
     dup_rows = [(i, "the very same document body for every row")
                 for i in range(6)]
     ddf = spark.createDataFrame(dup_rows, ["doc_id", "text"])
-    op_chain = SimHashDeduplicateFilter(order_key="doc_id",
-                                        pair_expansion="all")
-    op_chain.max_bucket_size = 1
-    assert [r.doc_id for r in
-            op_chain.run(ddf).select("doc_id").collect()] == [0]
+    op = SimHashDeduplicateFilter(order_key="doc_id")
+    assert [r.doc_id for r in op.run(ddf).select("doc_id").collect()] == [0]
 
 
 def test_dedup_by_bands_rejects_both_verify_forms(spark):
@@ -243,7 +196,7 @@ def test_minhash_md5_handles_empty_and_short(spark):
 
 
 def test_minhash_md5_udf_matches_kernel(spark):
-    """The memoized iterator-form UDF (r9) must be bit-identical to the
+    """The memoized iterator-form UDF must be bit-identical to the
     module-level ``minhash_md5_one`` oracle kernel — duplicates in the
     batch exercise the text memo, shared grams the gram memo, and the
     short/empty rows the edge paths."""
@@ -387,7 +340,7 @@ def test_minhash_auto_banding(spark):
 
 
 def test_keep_first_tied_order_key_returns_coherent_row(spark):
-    # Non-unique caller order_key: ADVICE r6 — independent per-column
+    # Non-unique caller order_key: independent per-column
     # min_by could stitch columns from DIFFERENT tied rows into a row
     # that never existed. With the engine row-id tie-breaker, the
     # survivor must be exactly one input row (earliest ingest order
@@ -408,19 +361,59 @@ def test_keep_first_tied_order_key_returns_coherent_row(spark):
     assert out.columns == ["ok", "text", "tag", "val"]
 
 
-def test_ngram_dedup_drops_engine_row_id(spark):
-    # regression: NgramHashDeduplicateFilter returned without _finish,
-    # leaking _row_id once the tie-breaker attach landed (r7)
-    df = spark.createDataFrame([(1, "abcdefgh"), (2, "abcdefgh"),
-                                (3, "zzzzyyyy")], ["id", "text"])
-    out = get_operator("NgramHashDeduplicateFilter",
-                       {"input_key": "text", "order_key": "id"}).run(df)
-    assert out.columns == ["id", "text"]
-    assert sorted(r["id"] for r in out.collect()) == [1, 3]
+def _dedup_ops() -> list:
+    """Every public _BaseDedup operator class."""
+    from dataflow_spark.operators.filters.dedup import _BaseDedup
+
+    def walk(cls):
+        for sub in cls.__subclasses__():
+            yield sub
+            yield from walk(sub)
+
+    return sorted({c for c in walk(_BaseDedup)
+                   if not c.__name__.startswith("_")},
+                  key=lambda c: c.__name__)
+
+
+@pytest.mark.parametrize("cls", _dedup_ops(), ids=lambda c: c.__name__)
+def test_dedup_drops_engine_row_id(spark, cls):
+    """The engine's ``_row_id`` order column never leaks into the output,
+    with or without a caller ``order_key``; the incremental operators run
+    against an ``existing=`` corpus."""
+    import inspect
+
+    text = "the quick brown fox jumps over the lazy dog by the river bank"
+    params = inspect.signature(cls.__init__).parameters
+    key = next(k for k in ("embedding_key", "input_keys", "input_key")
+               if k in params)
+    args = {key: "embedding" if key == "embedding_key" else "text"}
+    if "bits_log2" in params:
+        args["bits_log2"] = 10  # a 128-byte bloom filter
+    if key == "embedding_key":
+        rows = [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]),
+                (3, [0.0, 1.0, 0.0])]
+        schema = "doc_id long, embedding array<double>"
+    else:
+        rows = [(1, text), (2, text),
+                (3, "an unrelated document about columnar query engines")]
+        schema = "doc_id long, text string"
+    df = spark.createDataFrame(rows, schema)
+    old = spark.createDataFrame(
+        [(100, [0.0, 0.0, 1.0] if key == "embedding_key"
+          else "an archived note about distributed storage systems")],
+        schema)
+    for order_key in ("doc_id", None):
+        op = cls(**args, order_key=order_key)
+        kwargs = ({"existing": old}
+                  if "existing" in inspect.signature(op.run).parameters
+                  else {})
+        out = op.run(df, **kwargs)
+        assert out.columns == df.columns, order_key
+        assert sorted(r.doc_id for r in out.collect()) == [1, 3], order_key
 
 
 def test_user_row_id_survives_explicit_order_key(spark):
-    """ADVICE r7: an input legitimately carrying a user _row_id column
+    """An input legitimately carrying a user _row_id column
     alongside an explicit order_key must keep that column — only an
     ENGINE-added _row_id is dropped by _finish."""
     df = spark.createDataFrame([(1, "a", 10), (2, "a", 20), (3, "b", 30)],
@@ -432,25 +425,38 @@ def test_user_row_id_survives_explicit_order_key(spark):
         {(1, 10), (3, 30)}
 
 
-def test_sql_band_twins_match_column_forms(spark):
-    """r9: the *_sql single-parse twins must stay value-identical to
-    the Column-API band builders they replaced on the hot paths."""
-    from pyspark.sql import functions as F
-
+def test_sql_band_builders_pinned_values(spark):
+    """The band-key SQL builders give these exact keys (values taken
+    from the Column-API builders they replaced)."""
     from dataflow_spark.functions import hashing as H
 
     sig = [[i * 7 + j for j in range(8)] for i in range(5)]
     df = spark.createDataFrame([(s,) for s in sig], ["_sig"])
-    for col_form, sql_form in [
-        (H.band_hashes(F.col("_sig"), 4, 2), H.band_hashes_sql("_sig", 4, 2)),
-        (H.band_keys_plain(F.col("_sig"), 4, 2),
-         H.band_keys_plain_sql("_sig", 4, 2)),
-    ]:
-        a = df.select(col_form.alias("b")).collect()
-        b = df.select(F.expr(sql_form).alias("b")).collect()
-        assert a == b
+
+    def bands(frame, sql):
+        return [[(b.band, b.h) for b in r.b]
+                for r in frame.select(F.expr(sql).alias("b")).collect()]
+
+    assert bands(df, H.band_keys_plain_sql("_sig", 4, 2)) == [
+        [(band, f"{i * 7 + 2 * band},{i * 7 + 2 * band + 1}")
+         for band in range(4)] for i in range(5)]
+    assert bands(df, H.band_hashes_sql("_sig", 4, 2)) == [
+        [(0, -2443323601347142808), (1, 3619530896294704703),
+         (2, 1246840323201493236), (3, 2873937142813816006)],
+        [(0, 9127491994331816498), (1, 3116487350011508319),
+         (2, 6175365007328354382), (3, 8977631263419483347)],
+        [(0, -705428450748544931), (1, -2038573541048224122),
+         (2, -4952866063930649559), (3, 2698557440383562460)],
+        [(0, 8305187960364794180), (1, -2791880129970298462),
+         (2, -4621608317075114154), (3, 319534537228212451)],
+        [(0, -6437573394166590836), (1, 2033980676685432748),
+         (2, -2846548901880459603), (3, 8822382289629094288)],
+    ]
     sim = spark.createDataFrame([(x,) for x in [0, 1, -1, (1 << 62) + 5]],
                                 "s long")
-    a = sim.select(H.simhash_bands(F.col("s")).alias("b")).collect()
-    b = sim.select(F.expr(H.simhash_bands_sql("s")).alias("b")).collect()
-    assert a == b
+    assert bands(sim, H.simhash_bands_sql("s")) == [
+        [(0, 0), (1, 0), (2, 0), (3, 0)],
+        [(0, 1), (1, 0), (2, 0), (3, 0)],
+        [(0, 65535), (1, 65535), (2, 65535), (3, 65535)],
+        [(0, 5), (1, 0), (2, 0), (3, 16384)],
+    ]
