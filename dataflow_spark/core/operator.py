@@ -27,13 +27,16 @@ ROW_ID = "_row_id"
 class BudgetExceededError(ValueError):
     """An operator's compute/candidate budget guard refused the run.
 
-    Raised by the exact-similarity family (FuzzyJoinOperator,
+    Raised by the exact set-similarity join (``ExactSetJoin`` in
+    operators/fuzzy_join.py, shared by FuzzyJoinOperator and
     NgramJaccardDeduplicateFilter) when a corpus shape makes the exact
-    algorithm ~quadratic past the configured budget — an actionable
-    refusal in seconds instead of an hours-long job or executor OOM.
-    Subclasses ValueError so existing ``except ValueError`` handling
-    (and tests) keep working; operators with ``on_budget_exceeded=
-    "minhash"`` catch it and route to the approximate fallback.
+    algorithm ~quadratic past ``dense_flop_budget`` or
+    ``max_candidate_pairs``, and by SubstringDuplicatePairs'
+    ``max_candidate_pairs`` — an actionable refusal in seconds instead
+    of an hours-long job or executor OOM. Subclasses ValueError so
+    existing ``except ValueError`` handling (and tests) keep working;
+    operators with ``on_budget_exceeded="minhash"`` catch it and route
+    to the approximate fallback.
     """
 
 

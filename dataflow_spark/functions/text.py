@@ -27,10 +27,6 @@ def word_count(col: Column) -> Column:
     return F.size(words(col))
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
 def sentence_count(col: Column) -> Column:
     """Number of [.!?]+-terminated segments with non-space content."""
     return F.size(F.filter(F.split(col, SENT_RE), lambda x: F.trim(x) != F.lit("")))

@@ -514,13 +514,18 @@ class _NearDupBase(_BaseDedup):
         cached = self.__dict__.pop("_collapse_cached", None)
         if cached is not None:
             cached.unpersist()
-        # keep-first without a window: the component label IS the min
-        # order-id of the cluster (union-find min-root / min-label
-        # propagation), so "first occurrence" == rows whose own id equals
-        # their component label; unclustered rows (left-join miss) stay.
+        return self._keep_components(df, comp, order_col)
+
+    def _keep_components(self, df: DataFrame, comp: DataFrame,
+                         order_col: str) -> DataFrame:
+        """Keep-first without a window or aggregate: ``comp`` is
+        DataFrame[id, component] from :func:`connected_components`, whose
+        label IS the min order-id of the cluster (union-find min-root /
+        min-label propagation), so "first occurrence" == rows of ``df``
+        whose own ``_nd_id`` equals their component label; unclustered
+        rows (left-join miss) stay."""
         out = df.join(comp.toDF("_nd_id", "component"), "_nd_id", "left")
-        # same coalesce tree as the Column form, one parse
-        if getattr(self, "assign_key", None):
+        if self.assign_key:
             # assignment mode: keep every row, expose its cluster label
             # (= min order-id of its near-dup component; singletons get
             # their own id) instead of filtering

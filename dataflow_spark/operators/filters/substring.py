@@ -43,7 +43,7 @@ Scale design (100 TB):
     implied candidate set from bucket sizes (one single-row aggregate
     over the bucket frame) and refuses with an actionable
     BudgetExceededError BEFORE any expansion, the fuzzy_join contract
-    (fuzzy_join.py:195-221). A genuinely boilerplate-heavy corpus has a
+    (``ExactSetJoin``'s guards). A genuinely boilerplate-heavy corpus has a
     quadratic *answer*, not just a quadratic algorithm — the refusal
     message says to raise the budget or lengthen the gram.
   - verification joins texts only for documents that appear in a
@@ -163,7 +163,7 @@ class SubstringDuplicatePairs(Operator):
         )
         if self.max_candidate_pairs:
             # guard action BEFORE any expansion, the fuzzy_join contract
-            # (fuzzy_join.py:195-221). The result stays lazy, so no pin
+            # (ExactSetJoin's guards). The result stays lazy, so no pin
             # can bridge this action and the caller's materialization —
             # the guard costs one extra pass over the bucket aggregate,
             # exactly like fuzzy_join's pre-counts.

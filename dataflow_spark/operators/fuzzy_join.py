@@ -1,10 +1,12 @@
-"""Fuzzy (similarity) join between two tables — entity resolution.
+"""The exact set-similarity join: cross-table (FuzzyJoinOperator) and
+self-join (NgramJaccardDeduplicateFilter) on one set of kernels.
 
 The reference's dedup family only matches a table against itself; a
 curation pipeline also needs the CROSS-table variant: match scraped
 records against a canonical table, align two crawl snapshots, join
-noisy titles to a catalog. This is the exact set-similarity join
-(token/shingle Jaccard >= t) built scale-first:
+noisy titles to a catalog. Both are the same exact set-similarity join
+(token/shingle Jaccard >= t), implemented once in :class:`ExactSetJoin`
+and built scale-first:
 
 - prefix filtering (PPJoin / AllPairs, Xiao et al. WWW'08): under a
   global total order, two sets with Jaccard >= t MUST share an element
@@ -17,12 +19,20 @@ noisy titles to a catalog. This is the exact set-similarity join
   is consistent;
 - PPJoin positional filter prunes provably-sub-threshold candidates
   before any set materializes;
-- sets are xxhash64'd to bigint arrays: set ops shuffle ~5x fewer
-  bytes than raw shingle strings (same convention as the dedup family;
-  a 64-bit collision flipping a boundary Jaccard is ~1e-15/corpus).
+- sets are xxhash64'd to bigint arrays (:func:`shingle_sets`): set ops
+  shuffle ~5x fewer bytes than raw shingle strings (a 64-bit collision
+  flipping a boundary Jaccard is ~1e-15/corpus).
 
 Exact semantics (same result as the quadratic nested loop), linear-ish
 cost — the oracle for the contract query IS the quadratic nested loop.
+
+Self-join: the kernels take ``rraw=None`` to mean "join the left side
+with itself" and then emit each unordered pair once, with left_id <
+right_id. The dense path broadcasts the one side and masks the upper
+triangle; the sparse path joins one prefix frame to itself on
+``a._id < b._id``, so no pair is verified twice, and its candidate
+guard is the sum of squared prefix-bucket sizes. Only the cross-table
+operator collapses identical shingle sets before candidate generation.
 
 Caveat: prefix filtering's pruning power comes from shingle-space
 SPARSITY. On a low-entropy corpus (tiny vocabulary, heavy templating)
@@ -32,22 +42,22 @@ law), but for synthetic/templated data prefer the probabilistic
 MinHash-LSH dedup family, or raise the threshold (prefix length is
 (1-t)|set|+1, so t=0.8 probes 2x fewer elements than t=0.6).
 
-Adaptive DENSE path (r6): when the LEFT side's shingle vocabulary is
-small (low-entropy corpus, or a small query table matched into a huge
-corpus) the operator skips candidate generation entirely: the left
-side is collected as a packed bitset matrix (one column per left-vocab
-shingle hash), broadcast, and each right-side Arrow batch computes
-EXACT overlap counts against it with one BLAS matmul (0/1 float32;
-integer counts < 2^24 are exact). Right-only shingles cannot overlap
-and are dropped from the matrix — right set sizes come from the
-untruncated arrays, so Jaccard/containment are unchanged. Zero
-shuffles: one scan of the right side against a broadcast. The switch
-is guarded by a cheap sampled probe, then exact vocab/size counts,
-and falls back to the sparse PPJoin path when the left side exceeds
-``dense_vocab_max`` distinct shingles or ``dense_broadcast_mb`` of
-packed bits. On the degenerate bench sf1 replica (2.2k-shingle vocab,
-where sparse PPJoin admits 406M candidates) this is the difference
-between 199s and seconds, with bit-identical output (verified against
+Adaptive DENSE path: when the LEFT side's shingle vocabulary is small
+(low-entropy corpus, or a small query table matched into a huge
+corpus) the join skips candidate generation entirely: the left side is
+collected as a packed bitset matrix (one column per left-vocab shingle
+hash), broadcast, and each right-side Arrow batch computes EXACT
+overlap counts against it with one BLAS matmul (0/1 float32; integer
+counts < 2^24 are exact). Right-only shingles cannot overlap and are
+dropped from the matrix — right set sizes come from the untruncated
+arrays, so Jaccard/containment are unchanged. Zero shuffles: one scan
+of the right side against a broadcast. The switch is guarded by a
+cheap sampled probe, then exact vocab/size counts, and falls back to
+the sparse PPJoin path when the left side exceeds ``dense_vocab_max``
+distinct shingles or ``DENSE_BROADCAST_MB`` of packed bits. On the
+degenerate bench sf1 replica (2.2k-shingle vocab, where sparse PPJoin
+admits 406M candidates) this is the difference between 199s and
+seconds, with bit-identical output (verified against
 tools/brute_fuzzy_oracle.py and the DuckDB contract oracles).
 """
 
@@ -55,7 +65,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataflow_spark.core.operator import BudgetExceededError, Operator
@@ -64,108 +74,88 @@ from dataflow_spark.functions import hashing as H
 from dataflow_spark.functions import text as T
 from dataflow_spark.functions.pulls import bounded_pull
 
+#: dense-path broadcast budget in MiB: the packed left bitset matrix
+#: must fit it, and so must the left side's raw set payload in tokens
+DENSE_BROADCAST_MB = 64
+#: MinHash permutations of the opt-in approximate fallbacks
+FALLBACK_NUM_PERM = 64
 
-@OPERATOR_REGISTRY.register()
-class FuzzyJoinOperator(Operator):
-    """Pairs (left_id, right_id, jaccard) with set Jaccard >= threshold.
 
-    ``mode='char'`` compares distinct char-``shingle_n``-gram sets
-    (robust to word-order edits — near-dup detection across tables);
-    ``mode='words'`` compares distinct lowercased word sets (classic
-    entity resolution on short strings). ``run(left, right=right)``.
+def shingle_sets(df: DataFrame, id_col: str, key: str, mode: str = "char",
+                 shingle_n: int = 5) -> DataFrame:
+    """The join's input frame: ``(_id, _sh)`` with ``_sh`` the sorted
+    distinct xxhash64 set of ``key``'s char ``shingle_n``-grams
+    (``mode='char'``) or lowercased words, never empty."""
+    col = F.col(key)
+    if mode == "char":
+        # never empty: a text shorter than n (or NULL) is its own shingle
+        raw = H.char_shingles(col, shingle_n)
+    else:
+        # blank or NULL text has no words. Filter the input, not _sh:
+        # Catalyst pushes a filter on _sh below the projection, which
+        # then computes every set twice
+        df = df.filter(F.size(T.words(col)) > 0)
+        raw = F.transform(T.words(col), lambda x: F.lower(x))
+    return df.select(
+        F.col(id_col).alias("_id"),
+        F.array_sort(F.array_distinct(
+            F.transform(raw, lambda s: F.xxhash64(s)))).alias("_sh"))
 
-    ``metric='jaccard'`` (default) matches on |A∩B|/|A∪B|;
-    ``metric='containment'`` matches on |A∩B|/|A| — "the LEFT set is
-    mostly contained in the right" (quote detection, subset/extract
-    matching, left-side boilerplate lookup). Containment keeps the
-    left-prefix pigeonhole guarantee (any (1-t)|A|+1 elements of A hit
-    B when containment >= t) but the right side must index ALL its
-    elements, and only |B| >= t|A| is a valid length bound.
-    """
 
-    def __init__(self, threshold: float = 0.7, mode: str = "char",
-                 shingle_n: int = 5, metric: str = "jaccard",
-                 left_key: str = "text", right_key: str = "text",
-                 left_id: str = "doc_id", right_id: str = "doc_id",
-                 dense_vocab_max: int = 8192, dense_broadcast_mb: int = 64,
-                 max_candidate_pairs: float = 5e9,
-                 dense_flop_budget: float = 2e13,
-                 on_budget_exceeded: str = "raise",
-                 fallback_num_perm: int = 64,
-                 fallback_max_bucket: int = 256):
-        if not 0.0 < threshold <= 1.0:
-            raise ValueError("threshold must be in (0, 1]")
-        if mode not in ("char", "words"):
-            raise ValueError("mode must be 'char' or 'words'")
-        if metric not in ("jaccard", "containment"):
-            raise ValueError("metric must be 'jaccard' or 'containment'")
+class ExactSetJoin:
+    """Kernels of the exact set-similarity join over the ``(_id, _sh)``
+    frames :func:`shingle_sets` builds; ``rraw=None`` is the self-join.
+    Hosts set ``threshold`` and call :meth:`_set_budgets`; ``metric``
+    is 'jaccard' unless overridden."""
+
+    metric = "jaccard"
+
+    def _set_budgets(self, dense_vocab_max: int, max_candidate_pairs: float,
+                     dense_flop_budget: float,
+                     on_budget_exceeded: str) -> None:
         if on_budget_exceeded not in ("raise", "minhash"):
             raise ValueError("on_budget_exceeded must be 'raise' or "
                              "'minhash'")
-        self.threshold, self.mode, self.shingle_n = threshold, mode, shingle_n
-        self.metric = metric
-        self.left_key, self.right_key = left_key, right_key
-        self.left_id, self.right_id = left_id, right_id
-        # dense-path guards: 0 disables the dense path entirely
+        # dense-path guard: 0 disables the dense path entirely
         self.dense_vocab_max = dense_vocab_max
-        self.dense_broadcast_mb = dense_broadcast_mb
-        # sparse-path blowup guard (0 disables): refuse predictably on
-        # corpora whose prefix buckets imply a ~quadratic candidate set
-        # (see NgramJaccardDeduplicateFilter — an sf10 sweep hit a JVM OOM)
+        # sparse-path blowup guard (0 disables): refuse predictably when
+        # the prefix-bucket candidate UPPER BOUND says the corpus is too
+        # low-entropy for exact PPJoin at this size — an actionable
+        # error beats the alternative an sf10 sweep measured (a JVM
+        # OutOfMemoryError 8 minutes into a ~40e9-pair shuffle)
         self.max_candidate_pairs = max_candidate_pairs
         # dense-path compute guard (0 disables): n_left*n_right*nbits
-        # multiply-adds. Calibrated: the bitset kernel
-        # (unpackbits + float32 GEMM + float64 threshold scan) sustains
-        # ~1e10 budget-units/s per core, so 2e13 is ~1-4 min when the
-        # right-side scan parallelizes (>=8 partitions typical) — the
-        # earlier default (4e15) was ~100x optimistic and let a 5.6e13-unit
-        # containment GEMV burn a 600s timeout instead of refusing,
-        # while 2e13 still admits every shape the sf1 sweep completes
-        # (largest: 5.6e12).
+        # multiply-adds. Calibrated: the bitset kernel (unpackbits +
+        # float32 GEMM + float64 threshold scan) sustains ~1e10
+        # budget-units/s per core, so 2e13 is ~1-4 min when the
+        # right-side scan parallelizes (>=8 partitions typical) and
+        # still admits every shape the sf1 sweep completes (largest:
+        # 5.6e12). Byte-feasible is not compute-feasible (a 5.6e13-unit
+        # containment GEMV at sf10 showed it).
         self.dense_flop_budget = dense_flop_budget
         # budget-refusal policy: 'raise' (default — exact or nothing) or
-        # 'minhash' (opt-in: MinHash-LSH candidates + EXACT verify; see
-        # _minhash_join for the documented recall semantics)
+        # 'minhash' (opt-in: MinHash-LSH candidates + EXACT verify;
+        # precision exact, recall probabilistic)
         self.on_budget_exceeded = on_budget_exceeded
-        self.fallback_num_perm = fallback_num_perm
-        self.fallback_max_bucket = fallback_max_bucket
-        self.input_keys = (left_key, left_id)
-        self.output_keys = ("left_id", "right_id", self.metric)
 
-    def _sets(self, col: Column) -> Column:
-        if self.mode == "char":
-            raw = H.char_shingles(col, self.shingle_n)
-        else:
-            raw = F.transform(T.words(col), lambda x: F.lower(x))
-        return F.array_sort(F.array_distinct(
-            F.transform(raw, lambda s: F.xxhash64(s))))
-
-    def _try_dense(self, lraw: DataFrame, rraw: DataFrame):
+    def _try_dense(self, lraw: DataFrame,
+                   rraw: DataFrame | None = None) -> DataFrame | None:
         """Broadcast-bitset matmul path; None when guards say sparse.
 
         Exactness: overlap counts are sums of 0/1 float32 products —
         every partial sum is an integer < 2^24, hence exact; the final
         threshold uses the same float64 division as the sparse path.
 
-        ``lraw`` is persisted for the duration of this probe: it is
-        read by four separate jobs (vocab probe, vocab collect, size
-        stats, row collect), and if the left plan were
-        non-deterministic (a sample, a shuffle-dependent limit) an
-        unpersisted recompute could hand the packing step tokens that
-        are not in the collected vocab — searchsorted would then write
-        a wrong column or index past the bitset (ADVICE r6). With one
-        materialization all four reads see the same rows.
+        ``lraw`` is read by four separate jobs (vocab probe, vocab
+        collect, size stats, row collect) and, in the self-join, by the
+        scan itself; callers persist it so that a non-deterministic left
+        plan (a sample, a shuffle-dependent limit) cannot hand the
+        packing step tokens that are not in the collected vocab —
+        searchsorted would then write a wrong column or index past the
+        bitset. With one materialization every read sees the same rows.
         """
         if self.dense_vocab_max <= 0:
             return None
-        spark = lraw.sparkSession
-        lraw = lraw.persist()
-        try:
-            return self._try_dense_persisted(lraw, rraw, spark)
-        finally:
-            lraw.unpersist()
-
-    def _try_dense_persisted(self, lraw, rraw, spark):
         # sampled probe first: a subset's vocab only undercounts, so
         # "probe > max" proves the full left vocab is over budget
         # without scanning a (possibly huge) left side
@@ -190,25 +180,25 @@ class FuzzyJoinOperator(Operator):
         stats = lraw.agg(F.count(F.lit(1)).alias("n"),
                          F.sum(F.size("_sh")).alias("tok")).first()
         n_l, tok_l = int(stats["n"] or 0), int(stats["tok"] or 0)
-        budget = self.dense_broadcast_mb * 1024 * 1024
+        budget = DENSE_BROADCAST_MB * 1024 * 1024
         # packed-bit matrix AND the raw set payload must both fit
-        if n_l == 0 or n_l * ((nbits + 7) // 8) > budget or tok_l * 8 > 8 * budget:
+        if n_l == 0 or n_l * ((nbits + 7) // 8) > budget or tok_l > budget:
             return None
+        self_join = rraw is None
         # FLOP budget: byte-feasible is not compute-feasible — at
         # sf10 a 50k x 500k x 2226 GEMM fit the broadcast budget but
         # needed 5.6e16 flops (engine timeout at 600s). And reaching
         # this point proves the left vocabulary is degenerate-small
         # (<= dense_vocab_max), so the sparse PPJoin's prefix buckets
         # are ~all-pairs too — falling through would just burn the
-        # caller's time re-deriving that (at sf10 the sparse guard's
-        # own prefix aggregate exceeded a 600s engine budget). Raise
-        # the actionable refusal HERE, in seconds.
+        # caller's time re-deriving that. Raise the actionable refusal
+        # HERE, in seconds. The self-join needs no count: n_r = n_l.
         if self.dense_flop_budget:
-            n_r = rraw.count()
+            n_r = n_l if self_join else rraw.count()
             if float(n_l) * n_r * nbits > self.dense_flop_budget:
                 raise BudgetExceededError(
-                    "FuzzyJoinOperator: exact matching is infeasible on "
-                    f"this corpus shape — left vocabulary is only {nbits}"
+                    f"{type(self).__name__}: exact matching is infeasible"
+                    f" on this corpus shape — vocabulary is only {nbits}"
                     f" distinct shingles across {n_l} x {n_r} rows, so "
                     "both the dense bitset GEMM "
                     f"({float(n_l) * n_r * nbits:.2e} flops > "
@@ -219,9 +209,9 @@ class FuzzyJoinOperator(Operator):
                     "verify, probabilistic recall), or raise "
                     "dense_flop_budget explicitly to accept the cost.")
 
-        # bounded above: n_l rows whose packed bits fit dense_broadcast_mb.
-        # Arrow toPandas, not collect: per-Row pickling of array<long>
-        # cells costs seconds at the budget bound (guide §6)
+        # bounded above: n_l rows whose packed bits fit the broadcast
+        # budget. Arrow toPandas, not collect: per-Row pickling of
+        # array<long> cells costs seconds at the budget bound (guide §6)
         lpdf = lraw.select("_id", "_sh").toPandas()
         lids = np.array(lpdf["_id"].tolist(), dtype=object)
         lsets = [np.asarray(v, dtype=np.int64) for v in lpdf["_sh"]]
@@ -237,12 +227,14 @@ class FuzzyJoinOperator(Operator):
                     np.empty(0, dtype=np.int64))
             dense[rix, np.searchsorted(vocab, toks)] = True
             packed[lo:lo + len(chunk)] = np.packbits(dense, axis=1)
-        bc = spark.sparkContext.broadcast((lids, lsz, packed, nbits, vocab))
+        bc = lraw.sparkSession.sparkContext.broadcast(
+            (lids, lsz, packed, nbits, vocab))
 
+        scan = lraw if self_join else rraw
         t, metric = self.threshold, self.metric
         out_schema = ("left_id " + lraw.schema["_id"].dataType.simpleString()
                       + ", right_id "
-                      + rraw.schema["_id"].dataType.simpleString()
+                      + scan.schema["_id"].dataType.simpleString()
                       + f", {metric} double")
 
         def compute(batches):
@@ -279,131 +271,87 @@ class FuzzyJoinOperator(Operator):
                     with np.errstate(invalid="ignore", divide="ignore"):
                         val = o / denom
                     ri, li = np.nonzero(val >= t)
+                    if self_join:
+                        # upper triangle: each unordered pair once
+                        keep = lids_[lo + li] < rids[ri]
+                        ri, li = ri[keep], li[keep]
                     if len(ri):
                         yield pd.DataFrame({
                             "left_id": lids_[lo + li],
                             "right_id": rids[ri],
                             metric: val[ri, li]})
 
-        return (rraw.mapInPandas(compute, schema=out_schema)
+        return (scan.mapInPandas(compute, schema=out_schema)
                 .withColumn(metric, F.round(metric, 6)))
 
-    def run(self, df: DataFrame, right: DataFrame | None = None,
-            **kw: Any) -> DataFrame:
-        if right is None:
-            raise ValueError("FuzzyJoinOperator needs run(left, right=df)")
-        lraw = (df.select(F.col(self.left_id).alias("_id"),
-                          self._sets(F.col(self.left_key)).alias("_sh"))
-                .filter(F.size("_sh") > 0))
-        rraw = (right.select(F.col(self.right_id).alias("_id"),
-                             self._sets(F.col(self.right_key)).alias("_sh"))
-                .filter(F.size("_sh") > 0))
-        #: last_path: which physical strategy served the last run() —
-        #: 'dense' (broadcast bitset matmul), 'sparse' (PPJoin prefix
-        #: filter), or 'minhash' (budget-refused, opt-in approximate
-        #: fallback). Plan-debug surface for tests and operators
-        #: composing this one; mirrors what .explain() can't show (the
-        #: switch happens before any Spark plan exists).
-        try:
-            dense = self._try_dense(lraw, rraw)
-            if dense is not None:
-                self.last_path = "dense"
-                return dense
-            self.last_path = "sparse"
-            return self._sparse_join(lraw, rraw)
-        except BudgetExceededError:
-            if self.on_budget_exceeded != "minhash":
-                raise
-            self.last_path = "minhash"
-            return self._minhash_join(lraw, rraw)
-
-    def _sparse_join(self, lraw: DataFrame, rraw: DataFrame) -> DataFrame:
-        """PPJoin sparse path. The intermediate frames (dedup'd sides,
-        membership map, prefix explode) are persisted for their multiple
-        reads but released before returning: the result is eagerly
-        localCheckpoint-ed (matched pairs — small), which consumes every
-        pinned frame inside this call, so no cached blocks outlive the
-        run (a guard persist would otherwise live for the whole
-        session)."""
-        pins: list[DataFrame] = []
-        try:
-            return self._sparse_join_pinned(lraw, rraw, pins)
-        finally:
-            for p in pins:
-                p.unpersist()
-
-    def _sparse_join_pinned(self, lraw: DataFrame, rraw: DataFrame,
-                            pins: list[DataFrame]) -> DataFrame:
+    def _sparse_pairs(self, lraw: DataFrame, rraw: DataFrame | None,
+                      pins: list[DataFrame]) -> DataFrame:
+        """PPJoin prefix/positional blocking + exact verify ->
+        (left_id, right_id, metric). Frames persisted for several reads
+        are appended to ``pins``; the caller releases them once the
+        result has been consumed."""
         t = self.threshold
-        raw = (
-            lraw.withColumn("_side", F.lit("L"))
-            .unionByName(rraw.withColumn("_side", F.lit("R")))
-        )
-        # degenerate-corpus armor (same as the dedup family): collapse
-        # rows with IDENTICAL shingle sets to one representative per
-        # side before candidate generation — replicated/templated
-        # corpora otherwise quadratically inflate every prefix bucket.
-        # Survivor pairs expand back through the membership map at the
-        # end (identical-set L/R pairs have Jaccard 1 >= t and are
-        # found via their shared prefix like any other pair).
-        raw = raw.withColumn(
-            "_sethash",
-            F.md5(F.concat_ws(",", F.transform(
-                "_sh", lambda x: x.cast("string")))))
-        members = raw.select("_side", "_id", "_sethash").persist()
-        pins.append(members)
-        sides = (raw.dropDuplicates(["_side", "_sethash"])
-                 .select("_side", F.col("_sethash").alias("_id"), "_sh")
-                 .persist())
-        pins.append(sides)
+        self_join = rraw is None
+        lex = lraw.select("_id", F.explode("_sh").alias("_p"))
+        rex = lex if self_join else rraw.select(
+            "_id", F.explode("_sh").alias("_p"))
         # one global frequency order over BOTH sides (rarest first)
-        ex = sides.select("_side", "_id", F.explode("_sh").alias("_p"))
-        freq = ex.groupBy("_p").agg(F.count(F.lit(1)).alias("_df"))
-        ranked = (
-            ex.join(freq, "_p")
-            .groupBy("_side", "_id")
-            .agg(F.array_sort(F.collect_list(F.struct("_df", "_p")))
-                 .alias("_rs"))
-            .select("_side", "_id",
-                    F.transform("_rs", lambda s: s["_p"]).alias("_rsh"))
-        )
-        # left prefix is the pigeonhole block in both metrics; the right
-        # prefix can only prune under the symmetric (jaccard) metric.
-        # Integer-exact length (epsilon-guarded): the naive float
-        # floor((1-t)*n)+1 is one short at boundary thresholds.
-        lpre_len = H.prefix_length(t, F.size("_rsh"))
-        rpre_len = (lpre_len if self.metric == "jaccard"
-                    else F.size("_rsh"))
-        prefix = ranked.select(
-            "_side", "_id", F.size("_rsh").alias("_len"),
-            F.posexplode(F.slice(
-                "_rsh", 1,
-                F.when(F.col("_side") == "L", lpre_len)
-                .otherwise(rpre_len))).alias("_pos", "_p"))
+        freq = ((lex if self_join else lex.unionByName(rex))
+                .groupBy("_p").agg(F.count(F.lit(1)).alias("_df")))
+
+        def prefix(ex: DataFrame, whole: bool) -> DataFrame:
+            ranked = (
+                ex.join(freq, "_p")
+                .groupBy("_id")
+                .agg(F.array_sort(F.collect_list(F.struct("_df", "_p")))
+                     .alias("_rs"))
+                .select("_id",
+                        F.transform("_rs", lambda s: s["_p"]).alias("_rsh"))
+            )
+            # integer-exact prefix length (epsilon-guarded): the naive
+            # float floor((1-t)*n)+1 is one short at boundary thresholds
+            n = F.size("_rsh")
+            out = ranked.select(
+                "_id", n.alias("_len"),
+                F.posexplode(F.slice(
+                    "_rsh", 1, n if whole else H.prefix_length(t, n)))
+                .alias("_pos", "_p"))
+            if self.max_candidate_pairs:
+                # the guard aggregate and the blocking join both read it
+                out = out.persist()
+                pins.append(out)
+            return out
+
+        # the left prefix is the pigeonhole block in both metrics; the
+        # right side can only prune by prefix under the symmetric
+        # (jaccard) metric
+        lpre = prefix(lex, False)
+        rpre = lpre if self_join else prefix(
+            rex, self.metric == "containment")
         if self.max_candidate_pairs:
             # upper bound on the blocking join: sum over shared prefix
-            # elements of (left bucket) x (right bucket); Heaps-law
-            # corpora pass at any scale, degenerate corpora refuse with
-            # an actionable error instead of an OOM-bound shuffle
-            prefix = prefix.persist()
-            pins.append(prefix)
-            est = (prefix.groupBy("_p")
-                   .agg(F.sum(F.when(F.col("_side") == "L", 1)
-                              .otherwise(0)).alias("_cl"),
-                        F.sum(F.when(F.col("_side") == "R", 1)
-                              .otherwise(0)).alias("_cr"))
-                   .agg(F.sum(F.col("_cl") * F.col("_cr")).alias("_u"))
+            # elements of (left bucket) x (right bucket), Σc² in the
+            # self-join (the positional filter only shrinks it).
+            # Heaps-law corpora pass at any scale; degenerate corpora
+            # refuse with an actionable error instead of an OOM-bound
+            # shuffle
+            lc = lpre.groupBy("_p").agg(F.count(F.lit(1)).alias("_cl"))
+            both = (lc.withColumn("_cr", F.col("_cl")) if self_join else
+                    lc.join(rpre.groupBy("_p")
+                            .agg(F.count(F.lit(1)).alias("_cr")), "_p"))
+            est = (both.agg(F.sum(F.col("_cl") * F.col("_cr")).alias("_u"))
                    .first()["_u"]) or 0
             if est > self.max_candidate_pairs:
                 raise BudgetExceededError(
-                    "FuzzyJoinOperator: prefix-bucket candidate upper "
-                    f"bound {est:.2e} exceeds max_candidate_pairs="
-                    f"{self.max_candidate_pairs:.2e} — the corpus is "
-                    "too low-entropy for exact PPJoin at this size. "
-                    "Pass on_budget_exceeded='minhash' for the "
-                    "approximate fallback (exact verify, probabilistic "
-                    "recall), or raise max_candidate_pairs / dense "
-                    "guards explicitly.")
+                    f"{type(self).__name__}: prefix-bucket candidate "
+                    f"upper bound {est:.2e} exceeds max_candidate_pairs="
+                    f"{self.max_candidate_pairs:.2e} — the corpus is too "
+                    "low-entropy for exact PPJoin at this size (most rows "
+                    "share frequent shingles, so candidate generation is "
+                    "~quadratic). Pass on_budget_exceeded='minhash' for "
+                    "the approximate fallback (exact verify, "
+                    "probabilistic recall), or raise max_candidate_pairs "
+                    "explicitly to accept the cost.")
         if self.metric == "jaccard":
             alpha = H.ceil_lower_bound(F.lit(t / (1.0 + t))
                                        * (F.col("a._len") + F.col("b._len")))
@@ -417,22 +365,35 @@ class FuzzyJoinOperator(Operator):
             alpha = H.ceil_lower_bound(F.lit(t) * F.col("a._len"))
             lenf = (F.col("b._len")
                     >= H.ceil_lower_bound(F.lit(t) * F.col("a._len")))
+        # positional filter (PPJoin): a pair matching at 0-based prefix
+        # positions (i, j) can overlap at most min(|A|-i, |B|-j); that
+        # must reach the metric's minimum overlap alpha. Drops provably
+        # sub-threshold candidates before any set materializes
         bound = F.least(F.col("a._len") - F.col("a._pos"),
                         F.col("b._len") - F.col("b._pos"))
+        cond = F.col("a._p") == F.col("b._p")
+        if self_join:
+            cond = cond & (F.col("a._id") < F.col("b._id"))
+        cond = cond & (bound >= alpha) & lenf
         cand = (
-            prefix.filter(F.col("_side") == "L").alias("a")
-            .join(prefix.filter(F.col("_side") == "R").alias("b"),
-                  (F.col("a._p") == F.col("b._p")) & (bound >= alpha)
-                  & lenf)
+            lpre.alias("a").join(rpre.alias("b"), cond)
             .select(F.col("a._id").alias("_lid"),
                     F.col("b._id").alias("_rid"))
             .distinct()
         )
-        lsets = sides.filter(F.col("_side") == "L").select(
-            F.col("_id").alias("_lid"), F.col("_sh").alias("_sa"))
-        rsets = sides.filter(F.col("_side") == "R").select(
-            F.col("_id").alias("_rid"), F.col("_sh").alias("_sb"))
-        verified = (
+        return self._verify_candidates(cand, lraw,
+                                       lraw if self_join else rraw)
+
+    def _verify_candidates(self, cand: DataFrame, lraw: DataFrame,
+                           rraw: DataFrame) -> DataFrame:
+        """Exact-metric verification of (_lid, _rid) candidate pairs —
+        every output row truly meets the threshold (precision exact),
+        whatever produced the candidates."""
+        lsets = lraw.select(F.col("_id").alias("_lid"),
+                            F.col("_sh").alias("_sa"))
+        rsets = rraw.select(F.col("_id").alias("_rid"),
+                            F.col("_sh").alias("_sb"))
+        return (
             cand.join(lsets, "_lid").join(rsets, "_rid")
             .withColumn("_ov", F.size(F.array_intersect("_sa", "_sb")))
             .withColumn(
@@ -441,23 +402,107 @@ class FuzzyJoinOperator(Operator):
                 if self.metric == "containment"
                 else F.col("_ov").cast("double")
                 / (F.size("_sa") + F.size("_sb") - F.col("_ov")))
-            .filter(F.col(self.metric) >= t)
-            .select("_lid", "_rid",
-                    F.round(self.metric, 6).alias(self.metric))
-        )
-        lmem = members.filter(F.col("_side") == "L").select(
-            F.col("_sethash").alias("_lid"), F.col("_id").alias("left_id"))
-        rmem = members.filter(F.col("_side") == "R").select(
-            F.col("_sethash").alias("_rid"), F.col("_id").alias("right_id"))
-        final = (verified.join(lmem, "_lid").join(rmem, "_rid")
-                 .select("left_id", "right_id", self.metric))
-        # eager localCheckpoint: materializes the (small) matched-pair
-        # result NOW, consuming members/sides/prefix so the caller in
-        # _sparse_join can unpersist them — and truncates the 4-join
-        # lineage the downstream pipeline would otherwise re-optimize
-        return final.localCheckpoint(eager=True)
+            .filter(F.col(self.metric) >= self.threshold)
+            .select(F.col("_lid").alias("left_id"),
+                    F.col("_rid").alias("right_id"),
+                    F.round(self.metric, 6).alias(self.metric)))
 
-    def _minhash_join(self, lraw: DataFrame, rraw: DataFrame) -> DataFrame:
+
+@OPERATOR_REGISTRY.register()
+class FuzzyJoinOperator(ExactSetJoin, Operator):
+    """Pairs (left_id, right_id, jaccard) with set Jaccard >= threshold.
+
+    ``mode='char'`` compares distinct char-``shingle_n``-gram sets
+    (robust to word-order edits — near-dup detection across tables);
+    ``mode='words'`` compares distinct lowercased word sets (classic
+    entity resolution on short strings). ``run(left, right=right)``.
+
+    ``metric='jaccard'`` (default) matches on |A∩B|/|A∪B|;
+    ``metric='containment'`` matches on |A∩B|/|A| — "the LEFT set is
+    mostly contained in the right" (quote detection, subset/extract
+    matching, left-side boilerplate lookup). Containment keeps the
+    left-prefix pigeonhole guarantee (any (1-t)|A|+1 elements of A hit
+    B when containment >= t) but the right side must index ALL its
+    elements, and only |B| >= t|A| is a valid length bound.
+    """
+
+    def __init__(self, threshold: float = 0.7, mode: str = "char",
+                 shingle_n: int = 5, metric: str = "jaccard",
+                 left_key: str = "text", right_key: str = "text",
+                 left_id: str = "doc_id", right_id: str = "doc_id",
+                 dense_vocab_max: int = 8192,
+                 max_candidate_pairs: float = 5e9,
+                 dense_flop_budget: float = 2e13,
+                 on_budget_exceeded: str = "raise",
+                 fallback_max_bucket: int = 256):
+        if not 0.0 < threshold <= 1.0:
+            raise ValueError("threshold must be in (0, 1]")
+        if mode not in ("char", "words"):
+            raise ValueError("mode must be 'char' or 'words'")
+        if metric not in ("jaccard", "containment"):
+            raise ValueError("metric must be 'jaccard' or 'containment'")
+        self._set_budgets(dense_vocab_max, max_candidate_pairs,
+                          dense_flop_budget, on_budget_exceeded)
+        self.threshold, self.mode, self.shingle_n = threshold, mode, shingle_n
+        self.metric = metric
+        self.left_key, self.right_key = left_key, right_key
+        self.left_id, self.right_id = left_id, right_id
+        self.fallback_max_bucket = fallback_max_bucket
+        self.input_keys = (left_key, left_id)
+        self.output_keys = ("left_id", "right_id", self.metric)
+
+    def run(self, df: DataFrame, right: DataFrame | None = None,
+            **kw: Any) -> DataFrame:
+        if right is None:
+            raise ValueError("FuzzyJoinOperator needs run(left, right=df)")
+        lraw = shingle_sets(df, self.left_id, self.left_key, self.mode,
+                            self.shingle_n)
+        rraw = shingle_sets(right, self.right_id, self.right_key, self.mode,
+                            self.shingle_n)
+        # frames persisted for several reads, released before returning:
+        # the dense result scans only rraw (lraw travels in the
+        # broadcast), and the sparse and minhash results are eager
+        # localCheckpoints, so no cached blocks outlive the run
+        lraw = lraw.persist()
+        pins: list[DataFrame] = [lraw]
+        #: last_path: which physical strategy served the last run() —
+        #: 'dense' (broadcast bitset matmul), 'sparse' (PPJoin prefix
+        #: filter), or 'minhash' (budget-refused, opt-in approximate
+        #: fallback). Plan-debug surface for tests and operators
+        #: composing this one; mirrors what .explain() can't show (the
+        #: switch happens before any Spark plan exists).
+        try:
+            try:
+                dense = self._try_dense(lraw, rraw)
+                if dense is not None:
+                    self.last_path = "dense"
+                    return dense
+                self.last_path = "sparse"
+                return self._sparse_join(lraw, rraw, pins)
+            except BudgetExceededError:
+                if self.on_budget_exceeded != "minhash":
+                    raise
+                self.last_path = "minhash"
+                return self._minhash_join(lraw, rraw, pins)
+        finally:
+            for p in pins:
+                p.unpersist()
+
+    def _sparse_join(self, lraw: DataFrame, rraw: DataFrame,
+                     pins: list[DataFrame]) -> DataFrame:
+        """PPJoin on identical-set representatives: degenerate-corpus
+        armor — replicated/templated corpora otherwise quadratically
+        inflate every prefix bucket. Representative pairs expand back
+        through the membership maps at the end (identical-set L/R pairs
+        have Jaccard 1 >= t and are found via their shared prefix like
+        any other pair)."""
+        lmem, lreps = self._collapse_side(lraw, pins)
+        rmem, rreps = self._collapse_side(rraw, pins)
+        return self._expand_members(self._sparse_pairs(lreps, rreps, pins),
+                                    lmem, rmem)
+
+    def _minhash_join(self, lraw: DataFrame, rraw: DataFrame,
+                      pins: list[DataFrame]) -> DataFrame:
         """Opt-in approximate fallback when a budget guard refuses the
         exact algorithm (``on_budget_exceeded='minhash'``).
 
@@ -466,8 +511,8 @@ class FuzzyJoinOperator(Operator):
         true sets. So precision is exact (no false positives — every
         output row truly meets the threshold) and only RECALL is
         probabilistic, governed by the banding S-curve on JACCARD
-        similarity (``optimal_bands(t', fallback_num_perm)``). Two
-        documented recall losses:
+        similarity (``optimal_bands(t', FALLBACK_NUM_PERM)``). One
+        documented recall loss:
 
         - oversized buckets: per (band, h) bucket each side is capped
           at ``fallback_max_bucket`` rows (smallest ids kept —
@@ -483,21 +528,21 @@ class FuzzyJoinOperator(Operator):
         prefix probing with a capped inverted index, whose only recall
         loss is the per-bucket cap.
 
-        Both schemes run on identical-set REPRESENTATIVES (same
-        degenerate-corpus armor as the sparse path): rows with equal
-        shingle sets collapse to one per side before candidate
-        generation and expand back at the end. Without this, a
-        replicated corpus multiplies every candidate bucket by the
-        replica count (at sf10: 250k quote rows = ~2.5k distinct
-        sets; uncollapsed, the verify join's candidate fan-out broke
-        the driver's broadcast-collect budget).
+        Both schemes run on identical-set REPRESENTATIVES, like the
+        sparse path. Without this, a replicated corpus multiplies every
+        candidate bucket by the replica count (at sf10: 250k quote rows
+        = ~2.5k distinct sets; uncollapsed, the verify join's candidate
+        fan-out broke the driver's broadcast-collect budget).
         """
-        pins: list[DataFrame] = []
-        try:
-            return self._minhash_join_pinned(lraw, rraw, pins)
-        finally:
-            for p in pins:
-                p.unpersist()
+        lmem, lreps = self._collapse_side(lraw, pins)
+        if self.metric == "containment":
+            rmem, rreps = self._collapse_right_projected(lreps, rraw,
+                                                         pins)
+            verified = self._containment_fallback(lreps, rreps)
+        else:
+            rmem, rreps = self._collapse_side(rraw, pins)
+            verified = self._banding_fallback(lreps, rreps)
+        return self._expand_members(verified, lmem, rmem)
 
     def _collapse_side(self, raw: DataFrame, pins: list[DataFrame]):
         """(members, representatives) for identical-shingle-set rows:
@@ -518,7 +563,9 @@ class FuzzyJoinOperator(Operator):
                         rmem: DataFrame) -> DataFrame:
         """Representative pairs -> original-id pairs (metric is
         set-determined, so every member pair inherits it). Eager
-        localCheckpoint so the caller can release the pinned frames."""
+        localCheckpoint: materializes the (small) matched-pair result
+        NOW, so the caller can release the pinned frames, and truncates
+        the join lineage the downstream pipeline would re-optimize."""
         lx = lmem.select(F.col("_sethash").alias("left_id"),
                          F.col("_id").alias("_lorig"))
         rx = rmem.select(F.col("_sethash").alias("right_id"),
@@ -527,18 +574,6 @@ class FuzzyJoinOperator(Operator):
                .select(F.col("_lorig").alias("left_id"),
                        F.col("_rorig").alias("right_id"), self.metric))
         return out.localCheckpoint(eager=True)
-
-    def _minhash_join_pinned(self, lraw: DataFrame, rraw: DataFrame,
-                             pins: list[DataFrame]) -> DataFrame:
-        lmem, lreps = self._collapse_side(lraw, pins)
-        if self.metric == "containment":
-            rmem, rreps = self._collapse_right_projected(lreps, rraw,
-                                                         pins)
-            verified = self._containment_fallback(lreps, rreps)
-        else:
-            rmem, rreps = self._collapse_side(rraw, pins)
-            verified = self._banding_fallback(lreps, rreps)
-        return self._expand_members(verified, lmem, rmem)
 
     def _collapse_right_projected(self, lreps: DataFrame,
                                   rraw: DataFrame,
@@ -571,27 +606,18 @@ class FuzzyJoinOperator(Operator):
                 .join(probe, "_p")
                 .groupBy("_id")
                 .agg(F.array_sort(F.collect_set("_p")).alias("_sh")))
-        hashed = proj.withColumn(
-            "_sethash",
-            F.md5(F.concat_ws(",", F.transform(
-                "_sh", lambda x: x.cast("string")))))
-        members = hashed.select("_id", "_sethash").persist()
-        pins.append(members)
-        reps = (hashed.dropDuplicates(["_sethash"])
-                .select(F.col("_sethash").alias("_id"), "_sh").persist())
-        pins.append(reps)
-        return members, reps
+        return self._collapse_side(proj, pins)
 
     def _banding_fallback(self, lraw: DataFrame,
                           rraw: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
         t = self.threshold
-        # banding threshold in Jaccard space (see docstring)
+        # banding threshold in Jaccard space (see _minhash_join)
         t_band = t if self.metric == "jaccard" else t / (2.0 - t)
         bands, rows = H.optimal_bands(min(max(t_band, 0.05), 0.95),
-                                      self.fallback_num_perm)
-        sig_udf = H.minhash_from_hashes_udf(self.fallback_num_perm)
+                                      FALLBACK_NUM_PERM)
+        sig_udf = H.minhash_from_hashes_udf(FALLBACK_NUM_PERM)
         cap = self.fallback_max_bucket
 
         def banded(side: DataFrame) -> DataFrame:
@@ -610,30 +636,6 @@ class FuzzyJoinOperator(Operator):
                       .withColumnRenamed("_id", "_rid"), ["band", "h"])
                 .select("_lid", "_rid").distinct())
         return self._verify_candidates(cand, lraw, rraw)
-
-    def _verify_candidates(self, cand: DataFrame, lraw: DataFrame,
-                           rraw: DataFrame) -> DataFrame:
-        """Exact-metric verification of (_lid, _rid) candidate pairs —
-        shared by both approximate fallbacks: every output row truly
-        meets the threshold (precision exact), whatever produced the
-        candidates."""
-        lsets = lraw.select(F.col("_id").alias("_lid"),
-                            F.col("_sh").alias("_sa"))
-        rsets = rraw.select(F.col("_id").alias("_rid"),
-                            F.col("_sh").alias("_sb"))
-        return (
-            cand.join(lsets, "_lid").join(rsets, "_rid")
-            .withColumn("_ov", F.size(F.array_intersect("_sa", "_sb")))
-            .withColumn(
-                self.metric,
-                F.col("_ov").cast("double") / F.size("_sa")
-                if self.metric == "containment"
-                else F.col("_ov").cast("double")
-                / (F.size("_sa") + F.size("_sb") - F.col("_ov")))
-            .filter(F.col(self.metric) >= self.threshold)
-            .select(F.col("_lid").alias("left_id"),
-                    F.col("_rid").alias("right_id"),
-                    F.round(self.metric, 6).alias(self.metric)))
 
     def _containment_fallback(self, lraw: DataFrame,
                               rraw: DataFrame) -> DataFrame:

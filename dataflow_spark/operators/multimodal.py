@@ -20,7 +20,7 @@ from typing import Any, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, BinaryType, FloatType, IntegerType, StringType,
@@ -38,20 +38,6 @@ MEDIA_META = StructType([
     StructField("duration_ms", IntegerType()),
     StructField("sha256", StringType()),
 ])
-
-
-def read_media_dir(spark: SparkSession, path: str, pattern: str = "*") -> DataFrame:
-    """Ingest a directory of media files as [path, length, content:binary].
-
-    Uses the binaryFile source: distributed read, no driver bottleneck;
-    partition sizing follows spark.sql.files.maxPartitionBytes.
-    """
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .load(path)
-        .select("path", "length", "content")
-    )
 
 
 def _decode_image_stub(content: bytes) -> tuple[int, int]:

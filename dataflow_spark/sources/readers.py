@@ -107,37 +107,3 @@ def read_jdbc(spark: SparkSession, url: str, table: str,
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.load()
-
-
-def read_pdf_markdown(spark: SparkSession, path: str,
-                      converter=None) -> DataFrame:
-    """PDF/URL -> markdown ingest seam (reference: MinerU operators,
-    knowledge_cleaning/generate/mineru_operators.py:57,200,325).
-
-    Distributed shape: binaryFile scan -> per-row converter callable
-    (bytes -> markdown str) inside mapInPandas. The container has no PDF
-    library, so ``converter=None`` raises NotImplementedError AT TASK
-    TIME with a clear message — the Spark plumbing (schema, batching,
-    path handling) is real; plug a MinerU/pypdf client in as
-    ``converter`` without touching the plan.
-    """
-    import pandas as pd
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    src = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", "*.pdf").load(path)
-           .select("path", "content"))
-    schema = StructType([StructField("path", StringType()),
-                         StructField("markdown", StringType())])
-
-    def gen(batches):
-        for pdf in batches:
-            if converter is None:
-                raise NotImplementedError(
-                    "PDF decoding requires a converter callable "
-                    "(e.g. a MinerU client); none is bundled")
-            out = pdf[["path"]].copy()
-            out["markdown"] = [converter(bytes(b)) for b in pdf["content"]]
-            yield out
-
-    return src.mapInPandas(gen, schema=schema)

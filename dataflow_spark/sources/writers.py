@@ -2,13 +2,12 @@
 
 Reference: FileStorage write dispatch (storage.py:683-696). Parquet is
 the default (columnar, splittable, predicate-pushdown-friendly);
-'json array with indent' exports are driver-side and only for small
-results, mirroring the reference's debug exports.
+pickle and xlsx exports are driver-side and only for small results,
+mirroring the reference's debug exports.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
@@ -35,15 +34,6 @@ def write_any(df: DataFrame, path: str, fmt: str | None = None,
         write_xlsx(df, path)
     else:
         raise ValueError(f"unsupported sink format {ext!r}")
-
-
-def write_json_pretty(df: DataFrame, path: str, limit: int = 100000) -> None:
-    """Small-result indented-JSON export (driver collect — debug only)."""
-    rows = [r.asDict(recursive=True) for r in df.limit(limit).collect()]
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(rows, f, indent=2, default=str)
-    os.replace(tmp, path)
 
 
 def write_pickle(df: DataFrame, path: str, limit: int = 1_000_000) -> None:

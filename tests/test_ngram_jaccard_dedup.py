@@ -36,24 +36,28 @@ def _brute_survivors(rows, t, n=4):
     return {i for i in ids if find(i) == i}
 
 
-@pytest.mark.parametrize("dense", [8192, 0], ids=["dense", "sparse"])
-@pytest.mark.parametrize("t", [0.5, 0.8])
-def test_matches_bruteforce_components(spark, dense, t):
+def _planted_corpus():
+    """Seeded base texts plus planted copies and one-word edits."""
     import random
 
     rng = random.Random(42)
     vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
     base = [" ".join(rng.choice(vocab) for _ in range(rng.randint(4, 9)))
             for _ in range(20)]
-    # plant near-duplicates: copies and light edits of the bases
-    rows = []
-    i = 0
+    rows, i = [], 0
     for b in base:
         rows.append((i, b)); i += 1
         if rng.random() < 0.6:
             rows.append((i, b)); i += 1
         if rng.random() < 0.4:
             rows.append((i, b + " " + rng.choice(vocab))); i += 1
+    return rows
+
+
+@pytest.mark.parametrize("dense", [8192, 0], ids=["dense", "sparse"])
+@pytest.mark.parametrize("t", [0.5, 0.8])
+def test_matches_bruteforce_components(spark, dense, t):
+    rows = _planted_corpus()
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     op = get_operator("NgramJaccardDeduplicateFilter", {
         "input_key": "text", "threshold": t, "shingle_n": 4,
@@ -62,34 +66,87 @@ def test_matches_bruteforce_components(spark, dense, t):
     assert got == _brute_survivors(rows, t)
 
 
+def _sets(df):
+    """The (_id, _sh) frame NgramJaccardDeduplicateFilter.run builds."""
+    from dataflow_spark.operators.fuzzy_join import shingle_sets
+
+    return shingle_sets(df, "doc_id", "text", "char", 4)
+
+
 def test_dense_path_engages(spark):
-    """Tiny vocab -> _dense_edges returns a MapInPandas edge plan (the
-    final operator plan hides it: connected_components resolves small
-    edge sets eagerly via the driver union-find)."""
-    from pyspark.sql import functions as F
-
-    from dataflow_spark.functions import hashing as H
-
+    """Tiny vocab -> the shared kernel's self-join returns a MapInPandas
+    pair plan (the final operator plan hides it: connected_components
+    resolves small edge sets eagerly via the driver union-find)."""
     rows = [(i, f"alpha beta gamma {i % 3}") for i in range(10)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    with_sh = df.select(
-        F.col("doc_id").alias("_nd_id"),
-        F.array_sort(F.array_distinct(F.transform(
-            H.char_shingles(F.col("text"), 4),
-            lambda s: F.xxhash64(s)))).alias("_sh"))
+    sets = _sets(spark.createDataFrame(rows, ["doc_id", "text"]))
     op = get_operator("NgramJaccardDeduplicateFilter", {
         "input_key": "text", "threshold": 0.8, "shingle_n": 4,
         "order_key": "doc_id"})
-    edges = op._dense_edges(with_sh)
-    assert edges is not None
-    plan = edges._jdf.queryExecution().executedPlan().toString()
+    pairs = op._try_dense(sets)
+    assert pairs is not None
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "Exchange" not in plan
     # and the guard: a vocab cap below the corpus vocab falls back
     op_sparse = get_operator("NgramJaccardDeduplicateFilter", {
         "input_key": "text", "threshold": 0.8, "shingle_n": 4,
         "order_key": "doc_id", "dense_vocab_max": 2})
-    assert op_sparse._dense_edges(with_sh) is None
+    assert op_sparse._try_dense(sets) is None
+
+
+@pytest.mark.parametrize("dense", [8192, 0], ids=["dense", "sparse"])
+@pytest.mark.parametrize("t", [0.5, 0.8])
+def test_self_join_equals_cross_join_upper_triangle(spark, dense, t):
+    """The self-join case of the shared kernels returns exactly
+    FuzzyJoinOperator.run(df, right=df) restricted to left_id <
+    right_id: every pair once, smaller id first, same Jaccard."""
+    rows = _planted_corpus()
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    op = get_operator("NgramJaccardDeduplicateFilter", {
+        "input_key": "text", "threshold": t, "shingle_n": 4,
+        "order_key": "doc_id", "dense_vocab_max": dense})
+    sets = _sets(df).persist()
+    pins = [sets]
+    try:
+        pairs = op._try_dense(sets)
+        assert (pairs is not None) == bool(dense)
+        if pairs is None:
+            pairs = op._sparse_pairs(sets, None, pins)
+        got = [(r["left_id"], r["right_id"], r["jaccard"])
+               for r in pairs.collect()]
+    finally:
+        for p in pins:
+            p.unpersist()
+    assert all(a < b for a, b, _ in got)
+    assert len({(a, b) for a, b, _ in got}) == len(got)
+    cross = get_operator("FuzzyJoinOperator", {
+        "threshold": t, "shingle_n": 4, "dense_vocab_max": dense})
+    want = {(r["left_id"], r["right_id"], r["jaccard"])
+            for r in cross.run(df, right=df).collect()
+            if r["left_id"] < r["right_id"]}
+    assert cross.last_path == ("dense" if dense else "sparse")
+    assert set(got) == want
+    assert want  # the planted copies guarantee pairs
+
+
+@pytest.mark.parametrize("dense", [8192, 0], ids=["dense", "sparse"])
+def test_run_plan_has_no_shuffle(spark, dense):
+    """Keep-first is the near-dup tail (a broadcast join-back of the
+    component labels plus a filter), not a keep-first aggregate over
+    the full rows: with AQE off the returned plan has no Exchange."""
+    from dataflow_spark.plans import audit
+
+    df = spark.createDataFrame(_planted_corpus(), ["doc_id", "text"])
+    op = get_operator("NgramJaccardDeduplicateFilter", {
+        "input_key": "text", "threshold": 0.8, "shingle_n": 4,
+        "order_key": "doc_id", "dense_vocab_max": dense})
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        out = op.run(df)
+        assert audit(out)["exchanges"] == 0
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def test_candidate_pair_guard_refuses_degenerate_corpus(spark):

@@ -70,29 +70,19 @@ ALLOWED = {
      'agg(F.count(F.lit(1)).cast("double").alias("_cnt"))'):
         "one row per listed group (<= len(weights))",
     # documented row-limited driver-side writer (xlsx/pickle)
-    ("sources/writers.py", "df.limit(limit).collect()"):
-        "explicit limit",
     ("sources/writers.py", "limit(limit).toPandas()"):
         "explicit limit",
     # heavy-hitter candidate summaries: bounded by n_partitions x
     # capacity rows (the Misra-Gries contract; shipped via Arrow, r9-s3)
     ("operators/keywords.py", "spdf = summaries.toPandas()"):
         "partitions x capacity bound",
-    # dense fuzzy-join path: left vocab collected only after a sampled
-    # probe, hard-capped at dense_vocab_max + 1 rows
+    # dense set-similarity join (cross and self): left vocab collected
+    # only after a sampled probe, hard-capped at dense_vocab_max + 1 rows
     ("operators/fuzzy_join.py", "vocab_pdf = bounded_pull("):
         "bounded probe (dense_vocab_max + 1 on next line)",
-    # dense ngram-jaccard path: same bounded vocab probe
-    ("operators/filters/jaccard.py", "vocab_pdf = bounded_pull("):
-        "bounded probe (dense_vocab_max + 1 on next line)",
-    # dense ngram-jaccard path: corpus sets pulled only when the
-    # packed bitset matrix fits dense_broadcast_mb (checked above call)
-    ("operators/filters/jaccard.py",
-     'pdf = with_sh.select("_nd_id", "_sh").toPandas()'):
-        "byte-budget guard upstream",
-    # dense fuzzy-join path: left side pulled only when its packed
-    # bitset matrix fits dense_broadcast_mb (n_l and payload checked
-    # immediately above the call)
+    # dense set-similarity join: left side pulled only when its packed
+    # bitset matrix fits DENSE_BROADCAST_MB (n_l and payload checked
+    # above the call)
     ("operators/fuzzy_join.py", 'lpdf = lraw.select("_id", "_sh").toPandas()'):
         "byte-budget guard upstream",
 }
