@@ -43,7 +43,6 @@ class Pipeline:
         self.steps: list[PipelineStep] = []
         self.store = store
         self.checkpoint_every = checkpoint_every
-        self._compiled: list[dict] | None = None
         for s in steps or []:
             if isinstance(s, tuple):
                 self.add(s[0], **s[1])
@@ -79,7 +78,6 @@ class Pipeline:
                 "reads": list(st.op.input_keys),
                 "writes": list(st.op.output_keys),
             })
-        self._compiled = nodes
         return nodes
 
     def graph(self) -> str:
@@ -134,7 +132,8 @@ class Pipeline:
                 spark: SparkSession | None = None) -> DataFrame:
         """Apply the chain lazily. With a StepStore and checkpoint_every>0,
         materialize every k-th step and support resume (reference:
-        _compiled_forward(resume_step), Pipeline.py:507-541).
+        _compiled_forward(resume_step), Pipeline.py:507-541). Every call
+        first validates key flow against ``df`` (:meth:`compile`).
 
         Serving lifecycle: in checkpointed (materialized) execution, a
         serving whose last-using step has been checkpointed is cleaned up
@@ -142,8 +141,7 @@ class Pipeline:
         execution nothing has run when forward() returns, so release
         backends with ``cleanup()`` after the terminal action.
         """
-        if self._compiled is None:
-            self.compile(df.columns)
+        self.compile(df.columns)
         # last step index using each serving (refcount release point)
         last_use: dict[int, int] = {}
         servings: dict[int, Any] = {}

@@ -33,8 +33,6 @@ from pyspark import cloudpickle
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .udf_cache import session_udf
-
 # UDF closures call the helpers below. Pickled by value, they reach the
 # Python workers without an import of the whole dataflow_spark package
 # (every operator and prompt) on each worker's first task.
@@ -169,15 +167,6 @@ def _md5_row_kernel(n: int, finish, empty):
 
 
 def minhash64_udf(num_perm: int = 64, n: int = 5, seed: int = 42):
-    """Session-memoized :func:`_minhash64_udf_build` — the UDF object
-    (and its JVM registration) is reused across plan builds; the udf's
-    behavior is a pure function of the key params (guide §1.2
-    driver latency; see functions/udf_cache.py for the rules)."""
-    return session_udf(("hashing.minhash64_udf", num_perm, n, seed),
-                       lambda: _minhash64_udf_build(num_perm, n, seed))
-
-
-def _minhash64_udf_build(num_perm: int = 64, n: int = 5, seed: int = 42):
     """MinHash pandas_udf over ``fast`` shingle hashes: text ->
     array<long> signature; [0]*num_perm for empty/null."""
     from pyspark.sql.functions import pandas_udf
@@ -197,13 +186,6 @@ def _minhash64_udf_build(num_perm: int = 64, n: int = 5, seed: int = 42):
 
 
 def minhash_from_hashes_udf(num_perm: int = 64, seed: int = 42):
-    """Session-memoized :func:`_minhash_from_hashes_udf_build` (pure
-    function of the key params; see functions/udf_cache.py)."""
-    return session_udf(("hashing.minhash_from_hashes_udf", num_perm, seed),
-                       lambda: _minhash_from_hashes_udf_build(num_perm, seed))
-
-
-def _minhash_from_hashes_udf_build(num_perm: int = 64, seed: int = 42):
     """MinHash pandas_udf over PRE-HASHED shingle arrays: array<long> ->
     array<long> signature, with hr = pmod(h, P) (numpy ``%`` takes the
     divisor's sign, as ``pmod``). Used by the exact-similarity family's
@@ -238,14 +220,6 @@ def minhash_md5_one(text: str, num_perm: int = 64, n: int = 5,
 
 
 def minhash_md5_udf(num_perm: int = 64, n: int = 5, seed: int = 42):
-    """Session-memoized :func:`_minhash_md5_udf_build` (pure function
-    of the key params; per-TASK memo dicts live worker-side and are
-    untouched by driver-side object reuse — see functions/udf_cache.py)."""
-    return session_udf(("hashing.minhash_md5_udf", num_perm, n, seed),
-                       lambda: _minhash_md5_udf_build(num_perm, n, seed))
-
-
-def _minhash_md5_udf_build(num_perm: int = 64, n: int = 5, seed: int = 42):
     """Oracle-replicable MinHash signature: md5-family shingle hashes,
     ``int(md5(gram)[:15], 16) % P``, which an external SQL engine can
     recompute exactly. Shingling mirrors ``char_shingles``; [0]*num_perm
@@ -274,13 +248,6 @@ def simhash_md5_one(text: str, n: int = 4) -> int:
 
 
 def simhash_md5_udf(n: int = 4):
-    """Session-memoized :func:`_simhash_md5_udf_build` (pure function
-    of the key params; see functions/udf_cache.py)."""
-    return session_udf(("hashing.simhash_md5_udf", n),
-                       lambda: _simhash_md5_udf_build(n))
-
-
-def _simhash_md5_udf_build(n: int = 4):
     """Oracle-replicable SimHash: sign-sums over the 60 bits of the md5
     gram hashes (bits 60-63 of the result are always 0 — still a valid
     simhash family, and every step is reproducible in DuckDB SQL).
@@ -301,13 +268,6 @@ def _simhash_md5_udf_build(n: int = 4):
 
 
 def simhash64_udf(n: int = 4):
-    """Session-memoized :func:`_simhash64_udf_build` (pure function of
-    the key params; see functions/udf_cache.py)."""
-    return session_udf(("hashing.simhash64_udf", n),
-                       lambda: _simhash64_udf_build(n))
-
-
-def _simhash64_udf_build(n: int = 4):
     """SimHash pandas_udf over ``fast`` shingle hashes: text -> 64-bit
     sign-sum signature; 0 for empty/null."""
     from pyspark.sql.functions import pandas_udf

@@ -47,17 +47,6 @@ def normalize(a: Column) -> Column:
 
 def hyperplane_bands_udf(num_planes: int = 16, num_bands: int = 4,
                          seed: int = 42, dim: int | None = None):
-    """Session-memoized :func:`_hyperplane_bands_udf_build` (pure
-    function of the key params; see functions/udf_cache.py)."""
-    from .udf_cache import session_udf
-
-    return session_udf(
-        ("vector.hyperplane_bands_udf", num_planes, num_bands, seed, dim),
-        lambda: _hyperplane_bands_udf_build(num_planes, num_bands, seed, dim))
-
-
-def _hyperplane_bands_udf_build(num_planes: int = 16, num_bands: int = 4,
-                                seed: int = 42, dim: int | None = None):
     """Vectorized random-hyperplane LSH band keys: embedding array ->
     array<long> of ``num_bands`` packed sign-bit keys.
 

@@ -48,7 +48,6 @@ from pyspark.sql import functions as F
 
 from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
-from dataflow_spark.functions.udf_cache import session_udf
 
 
 _WS_RE = _re.compile(r"\s+", _re.ASCII)
@@ -80,13 +79,6 @@ def word_ngrams(text: str | None, n: int) -> list[str]:
 
 
 def _grams_udf(n: int):
-    """Session-memoized :func:`_grams_udf_build` (pure function of n;
-    see functions/udf_cache.py)."""
-    return session_udf(("decontaminate.grams", n),
-                       lambda: _grams_udf_build(n))
-
-
-def _grams_udf_build(n: int):
     """Vectorized ``word_ngrams``: Arrow-batched pandas_udf rather than
     the Column HOF form — the higher-order-function lambda tree is
     CodegenFallback in Spark (interpreted per gram), measured ~8x

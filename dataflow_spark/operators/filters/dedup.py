@@ -51,14 +51,14 @@ def _keep_first(df: DataFrame, key: Column, order_col: str) -> DataFrame:
     would. On a 100 TB duplicate-heavy crawl that is the difference
     between shuffling the corpus and shuffling the distinct set.
 
-    Column-pruning note (the r5 regression and its fix): a single
-    ``min_by(struct(*cols), order)`` carries EVERY input column through
-    one opaque struct, and Catalyst's nested-schema pruning does not
-    reach through aggregate buffers — so a downstream ``select(a, b)``
-    still scanned all columns. Emitting one independent ``min_by(col,
-    order)`` per column instead keeps the identical semantics (the
-    order id is unique, so every per-column winner comes from the same
-    row) while each aggregate expression stays individually prunable:
+    Column pruning: a single ``min_by(struct(*cols), order)`` carries
+    EVERY input column through one opaque struct, and Catalyst's
+    nested-schema pruning does not reach through aggregate buffers — so
+    a downstream ``select(a, b)`` still scanned all columns. Emitting one
+    independent ``min_by(col, order)`` per column instead keeps the
+    identical semantics (the order id is unique, so every per-column
+    winner comes from the same row) while each aggregate expression
+    stays individually prunable:
     ColumnPruning drops the unused ``min_by``s from the Aggregate node
     and the parquet scan narrows to exactly the columns downstream
     needs. Map-side combine is unchanged — it is a property of the
@@ -76,14 +76,11 @@ def _keep_first(df: DataFrame, key: Column, order_col: str) -> DataFrame:
     # single-parse expr strings: one JVM parse per aggregate
     # instead of the min_by/col/struct py4j chain — same trees, same
     # results, ~3x fewer driver round trips on wide inputs
-    def bq(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
     if ROW_ID in df.columns and order_col != ROW_ID:
-        okey_sql = f"struct({bq(order_col)}, {bq(ROW_ID)})"
+        okey_sql = f"struct({_bq(order_col)}, {_bq(ROW_ID)})"
     else:
-        okey_sql = bq(order_col)
-    aggs = [F.expr(f"min_by({bq(c)}, {okey_sql})").alias(c)
+        okey_sql = _bq(order_col)
+    aggs = [F.expr(f"min_by({_bq(c)}, {okey_sql})").alias(c)
             for c in df.columns]
     return df.groupBy(key.alias("_dedup_k")).agg(*aggs).drop("_dedup_k")
 
@@ -184,6 +181,12 @@ def _star_contraction(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     included). Convergence is detected by an aggregate signature
     (count + sum of edge hashes) going stable — one extra cheap round
     instead of an exceptAll anti-join.
+
+    Each round's ``localCheckpoint`` blocks are not replicated and live
+    until the frame that holds them is garbage-collected: repeated runs
+    in one long-lived session accumulate checkpoint storage until then,
+    and a lost executor fails downstream actions instead of recomputing
+    them (the lineage is truncated).
     """
     # checkpoint the INITIAL edge set too: every round references
     # e twice through sym and again through the join, so an
@@ -375,6 +378,16 @@ class _NearDupBase(_BaseDedup):
     #: survivors are exactly the rows where assign column == order id
     assign_key: str | None = None
 
+    def _nd_rows(self, df: DataFrame,
+                 order_col: str) -> tuple[DataFrame, DataFrame]:
+        """``(df, keyed)``: ``df`` with ``_nd_id`` (the order id as a
+        long) attached, and ``keyed``, its rows with a non-NULL id — the
+        only input of candidate generation. A NULL order key has no place
+        in the keep-first order, so such a row never joins a cluster and
+        survives as a singleton (:meth:`_keep_components`)."""
+        df = df.withColumn("_nd_id", F.expr(f"cast({_bq(order_col)} as long)"))
+        return df, df.where("_nd_id IS NOT NULL")
+
     def _collapse_exact(self, sigs: DataFrame,
                         key: str) -> tuple[DataFrame, DataFrame]:
         """Collapse rows with IDENTICAL signatures to one representative.
@@ -523,19 +536,20 @@ class _NearDupBase(_BaseDedup):
         label IS the min order-id of the cluster (union-find min-root /
         min-label propagation), so "first occurrence" == rows of ``df``
         whose own ``_nd_id`` equals their component label; unclustered
-        rows (left-join miss) stay."""
+        rows (left-join miss, NULL ``_nd_id`` included) stay."""
         out = df.join(comp.toDF("_nd_id", "component"), "_nd_id", "left")
         if self.assign_key:
             # assignment mode: keep every row, expose its cluster label
             # (= min order-id of its near-dup component; singletons get
-            # their own id) instead of filtering
+            # their own id, NULL for a NULL order key) instead of
+            # filtering
             return self._finish(
                 out.withColumn(self.assign_key,
                                F.expr("coalesce(component, _nd_id)"))
                 .drop("component", "_nd_id"),
                 order_col)
         return self._finish(
-            out.filter("coalesce(component, _nd_id) = _nd_id")
+            out.filter("component IS NULL OR component = _nd_id")
             .drop("component", "_nd_id"),
             order_col)
 
@@ -597,7 +611,7 @@ class MinHashDeduplicateFilter(_NearDupBase):
     def _dedup(self, df: DataFrame, order_col: str) -> DataFrame:
         """In-batch MinHash dedup of ``df``, already ordered by
         :meth:`_ordered` on ``order_col``."""
-        df = df.withColumn("_nd_id", F.expr(f"cast({_bq(order_col)} as long)"))
+        df, keyed = self._nd_rows(df, order_col)
         sig_udf, bands_sql = self._kernels()
         # project-then-dedup: only (id, signature) flows through banding,
         # verify, and components — the scan on this branch reads just
@@ -609,7 +623,7 @@ class MinHashDeduplicateFilter(_NearDupBase):
         # would run the signature kernel on one core; spreading the narrow
         # projection is a no-op whenever the scan already parallelizes.
         sigs = spread_for_udf(
-            df.select("_nd_id", self.input_key)).select(
+            keyed.select("_nd_id", self.input_key)).select(
             F.col("_nd_id"), sig_udf(F.col(self.input_key)).alias("_sig"))
         # exact-signature collapse: bounds bucket sizes on degenerate
         # (mass-duplicate) corpora; survivors provably unchanged
@@ -658,7 +672,7 @@ class SimHashDeduplicateFilter(_NearDupBase):
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
         df, order_col = self._ordered(df)
-        df = df.withColumn("_nd_id", F.expr(f"cast({_bq(order_col)} as long)"))
+        df, keyed = self._nd_rows(df, order_col)
         sim_udf = (H.simhash_md5_udf(self.shingle_n) if self.hash_impl == "md5"
                    else H.simhash64_udf(self.shingle_n))
         # project-then-dedup: only (id, simhash) feeds banding + Hamming
@@ -667,7 +681,7 @@ class SimHashDeduplicateFilter(_NearDupBase):
         # spread_for_udf: see MinHashDeduplicateFilter — cores-wide
         # signature stage on under-split inputs, no-op otherwise.
         sims = spread_for_udf(
-            df.select("_nd_id", self.input_key)).select(
+            keyed.select("_nd_id", self.input_key)).select(
             F.col("_nd_id"), sim_udf(F.col(self.input_key)).alias("_simhash"))
         # exact-signature collapse (see _collapse_exact): degenerate-
         # corpus bucket armor, survivors unchanged
@@ -717,13 +731,13 @@ class SemDeduplicateFilter(_NearDupBase):
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
         df, order_col = self._ordered(df)
-        df = df.withColumn("_nd_id", F.expr(f"cast({_bq(order_col)} as long)"))
+        df, keyed = self._nd_rows(df, order_col)
         # vectorized sign-bit band keys (functions/vector.py) — the
         # per-plane expression tree is CodegenFallback, ~1000x slower
         bands_udf = V.hyperplane_bands_udf(self.num_planes, self.num_bands, self.seed)
         # exact-embedding collapse (see _collapse_exact): byte-identical
         # vectors band once, dups link via rep edges
-        emb_rows = df.select("_nd_id", self.input_key)
+        emb_rows = keyed.select("_nd_id", self.input_key)
         emb_bq = "`" + self.input_key.replace("`", "``") + "`"
         reps, exact_edges = self._collapse_exact(
             emb_rows,

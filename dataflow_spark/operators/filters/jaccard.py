@@ -50,10 +50,10 @@ class NgramJaccardDeduplicateFilter(ExactSetJoin, _NearDupBase):
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
         df, order_col = self._ordered(df)
-        df = df.withColumn("_nd_id", F.col(order_col).cast("long"))
+        df, keyed = self._nd_rows(df, order_col)
         # project-then-dedup: only (id, shingle hashes) flows through
         # the join; full rows join back at the end
-        sets = shingle_sets(df, "_nd_id", self.input_key, "char",
+        sets = shingle_sets(keyed, "_nd_id", self.input_key, "char",
                             self.shingle_n).persist()
         pins: list[DataFrame] = [sets]
         # connected_components consumes the pair lineage EAGERLY (driver

@@ -440,7 +440,7 @@ class SourceOverlapMatrixOperator(Operator):
     side. Groups whose texts produce zero grams don't appear.
 
     Output: group_a, group_b, grams_a, grams_b, shared, jaccard
-    (round 6), one row per unordered pair, group_a < group_b.
+    (rounded to ``round_digits``), one row per unordered pair, group_a < group_b.
     """
 
     def __init__(self, group_key: str = "source", input_key: str = "text",

@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
 from dataflow_spark.functions.pulls import bounded_pull
-from dataflow_spark.functions.udf_cache import session_udf
 
 
 _WS_RE = _re.compile(r"\s+", _re.ASCII)
@@ -101,13 +100,6 @@ def _rebuild_udf(keep_first: bool, joiner: str, bc):
 
 
 def word_windows_udf(k: int):
-    """Session-memoized :func:`_word_windows_udf_build` (pure function
-    of k; see functions/udf_cache.py)."""
-    return session_udf(("segment_dedup.word_windows", k),
-                       lambda: _word_windows_udf_build(k))
-
-
-def _word_windows_udf_build(k: int):
     """Vectorized ``word_segments``: Arrow-batched pandas_udf — the
     Column HOF form (sequence + slice + concat_ws per window) is
     CodegenFallback-interpreted, measured ~8x slower at sf0.1."""

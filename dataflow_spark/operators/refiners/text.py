@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from dataflow_spark.core.operator import RefineOperator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
-from dataflow_spark.functions.udf_cache import session_udf
 from dataflow_spark.operators.filters.rule_based import EN_STOPWORDS
 
 
@@ -190,13 +189,10 @@ class UnicodeNormalizationRefiner(RefineOperator):
         self.form = form
 
     def refine_expr(self, col: Column) -> Column:
-        # session-memoized UDF object: pure function of the form
-        norm = session_udf(("refiners.unicode_norm", self.form),
-                           lambda: _unicode_norm_udf_build(self.form))
-        return norm(col)
+        return _unicode_norm_udf(self.form)(col)
 
 
-def _unicode_norm_udf_build(form: str):
+def _unicode_norm_udf(form: str):
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")

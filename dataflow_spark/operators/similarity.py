@@ -74,7 +74,7 @@ def _dense_topk_worker(bc, k, include_self):
             # null / dimension-mismatched corpus vectors: the
             # join path computes a null cosine for them and
             # excludes the row; np.stack would instead raise on
-            # the whole batch (ADVICE r6) — drop before stacking
+            # the whole batch — drop before stacking
             vals = pdf["_c_emb"]
             keep = [i for i, v in enumerate(vals)
                     if v is not None and len(v) == dim_]
@@ -170,7 +170,7 @@ def _dense_topk_worker(bc, k, include_self):
                 # kth minus max(relative, absolute) margin — a
                 # purely relative margin collapses below GEMM
                 # absolute error (~1e-13) when the kth cosine
-                # sits near zero (ADVICE r6). kth == -inf gives
+                # sits near zero. kth == -inf gives
                 # thr == -inf (IEEE: -inf - inf = -inf); the
                 # two branches below handle that row exactly as
                 # the original per-column code did.
@@ -335,8 +335,8 @@ class BruteForceKNN(Operator):
         # null/empty query vectors produce null cosine on the join path
         # (no output rows for that query) — drop them here; mixed query
         # dims would need per-dim matmuls, so fall back to the exact
-        # join path instead of guessing (ADVICE r6: np.array over
-        # ragged rows built a dtype=object matrix that broke the GEMM)
+        # join path instead of guessing (np.array over ragged rows
+        # builds a dtype=object matrix that breaks the GEMM)
         qrows = [(i, v) for i, v in zip(qpdf[self.id_key].tolist(),
                                         qpdf[self.embedding_key])
                  if v is not None and len(v) > 0]
@@ -401,7 +401,7 @@ class BruteForceKNN(Operator):
         # side) is NOT a match: exclude before ranking, so both physical
         # paths agree — a null would otherwise occupy a top-k slot
         # (nulls sort into row_number like any value) on the join path
-        # while the matmul path drops it (ADVICE r6 alignment)
+        # while the matmul path drops it
         sim = (joined.withColumn("cosine_sim",
                                  V.cosine(F.col("_q_emb"), F.col("_c_emb")))
                .filter(F.col("cosine_sim").isNotNull()))

@@ -22,7 +22,6 @@ from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
 from dataflow_spark.functions import hashing as H
 from dataflow_spark.functions import text as T
-from dataflow_spark.functions.udf_cache import session_udf
 from dataflow_spark.operators.filters.rule_based import EN_STOPWORDS
 
 # Marker (stopword-like) vocabularies for the n-gram/marker-word language
@@ -51,15 +50,7 @@ def langid_expr(col: Column) -> Column:
     (4 langs x words/filter/array_contains HOF trees) is CodegenFallback
     with no CSE, re-tokenizing every row 4x (~3x slower at sf0.1). The
     SQL-mirrorable definition is pinned by the t_langid oracle.
-
-    Session-memoized UDF object: the closure depends only on the
-    module-constant marker vocabularies, so one JVM registration serves
-    every plan build (functions/udf_cache.py).
     """
-    return session_udf(("text_analysis.langid",), _langid_udf_build)(col)
-
-
-def _langid_udf_build():
     import re
 
     from pyspark.sql.functions import pandas_udf
@@ -87,7 +78,7 @@ def _langid_udf_build():
     def langid(s: pd.Series) -> pd.Series:
         return s.map(one)
 
-    return langid
+    return langid(col)
 
 
 @OPERATOR_REGISTRY.register()
@@ -183,14 +174,12 @@ class NgramRepetitionEvaluator(Operator):
         # pandas_udf rather than a Column expression of word n-grams: the
         # higher-order-function lambda tree is CodegenFallback in Spark
         # (no codegen CSE), so the gram array would be evaluated three
-        # times per row (~6x slower measured at sf0.1). Session-memoized
-        # UDF object: pure function of n (functions/udf_cache.py).
-        ratio = session_udf(("text_analysis.ngram_ratio", self.n),
-                            lambda: _ngram_ratio_udf_build(self.n))
+        # times per row (~6x slower measured at sf0.1).
+        ratio = _ngram_ratio_udf(self.n)
         return df.withColumn(self.output_key, ratio(F.col(self.input_key)))
 
 
-def _ngram_ratio_udf_build(n: int):
+def _ngram_ratio_udf(n: int):
     """Arrow-batched distinct-ngram-ratio UDF (lowercased whitespace
     words, n-grams joined by single spaces; whole sequence as one gram
     for docs shorter than n words)."""
@@ -250,17 +239,14 @@ class GopherRepetitionEvaluator(Operator):
                             "dup_ngram_char_frac")
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        # session-memoized UDF object: pure function of (n, k)
-        rep = session_udf(
-            ("text_analysis.gopher_rep", self.n, self.segment_words),
-            lambda: _gopher_rep_udf_build(self.n, self.segment_words))
+        rep = _gopher_rep_udf(self.n, self.segment_words)
         out = df.withColumn("_rep", rep(F.col(self.input_key)))
         for c in self.output_keys:
             out = out.withColumn(c, F.col("_rep").getField(c))
         return out.drop("_rep")
 
 
-def _gopher_rep_udf_build(n: int, k: int):
+def _gopher_rep_udf(n: int, k: int):
     """Arrow-batched Gopher-repetition UDF: one pass computes
     (dup_segment_frac, top_ngram_char_frac, dup_ngram_char_frac) per
     the class docstring's exact definitions."""

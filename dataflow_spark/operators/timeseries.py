@@ -424,7 +424,7 @@ class CohortRetentionOperator(Operator):
         per_user = (
             # null-timestamp events carry no period information and are
             # excluded by policy (explicit filter, not an artifact of
-            # collect_set's null-dropping — ADVICE r6): a user whose
+            # collect_set's null-dropping): a user whose
             # events are all null-ts has no cohort and emits nothing
             df.where(F.col(self.ts_key).isNotNull())
             .select(u, F.date_trunc(self.granularity, F.col(self.ts_key))

@@ -211,7 +211,7 @@ def drain_complete(agg: DataFrame, out_dir: str | None = None) -> DataFrame:
     aggregate cardinality per partition — that is inherent to
     complete-mode aggregation, not to the sink.
 
-    Lifecycle (ADVICE r6): the checkpoint directory is FRESH per call
+    Lifecycle: the checkpoint directory is FRESH per call
     — a retained checkpoint under a reused ``out_dir`` would make the
     restarted availableNow stream see no new data and silently hand
     back the previous run's parquet. Engine-created temp directories

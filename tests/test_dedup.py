@@ -460,3 +460,30 @@ def test_sql_band_builders_pinned_values(spark):
         [(0, 65535), (1, 65535), (2, 65535), (3, 65535)],
         [(0, 5), (1, 0), (2, 0), (3, 16384)],
     ]
+
+
+@pytest.mark.parametrize("name", [
+    "MinHashDeduplicateFilter", "SimHashDeduplicateFilter",
+    "SemDeduplicateFilter", "NgramJaccardDeduplicateFilter"])
+def test_near_dup_null_order_key_row_survives_as_singleton(spark, name):
+    """A row whose order_key is NULL has no place in the keep-first
+    order: it never joins a cluster and survives, even when it duplicates
+    a keyed row; keyed rows dedup as if it were absent."""
+    text = " ".join(f"alpha{i} beta{i * 7 % 97} gamma{i * 13 % 83}"
+                    for i in range(60))
+    other = " ".join(f"delta{i * 3 % 71} epsilon{i * 11 % 89}"
+                     for i in range(60))
+    if name == "SemDeduplicateFilter":
+        dup, far = [1.0, 0.0, 0.0], [0.0, 1.0, 0.0]
+        args = {"embedding_key": "embedding"}
+        schema = "doc_id long, embedding array<double>"
+    else:
+        dup, far = text, other
+        args = {"input_key": "text"}
+        schema = "doc_id long, text string"
+    df = spark.createDataFrame(
+        [(1, dup), (2, dup), (None, dup), (3, far)], schema)
+    out = get_operator(name, {**args, "order_key": "doc_id"}).run(df)
+    assert out.columns == df.columns
+    ids = [r.doc_id for r in out.collect()]
+    assert sorted(ids, key=lambda i: (i is None, i)) == [1, 3, None]

@@ -23,6 +23,14 @@ def test_compile_tracks_written_keys(docs):
     assert nodes[0]["writes"] == ["pl"]
 
 
+def test_forward_validates_every_input(docs):
+    # a reused Pipeline checks each frame it is given, not just the first
+    pipe = Pipeline([get_operator("WordNumberFilter", {"input_key": "text"})])
+    pipe.forward(docs)
+    with pytest.raises(PipelineKeyError, match="text"):
+        pipe.forward(docs.drop("text"))
+
+
 def test_forward_and_resume(tmp_path, spark, docs):
     store = StepStore(str(tmp_path / "steps"))
     pipe = Pipeline([

@@ -57,3 +57,14 @@ def test_heavy_query_plan_has_no_red_flags(spark, contract_queries, name):
         "plan regression; re-run tools/plan_audit.py and review PLANS.md")
     assert a["single_partition_exchanges"] == 0, (
         f"{name}: user-requested single-partition exchange")
+
+
+def test_audited_names_are_entry_queries():
+    # no SparkSession: tools/plan_audit.py's lists name only queries the
+    # entry contract defines, once each
+    import __spark_entry__ as entrymod
+    from tools.plan_audit import EXTRA, HEADLINE
+
+    names = HEADLINE + EXTRA
+    assert len(names) == len(set(names))
+    assert set(names) <= set(entrymod.queries())

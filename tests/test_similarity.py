@@ -1,6 +1,6 @@
 """BruteForceKNN degenerate embeddings: both physical paths must agree
 that a null cosine (null / zero-norm / dim-mismatched vector) is not a
-match (ADVICE r6)."""
+match."""
 
 from dataflow_spark.core.registry import get_operator
 
@@ -123,7 +123,7 @@ def test_matmul_slabs_agree_with_single_broadcast_and_join(spark):
 
 
 def test_lsh_paths_agree_with_zero_norm_vectors(spark):
-    """ADVICE r7: the join path used to emit null-cosine rows for
+    """The join path used to emit null-cosine rows for
     zero-norm/dim-mismatched vectors while the fused path excluded
     them — the two physical paths of ONE operator must return the
     same rows."""
@@ -172,7 +172,7 @@ def test_matmul_k1_ties_to_smaller_id_with_zero_norms(spark):
 def test_matmul_k3_ties_to_smaller_id_with_zero_norms(spark):
     """k > 1 takes the partition-copy + 3-op fused-mask + lexsort
     branch in the dense worker (distinct from the k == 1 row-max path
-    pinned above, ADVICE r8): byte-identical duplicate trios must rank
+    pinned above): byte-identical duplicate trios must rank
     ties by ascending neighbor id, zero-norm rows must produce and
     receive no matches, and the result must agree with the exact join
     path."""
@@ -205,8 +205,7 @@ def test_matmul_duplicate_query_ids_agree_with_join_path(spark):
     """Malformed input: non-unique id column. The join path excludes
     the self pair for EVERY duplicate row (neighbor_id != query_id);
     the dense path's id->rows exclusion map must do the same for every
-    row position of a duplicated id, not just the last one (ADVICE
-    r8)."""
+    row position of a duplicated id, not just the last one."""
     rows = [(1, [1.0, 0.0]), (1, [0.8, 0.6]),      # duplicated id 1
             (2, [0.9, 0.1]), (3, [0.0, 1.0])]
     df = spark.createDataFrame(rows, "id long, embedding array<double>")

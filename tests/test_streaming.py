@@ -274,7 +274,7 @@ def test_drain_complete_distributed_sink(spark, tmp_path):
 
 
 def test_drain_complete_reused_out_dir_not_stale(spark, tmp_path):
-    """ADVICE r6: reusing out_dir previously returned the FIRST run's
+    """Reusing out_dir previously returned the FIRST run's
     parquet forever (retained checkpoint saw no new data). Each call
     must reflect the source as it stands."""
     import pandas as pd

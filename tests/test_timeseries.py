@@ -426,7 +426,7 @@ def test_funnel_cap_overflow_rule(spark):
 
 
 def test_cohort_retention_null_ts_excluded_by_policy(spark):
-    # ADVICE r6: null-ts handling is an explicit filter now — null-ts
+    # null-ts handling is an explicit filter now — null-ts
     # events are ignored; an all-null user emits no rows (no null
     # offsets, no synthetic cohort)
     from dataflow_spark.core.registry import get_operator

@@ -3,10 +3,10 @@
 The contract's DuckDB oracles for ``q_fuzzy_join`` / ``q_containment_join``
 re-express the engine's PPJoin prefix filter in SQL — linear on sparse
 (real-text) corpora, but on a LOW-ENTROPY corpus the candidate set is
-inherently huge and the SQL twin dies on disk. The bench sf1 replica is
-exactly that degenerate case: ~2.2k distinct 5-grams over 10.4M tokens,
-so prefix filtering admits ~406M candidate pairs for ~12k true matches
-(measured; see ORACLE_SWEEP.md).
+inherently huge and the SQL twin dies on disk. A 10x replica of the
+sf0.1 documents table is exactly that degenerate case: ~2.2k distinct
+5-grams over 10.4M tokens, so prefix filtering admits ~406M candidate
+pairs for ~12k true matches (measured).
 
 This tool verifies the engine at that scale anyway, with an oracle from
 a DIFFERENT algorithm family — no shared assumptions with either the
@@ -23,7 +23,7 @@ viable precisely when the corpus is degenerate (small vocab). On sparse
 corpora the SQL oracle is linear and this tool is unnecessary.
 
 Usage:
-    python tools/brute_fuzzy_oracle.py --sf .bench_data/sf1 \
+    python tools/brute_fuzzy_oracle.py --sf /root/testdata/sf0.1 \
         [--query q_fuzzy_join,q_containment_join] [--max-vocab 300000]
 
 Exits 0 iff every checked query's engine output matches the brute-force
@@ -161,7 +161,7 @@ def check(name: str, engine_rows, brute_rows) -> bool:
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default=".bench_data/sf1")
+    ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--query", default="q_fuzzy_join,q_containment_join")
     ap.add_argument("--max-vocab", type=int, default=300_000)
     args = ap.parse_args()

@@ -4,9 +4,9 @@ the SQL twins are infeasible.
 The contract oracles are exact but their DuckDB shapes do not scale:
 the connected-components twin is a RECURSIVE transitive closure over
 the per-hour CLIQUE expansion (~2.77e9 pre-distinct pairs at sf10),
-and the (pre-r8) PageRank twin spilled the disk on its clique joins.
+and an earlier PageRank twin spilled the disk on its clique joins.
 Both algorithms are pure integer fixed-point, so a third
-implementation is trivial and assumption-free — and, r8, it works
+implementation is trivial and assumption-free — and it works
 from the LINEAR (user, error-hour) incidence list, never the clique:
 
 - incidences come from DuckDB (verbatim, cheap at any sf);
@@ -14,12 +14,12 @@ from the LINEAR (user, error-hour) incidence list, never the clique:
   members within each hour group (clique connectivity without clique
   edges; independent of the engine's hour-star construction);
 - PageRank: 3 power iterations over the BIPARTITE user<->hour graph
-  (the r8 contract definition) with the operator's exact fixed-point
+  (the contract definition) with the operator's exact fixed-point
   arithmetic (SCALE=1e9 integers, floor divisions) via int64
   np.add.at — associative, so bit-identical to any correct engine.
 
 Usage:
-    python tools/brute_graph_oracle.py [--sf .bench_data/sf1]
+    python tools/brute_graph_oracle.py [--sf /root/testdata/sf0.1]
         [--query q_connected_components,q_pagerank]
 """
 
@@ -124,7 +124,7 @@ def brute_pagerank(users: np.ndarray, hours: np.ndarray, n_iter: int = 3,
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default=".bench_data/sf1")
+    ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--query",
                     default="q_connected_components,q_pagerank")
     args = ap.parse_args()

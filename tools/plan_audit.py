@@ -1,7 +1,7 @@
 """Physical-plan audit for the headline queries -> PLANS.md.
 
-For every bench headline query, render the formatted plan and extract
-the scale-relevant facts:
+For every HEADLINE and EXTRA (heavy-family) query, render the formatted
+plan and extract the scale-relevant facts:
 
   - parquet scans: pushed filters + read schema (column pruning)
   - exchange count (shuffles) and broadcast joins
@@ -28,6 +28,49 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from dataflow_spark.plans import audit, formatted_plan  # noqa: E402
 
 
+HEADLINE = [
+    # relational core
+    "q1_pricing_summary", "q3_shipping_priority", "q5_regional_revenue",
+    "q_top_customers", "q_window_rank", "q_rollup_lineitem",
+    "q_semi_join_orders", "q_anti_join_customers",
+    # events / time
+    "q_events_hourly", "q_sessionize", "q_count_distinct_users",
+    # text pipeline
+    "q_explode_words", "t_quality_score", "t_langid", "t_token_count",
+    "t_ngram_ratio",
+    # dedup
+    "d_exact_hash", "d_ccnet_norm", "d_minhash_lsh", "d_simhash",
+    # similarity
+    "s_knn_brute", "s_knn_lsh",
+]
+
+# non-headline queries whose plan shape carries the scale story
+EXTRA = [
+    "q_pipeline_training_prep", "q_bucketed_join", "q_salted_agg",
+    "q_session_windows", "d_semantic", "s_knn_ivf",
+    "q_corpus_profile", "d_ngram_jaccard",
+    "q_asof_join", "q_range_join", "q_hypertable_rollup",
+    "x_decontaminate", "q_domain_mixture", "d_incremental_hash",
+    "r_segment_dedup", "q_pipeline_corpus_curation",
+    "t_tfidf_keywords", "s_centroid_sim", "x_percentile_filter",
+    "q_rolling_features", "q_funnel", "q_zscore_outliers",
+    "d_minhash_clusters", "q_cohort_retention", "q_table_profile",
+    "q_expectations", "q_bm25_topk", "q_global_shuffle",
+    "q_fuzzy_join", "q_kmeans", "q_snapshot_diff",
+    "q_upsert_latest", "q_connected_components", "q_pagerank",
+    "q_pct_rank", "q_histogram", "q_rolling_anomaly",
+    "d_incremental_minhash", "q_weighted_sample",
+    "q_pipeline_code_filter", "q_pipeline_text_filter",
+    "q_pipeline_sft_filter",
+    # substring-duplicate family + DSIR
+    "d_substring_pairs", "d_substring_dedup", "d_substring_cut",
+    "x_dsir_weights", "x_dsir_select",
+    # bloom prefilter, heavy hitters, source overlap
+    "d_bloom_incremental", "q_heavy_hitters", "q_heavy_weighted",
+    "q_heavy_ngrams", "q_source_overlap", "q_heavy_by_source",
+]
+
+
 def audit_one(name: str, plan: str) -> dict:
     return {"query": name, **audit(None, plan)}
 
@@ -39,15 +82,20 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
-    from bench import HEADLINE
     from dataflow_spark import get_spark
+
+    qs = entrymod.queries()
+    names = HEADLINE + EXTRA
+    # a renamed query must fail the audit, not drop out of PLANS.md
+    missing = [x for x in names if x not in qs]
+    if missing:
+        raise SystemExit(f"not in __spark_entry__.queries(): {missing}")
 
     # AQE stays ON in production; the audit disables it so the formatted
     # plan shows final codegen ids (AQE's initial plan hides them)
     spark = get_spark("plan-audit",
                       extra_conf={"spark.sql.adaptive.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
 
     lines = [
         "# PLANS — physical-plan audit of the bench headline queries",
@@ -60,32 +108,8 @@ def main() -> None:
         "where a broadcast would do.",
         "",
     ]
-    # non-headline queries whose plan shape carries the scale story
-    extra = ["q_pipeline_training_prep", "q_bucketed_join", "q_salted_agg",
-             "q_session_windows", "d_semantic", "s_knn_ivf",
-             "q_corpus_profile", "d_ngram_jaccard",
-             "q_asof_join", "q_range_join", "q_hypertable_rollup",
-             "x_decontaminate", "q_domain_mixture", "d_incremental_hash",
-             "r_segment_dedup", "q_pipeline_corpus_curation",
-             "t_tfidf_keywords", "s_centroid_sim", "x_percentile_filter",
-             "q_rolling_features", "q_funnel", "q_zscore_outliers",
-             "d_minhash_clusters", "q_cohort_retention", "q_table_profile",
-             "q_expectations", "q_bm25_topk", "q_global_shuffle",
-             "q_fuzzy_join", "q_kmeans", "q_snapshot_diff",
-             "q_upsert_latest", "q_connected_components", "q_pagerank",
-             "q_pct_rank", "q_histogram", "q_rolling_anomaly",
-             "d_incremental_minhash", "q_weighted_sample",
-             "q_pipeline_code_filter", "q_pipeline_text_filter",
-             "q_pipeline_sft_filter",
-             # r9 additions: substring-duplicate family + DSIR
-             "d_substring_pairs", "d_substring_dedup", "d_substring_cut",
-             "x_dsir_weights", "x_dsir_select",
-             # r9 third session: bloom prefilter + heavy-hitter family +
-             # source overlap
-             "d_bloom_incremental", "q_heavy_hitters", "q_heavy_weighted",
-             "q_heavy_ngrams", "q_source_overlap", "q_heavy_by_source"]
     red_flags = []
-    for name in HEADLINE + [x for x in extra if x in qs]:
+    for name in names:
         df = qs[name](spark, args.sf)
         a = audit_one(name, formatted_plan(df))
         lines.append(f"## {name}")
@@ -103,12 +127,10 @@ def main() -> None:
             lines.append("- **RED FLAG: row-at-a-time BatchEvalPython**")
             red_flags.append(name)
         lines.append("")
-    audited = HEADLINE + [x for x in extra if x in qs]
     lines.append("## Summary")
     lines.append("")
-    lines.append(f"- queries audited: {len(audited)} "
-                 f"({len(HEADLINE)} headline + "
-                 f"{len(audited) - len(HEADLINE)} heavy-family)")
+    lines.append(f"- queries audited: {len(names)} "
+                 f"({len(HEADLINE)} headline + {len(EXTRA)} heavy-family)")
     lines.append(f"- row-at-a-time Python: {len(red_flags)}"
                  + (f" ({', '.join(red_flags)})" if red_flags else " (none)"))
     lines.append("")
