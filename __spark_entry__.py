@@ -143,7 +143,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # are per-SparkSession, so two sessions sharing one context (e.g.
 # spark.newSession()) must not see each other's registrations; the weak
 # key also drops entries when a session is garbage-collected, so a
-# reused address can never serve a stale registration (ADVICE r7).
+# reused address can never serve a stale registration.
 _VIEW_CACHE: "_weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
     _weakref.WeakKeyDictionary())
 
@@ -896,7 +896,7 @@ def q_region_nation_list(spark, sf_dir):
 
     The result is stringified with concat_ws so the driver's pandas
     canonicalizer can hash it (array-typed result columns are
-    unhashable there — the only red row in CORRECTNESS_r03)."""
+    unhashable there and crash the comparison)."""
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
     j = nation.join(region, nation.n_regionkey == region.r_regionkey)
@@ -6481,27 +6481,22 @@ def q_containment_join(spark, sf_dir):
 # to maximize fresh verification coverage:
 #   1. re-verify head: queries that failed or had no oracle in earlier
 #      rounds and were since fixed/oracled — proof-of-fix must land in
-#      the next CORRECTNESS file;
+#      the next driver check;
 #   2. never-driver-checked queries;
 #   3. everything already green in r1/r2 (lowest information value).
 _REVERIFY_HEAD = [
-    # r9 rotation by STALENESS: head = queries whose operator paths
-    # CHANGED in r9 (FuzzyJoinOperator.run gained the containment
-    # fallback + identical-set/projection collapse; BruteForceKNN's
-    # dense worker was hoisted with the duplicate-id self-exclusion
-    # fix), then the 50-slot head filled by the STALEST names from the
-    # CORRECTNESS_r01-08 union — the 32 names last checked in r3 and
-    # the alphabetically-first of the r4 set (computed from the
-    # artifact files, not guessed).
-    # r9 late addition: the substring-duplicate family is NEW this
-    # round (never driver-checked) — it outranks every stale name.
+    # ordered by staleness: first the names no driver check has
+    # covered yet (the substring-duplicate family leads), then names
+    # whose operator paths changed since their last check (the fuzzy
+    # join's identical-set collapse, BruteForceKNN's duplicate-id
+    # self-exclusion), then the names whose last check is oldest.
     "d_substring_pairs",
     "d_substring_dedup",
     "d_substring_cut",
     "d_substring_incremental",
     "x_dsir_weights",
     "x_dsir_select",
-    # r9 third-session additions (never driver-checked)
+    # never driver-checked
     "d_bloom_incremental",
     "q_heavy_hitters",
     "q_heavy_ngrams",
@@ -6580,8 +6575,8 @@ _CHECKED_R1 = {
     "r_text_normalization", "r_remove_stopwords",
 }
 
-# Round-2 driver check covered these (CORRECTNESS_r02.json keys; green or
-# superseded-by-oracle this round).
+# Round-2 driver check covered these (green, or superseded by an
+# oracle since).
 _CHECKED_R2 = {
     "r_remove_repetition_punct", "d_exact_hash", "d_ccnet_norm",
     "d_ngram_hash", "d_minhash_lsh", "d_simhash", "d_semantic", "t_langid",
@@ -6599,9 +6594,9 @@ _CHECKED_R2 = {
     "e_model_score_hash", "e_langkit_readability", "g_mathbook_extract",
 }
 
-# Round-3 driver check covered these 50 names (CORRECTNESS_r03.json) —
-# 49 green; q_region_nation_list (canonicalizer crash, fixed above) stays
-# in _REVERIFY_HEAD until re-proven.
+# Round-3 driver check covered these 50 names — 49 green;
+# q_region_nation_list (canonicalizer crash, fixed above) was re-checked
+# in round 4.
 _CHECKED_R3 = {
     "q_events_hourly", "q_sessionize", "q_count_distinct_users",
     "q_top_events", "d_minhash_lsh", "d_simhash", "d_semantic",
@@ -6620,9 +6615,9 @@ _CHECKED_R3 = {
     "t_gopher_repetition",
 }
 
-# Round-4 driver check covered these 50 names (CORRECTNESS_r04.json) —
-# 49 green; t_tfidf_keywords (canonicalizer crash, fixed above) stays in
-# _REVERIFY_HEAD until re-proven.
+# Round-4 driver check covered these 50 names — 49 green;
+# t_tfidf_keywords (canonicalizer crash, fixed above) was re-checked in
+# round 5.
 _CHECKED_R4 = {
     "q_region_nation_list", "q_split_assign", "q_pipeline_corpus_curation",
     "x_percentile_filter", "s_centroid_sim", "e_unigram_kl",
@@ -6643,8 +6638,7 @@ _CHECKED_R4 = {
     "x_qurating_filter", "x_fineweb_filter", "f_code_length",
 }
 
-# Round-5 driver check covered these 50 names (CORRECTNESS_r05.json) —
-# all green.
+# Round-5 driver check covered these 50 names — all green.
 _CHECKED_R5 = {
     "e_accuracy_eval", "e_prompted_score", "f_code_autogen",
     "f_code_composition", "f_code_encoded", "f_code_filetype",
@@ -6665,8 +6659,7 @@ _CHECKED_R5 = {
     "x_t2s_correspondence", "x_treeinstruct_filter",
 }
 
-# Round-6 driver check covered these 50 names (CORRECTNESS_r06.json) —
-# all green.
+# Round-6 driver check covered these 50 names — all green.
 _CHECKED_R6 = {
     "d_ccnet_norm", "d_exact_hash", "d_incremental_hash", "d_ngram_hash",
     "d_ngram_jaccard", "e_bert_f1", "e_funccall_judge", "e_mmd",
@@ -6687,8 +6680,7 @@ _CHECKED_R6 = {
     "x_rm_filter", "x_superfiltering_filter", "x_textbook_filter",
 }
 
-# Round-7 driver check covered these 50 names (CORRECTNESS_r07.json) —
-# all green.
+# Round-7 driver check covered these 50 names — all green.
 _CHECKED_R7 = {
     "e_bench_accuracy", "e_bleu_token_f1", "e_cider", "e_code_metrics",
     "e_langkit_readability", "f_alpha_words", "f_blocklist",

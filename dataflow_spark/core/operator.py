@@ -2,10 +2,13 @@
 
 Mirrors the reference contract (``OperatorABC.run(storage, input_key=...,
 output_key=...)``, /root/reference/dataflow/core/operator.py:5-15) but is
-Spark-native: ``run`` takes and returns a *lazy* ``DataFrame``; no
-materialization happens inside an operator, so Catalyst sees the whole
-pipeline as one plan and can fuse/pushdown/prune across operator
-boundaries (the reference re-reads and re-writes a file per step).
+Spark-native: ``run`` takes and returns a ``DataFrame`` and runs lazily by
+default, so Catalyst sees a chain of lazy operators as one plan and can
+fuse/pushdown/prune across their boundaries (the reference re-reads and
+re-writes a file per step). An operator that needs an eager step (a
+bounded driver pull, a guard count, connected components, a driver-side
+eigensolve) runs its jobs inside ``run`` and releases every cache it made
+before returning (``tests/test_cache_scope.py``).
 
 Archetypes (SURVEY.md §2.1):
   - Generator: adds column(s) / produces rows   -> ``Operator``
@@ -34,9 +37,7 @@ class BudgetExceededError(ValueError):
     ``max_candidate_pairs``, and by SubstringDuplicatePairs'
     ``max_candidate_pairs`` — an actionable refusal in seconds instead
     of an hours-long job or executor OOM. Subclasses ValueError so
-    existing ``except ValueError`` handling (and tests) keep working;
-    operators with ``on_budget_exceeded="minhash"`` catch it and route
-    to the approximate fallback.
+    existing ``except ValueError`` handling (and tests) keep working.
     """
 
 
@@ -76,7 +77,8 @@ class Operator(ABC):
 
     @abstractmethod
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        """Transform ``df`` lazily. Must not trigger an action."""
+        """Transform ``df``, lazily by default. An operator that runs
+        jobs here releases every cache it made before returning."""
 
     @classmethod
     def get_desc(cls, lang: str = "en") -> str:

@@ -73,11 +73,11 @@ def _perm_arrays(num_perm: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]
 
 
 def _perm_min(A: np.ndarray, B: np.ndarray, h: np.ndarray) -> list[int]:
-    """MinHash signature of shingle hashes ``h`` (uint64, or int64 reduced
-    as ``pmod``): min over shingles of (a*hr + b) mod P with hr = h mod P,
-    for every permutation, as one (num_perm x n_shingles) matrix reduce.
-    hr < P, so A*hr + B < 2^62: exact in int64."""
-    hr = (h % h.dtype.type(MERSENNE_P)).astype(np.int64, copy=False)
+    """MinHash signature of uint64 shingle hashes ``h``: min over shingles
+    of (a*hr + b) mod P with hr = h mod P, for every permutation, as one
+    (num_perm x n_shingles) matrix reduce. hr < P, so A*hr + B < 2^62:
+    exact in int64."""
+    hr = (h % np.uint64(MERSENNE_P)).astype(np.int64, copy=False)
     return ((A * hr[None, :] + B) % MERSENNE_P).min(axis=1).tolist()
 
 
@@ -181,29 +181,6 @@ def minhash64_udf(num_perm: int = 64, n: int = 5, seed: int = 42):
     @pandas_udf("array<long>")
     def _minhash(s: pd.Series) -> pd.Series:
         return s.fillna("").map(one)
-
-    return _minhash
-
-
-def minhash_from_hashes_udf(num_perm: int = 64, seed: int = 42):
-    """MinHash pandas_udf over PRE-HASHED shingle arrays: array<long> ->
-    array<long> signature, with hr = pmod(h, P) (numpy ``%`` takes the
-    divisor's sign, as ``pmod``). Used by the exact-similarity family's
-    ``on_budget_exceeded="minhash"`` fallback, whose inputs are already
-    xxhash64 shingle arrays.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    A, B = _perm_arrays(num_perm, seed)
-
-    def one(hs):
-        if hs is None or len(hs) == 0:
-            return [0] * num_perm
-        return _perm_min(A, B, np.asarray(hs, dtype=np.int64))
-
-    @pandas_udf("array<long>")
-    def _minhash(s: pd.Series) -> pd.Series:
-        return s.map(one)
 
     return _minhash
 

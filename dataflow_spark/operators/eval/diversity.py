@@ -50,6 +50,19 @@ def _bounded_sample(df: DataFrame, col: str, max_rows: int,
     return np.array([r[0] for r in rows], dtype=np.float64)
 
 
+def _pinned_row(out: DataFrame, pinned: DataFrame | None) -> DataFrame:
+    """``out`` itself when nothing is pinned; else its one row, computed
+    now so ``pinned`` is released before ``run`` returns, as a
+    driver-built frame that holds no cache."""
+    if pinned is None:
+        return out
+    try:
+        row = out.first()
+    finally:
+        pinned.unpersist()
+    return out.sparkSession.createDataFrame([tuple(row)], out.schema)
+
+
 def _toks(s: str) -> list[str]:
     return [t for t in _WS.split((s or "").lower()) if t]
 
@@ -128,6 +141,7 @@ class VendiDatasetEvaluator(Operator):
         # Frobenius norm of the dim x dim GRAM matrix — linear in n (one
         # explode to (row, j, x) and a map-side-combinable (j,k) sum),
         # not the naive n^2 cross join. Exactly equal, not approximate.
+        pinned = None
         if self.id_key:
             vecs = df.select(F.col(self.id_key).alias("_id"),
                              V.normalize(F.col(self.embedding_key)).alias("_v"))
@@ -135,9 +149,9 @@ class VendiDatasetEvaluator(Operator):
             # monotonically_increasing_id is NONDETERMINISTIC: re-evaluated
             # per self-join side it silently mis-joins. Persist pins the
             # generated ids before the join reuses them.
-            vecs = df.select(F.monotonically_increasing_id().alias("_id"),
-                             V.normalize(F.col(self.embedding_key)).alias("_v"))
-            vecs = vecs.persist()
+            vecs = pinned = df.select(
+                F.monotonically_increasing_id().alias("_id"),
+                V.normalize(F.col(self.embedding_key)).alias("_v")).persist()
         vecs = vecs.filter(F.col("_v").isNotNull())
         ex = vecs.select("_id", F.posexplode("_v").alias("_j", "_x"))
         a, b = ex.alias("a"), ex.select("_id", "_j", "_x").alias("b")
@@ -149,9 +163,10 @@ class VendiDatasetEvaluator(Operator):
         n_frame = vecs.agg(F.count(F.lit(1)).alias("n"))
         agg = gram.agg(F.sum(F.col("_g") * F.col("_g")).alias("_fro2")) \
                   .crossJoin(n_frame)
-        return agg.select(
+        return _pinned_row(agg.select(
             F.col("n").cast("long"),
-            F.round(F.col("n") * F.col("n") / F.col("_fro2"), 4).alias("vendi_score"))
+            F.round(F.col("n") * F.col("n") / F.col("_fro2"), 4)
+            .alias("vendi_score")), pinned)
 
     def run(self, df: DataFrame, **kw: Any) -> DataFrame:
         if self.order == 2:
@@ -272,14 +287,16 @@ class Task2VecDatasetEvaluator(Operator):
         self.output_keys = ("n", "task2vec_diversity")
 
     def _run_order2(self, df: DataFrame) -> DataFrame:
+        pinned = None
         if self.id_key:
             e = df.select(F.col(self.id_key).alias("_id"),
                           F.col(self.embedding_key).alias("_v"))
         else:
             # persist pins the nondeterministic generated ids before the
             # self-join below reuses them (see Vendi order-2 note)
-            e = df.select(F.monotonically_increasing_id().alias("_id"),
-                          F.col(self.embedding_key).alias("_v")).persist()
+            e = pinned = df.select(
+                F.monotonically_increasing_id().alias("_id"),
+                F.col(self.embedding_key).alias("_v")).persist()
         e = e.filter(F.col("_v").isNotNull())
         ex = e.select("_id", F.posexplode("_v").alias("_j", "_x")) \
               .withColumn("_x", F.col("_x").cast("double"))
@@ -299,10 +316,10 @@ class Task2VecDatasetEvaluator(Operator):
             F.max("_n").alias("n"),
             F.sum(F.when(F.col("_j") == F.col("_k"), F.col("_cv"))).alias("_tr"),
             F.sum(F.col("_cv") * F.col("_cv")).alias("_f2"))
-        return t.select(
+        return _pinned_row(t.select(
             F.col("n").cast("long"),
             F.round(-F.log(F.col("_f2") / (F.col("_tr") * F.col("_tr"))), 4)
-            .alias("task2vec_diversity"))
+            .alias("task2vec_diversity")), pinned)
 
     def run(self, df: DataFrame, **kw: Any) -> DataFrame:
         if self.order == 2:

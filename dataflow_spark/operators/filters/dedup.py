@@ -24,7 +24,7 @@ from typing import Any
 
 import pandas as pd  # module-level: pandas_udf type-hint resolution
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataflow_spark.core.operator import Operator, ROW_ID, with_row_id
@@ -371,25 +371,53 @@ class NgramHashDeduplicateFilter(_BaseDedup):
 
 
 class _NearDupBase(_BaseDedup):
-    """Shared band-join -> components -> keep-first machinery."""
+    """The near-dup family's one tail: candidate edges -> connected
+    components -> keep the first row of each component.
+
+    A subclass implements only :meth:`_edges`; :meth:`_dedup` attaches
+    the order id, runs components over the edges, releases every frame
+    the subclass pinned, and keeps (or labels) the component minimum.
+    """
 
     #: set (e.g. "cluster_id") to RETURN cluster assignments for every
     #: row instead of filtering to survivors — corpus exploration mode;
     #: survivors are exactly the rows where assign column == order id
     assign_key: str | None = None
 
-    def _nd_rows(self, df: DataFrame,
-                 order_col: str) -> tuple[DataFrame, DataFrame]:
-        """``(df, keyed)``: ``df`` with ``_nd_id`` (the order id as a
-        long) attached, and ``keyed``, its rows with a non-NULL id — the
-        only input of candidate generation. A NULL order key has no place
-        in the keep-first order, so such a row never joins a cluster and
-        survives as a singleton (:meth:`_keep_components`)."""
-        df = df.withColumn("_nd_id", F.expr(f"cast({_bq(order_col)} as long)"))
-        return df, df.where("_nd_id IS NOT NULL")
+    def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
+        df, order_col = self._ordered(df)
+        return self._dedup(df, order_col)
 
-    def _collapse_exact(self, sigs: DataFrame,
-                        key: str) -> tuple[DataFrame, DataFrame]:
+    def _edges(self, keyed: DataFrame, pins: list[DataFrame]) -> DataFrame:
+        """DataFrame[src, dst] of verified near-duplicate ``_nd_id``
+        pairs among ``keyed``'s rows. Frames persisted for several reads
+        are appended to ``pins``; :meth:`_dedup` releases them."""
+        raise NotImplementedError
+
+    def _dedup(self, df: DataFrame, order_col: str) -> DataFrame:
+        """Near-dup ``df``, already ordered by :meth:`_ordered` on
+        ``order_col``.
+
+        ``_nd_id`` is the order id as a long. Only rows with a non-NULL
+        id reach :meth:`_edges`: a NULL order key has no place in the
+        keep-first order, so such a row never joins a cluster and
+        survives as a singleton. :func:`connected_components` consumes
+        the edge lineage eagerly (driver union-find probe, or per-round
+        localCheckpoint contraction), so every pinned frame is released
+        before returning and no cached block outlives the run.
+        """
+        df = df.withColumn("_nd_id", F.expr(f"cast({_bq(order_col)} as long)"))
+        pins: list[DataFrame] = []
+        try:
+            comp = connected_components(
+                self._edges(df.where("_nd_id IS NOT NULL"), pins))
+        finally:
+            for p in pins:
+                p.unpersist()
+        return self._keep_components(df, comp, order_col)
+
+    def _collapse_exact(self, sigs: DataFrame, key: str,
+                        pins: list[DataFrame]) -> tuple[DataFrame, DataFrame]:
         """Collapse rows with IDENTICAL signatures to one representative.
 
         Degenerate-corpus armor: a billion byte-identical docs share one
@@ -407,25 +435,21 @@ class _NearDupBase(_BaseDedup):
         identical verify outcomes, so a dup's connectivity through its
         rep equals its direct connectivity.
 
-        The window output is PERSISTED: both returned frames (and
-        the caller's signature lookups — every candidate-pair id is a
-        rep) read one cached pass. Unpersisted, Catalyst column-prunes
-        the two branches differently (the reps branch carries the
-        signature, the edges branch only ids), so the corpus-wide
-        signature UDF + window exchange + sort would run TWICE — seen in
-        the executed plan as two separate ShuffleQueryStages. One
-        exchange now carries strictly fewer total bytes than the two it
-        replaces, at any scale; the cache adds 8 bytes/row over the
-        signature persist it supersedes.
+        The window output is PERSISTED and appended to ``pins``: both
+        returned frames (and the caller's signature lookups — every
+        candidate-pair id is a rep) read one cached pass. Unpersisted,
+        Catalyst column-prunes the two branches differently (the reps
+        branch carries the signature, the edges branch only ids), so the
+        corpus-wide signature UDF + window exchange + sort would run
+        TWICE — seen in the executed plan as two separate
+        ShuffleQueryStages. One exchange now carries strictly fewer
+        total bytes than the two it replaces, at any scale; the cache
+        adds 8 bytes/row over the signature persist it supersedes.
 
-        The cache is scoped to ONE run() invocation: every consumer is
-        executed eagerly inside ``_dedup_by_bands`` (the connected-
-        components step materializes the whole pair pipeline), which
-        unpersists it before returning. Without that, Spark's
-        CacheManager ``sameResult``-matches the (deterministic) window
-        plan of the NEXT invocation over the same input and silently
-        serves it the previous invocation's rows — re-executions must
-        recompute from source, and the cache must not outlive the run.
+        :meth:`_dedup` releases the cache once components have consumed
+        it. Left cached, Spark's CacheManager would ``sameResult``-match
+        the (deterministic) window plan of the NEXT invocation over the
+        same input and silently serve it the previous invocation's rows.
         """
         # SQL-string window: one parse instead of the Window-API
         # py4j chain. min-over-partition rather than a
@@ -438,7 +462,7 @@ class _NearDupBase(_BaseDedup):
         with_rep = sigs.selectExpr(
             "*",
             f"min(_nd_id) OVER (PARTITION BY {key}) AS _rep").persist()
-        self._collapse_cached = with_rep
+        pins.append(with_rep)
         reps = with_rep.filter("_nd_id = _rep").drop("_rep")
         exact_edges = (
             with_rep.filter("_nd_id != _rep")
@@ -446,32 +470,26 @@ class _NearDupBase(_BaseDedup):
         )
         return reps, exact_edges
 
-    def _dedup_by_bands(self, df: DataFrame, banded: DataFrame,
-                        order_col: str, verify=None,
-                        extra_edges: DataFrame | None = None,
-                        verify_expr: str | None = None) -> DataFrame:
-        """``banded``: DataFrame[_nd_id, band struct col 'bands' exploded].
+    @staticmethod
+    def _bucket_pairs(banded: DataFrame,
+                      verify_expr: str | None = None) -> DataFrame:
+        """Distinct candidate (src, dst) pairs of the LSH buckets of
+        ``banded``: DataFrame[_nd_id, band, h].
 
-        verify: optional callable (cand_df with a_id/b_id) -> filtered
-        cand_df, applied to candidate pairs before components.
-        extra_edges: pre-verified (src, dst) pairs unioned in after
-        verification (exact-signature collapse edges).
-        verify_expr: alternative to ``verify`` for FIXED-WIDTH signatures
-        small enough to carry through the bucket shuffle: ``banded``
-        additionally holds the signature as ``_v``, pairs come out with
-        ``_va``/``_vb`` attached, and this SQL predicate over them
-        replaces the two signature-lookup joins entirely (guide §2.4:
-        remove shuffles outright). At scale the joins re-shuffle or
+        ``verify_expr``: for FIXED-WIDTH signatures small enough to carry
+        through the bucket shuffle, ``banded`` additionally holds the
+        signature as ``_v``, pairs come out with ``_va``/``_vb``
+        attached, and this SQL predicate over them verifies each pair
+        in place of two signature-lookup joins (guide §2.4: remove
+        shuffles outright). At scale the joins re-shuffle or
         re-broadcast the corpus-sized rep table twice per run; carrying
         an 8-byte value per banded row costs num_bands*8 bytes per doc
         in one shuffle instead. Only used where the signature is a
         single long (SimHash); array signatures (MinHash 64 longs,
-        embeddings) would multiply the bucket collect_list buffers and
-        keep the join path. ``verify`` and ``verify_expr`` are mutually
-        exclusive.
+        embeddings) would multiply the bucket collect_list buffers, so
+        their callers verify the returned pairs with
+        :meth:`_lookup_verify`.
         """
-        if verify is not None and verify_expr is not None:
-            raise ValueError("pass verify or verify_expr, not both")
         # one shuffle (groupBy bucket) + in-bucket edge expansion instead
         # of a two-sided self-join on (band, h): same components, half
         # the shuffled bytes. A bucket of size k expands to a star: k-1
@@ -502,32 +520,29 @@ class _NearDupBase(_BaseDedup):
                     f" '_va', {x}._v, '_vb', y._v)")
         else:
             edge = f"named_struct('src', {x}, 'dst', y)"
-        pair_sql = f"transform(slice(_ids, 2, size(_ids) - 1), y -> {edge})"
-        if carry:
-            # verify as a codegen'd filter fused into the expansion
-            # stage — verify_expr is a pure function of (src, dst)
-            # through their signatures, so filter-then-distinct keeps
-            # exactly the rows the old distinct-then-join-verify kept,
-            # while the distinct exchange sees only surviving pairs.
-            pairs = (buckets.selectExpr(f"inline({pair_sql})")
-                     .filter(verify_expr)
-                     .select("src", "dst").distinct())
-        else:
-            pairs = buckets.selectExpr(f"inline({pair_sql})").distinct()
-            if verify is not None:
-                pairs = verify(pairs)
-        if extra_edges is not None:
-            pairs = pairs.union(extra_edges.select("src", "dst"))
-        comp = connected_components(pairs)
-        # the components step above is eager (driver union-find or
-        # per-round localCheckpoint contraction), so the collapse cache
-        # has no consumers left: release it so it cannot leak across
-        # invocations (or be sameResult-served to a later run — every
-        # execution must compute from source; see _collapse_exact)
-        cached = self.__dict__.pop("_collapse_cached", None)
-        if cached is not None:
-            cached.unpersist()
-        return self._keep_components(df, comp, order_col)
+        pairs = buckets.selectExpr(
+            f"inline(transform(slice(_ids, 2, size(_ids) - 1), y -> {edge}))")
+        if not carry:
+            return pairs.distinct()
+        # verify as a codegen'd filter fused into the expansion stage —
+        # verify_expr is a pure function of (src, dst) through their
+        # signatures, so filter-then-distinct keeps exactly the pairs a
+        # distinct-then-join-verify keeps, while the distinct exchange
+        # sees only surviving pairs.
+        return pairs.filter(verify_expr).select("src", "dst").distinct()
+
+    @staticmethod
+    def _lookup_verify(pairs: DataFrame, reps: DataFrame,
+                       cond: Column | str) -> DataFrame:
+        """Pairs whose signatures satisfy ``cond`` over ``_va``/``_vb``:
+        both ids look their signature up in ``reps`` = DataFrame[_nd_id,
+        signature] (every pair id is a rep)."""
+        return (
+            pairs.join(reps.toDF("src", "_va"), "src")
+            .join(reps.toDF("dst", "_vb"), "dst")
+            .filter(cond)
+            .select("src", "dst")
+        )
 
     def _keep_components(self, df: DataFrame, comp: DataFrame,
                          order_col: str) -> DataFrame:
@@ -604,14 +619,7 @@ class MinHashDeduplicateFilter(_NearDupBase):
         return (f"cast(size(filter(zip_with({a}, {b}, (x, y) -> x = y), "
                 f"eq -> eq)) as double) / {int(self.num_perm)}")
 
-    def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        df, order_col = self._ordered(df)
-        return self._dedup(df, order_col)
-
-    def _dedup(self, df: DataFrame, order_col: str) -> DataFrame:
-        """In-batch MinHash dedup of ``df``, already ordered by
-        :meth:`_ordered` on ``order_col``."""
-        df, keyed = self._nd_rows(df, order_col)
+    def _edges(self, keyed: DataFrame, pins: list[DataFrame]) -> DataFrame:
         sig_udf, bands_sql = self._kernels()
         # project-then-dedup: only (id, signature) flows through banding,
         # verify, and components — the scan on this branch reads just
@@ -630,23 +638,14 @@ class MinHashDeduplicateFilter(_NearDupBase):
         # (single-parse expr strings here and below: same trees as the
         # Column-lambda forms, ~10x fewer py4j round trips)
         reps, exact_edges = self._collapse_exact(
-            sigs, "md5(concat_ws(',', transform(_sig, x -> cast(x as string))))")
+            sigs, "md5(concat_ws(',', transform(_sig, x -> cast(x as string))))",
+            pins)
         # inline() = explode + struct-splat in one generator select
         banded = reps.selectExpr("_nd_id", f"inline({bands_sql})")
-
-        est_sql = (f"{self._est_sql('_sig_a', '_sig_b')} >= "
+        est_sql = (f"{self._est_sql('_va', '_vb')} >= "
                    f"cast({float(self.threshold)!r} as double)")
-
-        def verify(pairs: DataFrame) -> DataFrame:
-            return (
-                pairs.join(reps.toDF("src", "_sig_a"), "src")
-                .join(reps.toDF("dst", "_sig_b"), "dst")
-                .filter(F.expr(est_sql))
-                .select("src", "dst")
-            )
-
-        return self._dedup_by_bands(df, banded, order_col, verify,
-                                    extra_edges=exact_edges)
+        return (self._lookup_verify(self._bucket_pairs(banded), reps, est_sql)
+                .union(exact_edges))
 
 
 @OPERATOR_REGISTRY.register()
@@ -670,9 +669,7 @@ class SimHashDeduplicateFilter(_NearDupBase):
         #: shingle hashes, reproducible in external SQL (oracle contract)
         self.hash_impl = hash_impl
 
-    def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        df, order_col = self._ordered(df)
-        df, keyed = self._nd_rows(df, order_col)
+    def _edges(self, keyed: DataFrame, pins: list[DataFrame]) -> DataFrame:
         sim_udf = (H.simhash_md5_udf(self.shingle_n) if self.hash_impl == "md5"
                    else H.simhash64_udf(self.shingle_n))
         # project-then-dedup: only (id, simhash) feeds banding + Hamming
@@ -685,7 +682,7 @@ class SimHashDeduplicateFilter(_NearDupBase):
             F.col("_nd_id"), sim_udf(F.col(self.input_key)).alias("_simhash"))
         # exact-signature collapse (see _collapse_exact): degenerate-
         # corpus bucket armor, survivors unchanged
-        reps, exact_edges = self._collapse_exact(sims, "_simhash")
+        reps, exact_edges = self._collapse_exact(sims, "_simhash", pins)
         # single-parse expr strings: same trees as the Column forms,
         # ~10x fewer py4j round trips per plan build; inline() =
         # explode + struct-splat in one generator select. The 8-byte
@@ -701,9 +698,7 @@ class SimHashDeduplicateFilter(_NearDupBase):
 
         ham_sql = f"bit_count(_va ^ _vb) <= {int(self.max_hamming)}"
 
-        return self._dedup_by_bands(df, banded, order_col,
-                                    extra_edges=exact_edges,
-                                    verify_expr=ham_sql)
+        return self._bucket_pairs(banded, ham_sql).union(exact_edges)
 
 
 @OPERATOR_REGISTRY.register()
@@ -729,38 +724,28 @@ class SemDeduplicateFilter(_NearDupBase):
         self.seed = seed
         self.dim = dim
 
-    def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        df, order_col = self._ordered(df)
-        df, keyed = self._nd_rows(df, order_col)
+    def _edges(self, keyed: DataFrame, pins: list[DataFrame]) -> DataFrame:
         # vectorized sign-bit band keys (functions/vector.py) — the
         # per-plane expression tree is CodegenFallback, ~1000x slower
         bands_udf = V.hyperplane_bands_udf(self.num_planes, self.num_bands, self.seed)
         # exact-embedding collapse (see _collapse_exact): byte-identical
         # vectors band once, dups link via rep edges
         emb_rows = keyed.select("_nd_id", self.input_key)
-        emb_bq = "`" + self.input_key.replace("`", "``") + "`"
         reps, exact_edges = self._collapse_exact(
             emb_rows,
-            f"md5(concat_ws(',', transform({emb_bq}, x -> cast(x as string))))")
+            f"md5(concat_ws(',', transform({_bq(self.input_key)}, "
+            "x -> cast(x as string))))",
+            pins)
         banded = reps.select(
             "_nd_id",
             F.posexplode(bands_udf(F.col(self.input_key))).alias("band", "h"),
         )
 
-        thr = 1.0 - self.eps
-
-        def verify(pairs: DataFrame) -> DataFrame:
-            # every pair id is a rep; reps (cached by _collapse_exact)
-            # carries (_nd_id, embedding) — no second scan of df
-            return (
-                pairs.join(reps.toDF("src", "_va"), "src")
-                .join(reps.toDF("dst", "_vb"), "dst")
-                .filter(V.cosine(F.col("_va"), F.col("_vb")) >= thr)
-                .select("src", "dst")
-            )
-
-        return self._dedup_by_bands(df, banded, order_col, verify,
-                                    extra_edges=exact_edges)
+        # every pair id is a rep; reps (cached by _collapse_exact)
+        # carries (_nd_id, embedding) — no second scan of df
+        cos = V.cosine(F.col("_va"), F.col("_vb")) >= 1.0 - self.eps
+        return (self._lookup_verify(self._bucket_pairs(banded), reps, cos)
+                .union(exact_edges))
 
 
 @OPERATOR_REGISTRY.register()

@@ -62,9 +62,7 @@ from dataflow_spark.core.operator import (
     BudgetExceededError, Operator, ROW_ID, with_row_id,
 )
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
-from dataflow_spark.operators.filters.dedup import (
-    _BaseDedup, connected_components,
-)
+from dataflow_spark.operators.filters.dedup import _BaseDedup, _NearDupBase
 
 
 def _lcp(a: Column, b: Column) -> Column:
@@ -472,15 +470,14 @@ class SubstringDuplicateCutRefiner(Operator):
 
 
 @OPERATOR_REGISTRY.register()
-class SubstringDeduplicateFilter(_BaseDedup):
+class SubstringDeduplicateFilter(_NearDupBase):
     """Drop documents connected (transitively) to an earlier document by
     a shared exact substring of >= ``min_length`` characters; keep the
     minimum-``order_key`` document of every component.
 
-    Same keep-first-per-component contract as the near-dup family
-    (_NearDupBase), with the pair graph from
-    :class:`SubstringDuplicatePairs` — i.e. every edge is a byte-exact
-    verified duplicate passage, not a signature estimate.
+    A near-dup family member (_NearDupBase): its edges are the pairs of
+    :class:`SubstringDuplicatePairs` — every edge a byte-exact verified
+    duplicate passage, not a signature estimate.
     """
 
     def __init__(self, input_key: str = "text", min_length: int = 40,
@@ -488,24 +485,8 @@ class SubstringDeduplicateFilter(_BaseDedup):
                  max_candidate_pairs: float = 5e9):
         super().__init__(input_key, order_key)
         self._pairs = SubstringDuplicatePairs(
-            input_key=input_key, id_key="_sub_oid", min_length=min_length,
+            input_key=input_key, id_key="_nd_id", min_length=min_length,
             gram_size=gram_size, max_candidate_pairs=max_candidate_pairs)
 
-    def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        df, order_col = self._ordered(df)
-        if order_col == ROW_ID:
-            oid = F.col(ROW_ID)
-        else:
-            oid = F.col(order_col).cast("long")
-        keyed = df.withColumn("_sub_oid", oid)
-        edges = (
-            self._pairs.run(keyed)
-            .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        )
-        comp = connected_components(edges).withColumnRenamed("id", "_sub_oid")
-        out = keyed.join(comp, "_sub_oid", "left")
-        keep = F.coalesce(F.col("component"), F.col("_sub_oid"))
-        return self._finish(
-            out.filter(keep == F.col("_sub_oid"))
-            .drop("component", "_sub_oid"),
-            order_col)
+    def _edges(self, keyed: DataFrame, pins: list[DataFrame]) -> DataFrame:
+        return self._pairs.run(keyed).select("doc_a", "doc_b")

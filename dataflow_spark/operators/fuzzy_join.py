@@ -25,6 +25,11 @@ and built scale-first:
 
 Exact semantics (same result as the quadratic nested loop), linear-ish
 cost — the oracle for the contract query IS the quadratic nested loop.
+The join is exact or it refuses: when a budget guard
+(``dense_flop_budget``, ``max_candidate_pairs``) says the corpus shape
+makes the exact algorithm ~quadratic, it raises ``BudgetExceededError``
+naming the budget to raise, in seconds. There is no approximate
+fallback; approximate near-dup removal is MinHashDeduplicateFilter.
 
 Self-join: the kernels take ``rraw=None`` to mean "join the left side
 with itself" and then emit each unordered pair once, with left_id <
@@ -77,8 +82,6 @@ from dataflow_spark.functions.pulls import bounded_pull
 #: dense-path broadcast budget in MiB: the packed left bitset matrix
 #: must fit it, and so must the left side's raw set payload in tokens
 DENSE_BROADCAST_MB = 64
-#: MinHash permutations of the opt-in approximate fallbacks
-FALLBACK_NUM_PERM = 64
 
 
 def shingle_sets(df: DataFrame, id_col: str, key: str, mode: str = "char",
@@ -111,11 +114,7 @@ class ExactSetJoin:
     metric = "jaccard"
 
     def _set_budgets(self, dense_vocab_max: int, max_candidate_pairs: float,
-                     dense_flop_budget: float,
-                     on_budget_exceeded: str) -> None:
-        if on_budget_exceeded not in ("raise", "minhash"):
-            raise ValueError("on_budget_exceeded must be 'raise' or "
-                             "'minhash'")
+                     dense_flop_budget: float) -> None:
         # dense-path guard: 0 disables the dense path entirely
         self.dense_vocab_max = dense_vocab_max
         # sparse-path blowup guard (0 disables): refuse predictably when
@@ -133,10 +132,6 @@ class ExactSetJoin:
         # 5.6e12). Byte-feasible is not compute-feasible (a 5.6e13-unit
         # containment GEMV at sf10 showed it).
         self.dense_flop_budget = dense_flop_budget
-        # budget-refusal policy: 'raise' (default — exact or nothing) or
-        # 'minhash' (opt-in: MinHash-LSH candidates + EXACT verify;
-        # precision exact, recall probabilistic)
-        self.on_budget_exceeded = on_budget_exceeded
 
     def _try_dense(self, lraw: DataFrame,
                    rraw: DataFrame | None = None) -> DataFrame | None:
@@ -204,10 +199,9 @@ class ExactSetJoin:
                     f"({float(n_l) * n_r * nbits:.2e} flops > "
                     f"dense_flop_budget={self.dense_flop_budget:.2e}) "
                     "and sparse PPJoin (prefix buckets hold most of the "
-                    "corpus) are ~quadratic. Pass on_budget_exceeded="
-                    "'minhash' for the approximate fallback (exact "
-                    "verify, probabilistic recall), or raise "
-                    "dense_flop_budget explicitly to accept the cost.")
+                    "corpus) are ~quadratic. Raise dense_flop_budget to "
+                    "accept the cost, or use MinHashDeduplicateFilter "
+                    "for approximate near-dup removal.")
 
         # bounded above: n_l rows whose packed bits fit the broadcast
         # budget. Arrow toPandas, not collect: per-Row pickling of
@@ -348,10 +342,9 @@ class ExactSetJoin:
                     f"{self.max_candidate_pairs:.2e} — the corpus is too "
                     "low-entropy for exact PPJoin at this size (most rows "
                     "share frequent shingles, so candidate generation is "
-                    "~quadratic). Pass on_budget_exceeded='minhash' for "
-                    "the approximate fallback (exact verify, "
-                    "probabilistic recall), or raise max_candidate_pairs "
-                    "explicitly to accept the cost.")
+                    "~quadratic). Raise max_candidate_pairs to accept the "
+                    "cost, or use MinHashDeduplicateFilter for approximate "
+                    "near-dup removal.")
         if self.metric == "jaccard":
             alpha = H.ceil_lower_bound(F.lit(t / (1.0 + t))
                                        * (F.col("a._len") + F.col("b._len")))
@@ -386,9 +379,8 @@ class ExactSetJoin:
 
     def _verify_candidates(self, cand: DataFrame, lraw: DataFrame,
                            rraw: DataFrame) -> DataFrame:
-        """Exact-metric verification of (_lid, _rid) candidate pairs —
-        every output row truly meets the threshold (precision exact),
-        whatever produced the candidates."""
+        """Exact-metric verification of (_lid, _rid) candidate pairs:
+        every output row truly meets the threshold."""
         lsets = lraw.select(F.col("_id").alias("_lid"),
                             F.col("_sh").alias("_sa"))
         rsets = rraw.select(F.col("_id").alias("_rid"),
@@ -432,9 +424,7 @@ class FuzzyJoinOperator(ExactSetJoin, Operator):
                  left_id: str = "doc_id", right_id: str = "doc_id",
                  dense_vocab_max: int = 8192,
                  max_candidate_pairs: float = 5e9,
-                 dense_flop_budget: float = 2e13,
-                 on_budget_exceeded: str = "raise",
-                 fallback_max_bucket: int = 256):
+                 dense_flop_budget: float = 2e13):
         if not 0.0 < threshold <= 1.0:
             raise ValueError("threshold must be in (0, 1]")
         if mode not in ("char", "words"):
@@ -442,12 +432,11 @@ class FuzzyJoinOperator(ExactSetJoin, Operator):
         if metric not in ("jaccard", "containment"):
             raise ValueError("metric must be 'jaccard' or 'containment'")
         self._set_budgets(dense_vocab_max, max_candidate_pairs,
-                          dense_flop_budget, on_budget_exceeded)
+                          dense_flop_budget)
         self.threshold, self.mode, self.shingle_n = threshold, mode, shingle_n
         self.metric = metric
         self.left_key, self.right_key = left_key, right_key
         self.left_id, self.right_id = left_id, right_id
-        self.fallback_max_bucket = fallback_max_bucket
         self.input_keys = (left_key, left_id)
         self.output_keys = ("left_id", "right_id", self.metric)
 
@@ -461,29 +450,22 @@ class FuzzyJoinOperator(ExactSetJoin, Operator):
                             self.shingle_n)
         # frames persisted for several reads, released before returning:
         # the dense result scans only rraw (lraw travels in the
-        # broadcast), and the sparse and minhash results are eager
-        # localCheckpoints, so no cached blocks outlive the run
+        # broadcast), and the sparse result is an eager localCheckpoint,
+        # so no cached blocks outlive the run
         lraw = lraw.persist()
         pins: list[DataFrame] = [lraw]
         #: last_path: which physical strategy served the last run() —
-        #: 'dense' (broadcast bitset matmul), 'sparse' (PPJoin prefix
-        #: filter), or 'minhash' (budget-refused, opt-in approximate
-        #: fallback). Plan-debug surface for tests and operators
-        #: composing this one; mirrors what .explain() can't show (the
-        #: switch happens before any Spark plan exists).
+        #: 'dense' (broadcast bitset matmul) or 'sparse' (PPJoin prefix
+        #: filter). Plan-debug surface for tests and operators composing
+        #: this one; mirrors what .explain() can't show (the switch
+        #: happens before any Spark plan exists).
         try:
-            try:
-                dense = self._try_dense(lraw, rraw)
-                if dense is not None:
-                    self.last_path = "dense"
-                    return dense
-                self.last_path = "sparse"
-                return self._sparse_join(lraw, rraw, pins)
-            except BudgetExceededError:
-                if self.on_budget_exceeded != "minhash":
-                    raise
-                self.last_path = "minhash"
-                return self._minhash_join(lraw, rraw, pins)
+            dense = self._try_dense(lraw, rraw)
+            if dense is not None:
+                self.last_path = "dense"
+                return dense
+            self.last_path = "sparse"
+            return self._sparse_join(lraw, rraw, pins)
         finally:
             for p in pins:
                 p.unpersist()
@@ -500,49 +482,6 @@ class FuzzyJoinOperator(ExactSetJoin, Operator):
         rmem, rreps = self._collapse_side(rraw, pins)
         return self._expand_members(self._sparse_pairs(lreps, rreps, pins),
                                     lmem, rmem)
-
-    def _minhash_join(self, lraw: DataFrame, rraw: DataFrame,
-                      pins: list[DataFrame]) -> DataFrame:
-        """Opt-in approximate fallback when a budget guard refuses the
-        exact algorithm (``on_budget_exceeded='minhash'``).
-
-        Candidates come from MinHash-LSH banding over the shingle sets;
-        every candidate is then verified with the EXACT metric on the
-        true sets. So precision is exact (no false positives — every
-        output row truly meets the threshold) and only RECALL is
-        probabilistic, governed by the banding S-curve on JACCARD
-        similarity (``optimal_bands(t', FALLBACK_NUM_PERM)``). One
-        documented recall loss:
-
-        - oversized buckets: per (band, h) bucket each side is capped
-          at ``fallback_max_bucket`` rows (smallest ids kept —
-          deterministic), bounding candidates at buckets*cap^2 on the
-          degenerate corpora that route here. Rows beyond the cap can
-          only match through another band.
-
-        ``metric='containment'`` does NOT use MinHash banding at all:
-        MinHash collides on JACCARD, and the flagship containment shape
-        (a 40-char quote inside a full document) has near-zero Jaccard
-        — banding recall there is ~0 (measured 0/57 pairs at
-        sf0.01). It routes to ``_containment_fallback`` instead: pigeonhole
-        prefix probing with a capped inverted index, whose only recall
-        loss is the per-bucket cap.
-
-        Both schemes run on identical-set REPRESENTATIVES, like the
-        sparse path. Without this, a replicated corpus multiplies every
-        candidate bucket by the replica count (at sf10: 250k quote rows
-        = ~2.5k distinct sets; uncollapsed, the verify join's candidate
-        fan-out broke the driver's broadcast-collect budget).
-        """
-        lmem, lreps = self._collapse_side(lraw, pins)
-        if self.metric == "containment":
-            rmem, rreps = self._collapse_right_projected(lreps, rraw,
-                                                         pins)
-            verified = self._containment_fallback(lreps, rreps)
-        else:
-            rmem, rreps = self._collapse_side(rraw, pins)
-            verified = self._banding_fallback(lreps, rreps)
-        return self._expand_members(verified, lmem, rmem)
 
     def _collapse_side(self, raw: DataFrame, pins: list[DataFrame]):
         """(members, representatives) for identical-shingle-set rows:
@@ -574,118 +513,3 @@ class FuzzyJoinOperator(ExactSetJoin, Operator):
                .select(F.col("_lorig").alias("left_id"),
                        F.col("_rorig").alias("right_id"), self.metric))
         return out.localCheckpoint(eager=True)
-
-    def _collapse_right_projected(self, lreps: DataFrame,
-                                  rraw: DataFrame,
-                                  pins: list[DataFrame]):
-        """Right-side collapse for the containment fallback: collapse
-        by the PROJECTION of each right set onto the left vocabulary.
-
-        containment(A, B) = |A∩B| / |A| depends on B only through
-        B∩U where U = union of all left shingles (A ⊆ U for every A),
-        so two right rows with equal projections are EXCHANGEABLE for
-        this metric — verification against the projection is exact,
-        not approximate. This is what lets a replicated corpus
-        collapse on the right even when raw sets differ (at sf1:
-        per-replica text suffixes defeat the raw-set collapse, but no
-        suffix shingle occurs in any quote, so all replicas of a base
-        doc share one projection — right reps drop from 50k rows to
-        ~5k, prefix buckets shrink to base-corpus document
-        frequencies, and the capped-bucket recall loss all but
-        disappears: measured 0.357 -> ~1.0). Rows with an EMPTY
-        projection can never reach a threshold > 0 and are dropped
-        here (the inner join + groupBy does it).
-
-        Scale shape: U is one distinct over the (already collapsed)
-        left reps; the right explode is pruned by an equi-join on U
-        (AQE broadcasts it when small) and re-grouped by _id — one
-        linear shuffle, no quadratic term.
-        """
-        probe = lreps.select(F.explode("_sh").alias("_p")).distinct()
-        proj = (rraw.select("_id", F.explode("_sh").alias("_p"))
-                .join(probe, "_p")
-                .groupBy("_id")
-                .agg(F.array_sort(F.collect_set("_p")).alias("_sh")))
-        return self._collapse_side(proj, pins)
-
-    def _banding_fallback(self, lraw: DataFrame,
-                          rraw: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
-        t = self.threshold
-        # banding threshold in Jaccard space (see _minhash_join)
-        t_band = t if self.metric == "jaccard" else t / (2.0 - t)
-        bands, rows = H.optimal_bands(min(max(t_band, 0.05), 0.95),
-                                      FALLBACK_NUM_PERM)
-        sig_udf = H.minhash_from_hashes_udf(FALLBACK_NUM_PERM)
-        cap = self.fallback_max_bucket
-
-        def banded(side: DataFrame) -> DataFrame:
-            b = (side.select("_id", sig_udf(F.col("_sh")).alias("_sig"))
-                 .selectExpr("_id",
-                             f"inline({H.band_hashes_sql('_sig', bands, rows)})"))
-            # per-bucket cap via a window (external sorter streams the
-            # group — never a collect_list of an unbounded bucket)
-            w = Window.partitionBy("band", "h").orderBy("_id")
-            return (b.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") <= cap).drop("_rn"))
-
-        cand = (banded(lraw.select("_id", "_sh"))
-                .withColumnRenamed("_id", "_lid")
-                .join(banded(rraw.select("_id", "_sh"))
-                      .withColumnRenamed("_id", "_rid"), ["band", "h"])
-                .select("_lid", "_rid").distinct())
-        return self._verify_candidates(cand, lraw, rraw)
-
-    def _containment_fallback(self, lraw: DataFrame,
-                              rraw: DataFrame) -> DataFrame:
-        """Approximate containment join: pigeonhole prefix probe +
-        capped inverted index (``on_budget_exceeded='minhash'`` with
-        ``metric='containment'``).
-
-        Candidate guarantee: containment(A, B) >= t means at most
-        (1-t)|A| elements of A are outside B, so ANY floor((1-t)|A|)+1
-        elements of A include one of A∩B — the pigeonhole block, same
-        as the exact path's left prefix (fuzzy_join reference
-        semantics; prefix ordered rarest-first by right-side document
-        frequency to keep probe buckets minimal, exactly PPJoin's
-        ordering trick). Every true pair therefore shares at least one
-        (prefix shingle, bucket); the ONLY recall loss is the
-        per-shingle bucket cap below. Work bound: candidates <=
-        |left prefix rows| * fallback_max_bucket, verification is
-        exact per pair (precision 1.0).
-
-        Scale shape: one groupBy for document frequency (map-side
-        combine to |vocab| rows), the right explode is pre-pruned to
-        shingles that occur in some left prefix (AQE broadcasts the
-        probe set when small — the BM25 query-term trick), and the
-        per-shingle cap is a deterministic pseudo-random sample
-        (xxhash64 order, unbiased — smallest-id capping would
-        systematically miss high-id replicas).
-        """
-        from pyspark.sql import Window
-
-        cap = self.fallback_max_bucket
-        rex = rraw.select("_id", F.explode("_sh").alias("_p"))
-        dfreq = rex.groupBy("_p").agg(F.count(F.lit(1)).alias("_df"))
-        lex = lraw.select("_id", F.size("_sh").alias("_len"),
-                          F.explode("_sh").alias("_p"))
-        # rarest-first: left shingles absent from the right get df 0 —
-        # harmless prefix members (their buckets are empty; the
-        # pigeonhole guarantee is per-B and holds for ANY fixed subset)
-        lex = (lex.join(dfreq, "_p", "left")
-               .withColumn("_df", F.coalesce("_df", F.lit(0))))
-        wl = Window.partitionBy("_id").orderBy("_df", "_p")
-        lpre = (lex.withColumn("_rn", F.row_number().over(wl))
-                .filter(F.col("_rn")
-                        <= H.prefix_length(self.threshold, F.col("_len")))
-                .select(F.col("_id").alias("_lid"), "_p"))
-        probe = lpre.select("_p").distinct()
-        wr = Window.partitionBy("_p").orderBy(F.xxhash64("_p", "_id"),
-                                              "_id")
-        ridx = (rex.join(probe, "_p")
-                .withColumn("_rn", F.row_number().over(wr))
-                .filter(F.col("_rn") <= cap)
-                .select(F.col("_id").alias("_rid"), "_p"))
-        cand = lpre.join(ridx, "_p").select("_lid", "_rid").distinct()
-        return self._verify_candidates(cand, lraw, rraw)

@@ -9,9 +9,12 @@ from source (the bench and the oracle both rely on that), and the cache
 must not accumulate across a long session.
 
 Guard: after a near-dup run() returns, the session holds zero cached
-RDDs and the CacheManager is empty; a mixture-sampler ``cache_input``
-run leaves no CacheManager entry either (it materializes via
-localCheckpoint, which is invocation-local by construction).
+RDDs and the CacheManager is empty; so it is after every operator that
+runs jobs inside run() (the near-dup family, the exact set-similarity
+join, the order-2 diversity evaluators). A mixture-sampler
+``cache_input`` run leaves no CacheManager entry either (it
+materializes via localCheckpoint, which is invocation-local by
+construction).
 """
 
 import pytest
@@ -94,3 +97,69 @@ def test_mixture_sampler_cache_input_no_cache_manager_entry(spark):
     a = sorted(r.doc_id for r in out_cached.collect())
     b = sorted(r.doc_id for r in out_plain.collect())
     assert a == b
+
+
+def _embeddings(spark):
+    rows = [(i, [float(i % 5), float(i % 3), 1.0]) for i in range(60)]
+    return spark.createDataFrame(rows, "doc_id long, embedding array<double>")
+
+
+def _near_dup(name, **args):
+    def run(spark, docs):
+        op = get_operator(name, {"order_key": "doc_id", **args})
+        if name == "SemDeduplicateFilter":
+            return op.run(_embeddings(spark))
+        return op.run(docs)
+    return run
+
+
+def _fuzzy_join(dense_vocab_max):
+    def run(spark, docs):
+        op = get_operator("FuzzyJoinOperator", {
+            "threshold": 0.6, "dense_vocab_max": dense_vocab_max})
+        return op.run(docs.filter(F.col("doc_id") % 4 == 0), right=docs)
+    return run
+
+
+def _diversity(name):
+    def run(spark, docs):
+        # no id_key: the order-2 path pins generated ids with a persist
+        return get_operator(name, {"order": 2}).run(_embeddings(spark))
+    return run
+
+
+# (case, run(spark, docs), whether the run may leave checkpoint blocks:
+# the sparse fuzzy join's result is an eager localCheckpoint)
+SCOPED_RUNS = [
+    ("sem", _near_dup("SemDeduplicateFilter", embedding_key="embedding"),
+     False),
+    ("ngram_jaccard_dense", _near_dup("NgramJaccardDeduplicateFilter",
+                                      input_key="text",
+                                      dense_vocab_max=8192), False),
+    ("ngram_jaccard_sparse", _near_dup("NgramJaccardDeduplicateFilter",
+                                       input_key="text",
+                                       dense_vocab_max=0), False),
+    ("substring", _near_dup("SubstringDeduplicateFilter", input_key="text"),
+     False),
+    ("fuzzy_join_dense", _fuzzy_join(8192), False),
+    ("fuzzy_join_sparse", _fuzzy_join(0), True),
+    ("vendi_order2", _diversity("VendiDatasetEvaluator"), False),
+    ("task2vec_order2", _diversity("Task2VecDatasetEvaluator"), False),
+]
+
+
+@pytest.mark.parametrize("run,checkpoints", [c[1:] for c in SCOPED_RUNS],
+                         ids=[c[0] for c in SCOPED_RUNS])
+def test_run_leaves_no_cache(spark, docs, run, checkpoints):
+    spark.catalog.clearCache()  # isolate from other tests' cache state
+    base = _n_cached_rdds(spark)
+    outs = []
+    for _ in range(2):
+        out = run(spark, docs)
+        assert _cache_manager_empty(spark)
+        if not checkpoints:
+            assert _n_cached_rdds(spark) <= base
+        outs.append(sorted(tuple(r) for r in out.collect()))
+    # the second invocation recomputes and agrees
+    assert outs[0] == outs[1]
+    assert outs[0]  # non-vacuous

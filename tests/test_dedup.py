@@ -116,16 +116,6 @@ def test_simhash_identical_docs_collapse(spark):
     assert [r.doc_id for r in op.run(ddf).select("doc_id").collect()] == [0]
 
 
-def test_dedup_by_bands_rejects_both_verify_forms(spark):
-    from dataflow_spark.operators.filters.dedup import SimHashDeduplicateFilter
-
-    df = spark.createDataFrame([(1, "a")], ["doc_id", "text"])
-    with pytest.raises(ValueError, match="not both"):
-        SimHashDeduplicateFilter(order_key="doc_id")._dedup_by_bands(
-            df, df, "doc_id", verify=lambda cand: cand,
-            verify_expr="true")
-
-
 def test_star_contraction_matches_union_find(spark):
     """Distributed large-star/small-star path (forced via
     driver_max_edges=0) agrees with the driver union-find on chains
@@ -464,7 +454,8 @@ def test_sql_band_builders_pinned_values(spark):
 
 @pytest.mark.parametrize("name", [
     "MinHashDeduplicateFilter", "SimHashDeduplicateFilter",
-    "SemDeduplicateFilter", "NgramJaccardDeduplicateFilter"])
+    "SemDeduplicateFilter", "NgramJaccardDeduplicateFilter",
+    "SubstringDeduplicateFilter"])
 def test_near_dup_null_order_key_row_survives_as_singleton(spark, name):
     """A row whose order_key is NULL has no place in the keep-first
     order: it never joins a cluster and survives, even when it duplicates

@@ -294,44 +294,22 @@ def test_paths_agree_on_shared_corpus(spark):
 
 
 def test_budget_refusal_default_and_minhash_fallback_recall(spark):
-    """r8 (judge ask #4): refusal stays the default; the opt-in
-    minhash fallback completes on a low-entropy corpus with EXACT
-    precision (every emitted pair truly >= t) and measured recall vs
-    the brute-force pair set."""
+    """The join is exact or refuses: on a low-entropy corpus past
+    ``dense_flop_budget`` it raises an error that names the budget to
+    raise. There is no approximate fallback."""
     corpus = _low_entropy_corpus(spark, n=40)
     probe = _low_entropy_corpus(spark, n=40).withColumn(
         "doc_id", F.col("doc_id") + 1000)
     common = {"threshold": 0.5, "shingle_n": 3, "dense_flop_budget": 1e3}
-    with pytest.raises(ValueError, match="on_budget_exceeded"):
+    with pytest.raises(ValueError, match="Raise dense_flop_budget"):
         get_operator("FuzzyJoinOperator", common).run(
             probe, right=corpus).count()
-    fb = get_operator("FuzzyJoinOperator",
-                      {**common, "on_budget_exceeded": "minhash"})
-    got = {(r["left_id"], r["right_id"]) for r in
-           fb.run(probe, right=corpus).collect()}
-    assert fb.last_path == "minhash"
-
-    # brute-force truth
-    lrows = probe.collect()
-    rrows = corpus.collect()
-
-    def sh(t, n=3):
-        return ({t[i:i + n] for i in range(len(t) - n + 1)}
-                if len(t) >= n else {t})
-
-    want = {(lr["doc_id"], rr["doc_id"])
-            for lr in lrows for rr in rrows
-            if _jaccard(sh(lr["text"]), sh(rr["text"])) >= 0.5}
-    assert got <= want            # exact precision: no false positives
-    assert len(want) > 0
-    recall = len(got & want) / len(want)
-    assert recall >= 0.9          # near-identical docs: S-curve ~1
 
 
 def test_containment_flop_budget_refuses_fast(spark):
-    """r8 (judge ask #3): the containment metric gets the same
-    fast-refusal contract as its siblings on a constructed low-entropy
-    corpus — an actionable error, not a wall-clock burn."""
+    """The containment metric gets the same fast-refusal contract as
+    its siblings on a constructed low-entropy corpus — an actionable
+    error, not a wall-clock burn."""
     corpus = _low_entropy_corpus(spark, n=50)
     quotes = corpus.withColumn("text", F.substring("text", 1, 9)) \
                    .withColumn("doc_id", F.col("doc_id") + 500)
@@ -340,72 +318,3 @@ def test_containment_flop_budget_refuses_fast(spark):
         "dense_flop_budget": 1e3})
     with pytest.raises(ValueError, match="infeasible"):
         op.run(quotes, right=corpus).count()
-    # and the fallback completes for containment too
-    fb = get_operator("FuzzyJoinOperator", {
-        "threshold": 0.9, "shingle_n": 3, "metric": "containment",
-        "dense_flop_budget": 1e3, "on_budget_exceeded": "minhash"})
-    out = fb.run(quotes, right=corpus).collect()
-    assert fb.last_path == "minhash"
-    assert all(r["containment"] >= 0.9 for r in out)
-
-
-def test_containment_fallback_finds_asymmetric_pairs(spark):
-    """r9: the containment fallback is pigeonhole-prefix + capped
-    inverted index, NOT MinHash banding — a short quote inside a long
-    document has near-zero Jaccard, so banding recall on the flagship
-    containment shape was 0 (measured 0/57 at sf0.01). With every
-    bucket under the cap the candidate guarantee is total: recall 1.0
-    vs the brute nested loop, precision exact."""
-    import random
-
-    random.seed(23)
-    vocab = [f"tok{i:02d}" for i in range(40)]
-    rows = [(i, " ".join(random.choices(vocab, k=60))) for i in range(40)]
-    corpus = spark.createDataFrame(rows, "doc_id long, text string")
-    # quotes: first 12 chars of every 4th doc — tiny Jaccard vs source
-    quotes = (corpus.filter(F.col("doc_id") % 4 == 0)
-              .select((F.col("doc_id") + 1000).alias("doc_id"),
-                      F.substring("text", 1, 12).alias("text")))
-    common = {"threshold": 0.9, "shingle_n": 3, "metric": "containment"}
-    exact = get_operator("FuzzyJoinOperator", common)
-    want = {(r["left_id"], r["right_id"])
-            for r in exact.run(quotes, right=corpus).collect()}
-    assert want, "constructed corpus must contain true quote pairs"
-    fb = get_operator("FuzzyJoinOperator", {
-        **common, "dense_flop_budget": 1, "max_candidate_pairs": 1,
-        "on_budget_exceeded": "minhash"})
-    out = fb.run(quotes, right=corpus).collect()
-    assert fb.last_path == "minhash"
-    got = {(r["left_id"], r["right_id"]) for r in out}
-    assert got == want            # recall 1.0 under-cap, precision exact
-    assert all(r["containment"] >= 0.9 for r in out)
-
-
-def test_containment_fallback_cap_only_recall_loss(spark):
-    """The fallback's only recall loss is the per-shingle bucket cap:
-    with fallback_max_bucket >= bucket sizes the pair set is exact;
-    shrinking the cap below a bucket can only REMOVE pairs (output
-    stays a subset of the exact result — precision holds)."""
-    # 30 near-identical docs (shared 9-char head) so every prefix
-    # shingle's bucket holds all 30
-    rows = [(i, "abcdefghi" + f" tail{i}") for i in range(30)]
-    corpus = spark.createDataFrame(rows, "doc_id long, text string")
-    quotes = (corpus.limit(3)
-              .select((F.col("doc_id") + 100).alias("doc_id"),
-                      F.substring("text", 1, 9).alias("text")))
-    common = {"threshold": 0.9, "shingle_n": 3, "metric": "containment"}
-    exact = get_operator("FuzzyJoinOperator", common)
-    want = {(r["left_id"], r["right_id"])
-            for r in exact.run(quotes, right=corpus).collect()}
-    assert len(want) == 90        # every quote hits every doc
-    for cap, full in ((64, True), (8, False)):
-        fb = get_operator("FuzzyJoinOperator", {
-            **common, "dense_flop_budget": 1, "max_candidate_pairs": 1,
-            "on_budget_exceeded": "minhash", "fallback_max_bucket": cap})
-        got = {(r["left_id"], r["right_id"])
-               for r in fb.run(quotes, right=corpus).collect()}
-        assert got <= want        # precision: never a false pair
-        if full:
-            assert got == want    # cap >= bucket: no loss at all
-        else:
-            assert got            # capped: degraded, never empty

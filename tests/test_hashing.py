@@ -21,8 +21,6 @@ PINNED = {
         "79f44f3f2656a1b4a17694a7144b9b57a5e9ccfebfc4f8fcf554cd3f896b07b9",
     "simhash64_udf":
         "36045f3052cf9ef6282764520d9919eaefd9ef85a5fe52472f8750207aab86e1",
-    "minhash_from_hashes_udf":
-        "a990165f99e3d4a668bbc4fed0a7cd2f67aa0355368471efc7d0947543141ed6",
     "minhash_md5_udf":
         "0a3def61416b4de1165cf55b8ef4fd245f61037e6b608e192ae560a9411f3c3b",
     "simhash_md5_udf":
@@ -52,20 +50,6 @@ def _texts(n: int = 2400, seed: int = 20261017) -> list:
     return out
 
 
-def _hash_arrays(n: int = 2000, seed: int = 7) -> list:
-    """Seeded signed-64 shingle-hash arrays (the xxhash64 inputs of
-    ``minhash_from_hashes_udf``), with NULL, empty and repeated rows."""
-    rng = random.Random(seed)
-    out: list = [None, []]
-    while len(out) < n:
-        if rng.random() < 0.05:
-            out.append(out[rng.randrange(len(out))])
-            continue
-        out.append([rng.randrange(-(1 << 63), 1 << 63)
-                    for _ in range(rng.randrange(1, 40))])
-    return out
-
-
 def _digest(values) -> str:
     h = hashlib.sha256()
     for v in values:
@@ -76,7 +60,6 @@ def _digest(values) -> str:
 
 def signature_digests() -> dict:
     texts = pd.Series(_texts(), dtype=object)
-    arrays = pd.Series(_hash_arrays(), dtype=object)
 
     def series_fn(udf, s):
         return udf.func(s)
@@ -90,8 +73,6 @@ def signature_digests() -> dict:
     return {
         "minhash64_udf": _digest(series_fn(H.minhash64_udf(64, 5), texts)),
         "simhash64_udf": _digest(series_fn(H.simhash64_udf(4), texts)),
-        "minhash_from_hashes_udf": _digest(
-            series_fn(H.minhash_from_hashes_udf(64), arrays)),
         "minhash_md5_udf": _digest(iter_fn(H.minhash_md5_udf(64, 5), texts)),
         "simhash_md5_udf": _digest(iter_fn(H.simhash_md5_udf(4), texts)),
     }

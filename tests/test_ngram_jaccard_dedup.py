@@ -172,41 +172,13 @@ def test_candidate_pair_guard_refuses_degenerate_corpus(spark):
 
 
 def test_flop_budget_refuses_and_minhash_fallback_matches_exact(spark):
-    """r8: dense byte-feasible but compute-infeasible corpora refuse
-    fast (BudgetExceededError) by default; on_budget_exceeded='minhash'
-    completes with exact-verified edges, so survivors match the exact
-    path on a size both handle."""
-    import pytest
-
+    """Dense byte-feasible but compute-infeasible corpora refuse fast
+    (BudgetExceededError) with an error naming the budget to raise;
+    there is no approximate fallback."""
     rows = [(i, "the same template text repeated " * 4 + str(i % 3))
             for i in range(200)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     common = {"input_key": "text", "order_key": "doc_id",
               "dense_flop_budget": 1e4}  # 200^2 * vocab >> 1e4
-    with pytest.raises(ValueError, match="on_budget_exceeded"):
+    with pytest.raises(ValueError, match="Raise dense_flop_budget"):
         get_operator("NgramJaccardDeduplicateFilter", common).run(df).count()
-    fb = get_operator("NgramJaccardDeduplicateFilter",
-                      {**common, "on_budget_exceeded": "minhash"})
-    got = sorted(r["doc_id"] for r in fb.run(df).collect())
-    exact = get_operator("NgramJaccardDeduplicateFilter",
-                         {"input_key": "text", "order_key": "doc_id"})
-    want = sorted(r["doc_id"] for r in exact.run(df).collect())
-    assert got == want
-
-
-def test_sparse_guard_routes_to_minhash_fallback(spark):
-    """The candidate-pair guard (sparse path) also honors the fallback
-    policy instead of raising."""
-    rows = [(i, "the same template text repeated " * 4 + str(i % 3))
-            for i in range(200)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    fb = get_operator("NgramJaccardDeduplicateFilter",
-                      {"input_key": "text", "order_key": "doc_id",
-                       "dense_vocab_max": 0, "max_candidate_pairs": 1000,
-                       "on_budget_exceeded": "minhash"})
-    got = sorted(r["doc_id"] for r in fb.run(df).collect())
-    exact = get_operator("NgramJaccardDeduplicateFilter",
-                         {"input_key": "text", "order_key": "doc_id",
-                          "dense_vocab_max": 0, "max_candidate_pairs": 0})
-    want = sorted(r["doc_id"] for r in exact.run(df).collect())
-    assert got == want
