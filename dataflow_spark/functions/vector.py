@@ -1,16 +1,32 @@
-"""Vector math over array<float|double> columns — JVM-side expressions.
+"""Vector math over array<float|double> columns.
 
-Used by the similarity-search and semantic-dedup operators. All helpers
-cast to double before arithmetic so results are reproducible against a
-double-precision oracle regardless of the stored element type.
+Used by the similarity-search, clustering and semantic-dedup operators.
+The Column helpers are JVM-side expressions; they cast to double before
+arithmetic so results are reproducible against a double-precision oracle
+regardless of the stored element type.
+
+Each vector kernel has one implementation that every caller shares:
+:func:`centroid_dists` (k-means assignment, IVF cells),
+:func:`hyperplane_planes` with :func:`hyperplane_keys` (the banding UDF
+and LSHKNN's one-pass worker) and :func:`stack_vectors` (the numpy
+top-k workers).
 """
 
 from __future__ import annotations
 
+import sys
+
+import numpy as np
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# UDF and worker closures call the kernels below. Pickled by value, they
+# reach the Python workers without an import of the whole dataflow_spark
+# package, as in functions/hashing.py.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def to_double_array(col: Column) -> Column:
@@ -45,43 +61,83 @@ def normalize(a: Column) -> Column:
     )
 
 
+def sq_dist(a: Column, b: Column) -> Column:
+    """Sequential left-to-right double-precision squared L2 distance;
+    null when either side is null or the dims differ."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0), lambda acc, x: acc + x)
+
+
+def centroid_dists(vcol: Column, cents) -> Column:
+    """array<struct<d: double, c: long>>: the squared L2 distance ``d``
+    from the array<double> column ``vcol`` to each centroid ``c`` of
+    ``cents``, a list of (centroid id, vector) pairs, in list order.
+
+    The centroids are one literal array, so the distances are a narrow
+    per-row projection; no join or shuffle.
+    """
+    carr = F.array(*[
+        F.struct(F.lit(int(cid)).cast("long").alias("c"),
+                 F.array(*[F.lit(float(x)) for x in vec]).alias("v"))
+        for cid, vec in cents])
+    return F.transform(
+        carr, lambda s: F.struct(sq_dist(vcol, s["v"]).alias("d"),
+                                 s["c"].alias("c")))
+
+
+def hyperplane_planes(num_planes: int, dim: int, seed: int) -> np.ndarray:
+    """The (num_planes, dim) random-hyperplane family for ``seed``: the
+    same planes for a given (seed, dim) whatever the batch."""
+    return np.random.RandomState(seed).standard_normal((num_planes, dim))
+
+
+def hyperplane_keys(M: np.ndarray, planes: np.ndarray,
+                    num_bands: int) -> np.ndarray:
+    """(n, num_bands) int64 band keys of the rows of ``M``: the sign bits
+    of the projections on ``planes``, ``num_planes // num_bands`` bits
+    per band, packed most significant bit first."""
+    width = planes.shape[0] // num_bands
+    bits = ((M @ planes.T) > 0).astype(np.int64)
+    weights = 1 << np.arange(width - 1, -1, -1, dtype=np.int64)
+    return np.stack([bits[:, b * width:(b + 1) * width] @ weights
+                     for b in range(num_bands)], axis=1)
+
+
+def stack_vectors(vals, ids, dim: int):
+    """(M, norms, ids) for the entries of ``vals`` that hold a
+    ``dim``-long vector: M is their float64 matrix, norms its row L2
+    norms and ids the matching entries of ``ids``. NULL and wrong-dim
+    entries are skipped (their cosine is NULL, so they never match)."""
+    vals = list(vals)
+    keep = [i for i, v in enumerate(vals) if v is not None and len(v) == dim]
+    M = (np.stack([np.asarray(vals[i], dtype=np.float64) for i in keep])
+         if keep else np.empty((0, dim)))
+    return M, np.sqrt((M * M).sum(axis=1)), np.asarray(ids)[keep]
+
+
 def hyperplane_bands_udf(num_planes: int = 16, num_bands: int = 4,
-                         seed: int = 42, dim: int | None = None):
+                         seed: int = 42):
     """Vectorized random-hyperplane LSH band keys: embedding array ->
-    array<long> of ``num_bands`` packed sign-bit keys.
+    array<long> of ``num_bands`` packed sign-bit keys
+    (:func:`hyperplane_keys`); NULL for a NULL or empty embedding.
 
     The pure-expression variant (per-plane zip_with/aggregate trees) is
     CodegenFallback and measured ~1000x slower per row; this computes
-    the whole Arrow batch as one (batch x dim) @ (dim x planes) matmul.
-    Same plane family for a given seed regardless of batch shape.
+    each dim's rows of the Arrow batch as one (rows x dim) @
+    (dim x planes) matmul.
     """
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
-
-    width = num_planes // num_bands
 
     @pandas_udf("array<long>")
     def bands(s: pd.Series) -> pd.Series:
-        X = np.array(
-            [v if v is not None else [] for v in s], dtype=object)
-        lens = {len(v) for v in X}
-        out = [None] * len(X)
-        rng_cache = {}
-        for L in lens:
-            if L == 0:
-                continue
-            if L not in rng_cache:
-                rng = np.random.RandomState(seed)
-                rng_cache[L] = rng.standard_normal((num_planes, L))
-            planes = rng_cache[L]
-            idx = [i for i, v in enumerate(X) if len(v) == L]
-            M = np.array([X[i] for i in idx], dtype=np.float64)
-            bits = (M @ planes.T) > 0          # (n, num_planes)
-            weights = 1 << np.arange(width - 1, -1, -1, dtype=np.int64)
-            for j, i in enumerate(idx):
-                row = bits[j].astype(np.int64)
-                out[i] = [int(row[b * width:(b + 1) * width] @ weights)
-                          for b in range(num_bands)]
+        out = [None] * len(s)
+        for dim in {len(v) for v in s if v is not None} - {0}:
+            M, _, idx = stack_vectors(s, np.arange(len(s)), dim)
+            keys = hyperplane_keys(
+                M, hyperplane_planes(num_planes, dim, seed), num_bands)
+            for i, row in zip(idx, keys.tolist()):
+                out[i] = row
         return pd.Series(out)
 
     return bands

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
+from dataflow_spark.functions import vector as V
 
 
 @OPERATOR_REGISTRY.register()
@@ -72,59 +73,37 @@ class KMeansClusteringOperator(Operator):
         Guide §2.4: crossJoining the corpus with the broadcast
         k-centroid frame and ranking with a window partitioned by point
         id would cost an Exchange + sort of n*k rows per assignment.
-        The centroids are a k x dim literal the driver
-        already holds, so the argmin is a pure narrow projection: fold
-        over the centroid array, keep the first strictly-smaller
-        distance (ties keep the smaller cid, identical to the old
-        ``ORDER BY _d2 ASC, _cid ASC`` rank). Distance is the same
-        left-to-right zip_with/aggregate fold, so d2 is bit-identical
-        and assignments match the join form exactly; the null/NaN
+        The centroids are a k x dim literal that ``fit`` already
+        collected, so the argmin is a pure narrow projection: fold over
+        ``V.centroid_dists`` (each centroid's distance evaluated once),
+        keep the first strictly-smaller distance (ties keep the smaller
+        cid, as the join form's ``ORDER BY _d2 ASC, _cid ASC`` rank
+        does). Both forms use the same ``V.sq_dist`` fold, so d2 is
+        bit-identical and assignments match exactly; the null/NaN
         corner (null embedding -> all-null d2; NaN -> NaN d2) keeps the
-        old nulls-first/NaN-tie outcome of cid 0 via the ``acc.c IS
-        NULL OR d2 < acc.d`` fold condition.
+        join form's nulls-first/NaN-tie outcome of cid 0 via the
+        ``acc.c IS NULL OR d2 < acc.d`` fold condition.
         """
-        carr = F.array(*[
-            F.struct(F.lit(int(cid)).cast("long").alias("c"),
-                     F.array(*[F.lit(float(x)) for x in vec]).alias("v"))
-            for cid, vec in cents])
-
-        def d2(s):
-            return F.aggregate(
-                F.zip_with(vcol, s["v"], lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x)
-
-        # evaluate each centroid's distance exactly once (a fold that
-        # evaluates d2(s) in both the when() condition and the taken
-        # struct doubles the distance compute at large k). Same fold
-        # condition on the precomputed struct, so assignments are
-        # bit-identical.
-        dists = F.transform(
-            carr, lambda s: F.struct(d2(s).alias("d"), s["c"].alias("c")))
         best = F.aggregate(
-            dists,
+            V.centroid_dists(vcol, cents),
             F.struct(F.lit(None).cast("double").alias("d"),
                      F.lit(None).cast("long").alias("c")),
             lambda acc, s: F.when(
                 acc["c"].isNull() | (s["d"] < acc["d"]), s).otherwise(acc))
         return best["c"]
 
-    def _assign(self, pts: DataFrame, cents) -> DataFrame:
-        """(id, cluster): narrow argmin when the centroid literal is
-        small (the common case), broadcast-join + window rank beyond
-        the literal cap — both produce identical assignments."""
-        if sum(len(v) for _, v in cents) <= self._INLINE_LIT_CAP:
-            return (pts.withColumn(
-                "_cid", self._assign_col(cents, F.col("_v")))
-                .select("_pid", "_cid"))
-        cdf = self._cdf_of(pts.sparkSession, cents)
-        d2 = F.aggregate(
-            F.zip_with(F.col("_v"), F.col("_cv"),
-                       lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x)
+    def _narrow(self, cents) -> bool:
+        return sum(len(v) for _, v in cents) <= self._INLINE_LIT_CAP
+
+    def _join_assign(self, pts: DataFrame, cents) -> DataFrame:
+        """(_pid, _cid) beyond the literal cap: broadcast-join + window
+        rank, the same assignments as :meth:`_assign_col`."""
+        cdf = pts.sparkSession.createDataFrame(cents, ["_cid", "_cv"]).select(
+            "_cid", F.col("_cv").cast("array<double>").alias("_cv"))
         win = Window.partitionBy("_pid").orderBy(
             F.col("_d2").asc(), F.col("_cid").asc())
         return (pts.crossJoin(F.broadcast(cdf))
-                .withColumn("_d2", d2)
+                .withColumn("_d2", V.sq_dist(F.col("_v"), F.col("_cv")))
                 .withColumn("_rn", F.row_number().over(win))
                 .filter(F.col("_rn") == 1)
                 .select("_pid", "_cid"))
@@ -133,11 +112,6 @@ class KMeansClusteringOperator(Operator):
         return df.select(
             F.col(self.id_key).alias("_pid"),
             F.col(self.embedding_key).cast("array<double>").alias("_v"))
-
-    @staticmethod
-    def _cdf_of(spark, cents):
-        return spark.createDataFrame(cents, ["_cid", "_cv"]).select(
-            "_cid", F.col("_cv").cast("array<double>").alias("_cv"))
 
     def fit(self, df: DataFrame) -> list[list[float]]:
         """Train and return the k centroid vectors (cid order)."""
@@ -153,11 +127,11 @@ class KMeansClusteringOperator(Operator):
         for _ in range(self.n_iter):
             # narrow assignment keeps _v on the row, so the means pass
             # needs no join back to pts (one scan per iteration)
-            if sum(len(v) for _, v in cents) <= self._INLINE_LIT_CAP:
+            if self._narrow(cents):
                 assigned = pts.withColumn(
                     "_cid", self._assign_col(cents, F.col("_v")))
             else:
-                assigned = self._assign(pts, cents).join(pts, "_pid")
+                assigned = self._join_assign(pts, cents).join(pts, "_pid")
             # per-dim means, quantized: k*dim keys, map-side combined
             means = (assigned
                      .select("_cid", F.posexplode("_v").alias("_i", "_x"))
@@ -178,7 +152,7 @@ class KMeansClusteringOperator(Operator):
 
     def run(self, df: DataFrame, **kw: Any) -> DataFrame:
         cents = list(enumerate(self.fit(df)))
-        if sum(len(v) for _, v in cents) <= self._INLINE_LIT_CAP:
+        if self._narrow(cents):
             # narrow final assignment: no join back to df; column
             # order replicates the join form (id_key leads)
             vcol = F.col(self.embedding_key).cast("array<double>")
@@ -186,7 +160,7 @@ class KMeansClusteringOperator(Operator):
                                     if c != self.id_key] + ["cluster"]
             return (df.withColumn(
                 "cluster", self._assign_col(cents, vcol)).select(*cols))
-        out = self._assign(self._pts(df), cents)
+        out = self._join_assign(self._pts(df), cents)
         return (df.join(out.withColumnRenamed("_pid", self.id_key),
                         self.id_key)
                 .withColumn("cluster", F.col("_cid")).drop("_cid"))

@@ -707,13 +707,13 @@ class SemDeduplicateFilter(_NearDupBase):
 
     Reference: general_text/filter/sem_deduplicate_filter.py:115-161
     (full N x N cosine matrix). Ours: random-hyperplane LSH (sign bits of
-    seeded projections -> band keys), exact cosine verify on candidates,
-    components, keep earliest. Hyperplanes are literal arrays broadcast
-    into the plan; dot products are zip_with/aggregate — JVM-side.
+    seeded projections -> band keys, ``V.hyperplane_bands_udf``), exact
+    cosine verify on candidates (a JVM-side Column expression),
+    components, keep earliest.
     """
 
     def __init__(self, embedding_key: str = "embedding", eps: float = 0.05,
-                 num_planes: int = 16, num_bands: int = 4, dim: int | None = None,
+                 num_planes: int = 16, num_bands: int = 4,
                  order_key: str | None = None, seed: int = 42,
                  assign_key: str | None = None):
         super().__init__(embedding_key, order_key)
@@ -722,7 +722,6 @@ class SemDeduplicateFilter(_NearDupBase):
         self.num_planes = num_planes
         self.num_bands = num_bands
         self.seed = seed
-        self.dim = dim
 
     def _edges(self, keyed: DataFrame, pins: list[DataFrame]) -> DataFrame:
         # vectorized sign-bit band keys (functions/vector.py) — the
@@ -811,11 +810,14 @@ class IncrementalMinHashDedupFilter(MinHashDeduplicateFilter):
         # (Spark's ContextCleaner then removes them). They are not
         # replicated: losing an executor loses its blocks, and the
         # survivors plan then fails instead of recomputing.
-        matched = (est.filter(F.col("_est") >= self.threshold)
-                   .select("_nid").distinct()
-                   .localCheckpoint(eager=True))
-        new_sigs.unpersist()
-        ex_sigs.unpersist()
+        # The finally releases both caches on a failed job too.
+        try:
+            matched = (est.filter(F.col("_est") >= self.threshold)
+                       .select("_nid").distinct()
+                       .localCheckpoint(eager=True))
+        finally:
+            new_sigs.unpersist()
+            ex_sigs.unpersist()
         fresh = (df.withColumn("_nid", F.col(order_col).cast("long"))
                  .join(matched, "_nid", "left_anti").drop("_nid"))
         # _dedup, not run(): a second _ordered() would see the _row_id

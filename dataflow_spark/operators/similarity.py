@@ -1,11 +1,16 @@
-"""Similarity search over embedding columns: brute-force cosine top-k
-and LSH-bucketed ANN.
+"""Similarity search over embedding columns: exact cosine top-k
+(BruteForceKNN), IVF-cell ANN (IVFKNN), random-hyperplane LSH ANN
+(LSHKNN) and the centroid-similarity outlier signal.
 
 Scale design: the query set is assumed small (it is broadcast); the
-corpus is the big side and is never collected. Brute force is one
-broadcast-nested-loop + per-query top-k (a single shuffle on query_id);
-the LSH variant prunes the corpus to colliding buckets first, turning
-the cross product into an equi-join — the 100 TB path.
+corpus is the big side and is never collected. A kNN operator generates
+candidates, then ranks them exactly: in a numpy worker over corpus Arrow
+batches when the query side fits one broadcast, else in a Spark join.
+Both give the same rows because they share one kernel per step: the
+query matrix (:func:`_query_matrix`), corpus batches, band keys and cell
+distances (``functions.vector``), and the ranking (:func:`_rank_topk` on
+every join path, :func:`_merge_partial_topk` after every worker): cosine
+desc, ties to the smaller neighbor id, a NULL cosine is not a match.
 """
 
 from __future__ import annotations
@@ -19,17 +24,82 @@ from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
 from dataflow_spark.functions import vector as V
 from dataflow_spark.functions.pulls import bounded_pull
+# called inside worker closures by name, so a closure pickles these two
+# kernels by value rather than the whole vector module
+from dataflow_spark.functions.vector import hyperplane_keys, stack_vectors
 
 
 #: per-block float64 entry budget for the dense GEMM worker (one sims
 #: buffer = entries x 8 bytes = 128MB). Module-level so the allocation
 #: -pattern test can shrink it to force many blocks per batch and
-#: assert the buffer set is still allocated exactly once (ENGINE RULE,
-#: preallocate block buffers once per batch, compute via out= —
-#: freshly-mmapped numpy temporaries first-touch-fault at ~50MB/s, so
-#: per-block allocation across 32 workers is a 63x kernel page-fault
-#: storm; see PLANS.md "buffer reuse" and docs/engineering-notes.md).
+#: assert the buffer set is still allocated exactly once
+#: (docs/engineering-notes.md §1).
 _GEMM_BLOCK_ENTRIES = 1 << 24
+
+#: byte budget of one broadcast float64 query matrix (a BruteForceKNN
+#: slab, or LSHKNN's whole one-pass query side). Executor memory per
+#: worker stays bounded by it whatever the query count.
+DENSE_BROADCAST_BYTES = 64 << 20
+
+#: BruteForceKNN's cap on query slabs: each slab is one broadcast and one
+#: corpus scan, so the cap bounds plan width; past it the operator
+#: refuses and points to the ANN operators.
+MAX_QUERY_SLABS = 64
+
+#: LSHKNN runs its one-pass worker only for an explicit query set of at
+#: most this many rows; larger or implicit (self-kNN) query sides take
+#: the band join.
+LSH_ONE_PASS_MAX_QUERIES = 4096
+
+
+def _query_matrix(qpdf, id_key: str, embedding_key: str):
+    """(qid, qm, qn) for a collected query frame: the object array of ids,
+    the float64 matrix of the non-empty query vectors and its row norms.
+
+    NULL/empty query vectors are dropped (their cosine is NULL, so they
+    have no output rows). None when no query vector is left, or when
+    their dims differ: a worker would need one matrix per dim, so the
+    caller takes its exact join path instead.
+    """
+    vals = qpdf[embedding_key]
+    dims = {len(v) for v in vals if v is not None} - {0}
+    if len(dims) != 1:
+        return None
+    qm, qn, qid = stack_vectors(
+        vals, qpdf[id_key].to_numpy(dtype=object), dims.pop())
+    return qid, qm, qn
+
+
+def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact top-k of candidate pairs (query_id, neighbor_id, _q_emb,
+    _c_emb) -> [query_id, neighbor_id, cosine_sim].
+
+    Cosine desc, ties to the smaller neighbor id. A NULL cosine (NULL,
+    zero-norm or dim-mismatched vector on either side) is not a match:
+    it is dropped before ranking, as the numpy workers skip those rows,
+    so it never takes a top-k slot.
+    """
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
+    return (pairs.withColumn("cosine_sim",
+                             V.cosine(F.col("_q_emb"), F.col("_c_emb")))
+            .filter(F.col("cosine_sim").isNotNull())
+            .withColumn("_rank", F.row_number().over(w))
+            .filter(F.col("_rank") <= k)
+            .select("query_id", "neighbor_id", "cosine_sim"))
+
+
+def _map_corpus(df: DataFrame, qsrc: DataFrame, id_key: str,
+                embedding_key: str, worker) -> DataFrame:
+    """Run a numpy top-k worker over the corpus as (_cid, _c_emb
+    array<double>) Arrow batches; it emits partial (query_id,
+    neighbor_id, cosine_sim) rows for :func:`_merge_partial_topk`."""
+    schema = ("query_id " + qsrc.schema[id_key].dataType.simpleString()
+              + ", neighbor_id " + df.schema[id_key].dataType.simpleString()
+              + ", cosine_sim double")
+    return (df.select(F.col(id_key).alias("_cid"),
+                      V.to_double_array(F.col(embedding_key)).alias("_c_emb"))
+            .mapInPandas(worker, schema=schema))
 
 
 def _dense_topk_worker(bc, k, include_self):
@@ -46,24 +116,20 @@ def _dense_topk_worker(bc, k, include_self):
         qid_, qm_, qn_ = bc.value
         nq = len(qid_)
         dim_ = qm_.shape[1]
-        # unit-normalized query matrix, built once per task:
-        # the sims GEMM then yields cosines directly — no
-        # 128MB/block denom + np.where temporaries (once the
-        # profile's top cost). Zero-norm rows stay all-zero and
-        # are masked to -inf below. Candidate SELECTION only;
-        # final scores still come from the per-pair rescore.
+        # unit-normalized query matrix, built once per task: the sims
+        # GEMM then yields cosines with no per-block denominator
+        # temporaries. Zero-norm rows stay all-zero and are masked to
+        # -inf below. Candidate SELECTION only; final scores come from
+        # the per-pair rescore.
         with np.errstate(invalid="ignore", divide="ignore"):
             qu_ = np.divide(qm_, qn_[:, None],
                             out=np.zeros_like(qm_),
                             where=qn_[:, None] > 0)
-        # self-exclusion by id lookup, not broadcast equality:
-        # qid_ is dtype=object, so cid[:,None] == qid_[None,:]
-        # was 16M python __eq__ calls per block — the silent
-        # dominator of the sf10 s_most_similar wall. Each id
-        # maps to ALL of its query-row positions (a last-wins
-        # dict would mask only one row per duplicated id,
-        # diverging from the join path's neighbor_id != query_id
-        # filter on malformed non-unique-id input)
+        # self-exclusion by id lookup, not broadcast equality: qid_ is
+        # dtype=object, so cid[:,None] == qid_[None,:] costs 16M python
+        # __eq__ calls per block. Each id maps to ALL of its query-row
+        # positions, as the join path's neighbor_id != query_id filter
+        # excludes every row of a (malformed) duplicated id.
         if not include_self:
             qpos_ = {}
             for i, v in enumerate(qid_):
@@ -71,20 +137,11 @@ def _dense_topk_worker(bc, k, include_self):
         else:
             qpos_ = None
         for pdf in batches:
-            # null / dimension-mismatched corpus vectors: the
-            # join path computes a null cosine for them and
-            # excludes the row; np.stack would instead raise on
-            # the whole batch — drop before stacking
-            vals = pdf["_c_emb"]
-            keep = [i for i, v in enumerate(vals)
-                    if v is not None and len(v) == dim_]
-            if not keep:
+            # null / dimension-mismatched corpus vectors have a null
+            # cosine on the join path and are skipped here
+            cm, cn, cid = stack_vectors(pdf["_c_emb"], pdf["_cid"], dim_)
+            if not len(cid):
                 continue
-            cm = np.stack(
-                [np.asarray(vals.iloc[i], dtype=np.float64)
-                 for i in keep])
-            cn = np.sqrt((cm * cm).sum(axis=1))
-            cid = pdf["_cid"].to_numpy()[keep]
             with np.errstate(invalid="ignore", divide="ignore"):
                 cu = np.divide(cm, cn[:, None],
                                out=np.zeros_like(cm),
@@ -104,21 +161,14 @@ def _dense_topk_worker(bc, k, include_self):
             else:
                 sxq = sxc = None
             o_q, o_n, o_s = [], [], []
-            # qblk bounds ONE float64 buffer to ~16M entries
-            # (128MB). Steady-state worker footprint is the
-            # buffer SET below: k=1 -> sims + bool mask ~144MB;
-            # k>1 -> sims + partition copy + 2 bool masks
-            # ~290MB. All preallocated once per batch, so the
-            # bound is a plateau, not churn; 32 workers x 290MB
-            # = ~9GB, sized for a 128GB box / 4GB-executor
-            # cluster task
+            # qblk bounds ONE float64 buffer to ~16M entries (128MB).
+            # The buffer SET below (k=1: sims + mask ~144MB; k>1: sims +
+            # partition copy + 2 masks ~290MB) is allocated once per
+            # batch and reused across blocks via out=: a fresh
+            # allocation per block is mmap/page-fault churn, a measured
+            # 63x GEMM slowdown under 32 concurrent workers
+            # (docs/engineering-notes.md §1).
             qblk = max(1, _GEMM_BLOCK_ENTRIES // max(b, 1))
-            # preallocated per-batch buffers, reused across
-            # blocks via out=: a fresh 128MB allocation per
-            # GEMM/partition/mask turned into mmap+munmap page
-            # churn under 32 concurrent workers (measured 63x
-            # GEMM slowdown vs idle — TLB-shootdown storm, the
-            # true sf10 s_most_similar dominator)
             nr0 = min(qblk, nq)
             sims_buf = np.empty((nr0, b))
             pbuf = np.empty((nr0, b)) if kk > 1 else None
@@ -127,14 +177,11 @@ def _dense_topk_worker(bc, k, include_self):
             kthb = np.empty(nr0)
             for lo in range(0, nq, qblk):
                 nr = min(qblk, nq - lo)
-                # query-major sims: kth-extraction reduces
-                # along the CONTIGUOUS axis (the corpus-major
-                # layout's axis-0 partition was 5x slower on
-                # strided columns)
+                # query-major sims: kth-extraction reduces along the
+                # CONTIGUOUS axis (5x faster than strided columns)
                 sims = sims_buf[:nr]
                 np.matmul(qu_[lo:lo + nr], cuT, out=sims)
-                # zero-norm vectors never match (join path:
-                # null cosine, excluded from any ranked prefix)
+                # zero-norm vectors never match (null cosine)
                 if len(czero):
                     sims[:, czero] = -np.inf
                 qzero = np.nonzero(qn_[lo:lo + nr] == 0)[0]
@@ -144,16 +191,14 @@ def _dense_topk_worker(bc, k, include_self):
                     m = (sxq >= lo) & (sxq < lo + nr)
                     if m.any():
                         sims[sxq[m] - lo, sxc[m]] = -np.inf
-                # kth-highest per query, then ALL candidates
-                # within an ulp margin of it: duplicate vectors
-                # tie constantly on a templated corpus, and GEMM
-                # ulps vary with batch SHAPE — the same content
-                # can rank differently in different batches,
-                # breaking the ties-to-smaller-id contract (sf1:
-                # 152/20k wrong representatives). Candidates are
-                # re-scored with a shape-independent per-pair
-                # dot before ranking. k=1 needs only the row
-                # max (single pass, no partition copy).
+                # kth-highest per query, then ALL candidates within an
+                # ulp margin of it: duplicate vectors tie constantly on
+                # a templated corpus, and GEMM ulps vary with batch
+                # SHAPE, so ranking on GEMM output breaks the
+                # ties-to-smaller-id contract (152/20k wrong
+                # representatives at sf1). Candidates are re-scored
+                # with a shape-independent per-pair dot before ranking.
+                # k=1 needs only the row max (no partition copy).
                 if kk == 1:
                     kth = np.max(sims, axis=1, out=kthb[:nr])
                 else:
@@ -161,19 +206,13 @@ def _dense_topk_worker(bc, k, include_self):
                     np.copyto(p, sims)
                     p.partition(b - kk, axis=1)
                     kth = p[:, b - kk]
-                # vectorized candidate extraction: a
-                # per-query python loop (np.nonzero per strided
-                # column) plus the np.where cosine temporaries
-                # dominated the sf10 s_most_similar wall. One
-                # block-wide mask extracts every (query, corpus)
-                # candidate pair in C. Per-query threshold:
-                # kth minus max(relative, absolute) margin — a
-                # purely relative margin collapses below GEMM
-                # absolute error (~1e-13) when the kth cosine
-                # sits near zero. kth == -inf gives
-                # thr == -inf (IEEE: -inf - inf = -inf); the
-                # two branches below handle that row exactly as
-                # the original per-column code did.
+                # one block-wide mask extracts every (query, corpus)
+                # candidate pair in C, not a per-query python loop.
+                # Per-query threshold: kth minus max(relative,
+                # absolute) margin — a purely relative margin collapses
+                # below GEMM absolute error (~1e-13) when the kth cosine
+                # sits near zero. kth == -inf gives thr == -inf (IEEE:
+                # -inf - inf = -inf); the two branches below handle it.
                 thr = kth - np.maximum(1e-9 * np.abs(kth), 1e-12)
                 mask = maskb[:nr]
                 if kk == 1:
@@ -202,11 +241,8 @@ def _dense_topk_worker(bc, k, include_self):
                     if not len(qr):
                         continue
                     qr = qr + r0
-                    # per-pair np.dot rescore, unchanged from
-                    # the original scalar path: same op, same
-                    # operand order on the UNnormalized vectors
-                    # — shape-independent across batch
-                    # compositions (the tie-bug lesson)
+                    # per-pair np.dot rescore on the UNnormalized
+                    # vectors: shape-independent across batches
                     sarr = np.empty(len(qr), dtype=np.float64)
                     for t in range(len(qr)):
                         i, g = ci[t], lo + qr[t]
@@ -267,8 +303,8 @@ class BruteForceKNN(Operator):
     """Exact cosine top-k: broadcast query rows against the corpus.
 
     run(corpus_df, queries=queries_df) -> [query_id, neighbor_id,
-    cosine_sim] with exactly k rows per query (deterministic tie-break
-    on neighbor id).
+    cosine_sim] with up to k rows per query (cosine desc, ties to the
+    smaller neighbor id; a NULL cosine is not a match).
     """
 
     #: broadcast-safety bound on the query side: with queries=None the
@@ -278,19 +314,11 @@ class BruteForceKNN(Operator):
 
     def __init__(self, id_key: str = "vec_id", embedding_key: str = "embedding",
                  k: int = 10, include_self: bool = False,
-                 max_broadcast_queries: int | None = None,
-                 dense_broadcast_mb: int = 64,
-                 max_query_slabs: int = 64):
+                 max_broadcast_queries: int | None = None):
         self.id_key, self.embedding_key, self.k = id_key, embedding_key, k
         self.include_self = include_self
         if max_broadcast_queries is not None:
             self.max_broadcast_queries = max_broadcast_queries
-        # matmul fast-path budget PER SLAB for the collected query
-        # matrix; 0 disables (falls back to the broadcast-nested-loop
-        # plan). Query sets above one budget are processed in up to
-        # max_query_slabs byte-bounded slabs (union of partials).
-        self.dense_broadcast_mb = dense_broadcast_mb
-        self.max_query_slabs = max_query_slabs
         self.input_keys = (id_key, embedding_key)
         self.output_keys = ("query_id", "neighbor_id", "cosine_sim")
 
@@ -299,77 +327,50 @@ class BruteForceKNN(Operator):
 
         The join path is exact but its window ranks |corpus| x |queries|
         rows through ONE shuffle — at 50k self-kNN that is a 2.5B-row
-        exchange (sf1 sweep: engine timeout at 600s). Here the queries
-        are collected (guarded by dense_broadcast_mb) and broadcast as a
-        float64 matrix; each corpus Arrow batch computes cosines with
-        one matmul and emits only its LOCAL top-k per query, so the
-        shuffle carries ~batches x |queries| x k rows; a final per-query
-        merge re-sorts the partials. Exactly the semantics of the join
-        path: float64 cosine, ties to the smaller neighbor id,
-        zero-norm vectors never match (cosine is null there).
+        exchange (engine timeout at 600s). Here the queries are
+        collected and broadcast as a float64 matrix; each corpus Arrow
+        batch computes cosines with one matmul and emits only its LOCAL
+        top-k per query, so the shuffle carries ~batches x |queries| x k
+        rows; a final per-query merge re-sorts the partials. Exactly the
+        semantics of the join path: float64 cosine, ties to the smaller
+        neighbor id, zero-norm vectors never match (cosine is null
+        there). Only a query side with no vector or with mixed dims
+        takes the join path.
 
-        SLABBING: a query side larger than dense_broadcast_mb does not
-        fall back to the quadratic-exchange join path (an sf10 sweep
-        caught exactly that: 200k self-kNN queries = 102 MB
-        > the 64 MB budget -> join path -> 4e10-row window -> engine
-        timeout). The query matrix is split into byte-bounded slabs —
-        one broadcast + one corpus mapInPandas per slab, partials
-        unioned, ONE shared merge. Executor memory stays bounded by the
-        budget regardless of |queries|; total GEMM work is unchanged
-        (the semantics are exact all-pairs, quadratic by definition).
-        max_query_slabs caps plan width; beyond it the operator refuses
-        (use LSHKNN/IVFKNN at that scale).
+        SLABBING: a query matrix larger than DENSE_BROADCAST_BYTES is
+        split into byte-bounded slabs — one broadcast + one corpus
+        mapInPandas per slab, partials unioned, ONE shared merge. The
+        join path is no fallback for it: 200k self-kNN queries (102 MB)
+        there meant a 4e10-row window and an engine timeout. Executor
+        memory stays bounded by the budget regardless of |queries|;
+        total GEMM work is unchanged (the semantics are exact all-pairs,
+        quadratic by definition). Past MAX_QUERY_SLABS slabs the
+        operator refuses: use LSHKNN/IVFKNN at that scale.
         """
-        if self.dense_broadcast_mb <= 0:
-            return None
-
-        import numpy as np
-
-        budget = max(1, int(self.dense_broadcast_mb * 1024 * 1024))
         # bounded: max_broadcast_queries probe ran just before; the
-        # byte budget re-checks with the actual dim. Arrow toPandas,
+        # slab cap re-checks with the actual dim. Arrow toPandas,
         # not collect: per-Row pickling of a bound-sized query set costs
         # seconds on the driver at the 1M-row bound; one Arrow frame is
         # ~10x cheaper (guide §6 "Arrow for driver transfers")
         qpdf = qsrc.select(self.id_key, self.embedding_key).toPandas()
-        # null/empty query vectors produce null cosine on the join path
-        # (no output rows for that query) — drop them here; mixed query
-        # dims would need per-dim matmuls, so fall back to the exact
-        # join path instead of guessing (np.array over ragged rows
-        # builds a dtype=object matrix that breaks the GEMM)
-        qrows = [(i, v) for i, v in zip(qpdf[self.id_key].tolist(),
-                                        qpdf[self.embedding_key])
-                 if v is not None and len(v) > 0]
-        if not qrows:
+        q = _query_matrix(qpdf, self.id_key, self.embedding_key)
+        if q is None:
             return None
-        dim = len(qrows[0][1])
-        if any(len(r[1]) != dim for r in qrows):
-            return None
-        n_slabs = -(-(len(qrows) * dim * 8) // budget)  # ceil
-        if n_slabs > self.max_query_slabs:
-            return None
-        qid = np.array([r[0] for r in qrows], dtype=object)
-        qm = np.array([np.asarray(r[1], dtype=np.float64) for r in qrows])
-        qn = np.sqrt((qm * qm).sum(axis=1))
-        spark = df.sparkSession
-        k, include_self = self.k, self.include_self
-        out_schema = (
-            "query_id " + qsrc.schema[self.id_key].dataType.simpleString()
-            + ", neighbor_id "
-            + df.schema[self.id_key].dataType.simpleString()
-            + ", cosine_sim double")
-
-        corpus = df.select(F.col(self.id_key).alias("_cid"),
-                           V.to_double_array(
-                               F.col(self.embedding_key)).alias("_c_emb"))
-        rows_per_slab = -(-len(qrows) // n_slabs)  # ceil
+        qid, qm, qn = q
+        n_slabs = -(-qm.nbytes // DENSE_BROADCAST_BYTES)  # ceil
+        if n_slabs > MAX_QUERY_SLABS:
+            raise ValueError(
+                f"BruteForceKNN would broadcast {n_slabs} query slabs of "
+                f"{DENSE_BROADCAST_BYTES} bytes (cap {MAX_QUERY_SLABS}); "
+                "use LSHKNN or IVFKNN for a query set this large")
+        sc = df.sparkSession.sparkContext
+        rows_per_slab = -(-len(qid) // n_slabs)  # ceil
         partials = None
-        for s0 in range(0, len(qrows), rows_per_slab):
+        for s0 in range(0, len(qid), rows_per_slab):
             sl = slice(s0, s0 + rows_per_slab)
-            bc = spark.sparkContext.broadcast(
-                (qid[sl], qm[sl], qn[sl]))
-            p = corpus.mapInPandas(_dense_topk_worker(bc, k, include_self),
-                                   schema=out_schema)
+            bc = sc.broadcast((qid[sl], qm[sl], qn[sl]))
+            p = _map_corpus(df, qsrc, self.id_key, self.embedding_key,
+                            _dense_topk_worker(bc, self.k, self.include_self))
             partials = p if partials is None else partials.union(p)
         return _merge_partial_topk(partials, self.k)
 
@@ -397,22 +398,7 @@ class BruteForceKNN(Operator):
         joined = c.crossJoin(F.broadcast(q))
         if not self.include_self:
             joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-        # null cosine (null/zero-norm/dim-mismatched vector on either
-        # side) is NOT a match: exclude before ranking, so both physical
-        # paths agree — a null would otherwise occupy a top-k slot
-        # (nulls sort into row_number like any value) on the join path
-        # while the matmul path drops it
-        sim = (joined.withColumn("cosine_sim",
-                                 V.cosine(F.col("_q_emb"), F.col("_c_emb")))
-               .filter(F.col("cosine_sim").isNotNull()))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            sim.withColumn("_rank", F.row_number().over(w))
-            .filter(F.col("_rank") <= self.k)
-            .select("query_id", "neighbor_id", "cosine_sim")
-        )
+        return _rank_topk(joined, self.k)
 
 
 @OPERATOR_REGISTRY.register()
@@ -525,18 +511,9 @@ class IVFKNN(Operator):
 
     def _cell_ranks(self, emb_col, cents):
         """array of cell ids ordered by ascending L2 distance."""
-        dists = F.array(*[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(emb_col,
-                               F.array(*[F.lit(float(v)) for v in c]),
-                               lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-                    F.lit(0.0), lambda a, x: a + x).alias("d"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(cents)
-        ])
-        return F.transform(F.array_sort(dists), lambda s: s["cell"])
+        dists = V.centroid_dists(V.to_double_array(emb_col),
+                                 list(enumerate(cents)))
+        return F.transform(F.array_sort(dists), lambda s: s["c"])
 
     def run(self, df: DataFrame, queries: DataFrame | None = None, **kwargs: Any) -> DataFrame:
         qsrc = queries if queries is not None else df
@@ -554,14 +531,7 @@ class IVFKNN(Operator):
         )
         cand = corpus.join(F.broadcast(probes), "cell").filter(
             F.col("neighbor_id") != F.col("query_id"))
-        sim = cand.withColumn("cosine_sim", V.cosine(F.col("_q_emb"), F.col("_c_emb")))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine_sim").desc(), F.col("neighbor_id").asc())
-        return (
-            sim.withColumn("_rank", F.row_number().over(w))
-            .filter(F.col("_rank") <= self.k)
-            .select("query_id", "neighbor_id", "cosine_sim")
-        )
+        return _rank_topk(cand, self.k)
 
 
 @OPERATOR_REGISTRY.register()
@@ -574,17 +544,9 @@ class LSHKNN(Operator):
 
     def __init__(self, id_key: str = "vec_id", embedding_key: str = "embedding",
                  k: int = 10, num_planes: int = 16, num_bands: int = 4,
-                 seed: int = 42, dim: int | None = None,
-                 max_broadcast_queries: int = 4096,
-                 dense_broadcast_mb: int = 64):
+                 seed: int = 42):
         self.id_key, self.embedding_key, self.k = id_key, embedding_key, k
         self.num_planes, self.num_bands, self.seed = num_planes, num_bands, seed
-        self.dim = dim
-        # fused fast-path guards: when an explicit query set fits these
-        # bounds it is collected + broadcast and the whole probe runs in
-        # ONE corpus pass (see _fused_topk); 0 disables
-        self.max_broadcast_queries = max_broadcast_queries
-        self.dense_broadcast_mb = dense_broadcast_mb
         self.input_keys = (id_key, embedding_key)
         self.output_keys = ("query_id", "neighbor_id", "cosine_sim")
 
@@ -594,12 +556,13 @@ class LSHKNN(Operator):
         The band-join path costs 2 Python banding stages (corpus +
         queries), a band explode (num_bands x corpus rows), the
         equi-join, a dropDuplicates shuffle and a ranking window. When
-        the query side fits max_broadcast_queries / dense_broadcast_mb,
-        everything after the corpus scan fuses into ONE mapInPandas:
-        each corpus batch computes its band keys with the SAME plane
-        family as hyperplane_bands_udf, matches them against the
-        broadcast per-band hash->query index, scores survivors with an
-        exact per-pair float64 dot (shape-independent, so no tie-capture
+        the query side fits LSH_ONE_PASS_MAX_QUERIES rows and
+        DENSE_BROADCAST_BYTES, everything after the corpus scan fuses
+        into ONE mapInPandas: each corpus batch computes its band keys
+        with ``hyperplane_keys`` over the same planes as
+        hyperplane_bands_udf, matches them against the broadcast
+        per-band hash->query index, scores survivors with an exact
+        per-pair float64 dot (shape-independent, so no tie-capture
         margin is needed), and emits its local top-k per query; a
         bounded per-query merge finishes. Candidates are IDENTICAL to
         the join path by construction: same planes, same packed band
@@ -608,91 +571,43 @@ class LSHKNN(Operator):
 
         The corpus is never shuffled and never leaves the executors —
         at 100 TB this is a single scan emitting ~batches x |q| x k
-        rows; the join path stays available for query sets too large to
-        broadcast.
+        rows; the join path serves query sets too large to broadcast.
         """
-        if self.dense_broadcast_mb <= 0 or self.max_broadcast_queries <= 0:
-            return None
-
         import numpy as np
 
         # one bounded job: probe and collect fused (limit is the guard);
         # Arrow toPandas, not collect — per-Row pickling costs seconds
         # at the 1M-row bound (guide §6)
         qpdf = bounded_pull(qsrc.select(self.id_key, self.embedding_key),
-                            self.max_broadcast_queries + 1)
-        if len(qpdf) > self.max_broadcast_queries:
+                            LSH_ONE_PASS_MAX_QUERIES + 1)
+        if len(qpdf) > LSH_ONE_PASS_MAX_QUERIES:
             return None
-        # null/empty queries produce null cosine on the join path (no
-        # output rows); ragged dims would need per-dim plane sets —
-        # fall back rather than guess
-        qrows = [(i, v) for i, v in zip(qpdf[self.id_key].tolist(),
-                                        qpdf[self.embedding_key])
-                 if v is not None and len(v) > 0]
-        if not qrows:
+        q = _query_matrix(qpdf, self.id_key, self.embedding_key)
+        if q is None or q[1].nbytes > DENSE_BROADCAST_BYTES:
             return None
-        dim = len(qrows[0][1])
-        if any(len(r[1]) != dim for r in qrows):
-            return None
-        if len(qrows) * dim * 8 > self.dense_broadcast_mb * 1024 * 1024:
-            return None
-        qid = np.array([r[0] for r in qrows], dtype=object)
-        qm = np.array([np.asarray(r[1], dtype=np.float64) for r in qrows])
-        qn = np.sqrt((qm * qm).sum(axis=1))
-
-        num_planes, num_bands, seed = (self.num_planes, self.num_bands,
-                                       self.seed)
-        width = num_planes // num_bands
-        # identical plane family to hyperplane_bands_udf: RandomState
-        # seeded per dim, (num_planes, dim), sign bits packed MSB-first
-        planes = np.random.RandomState(seed).standard_normal(
-            (num_planes, dim))
-        weights = 1 << np.arange(width - 1, -1, -1, dtype=np.int64)
-
-        def band_keys(M: "np.ndarray") -> "np.ndarray":
-            bits = (M @ planes.T) > 0
-            return np.stack(
-                [bits[:, b * width:(b + 1) * width].astype(np.int64)
-                 @ weights for b in range(num_bands)], axis=1)
-
-        qbands = band_keys(qm)
+        qid, qm, qn = q
+        dim = qm.shape[1]
+        num_bands, k = self.num_bands, self.k
+        planes = V.hyperplane_planes(self.num_planes, dim, self.seed)
+        qbands = hyperplane_keys(qm, planes, num_bands)
         band_maps: list[dict] = [{} for _ in range(num_bands)]
         for i in range(len(qid)):
             if qn[i] == 0:
                 continue  # zero-norm query: null cosine on join path
             for b in range(num_bands):
                 band_maps[b].setdefault(int(qbands[i, b]), []).append(i)
-        spark = df.sparkSession
-        bc = spark.sparkContext.broadcast((qid, qm, qn, band_maps, planes))
-        k = self.k
-        out_schema = (
-            "query_id " + qsrc.schema[self.id_key].dataType.simpleString()
-            + ", neighbor_id "
-            + df.schema[self.id_key].dataType.simpleString()
-            + ", cosine_sim double")
+        bc = df.sparkSession.sparkContext.broadcast(
+            (qid, qm, qn, band_maps, planes))
 
         def fused(batches):
             import pandas as pd
 
             qid_, qm_, qn_, maps, planes_ = bc.value
-
-            def keys_(M):
-                bits = (M @ planes_.T) > 0
-                return np.stack(
-                    [bits[:, b * width:(b + 1) * width].astype(np.int64)
-                     @ weights for b in range(num_bands)], axis=1)
-
             for pdf in batches:
-                vals = pdf["_c_emb"]
-                keep = [i for i, v in enumerate(vals)
-                        if v is not None and len(v) == dim]
-                if not keep:
+                cm, cn, cid = stack_vectors(pdf["_c_emb"], pdf["_cid"], dim)
+                if not len(cid):
                     continue
-                cm = np.stack([np.asarray(vals.iloc[i], dtype=np.float64)
-                               for i in keep])
-                cn = np.sqrt((cm * cm).sum(axis=1))
-                cid = pdf["_cid"].to_numpy()[keep]
-                cb = keys_(cm)
+                cb = hyperplane_keys(cm, planes_, num_bands)
                 # candidate sets per query: >=1 shared (band, hash)
                 cand: dict[int, list[int]] = {}
                 for j in range(cb.shape[0]):
@@ -727,11 +642,8 @@ class LSHKNN(Operator):
                                         "neighbor_id": o_n,
                                         "cosine_sim": o_s})
 
-        partials = (df.select(F.col(self.id_key).alias("_cid"),
-                              V.to_double_array(
-                                  F.col(self.embedding_key)).alias("_c_emb"))
-                    .mapInPandas(fused, schema=out_schema))
-        return _merge_partial_topk(partials, k)
+        return _merge_partial_topk(
+            _map_corpus(df, qsrc, self.id_key, self.embedding_key, fused), k)
 
     def run(self, df: DataFrame, queries: DataFrame | None = None, **kwargs: Any) -> DataFrame:
         qsrc = queries if queries is not None else df
@@ -763,21 +675,4 @@ class LSHKNN(Operator):
             # embedding arrays too)
             .dropDuplicates(["query_id", "neighbor_id"])
         )
-        sim = (
-            cand.withColumn("cosine_sim",
-                            V.cosine(F.col("_q_emb"), F.col("_c_emb")))
-            # zero-norm / dim-mismatched vectors yield null cosine; the
-            # fused path never emits them (it scores candidates in
-            # numpy and skips nulls), so the join path must drop them
-            # too — both physical paths of ONE operator must return the
-            # same rows (same fix as BruteForceKNN's null-cosine drop)
-            .filter(F.col("cosine_sim").isNotNull())
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            sim.withColumn("_rank", F.row_number().over(w))
-            .filter(F.col("_rank") <= self.k)
-            .select("query_id", "neighbor_id", "cosine_sim")
-        )
+        return _rank_topk(cand, self.k)

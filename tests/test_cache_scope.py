@@ -82,6 +82,26 @@ def test_incremental_minhash_run_leaves_no_cache(spark, docs):
     assert out2.count() == n1
 
 
+def test_incremental_minhash_failed_checkpoint_leaves_no_cache(
+        spark, docs, monkeypatch):
+    """A job that fails inside run() must release the signature caches
+    too: the eager checkpoint is their last consumer, so run() drops
+    them in a ``finally``."""
+    spark.catalog.clearCache()  # isolate from other tests' cache state
+
+    def failing_checkpoint(self, eager=True):
+        raise RuntimeError("checkpoint job failed")
+
+    # the concrete DataFrame class: it overrides the abstract one's method
+    monkeypatch.setattr(type(docs), "localCheckpoint", failing_checkpoint)
+    op = get_operator("IncrementalMinHashDedupFilter",
+                      {"input_key": "text", "order_key": "doc_id"})
+    with pytest.raises(RuntimeError, match="checkpoint job failed"):
+        op.run(docs.filter(F.col("doc_id") % 3 != 0),
+               existing=docs.filter(F.col("doc_id") % 3 == 0))
+    assert _cache_manager_empty(spark)
+
+
 def test_mixture_sampler_cache_input_no_cache_manager_entry(spark):
     spark.catalog.clearCache()  # isolate from other tests' cache state
     rows = [(i, ["a", "b", "c"][i % 3]) for i in range(90)]

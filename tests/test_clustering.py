@@ -3,6 +3,7 @@
 import pytest
 
 from dataflow_spark.core.registry import get_operator
+from dataflow_spark.operators.clustering import KMeansClusteringOperator
 
 
 def test_separates_two_blobs(spark):
@@ -28,6 +29,25 @@ def test_deterministic_across_runs(spark):
     b = sorted((r["vec_id"], r["cluster"])
                for r in op.run(df).collect())
     assert a == b
+
+
+def test_join_assignment_matches_inline_fold(spark, monkeypatch):
+    """Past the literal cap the assignment is a broadcast join + window
+    rank; it must give the inline fold's clusters, including the
+    tie-to-smaller-cid and null-embedding corners."""
+    rows = ([(i, [float(i % 4), float(i % 3), 1.0]) for i in range(30)]
+            + [(30, None), (31, [1.5, 1.0, 1.0])])
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    args = {"k": 4, "n_iter": 2, "seed": "j"}
+
+    def clusters():
+        out = get_operator("KMeansClusteringOperator", args).run(df)
+        return sorted((r["vec_id"], r["cluster"]) for r in out.collect())
+
+    inline = clusters()
+    monkeypatch.setattr(KMeansClusteringOperator, "_INLINE_LIT_CAP", 0)
+    assert clusters() == inline
+    assert len(inline) == len(rows)
 
 
 def test_empty_cluster_keeps_seed_centroid(spark):

@@ -1,9 +1,9 @@
 """Driver-memory guard: every ``.collect()`` AND ``.toPandas()`` in
 engine source must be provably bounded (an explicit ``.limit(...)``, a
 size-capped sample, or a k x dim aggregate) — an unbounded driver pull
-is a 100 TB scale-killer. (r9 widened the scan to toPandas when the
-budget-bounded pulls moved to Arrow per guide §6 — the Arrow path is
-faster, not safer, so it gets the same audit.)
+is a 100 TB scale-killer. The scan covers toPandas too: the
+budget-bounded pulls go through Arrow per guide §6, and the Arrow path is
+faster, not safer, so it gets the same audit.
 
 New pull sites must either carry an inline bound visible on the same
 statement or be added to the audited allowlist below WITH a justification
@@ -47,7 +47,7 @@ ALLOWED = {
     ("operators/similarity.py", "n_probe = len(bounded_pull("):
         "bounded probe (max_broadcast_queries + 1 on next line)",
     # matmul fast path pulls the (probe-bounded) query side; the
-    # dense_broadcast_mb byte budget re-checks with the actual dim
+    # MAX_QUERY_SLABS slab cap re-checks with the actual dim
     ("operators/similarity.py",
      "qpdf = qsrc.select(self.id_key, self.embedding_key).toPandas()"):
         "probe + byte budget",
@@ -55,13 +55,13 @@ ALLOWED = {
     ("operators/similarity.py", "limit(self.train_sample)"):
         "train_sample cap",
     # benchmark gram-set pull: a sum(length) pre-check caps total text
-    # bytes at _BENCH_SET_BUDGET / n before the toPandas (r9
+    # bytes at _BENCH_SET_BUDGET / n before the toPandas (the
     # broadcast-set decontamination path)
     ("operators/filters/decontaminate.py",
      'benchmark.select(F.col(self.bench_key).alias("_t")).toPandas()'):
         "byte-budget pre-check upstream",
     # duplicated-segment tail: hard-capped at _DUP_COLLECT_CAP + 1 rows
-    # by the limit on the same statement (r9 broadcast-rebuild path)
+    # by the limit on the same statement (the broadcast-rebuild path)
     ("operators/refiners/segment_dedup.py", "dpd = bounded_pull("):
         "explicit _DUP_COLLECT_CAP + 1 cap on the same statement",
     # mixture counts: input filtered to the LISTED groups before the
@@ -73,7 +73,7 @@ ALLOWED = {
     ("sources/writers.py", "limit(limit).toPandas()"):
         "explicit limit",
     # heavy-hitter candidate summaries: bounded by n_partitions x
-    # capacity rows (the Misra-Gries contract; shipped via Arrow, r9-s3)
+    # capacity rows (the Misra-Gries contract; shipped via Arrow)
     ("operators/keywords.py", "spdf = summaries.toPandas()"):
         "partitions x capacity bound",
     # dense set-similarity join (cross and self): left vocab collected

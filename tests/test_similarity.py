@@ -1,8 +1,25 @@
-"""BruteForceKNN degenerate embeddings: both physical paths must agree
-that a null cosine (null / zero-norm / dim-mismatched vector) is not a
-match."""
+"""kNN degenerate embeddings: every physical path must agree that a
+null cosine (null / zero-norm / dim-mismatched vector) is not a match.
+
+The numpy workers serve a query set that fits one broadcast; the Spark
+join paths are forced with :func:`_join_paths`.
+"""
+
+import contextlib
+
+import pytest
 
 from dataflow_spark.core.registry import get_operator
+from dataflow_spark.operators import similarity as S
+
+
+@contextlib.contextmanager
+def _join_paths():
+    """BruteForceKNN and LSHKNN take their Spark join paths inside."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(S.BruteForceKNN, "_matmul_topk", lambda *a: None)
+        mp.setattr(S.LSHKNN, "_fused_topk", lambda *a: None)
+        yield
 
 
 def _pairs(out):
@@ -43,12 +60,12 @@ def test_paths_agree_on_null_bearing_corpus(spark):
     df = spark.createDataFrame(rows, "id long, embedding array<double>")
     common = {"k": 3, "id_key": "id", "embedding_key": "embedding"}
     dense = get_operator("BruteForceKNN", common)
-    joinp = get_operator("BruteForceKNN",
-                         {**common, "dense_broadcast_mb": 0})
+    joinp = get_operator("BruteForceKNN", common)
     d = {(r["query_id"], r["neighbor_id"], round(r["cosine_sim"], 9))
          for r in dense.run(df).collect()}
-    j = {(r["query_id"], r["neighbor_id"], round(r["cosine_sim"], 9))
-         for r in joinp.run(df).collect()}
+    with _join_paths():
+        j = {(r["query_id"], r["neighbor_id"], round(r["cosine_sim"], 9))
+             for r in joinp.run(df).collect()}
     assert d == j
     assert d
 
@@ -67,18 +84,21 @@ def test_lsh_fused_agrees_with_join_path(spark):
     qs = df.filter("vec_id < 4")
     common = {"k": 5, "num_planes": 8, "num_bands": 4}
     fused = get_operator("LSHKNN", common)
-    joinp = get_operator("LSHKNN", {**common, "dense_broadcast_mb": 0})
+    joinp = get_operator("LSHKNN", common)
     fr = fused.run(df, queries=qs).collect()
-    jr = joinp.run(df, queries=qs).collect()
+    with _join_paths():
+        jr = joinp.run(df, queries=qs).collect()
     assert fused.last_path == "fused" and joinp.last_path == "join"
     assert _knn(fr) == _knn(jr)
     assert fr  # buckets non-empty at this density
 
 
-def test_lsh_fused_falls_back_when_queries_exceed_budget(spark):
+def test_lsh_fused_falls_back_when_queries_exceed_budget(spark,
+                                                         monkeypatch):
     rows = [(i, [float(i % 7), 1.0]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    op = get_operator("LSHKNN", {"k": 2, "max_broadcast_queries": 3})
+    monkeypatch.setattr(S, "LSH_ONE_PASS_MAX_QUERIES", 3)
+    op = get_operator("LSHKNN", {"k": 2})
     op.run(df, queries=df.filter("vec_id < 10")).collect()
     assert op.last_path == "join"
     # queries=None (self-kNN, unbounded query side) must never collect
@@ -99,11 +119,12 @@ def test_lsh_fused_skips_null_and_zero_norm(spark):
     assert all(r["cosine_sim"] is not None for r in out)
 
 
-def test_matmul_slabs_agree_with_single_broadcast_and_join(spark):
-    # the r7 sf10 sweep found a query matrix over dense_broadcast_mb
-    # fell back to the quadratic-exchange join path (engine timeout at
-    # 200k self-kNN queries); oversized query sides now run as
-    # byte-bounded slabs. All three paths must agree exactly.
+def test_matmul_slabs_agree_with_single_broadcast_and_join(spark,
+                                                           monkeypatch):
+    # a query matrix over the broadcast byte budget must not fall back to
+    # the quadratic-exchange join path (200k self-kNN queries time out
+    # there); it runs as byte-bounded slabs. All three paths must agree
+    # exactly.
     import random
 
     random.seed(3)
@@ -113,11 +134,13 @@ def test_matmul_slabs_agree_with_single_broadcast_and_join(spark):
     common = {"k": 3, "id_key": "id", "embedding_key": "embedding"}
     one = get_operator("BruteForceKNN", common)
     multi = get_operator("BruteForceKNN", common)
-    multi.dense_broadcast_mb = 0.01  # 300*16*8 bytes -> ~4 slabs
-    joinp = get_operator("BruteForceKNN", {**common, "dense_broadcast_mb": 0})
+    joinp = get_operator("BruteForceKNN", common)
     a = _knn(one.run(df).collect())
-    b = _knn(multi.run(df).collect())
-    c = _knn(joinp.run(df).collect())
+    with monkeypatch.context() as mp:
+        mp.setattr(S, "DENSE_BROADCAST_BYTES", 10485)  # 300*16*8 -> 4 slabs
+        b = _knn(multi.run(df).collect())
+    with _join_paths():
+        c = _knn(joinp.run(df).collect())
     assert a == b == c
     assert a
 
@@ -135,9 +158,10 @@ def test_lsh_paths_agree_with_zero_norm_vectors(spark):
     fused = get_operator("LSHKNN", common)
     a = {(r["query_id"], r["neighbor_id"], round(r["cosine_sim"], 9))
          for r in fused.run(df, queries=q).collect()}
-    joinp = get_operator("LSHKNN", {**common, "max_broadcast_queries": 0})
-    b = {(r["query_id"], r["neighbor_id"], round(r["cosine_sim"], 9))
-         for r in joinp.run(df, queries=q).collect()}
+    joinp = get_operator("LSHKNN", common)
+    with _join_paths():
+        b = {(r["query_id"], r["neighbor_id"], round(r["cosine_sim"], 9))
+             for r in joinp.run(df, queries=q).collect()}
     assert fused.last_path == "fused" and joinp.last_path == "join"
     assert a == b
     assert all(c is not None for _, _, c in b)
@@ -147,18 +171,20 @@ def test_lsh_paths_agree_with_zero_norm_vectors(spark):
 
 def test_matmul_k1_ties_to_smaller_id_with_zero_norms(spark):
     """k == 1 takes a distinct fast path in the dense worker (row max +
-    single-pass fused mask, r8): exact-duplicate vectors must still tie
-    to the smaller neighbor id, zero-norm rows must produce and receive
-    no matches, and the result must agree with the exact join path."""
+    single-pass fused mask, no partition copy): exact-duplicate vectors
+    must still tie to the smaller neighbor id, zero-norm rows must
+    produce and receive no matches, and the result must agree with the
+    exact join path."""
     dup = [0.6, 0.8]
     rows = ([(i, dup) for i in (7, 3, 5)]          # byte-identical trio
             + [(10, [0.0, 0.0]), (11, [1.0, 0.0]), (12, [0.99, 0.02])])
     df = spark.createDataFrame(rows, "id long, embedding array<double>")
     common = {"k": 1, "id_key": "id", "embedding_key": "embedding"}
     dense = get_operator("BruteForceKNN", common)
-    joinp = get_operator("BruteForceKNN", {**common, "dense_broadcast_mb": 0})
+    joinp = get_operator("BruteForceKNN", common)
     d = _knn(dense.run(df).collect())
-    j = _knn(joinp.run(df).collect())
+    with _join_paths():
+        j = _knn(joinp.run(df).collect())
     assert d == j
     top = {(q, n) for q, n, _ in d}
     # duplicates pair with the SMALLEST other duplicate id
@@ -182,9 +208,10 @@ def test_matmul_k3_ties_to_smaller_id_with_zero_norms(spark):
     df = spark.createDataFrame(rows, "id long, embedding array<double>")
     common = {"k": 3, "id_key": "id", "embedding_key": "embedding"}
     dense = get_operator("BruteForceKNN", common)
-    joinp = get_operator("BruteForceKNN", {**common, "dense_broadcast_mb": 0})
+    joinp = get_operator("BruteForceKNN", common)
     d = _knn(dense.run(df).collect())
-    j = _knn(joinp.run(df).collect())
+    with _join_paths():
+        j = _knn(joinp.run(df).collect())
     assert d == j
     # per-query ranked neighbor order: cosine desc, id asc
     by_q = {}
@@ -211,16 +238,48 @@ def test_matmul_duplicate_query_ids_agree_with_join_path(spark):
     df = spark.createDataFrame(rows, "id long, embedding array<double>")
     common = {"k": 2, "id_key": "id", "embedding_key": "embedding"}
     dense = get_operator("BruteForceKNN", common)
-    joinp = get_operator("BruteForceKNN", {**common, "dense_broadcast_mb": 0})
+    joinp = get_operator("BruteForceKNN", common)
     d = _knn(dense.run(df).collect())
-    j = _knn(joinp.run(df).collect())
+    with _join_paths():
+        j = _knn(joinp.run(df).collect())
     assert d == j
     # no self pair for either physical row of id 1
     assert not any(q == n for q, n, _ in d)
 
 
+def test_matmul_slab_cap_refuses(spark, monkeypatch):
+    """Past MAX_QUERY_SLABS the dense path refuses and names the ANN
+    operators; it must not fall back to the quadratic join path."""
+    rows = [(i, [float(i), 1.0, 0.5, 2.0]) for i in range(1, 41)]
+    df = spark.createDataFrame(rows, "id long, embedding array<double>")
+    monkeypatch.setattr(S, "DENSE_BROADCAST_BYTES", 256)  # 1280 B -> 5
+    monkeypatch.setattr(S, "MAX_QUERY_SLABS", 4)
+    op = get_operator("BruteForceKNN",
+                      {"k": 2, "id_key": "id", "embedding_key": "embedding"})
+    with pytest.raises(ValueError, match="LSHKNN or IVFKNN"):
+        op.run(df)
+    monkeypatch.setattr(S, "MAX_QUERY_SLABS", 5)
+    assert len(op.run(df).collect()) == 2 * len(rows)
+
+
+def test_ivf_excludes_null_cosine(spark):
+    """IVFKNN ranks with the same rule as the other kNN operators: a
+    zero-norm or NULL vector is never a neighbor, and a zero-norm query
+    has no rows. Probing every cell makes it exact, so it must return
+    BruteForceKNN's rows."""
+    rows = [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0]), (4, None),
+            (5, [0.8, 0.2]), (6, [0.7, 0.3]), (7, [0.1, 0.9])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    ivf = get_operator("IVFKNN", {"k": 3, "n_cells": 2, "n_probe": 2})
+    out = _knn(ivf.run(df).collect())
+    assert all(c is not None for _, _, c in out)
+    assert not any(q in (3, 4) or n in (3, 4) for q, n, _ in out)
+    brute = get_operator("BruteForceKNN", {"k": 3})
+    assert out == _knn(brute.run(df).collect())
+
+
 def test_dense_worker_preallocates_block_buffers_once(monkeypatch):
-    """ENGINE RULE (r8): GEMM workers preallocate their block buffers
+    """ENGINE RULE: GEMM workers preallocate their block buffers
     ONCE per batch and compute via out= — freshly-mmapped numpy
     temporaries first-touch-fault at ~50MB/s on this VM class, so a
     fresh 128MB allocation per block across 32 concurrent workers is a
