@@ -2428,9 +2428,9 @@ banded AS (SELECT doc_id AS _id, b.band,
              array_to_string(s[b.band * {rows} + 1 : b.band * {rows} + {rows}], ',') AS h
            FROM sig, (SELECT unnest(generate_series(0, {num_bands - 1})) AS band) b
            UNION ALL
-           -- identity pseudo-band: the operator collapses docs with
-           -- IDENTICAL full signatures and links them unconditionally
-           -- (dedup.py:_collapse_exact); star edges within ordinary
+           -- identity pseudo-band: the operator links docs with
+           -- IDENTICAL full signatures unconditionally to their min id
+           -- (dedup.py:_NearDupBase._window_edges); star edges within ordinary
            -- band buckets can miss that link when the bucket root
            -- fails the similarity verify, so the oracle must band on
            -- the full signature too (the verify passes trivially at

@@ -9,13 +9,15 @@ key or ingest ``_row_id``), never partition order.
 Scale design:
   - exact dedup: hash + row_number window — one shuffle on the hash key,
     map-side combinable, skew-safe (hash keys are uniform).
-  - near-dup: signature -> band explode -> bucket groupBy star
-    expansion -> verified candidate edges -> connected components
-    (bounded-size driver union-find, distributed min-label propagation
-    above the bound) -> keep rows whose id equals their component's min.
+  - near-dup: signature -> band explode carrying the signature -> one
+    (band, h) shuffle whose windows yield verified star edges from each
+    bucket's min id plus identical-signature rep edges
+    (``_NearDupBase._window_edges``) -> connected components
+    (bounded-size driver union-find, distributed star contraction above
+    the bound) -> keep rows whose id equals their component's min.
     No O(n^2) over the corpus anywhere, unlike the reference's greedy
-    loops (simhash_deduplicate_filter.py:56-91) — quadratic work is
-    confined to the signature-verified candidate pairs, as in LSH.
+    loops (simhash_deduplicate_filter.py:56-91) — verify work is linear
+    in the banded rows, as in LSH.
 """
 
 from __future__ import annotations
@@ -416,133 +418,53 @@ class _NearDupBase(_BaseDedup):
                 p.unpersist()
         return self._keep_components(df, comp, order_col)
 
-    def _collapse_exact(self, sigs: DataFrame, key: str,
-                        pins: list[DataFrame]) -> tuple[DataFrame, DataFrame]:
-        """Collapse rows with IDENTICAL signatures to one representative.
-
-        Degenerate-corpus armor: a billion byte-identical docs share one
-        signature, hence one LSH bucket — and the bucket's collect_list
-        would materialize every id in a single task (OOM at scale).
-        Collapsing first bounds every bucket by the number of DISTINCT
-        signatures. The running-frame window streams through arbitrarily
-        large groups via the external sorter (spills, never buffers the
-        group), unlike an array aggregation.
-
-        Returns (reps, exact_edges): ``reps`` = one row per distinct
-        signature (min ``_nd_id``); ``exact_edges`` = (rep, dup) pairs
-        linking collapsed rows. Survivors are IDENTICAL to banding the
-        full frame: identical signatures have identical band keys and
-        identical verify outcomes, so a dup's connectivity through its
-        rep equals its direct connectivity.
-
-        The window output is PERSISTED and appended to ``pins``: both
-        returned frames (and the caller's signature lookups — every
-        candidate-pair id is a rep) read one cached pass. Unpersisted,
-        Catalyst column-prunes the two branches differently (the reps
-        branch carries the signature, the edges branch only ids), so the
-        corpus-wide signature UDF + window exchange + sort would run
-        TWICE — seen in the executed plan as two separate
-        ShuffleQueryStages. One exchange now carries strictly fewer
-        total bytes than the two it replaces, at any scale; the cache
-        adds 8 bytes/row over the signature persist it supersedes.
-
-        :meth:`_dedup` releases the cache once components have consumed
-        it. Left cached, Spark's CacheManager would ``sameResult``-match
-        the (deterministic) window plan of the NEXT invocation over the
-        same input and silently serve it the previous invocation's rows.
-        """
-        # SQL-string window: one parse instead of the Window-API
-        # py4j chain. min-over-partition rather than a
-        # first-ordered form: identical value (the group's min id), but
-        # ``first`` is a non-deterministic expression, which breaks
-        # ``sameResult`` so the persist above it could never be matched
-        # (every consumer recomputed the window), and its ORDER BY
-        # forced a (key, id) sort where min needs only the key grouping.
-        # ``key`` is a trusted engine-internal SQL fragment.
-        with_rep = sigs.selectExpr(
-            "*",
-            f"min(_nd_id) OVER (PARTITION BY {key}) AS _rep").persist()
-        pins.append(with_rep)
-        reps = with_rep.filter("_nd_id = _rep").drop("_rep")
-        exact_edges = (
-            with_rep.filter("_nd_id != _rep")
-            .selectExpr("_rep AS src", "_nd_id AS dst")
-        )
-        return reps, exact_edges
-
     @staticmethod
-    def _bucket_pairs(banded: DataFrame,
-                      verify_expr: str | None = None) -> DataFrame:
-        """Distinct candidate (src, dst) pairs of the LSH buckets of
-        ``banded``: DataFrame[_nd_id, band, h].
+    def _window_edges(banded: DataFrame, verify: Column) -> DataFrame:
+        """Distinct verified (src, dst) edges of the LSH buckets of
+        ``banded``: DataFrame[_nd_id, _v, band, h], one row per (row,
+        band) carrying the row's signature ``_v``.
 
-        ``verify_expr``: for FIXED-WIDTH signatures small enough to carry
-        through the bucket shuffle, ``banded`` additionally holds the
-        signature as ``_v``, pairs come out with ``_va``/``_vb``
-        attached, and this SQL predicate over them verifies each pair
-        in place of two signature-lookup joins (guide §2.4: remove
-        shuffles outright). At scale the joins re-shuffle or
-        re-broadcast the corpus-sized rep table twice per run; carrying
-        an 8-byte value per banded row costs num_bands*8 bytes per doc
-        in one shuffle instead. Only used where the signature is a
-        single long (SimHash); array signatures (MinHash 64 longs,
-        embeddings) would multiply the bucket collect_list buffers, so
-        their callers verify the returned pairs with
-        :meth:`_lookup_verify`.
+        One shuffle on (band, h) feeds two window aggregates in the same
+        stage: the bucket anchor ``_a = min(_nd_id)`` with its signature
+        ``_a_v`` over (band, h), and the identical-signature
+        representative ``_rep = min(_nd_id)`` over (band, h, _v). Each row
+        then emits at most one edge:
+          - (_rep, _nd_id) when it is not its own rep: identical
+            signatures link unconditionally;
+          - (_a, _nd_id) when it is its own rep, is not the anchor, and
+            ``verify`` — a predicate over the anchor's signature ``_a_v``
+            and the row's ``_v`` — holds.
+        That is a verified star from the bucket minimum over the bucket's
+        distinct signatures plus rep edges for their copies. The bucket
+        minimum is always a rep, and identical signatures share every
+        bucket, so a rep within a bucket is the global min id of its
+        signature; no exact-signature collapse pass is needed first.
+
+        Degenerate corpora (a billion byte-identical docs in one bucket)
+        stream through the window's external buffer, which spills past
+        ``spark.sql.windowExec.buffer.spill.threshold`` rows instead of
+        holding the bucket in one array. A member that verifies against
+        another member but not against the anchor is not linked by that
+        bucket; the reference's datasketch-LSH greedy insert does not
+        verify at all, so precision is still >= reference.
         """
-        # one shuffle (groupBy bucket) + in-bucket edge expansion instead
-        # of a two-sided self-join on (band, h): same components, half
-        # the shuffled bytes. A bucket of size k expands to a star: k-1
-        # edges anchoring every id to the bucket min — the components of
-        # all pairs through that bucket, linear not quadratic. The
-        # reference's datasketch-LSH greedy insert is the same star shape
-        # and does not verify at all; verify runs on the star edges, so
-        # precision is still >= reference. A member that verifies against
-        # another member but not against the anchor is not linked by
-        # that bucket.
-        carry = verify_expr is not None
-        # sort_array over struct(_nd_id, _v) orders by _nd_id first —
-        # _nd_id is unique within a bucket (reps), so the star anchor is
-        # the same as in the id-only form and the same buckets emit the
-        # same (src, dst) pairs.
-        elem = "struct(_nd_id, _v)" if carry else "_nd_id"
-        buckets = (
-            banded.groupBy("band", "h")
-            .agg(F.expr(f"sort_array(collect_list({elem})) AS _ids"))
-            .filter("size(_ids) > 1")
-        )
-        # single-parse SQL string: one JVM parse instead of ~100+ py4j
-        # round trips for the Column-lambda form. inline() = explode +
-        # struct-splat in one generator select (same trick as banding).
-        x = "element_at(_ids, 1)"
-        if carry:
-            edge = (f"named_struct('src', {x}._nd_id, 'dst', y._nd_id,"
-                    f" '_va', {x}._v, '_vb', y._v)")
-        else:
-            edge = f"named_struct('src', {x}, 'dst', y)"
-        pairs = buckets.selectExpr(
-            f"inline(transform(slice(_ids, 2, size(_ids) - 1), y -> {edge}))")
-        if not carry:
-            return pairs.distinct()
-        # verify as a codegen'd filter fused into the expansion stage —
-        # verify_expr is a pure function of (src, dst) through their
-        # signatures, so filter-then-distinct keeps exactly the pairs a
-        # distinct-then-join-verify keeps, while the distinct exchange
-        # sees only surviving pairs.
-        return pairs.filter(verify_expr).select("src", "dst").distinct()
-
-    @staticmethod
-    def _lookup_verify(pairs: DataFrame, reps: DataFrame,
-                       cond: Column | str) -> DataFrame:
-        """Pairs whose signatures satisfy ``cond`` over ``_va``/``_vb``:
-        both ids look their signature up in ``reps`` = DataFrame[_nd_id,
-        signature] (every pair id is a rep)."""
-        return (
-            pairs.join(reps.toDF("src", "_va"), "src")
-            .join(reps.toDF("dst", "_vb"), "dst")
-            .filter(cond)
-            .select("src", "dst")
-        )
+        # the (band, h) window sits below the (band, h, _v) one
+        # (TransposeWindow), so both read one hashpartitioning(band, h);
+        # ordering the whole-bucket frame by _v lets one sort on
+        # (band, h, _v) serve both. min_by over plain columns, not
+        # min(struct(_nd_id, _v)): a struct argument is pre-projected
+        # below the exchange and would ship every signature twice.
+        bucket = ("PARTITION BY band, h ORDER BY _v ROWS BETWEEN "
+                  "UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING")
+        rows = banded.selectExpr(
+            "_nd_id", "_v",
+            f"min(_nd_id) OVER ({bucket}) AS _a",
+            f"min_by(_v, _nd_id) OVER ({bucket}) AS _a_v",
+            "min(_nd_id) OVER (PARTITION BY band, h, _v) AS _rep")
+        nd, rep, anchor = F.col("_nd_id"), F.col("_rep"), F.col("_a")
+        src = F.when(nd != rep, rep).when((nd != anchor) & verify, anchor)
+        return (rows.select(src.alias("src"), nd.alias("dst"))
+                .where("src IS NOT NULL").distinct())
 
     def _keep_components(self, df: DataFrame, comp: DataFrame,
                          order_col: str) -> DataFrame:
@@ -624,28 +546,18 @@ class MinHashDeduplicateFilter(_NearDupBase):
         # project-then-dedup: only (id, signature) flows through banding,
         # verify, and components — the scan on this branch reads just
         # [order_col, input_key]; full rows join back on survivors only.
-        # The signature pass is persisted INSIDE _collapse_exact (window
-        # output) — one cached materialization feeds banding, the exact
-        # edges, and the verify lookups (every pair id is a rep).
         # spread_for_udf: under-split inputs (single-row-group files)
         # would run the signature kernel on one core; spreading the narrow
         # projection is a no-op whenever the scan already parallelizes.
         sigs = spread_for_udf(
             keyed.select("_nd_id", self.input_key)).select(
             F.col("_nd_id"), sig_udf(F.col(self.input_key)).alias("_sig"))
-        # exact-signature collapse: bounds bucket sizes on degenerate
-        # (mass-duplicate) corpora; survivors provably unchanged
-        # (single-parse expr strings here and below: same trees as the
-        # Column-lambda forms, ~10x fewer py4j round trips)
-        reps, exact_edges = self._collapse_exact(
-            sigs, "md5(concat_ws(',', transform(_sig, x -> cast(x as string))))",
-            pins)
-        # inline() = explode + struct-splat in one generator select
-        banded = reps.selectExpr("_nd_id", f"inline({bands_sql})")
-        est_sql = (f"{self._est_sql('_va', '_vb')} >= "
-                   f"cast({float(self.threshold)!r} as double)")
-        return (self._lookup_verify(self._bucket_pairs(banded), reps, est_sql)
-                .union(exact_edges))
+        # inline() = explode + struct-splat in one generator select; the
+        # signature rides along as _v (num_perm * 8 bytes per banded row)
+        banded = sigs.selectExpr("_nd_id", "_sig AS _v", f"inline({bands_sql})")
+        return self._window_edges(banded, F.expr(
+            f"{self._est_sql('_a_v', '_v')} >= "
+            f"cast({float(self.threshold)!r} as double)"))
 
 
 @OPERATOR_REGISTRY.register()
@@ -673,32 +585,15 @@ class SimHashDeduplicateFilter(_NearDupBase):
         sim_udf = (H.simhash_md5_udf(self.shingle_n) if self.hash_impl == "md5"
                    else H.simhash64_udf(self.shingle_n))
         # project-then-dedup: only (id, simhash) feeds banding + Hamming
-        # verify; the collapse window output is persisted inside
-        # _collapse_exact — one cached pass feeds every consumer.
-        # spread_for_udf: see MinHashDeduplicateFilter — cores-wide
+        # verify. spread_for_udf: see MinHashDeduplicateFilter — cores-wide
         # signature stage on under-split inputs, no-op otherwise.
         sims = spread_for_udf(
             keyed.select("_nd_id", self.input_key)).select(
-            F.col("_nd_id"), sim_udf(F.col(self.input_key)).alias("_simhash"))
-        # exact-signature collapse (see _collapse_exact): degenerate-
-        # corpus bucket armor, survivors unchanged
-        reps, exact_edges = self._collapse_exact(sims, "_simhash", pins)
-        # single-parse expr strings: same trees as the Column forms,
-        # ~10x fewer py4j round trips per plan build; inline() =
-        # explode + struct-splat in one generator select. The 8-byte
-        # simhash rides along as _v: Hamming verify becomes a
-        # filter fused into the pair-expansion stage instead of two
-        # signature-lookup joins against the rep table (guide §2.4/§3
-        # — at scale those joins re-shuffle the corpus-sized rep frame
-        # twice; the carry costs num_bands*8 bytes per doc in the one
-        # bucket shuffle).
-        banded = reps.selectExpr(
-            "_nd_id", "_simhash AS _v",
-            f"inline({H.simhash_bands_sql('_simhash')})")
-
-        ham_sql = f"bit_count(_va ^ _vb) <= {int(self.max_hamming)}"
-
-        return self._bucket_pairs(banded, ham_sql).union(exact_edges)
+            F.col("_nd_id"), sim_udf(F.col(self.input_key)).alias("_v"))
+        banded = sims.selectExpr(
+            "_nd_id", "_v", f"inline({H.simhash_bands_sql('_v')})")
+        return self._window_edges(banded, F.expr(
+            f"bit_count(_a_v ^ _v) <= {int(self.max_hamming)}"))
 
 
 @OPERATOR_REGISTRY.register()
@@ -725,26 +620,16 @@ class SemDeduplicateFilter(_NearDupBase):
 
     def _edges(self, keyed: DataFrame, pins: list[DataFrame]) -> DataFrame:
         # vectorized sign-bit band keys (functions/vector.py) — the
-        # per-plane expression tree is CodegenFallback, ~1000x slower
+        # per-plane expression tree is CodegenFallback, ~1000x slower.
+        # A NULL or empty embedding has no band keys, so its row never
+        # enters a bucket and survives as a singleton.
         bands_udf = V.hyperplane_bands_udf(self.num_planes, self.num_bands, self.seed)
-        # exact-embedding collapse (see _collapse_exact): byte-identical
-        # vectors band once, dups link via rep edges
-        emb_rows = keyed.select("_nd_id", self.input_key)
-        reps, exact_edges = self._collapse_exact(
-            emb_rows,
-            f"md5(concat_ws(',', transform({_bq(self.input_key)}, "
-            "x -> cast(x as string))))",
-            pins)
-        banded = reps.select(
-            "_nd_id",
-            F.posexplode(bands_udf(F.col(self.input_key))).alias("band", "h"),
-        )
-
-        # every pair id is a rep; reps (cached by _collapse_exact)
-        # carries (_nd_id, embedding) — no second scan of df
-        cos = V.cosine(F.col("_va"), F.col("_vb")) >= 1.0 - self.eps
-        return (self._lookup_verify(self._bucket_pairs(banded), reps, cos)
-                .union(exact_edges))
+        emb = F.col(self.input_key)
+        banded = keyed.select(
+            "_nd_id", emb.alias("_v"),
+            F.posexplode(bands_udf(emb)).alias("band", "h"))
+        return self._window_edges(
+            banded, V.cosine(F.col("_a_v"), F.col("_v")) >= 1.0 - self.eps)
 
 
 @OPERATOR_REGISTRY.register()
@@ -798,7 +683,7 @@ class IncrementalMinHashDedupFilter(MinHashDeduplicateFilter):
                      "_eid")
                .withColumn("_est", F.expr(self._est_sql("_sig", "_esig"))))
         # eager localCheckpoint scopes the two signature caches to THIS
-        # invocation (see _collapse_exact): matched is the last
+        # invocation (tests/test_cache_scope.py): matched is the last
         # consumer of new_sigs/ex_sigs, and both are deterministic plans
         # a later run() over the same input would otherwise be silently
         # served by the CacheManager (sameResult match). The checkpoint

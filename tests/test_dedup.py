@@ -221,9 +221,11 @@ def test_simhash_md5_udf_matches_kernel(spark):
 
 
 def test_near_dup_degenerate_mass_duplicates(spark):
-    """5000 byte-identical docs + 2 distinct: exact-signature collapse
-    keeps every LSH bucket at distinct-signature size (no giant
-    collect_list task) and survivors are the 3 true representatives."""
+    """5000 byte-identical docs + 2 distinct: the copies fill one
+    window partition per band (streamed through the window's spillable
+    buffer, never one array in one task), each links to its
+    identical-signature representative, and survivors are the 3 true
+    representatives."""
     rows = [(i, "exactly the same spam document body repeated verbatim " * 5)
             for i in range(5000)]
     rows += [(5000, "a unique document about distributed query engines " * 5),
@@ -245,6 +247,144 @@ def test_sem_dedup_degenerate_mass_duplicates(spark):
                         "eps": 0.01}).run(df)
     ids = sorted(r["id"] for r in out.collect())
     assert ids == [0, 3000]
+
+
+def test_sem_dedup_null_embedding_rows_survive(spark):
+    """A NULL or empty embedding has no band keys: each such row is a
+    singleton, never one cluster of every embedding-less row."""
+    rows = [(1, [1.0, 0.0, 0.0]), (2, None), (3, [0.0, 1.0, 0.0]),
+            (4, None), (5, []), (6, [0.0, 0.0, 1.0])]
+    df = spark.createDataFrame(rows, "id long, embedding array<double>")
+    out = get_operator("SemDeduplicateFilter",
+                       {"embedding_key": "embedding", "order_key": "id"}).run(df)
+    assert sorted(r["id"] for r in out.collect()) == [1, 2, 3, 4, 5, 6]
+
+
+def _stage_spill_bytes(spark, group: str) -> int:
+    """Bytes spilled (memory + disk) by the stages of job group ``group``."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    total = 0
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds:
+            st = store.lastStageAttempt(sid)
+            total += st.memoryBytesSpilled() + st.diskBytesSpilled()
+    return total
+
+
+@pytest.fixture()
+def job_group(spark):
+    """Run the test's jobs under a fresh job group; yields its id."""
+    import uuid
+
+    group = f"test-{uuid.uuid4().hex}"
+    spark.sparkContext.setJobGroup(group, group)
+    yield group
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    spark.sparkContext.setLocalProperty("spark.job.description", None)
+
+
+@pytest.fixture()
+def tiny_window_buffer(spark):
+    """Window buffers hold 64 rows and spill beyond, for one test."""
+    keys = ("spark.sql.windowExec.buffer.in.memory.threshold",
+            "spark.sql.windowExec.buffer.spill.threshold")
+    old = {k: spark.conf.get(k) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "64")
+    yield
+    for k, v in old.items():
+        spark.conf.set(k, v)
+
+
+def test_degenerate_mass_duplicates_survive_window_spill(
+        spark, tiny_window_buffer, job_group):
+    """The giant-bucket window partitions of the degenerate corpora
+    spill (64-row buffers) and the survivors are unchanged."""
+    test_near_dup_degenerate_mass_duplicates(spark)
+    test_sem_dedup_degenerate_mass_duplicates(spark)
+    assert _stage_spill_bytes(spark, job_group) > 0
+
+
+def _banded(spark, rows):
+    return spark.createDataFrame(rows, "_nd_id long, _v long, band int, h long")
+
+
+def test_window_edges_anchor_fails_verify(spark):
+    """Bucket {0, 1, 2}: 1 and 2 share a signature and fail verify
+    against the anchor 0. The only edge is the rep edge (1, 2)."""
+    from dataflow_spark.operators.filters.dedup import _NearDupBase
+
+    banded = _banded(spark, [(0, 100, 0, 7), (1, 5, 0, 7), (2, 5, 0, 7)])
+    edges = _NearDupBase._window_edges(banded,
+                                       F.expr("abs(_a_v - _v) <= 3"))
+    assert {tuple(r) for r in edges.collect()} == {(1, 2)}
+
+
+def _star_collapse_edges(rows, verify):
+    """Reference edge set: collapse identical signatures to their min id
+    (rep, dup edges), then star each bucket of reps from its min id
+    over verified members."""
+    from collections import defaultdict
+
+    sig = {i: v for i, v, _, _ in rows}
+    rep: dict[int, int] = {}
+    for i, v in sig.items():
+        rep[v] = min(rep.get(v, i), i)
+    edges = {(rep[v], i) for i, v in sig.items() if rep[v] != i}
+    buckets = defaultdict(set)
+    for i, v, band, h in rows:
+        if rep[v] == i:
+            buckets[(band, h)].add(i)
+    for members in buckets.values():
+        a = min(members)
+        edges |= {(a, m) for m in members if m != a and verify(sig[a], sig[m])}
+    return edges
+
+
+def test_window_edges_match_star_collapse_bruteforce(spark):
+    """Seeded random buckets with many identical signatures: the window
+    kernel's edges equal collapse-then-star edges exactly."""
+    import random
+
+    from dataflow_spark.operators.filters.dedup import _NearDupBase
+
+    rng = random.Random(11)
+    ids = list(range(400))
+    rng.shuffle(ids)
+    sig = {i: rng.randrange(60) for i in ids}
+    # band keys are a function of (band, signature), as for real LSH
+    key = {(b, v): rng.randrange(8) for b in range(3) for v in range(60)}
+    rows = [(i, v, b, key[(b, v)]) for i, v in sig.items() for b in range(3)]
+    got = _NearDupBase._window_edges(_banded(spark, rows),
+                                     F.expr("abs(_a_v - _v) <= 6"))
+    want = _star_collapse_edges(rows, lambda a, b: abs(a - b) <= 6)
+    assert {tuple(r) for r in got.collect()} == want
+    assert len(want) > 400 - 60  # rep edges and verified star edges
+
+
+def test_minhash_job_count_guard(spark, job_group):
+    """MinHash dedup plus a write over a small seeded corpus runs a
+    pinned number of Spark jobs, so a plan regression (an extra cache,
+    lookup join or collect in the near-dup tail) fails here and not
+    only in the benchmark."""
+    import random
+
+    rng = random.Random(5)
+    words = [f"w{i}" for i in range(500)]
+    bases = [[rng.choice(words) for _ in range(80)] for _ in range(60)]
+    rows = []
+    for i in range(600):
+        doc = list(bases[rng.randrange(60)]) if i % 2 else \
+            [rng.choice(words) for _ in range(80)]
+        doc[rng.randrange(80)] = rng.choice(words)  # one-word edit
+        rows.append((i, " ".join(doc)))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = get_operator("MinHashDeduplicateFilter",
+                       {"input_key": "text", "order_key": "doc_id"}).run(df)
+    out.write.format("noop").mode("overwrite").save()
+    assert len(spark.sparkContext.statusTracker()
+               .getJobIdsForGroup(job_group)) == 5
 
 
 class TestClusterAssignment:
