@@ -3432,11 +3432,8 @@ def r_answer_extraction(spark, sf_dir):
     return op.run(docs).select("doc_id", "final_answer")
 
 
-@q("r_token_stats", r"""
-WITH t AS (
-  SELECT CASE WHEN len(trim(text)) = 0 THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tok
-  FROM documents)
+@q("r_token_stats", f"""
+WITH t AS (SELECT len({W('text')}) AS n_tok FROM documents)
 SELECT count(*) AS n, sum(n_tok)::BIGINT AS total_tokens,
        round(avg(n_tok), 6) AS avg_tokens,
        min(n_tok) AS min_tokens, max(n_tok) AS max_tokens
@@ -3992,8 +3989,8 @@ def e_question_judges(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 # ---------------------------------------------------------------------------
-# round-2 additions: reasoning filters, paired threshold filters, code
-# filters, MinerU converters (VERDICT r1 items 2, 4)
+# reasoning filters, paired threshold filters, code filters, MinerU
+# converters: reference operator families the first contract left out
 # ---------------------------------------------------------------------------
 
 @q("x_reasoning_gt_filter", """

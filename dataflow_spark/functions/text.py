@@ -1,30 +1,62 @@
 """Text statistics as pure Column expressions (JVM-side, codegen-friendly).
 
-Every helper here compiles to built-in Spark SQL expressions — no Python
-UDFs — so filters built on them stay inside whole-stage codegen and can
-be partially pushed into the scan. Each function documents the exact
-semantics so the DuckDB oracle SQL in __spark_entry__.py can mirror it
-token for token.
+Every Column helper here compiles to built-in Spark SQL expressions — no
+Python UDFs — so filters built on them stay inside whole-stage codegen
+and can be partially pushed into the scan. Each function documents the
+exact semantics so the DuckDB oracle SQL in __spark_entry__.py can
+mirror it token for token. ``py_words`` and ``py_word_ngrams`` are the
+Python twins the pandas UDFs call.
 """
 
 from __future__ import annotations
 
+import re
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Word = maximal run of non-whitespace. Split on \s+ and drop empties so
-# leading/trailing whitespace doesn't create phantom words.
+# UDF closures call py_words and py_word_ngrams. Pickled by value, they
+# reach the Python workers without an import of the whole dataflow_spark
+# package, as in functions/hashing.py.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+# Word = maximal run of non-whitespace, whitespace = ASCII \s (Java's \s,
+# Python's under re.ASCII). Empties are dropped: no phantom words.
 WS_RE = r"\s+"
 SENT_RE = r"[.!?]+"
+_PY_WS = re.compile(WS_RE, re.ASCII)
 
 
 def words(col: Column) -> Column:
-    """array<string> of whitespace-delimited tokens, empties removed."""
+    """array<string> of whitespace-delimited tokens, empties removed;
+    NULL for NULL."""
     return F.filter(F.split(col, WS_RE), lambda x: x != F.lit(""))
 
 
 def word_count(col: Column) -> Column:
     return F.size(words(col))
+
+
+def squash_spaces(col: Column) -> Column:
+    """Whitespace runs collapsed to one space, ends trimmed: the words
+    joined by single spaces."""
+    return F.trim(F.regexp_replace(col, WS_RE, " "))
+
+
+def py_words(text: str | None) -> list[str]:
+    """Python twin of :func:`words`; ``[]`` for None or ``""``."""
+    return [w for w in _PY_WS.split(text) if w] if text else []
+
+
+def py_word_ngrams(ws: list[str], n: int) -> list[str]:
+    """Word n-grams in order, each joined by single spaces. A sequence
+    shorter than ``n`` words is one gram of the whole sequence (``""``
+    for no words), so a short text still matches a verbatim copy."""
+    if len(ws) < n:
+        return [" ".join(ws)]
+    return [" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)]
 
 
 def sentence_count(col: Column) -> Column:

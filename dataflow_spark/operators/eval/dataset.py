@@ -19,6 +19,15 @@ from dataflow_spark.core.registry import OPERATOR_REGISTRY
 from dataflow_spark.functions import text as T
 
 
+def norm_answer(col):
+    """Benchmark answer normaliser: lowercase, trim, strip characters
+    other than word characters, whitespace, '.' and '-', and collapse
+    whitespace runs to one space."""
+    c = F.lower(F.trim(col))
+    c = F.regexp_replace(c, r"[^\w\s.-]", "")
+    return F.regexp_replace(c, T.WS_RE, " ")
+
+
 @OPERATOR_REGISTRY.register()
 class AccuracyDatasetEvaluator(Operator):
     """Exact-match accuracy: avg(model == golden) after trim/lower
@@ -89,14 +98,8 @@ class UnifiedBenchDatasetEvaluator(Operator):
         self.input_keys = (answer_key, gt_key) + ((group_key,) if group_key else ())
         self.output_keys = ("n", "accuracy")
 
-    @staticmethod
-    def _norm(col):
-        c = F.lower(F.trim(col))
-        c = F.regexp_replace(c, r"[^\w\s.-]", "")
-        return F.regexp_replace(c, r"\s+", " ")
-
     def match_expr(self):
-        a, g = self._norm(F.col(self.answer_key)), self._norm(F.col(self.gt_key))
+        a, g = norm_answer(F.col(self.answer_key)), norm_answer(F.col(self.gt_key))
         if self.match_mode == "contains":
             m = (F.length(g) > 0) & a.contains(g)
         elif self.match_mode == "numeric":

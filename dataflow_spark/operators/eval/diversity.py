@@ -15,7 +15,6 @@ distributed.
 from __future__ import annotations
 
 import math
-import re
 from collections import Counter
 from typing import Any
 
@@ -28,8 +27,8 @@ from pyspark.sql.functions import pandas_udf
 
 from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
-
-_WS = re.compile(r"\s+", re.ASCII)
+from dataflow_spark.operators.eval.dataset import norm_answer
+from dataflow_spark.operators.eval.reference_metrics import lower_words
 
 
 def _bounded_sample(df: DataFrame, col: str, max_rows: int,
@@ -63,10 +62,6 @@ def _pinned_row(out: DataFrame, pinned: DataFrame | None) -> DataFrame:
     return out.sparkSession.createDataFrame([tuple(row)], out.schema)
 
 
-def _toks(s: str) -> list[str]:
-    return [t for t in _WS.split((s or "").lower()) if t]
-
-
 def cider_score(candidate: str, reference: str, max_n: int = 4) -> float:
     """CIDEr-style TF cosine over 1..4-grams, single reference.
 
@@ -75,7 +70,7 @@ def cider_score(candidate: str, reference: str, max_n: int = 4) -> float:
     vectors (IDF is uniform with a single-document corpus).
     """
     score = 0.0
-    c_toks, r_toks = _toks(candidate), _toks(reference)
+    c_toks, r_toks = lower_words(candidate), lower_words(reference)
     for n in range(1, max_n + 1):
         c = Counter(tuple(c_toks[i:i + n]) for i in range(len(c_toks) - n + 1))
         r = Counter(tuple(r_toks[i:i + n]) for i in range(len(r_toks) - n + 1))
@@ -241,14 +236,8 @@ class BenchDatasetEvaluator(Operator):
         self.input_keys = (answer_key, gt_key)
         self.output_keys = (match_key,)
 
-    @staticmethod
-    def _norm(col):
-        c = F.lower(F.trim(col))
-        c = F.regexp_replace(c, r"[^\w\s.-]", "")
-        return F.regexp_replace(c, r"\s+", " ")
-
     def score(self, df: DataFrame) -> DataFrame:
-        a, g = self._norm(F.col(self.answer_key)), self._norm(F.col(self.gt_key))
+        a, g = norm_answer(F.col(self.answer_key)), norm_answer(F.col(self.gt_key))
         an, gn = a.try_cast("double"), g.try_cast("double")
         num_eq = an.isNotNull() & gn.isNotNull() & (an == gn)
         return df.withColumn(self.match_key, (num_eq | (a == g)).cast("int"))

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from dataflow_spark.core.operator import Operator, ROW_ID, with_row_id
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
+from dataflow_spark.functions import text as T
 
 
 @OPERATOR_REGISTRY.register()
@@ -42,10 +43,7 @@ class PerplexitySampleEvaluator(Operator):
         id_col = self.order_key or ROW_ID
         if self.order_key is None:
             df = with_row_id(df)
-        words = F.filter(
-            F.split(F.lower(F.trim(F.col(self.input_key))), r"\s+"),
-            lambda w: w != "",
-        )
+        words = T.words(F.lower(F.col(self.input_key)))
         toks = df.select(F.col(id_col).alias("_pid"), F.explode(words).alias("_w"))
         counts = toks.groupBy("_w").agg(F.count("*").alias("_c"))
         total = counts.agg(F.sum("_c").alias("_total"))

@@ -10,7 +10,6 @@ deterministic, model-free.
 from __future__ import annotations
 
 import math
-import re
 from collections import Counter
 from typing import Any
 
@@ -22,17 +21,17 @@ from pyspark.sql.functions import pandas_udf
 
 from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
+from dataflow_spark.functions.text import py_words
 
-_WS = re.compile(r"\s+", re.ASCII)
 
-
-def _toks(s: str) -> list[str]:
-    return [t for t in _WS.split((s or "").lower()) if t]
+def lower_words(s: str | None) -> list[str]:
+    """Lowercased whitespace words, the tokens BLEU, F1 and CIDEr count."""
+    return [t.lower() for t in py_words(s)]
 
 
 def sentence_bleu(candidate: str, reference: str, max_n: int = 4) -> float:
     """BLEU-4 with add-1 smoothing on the modified n-gram precisions."""
-    c_toks, r_toks = _toks(candidate), _toks(reference)
+    c_toks, r_toks = lower_words(candidate), lower_words(reference)
     if not c_toks or not r_toks:
         return 0.0
     log_p = 0.0
@@ -47,7 +46,7 @@ def sentence_bleu(candidate: str, reference: str, max_n: int = 4) -> float:
 
 
 def token_f1(candidate: str, reference: str) -> float:
-    c_toks, r_toks = _toks(candidate), _toks(reference)
+    c_toks, r_toks = lower_words(candidate), lower_words(reference)
     if not c_toks or not r_toks:
         return float(c_toks == r_toks)
     common = Counter(c_toks) & Counter(r_toks)

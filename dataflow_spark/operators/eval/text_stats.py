@@ -86,8 +86,7 @@ class LangkitSampleEvaluator(Operator):
 
     def run(self, df: DataFrame, **kw: Any) -> DataFrame:
         c = F.col(self.input_key)
-        words = F.size(F.filter(F.split(F.trim(c), r"\s+"), lambda w: w != ""))
-        words = F.when(F.length(F.trim(c)) == 0, 0).otherwise(words)
+        words = T.word_count(c)
         sentences = F.greatest(
             F.size(F.filter(F.split(c, r"[.!?]+"), lambda s: F.trim(s) != "")),
             F.lit(1))

@@ -38,7 +38,6 @@ Scale design (100 TB corpus vs MB-scale benchmark):
 
 from __future__ import annotations
 
-import re as _re
 from typing import Any, Iterator
 
 import pandas as pd
@@ -48,9 +47,7 @@ from pyspark.sql import functions as F
 
 from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
-
-
-_WS_RE = _re.compile(r"\s+", _re.ASCII)
+from dataflow_spark.functions.text import py_word_ngrams, py_words
 
 # benchmark gram set budget for the broadcast-set path (approx bytes of
 # gram text; python set overhead adds ~2-3x on top). Benchmarks are
@@ -61,21 +58,12 @@ _BENCH_SET_BUDGET = 64 << 20
 
 def word_ngrams(text: str | None, n: int) -> list[str]:
     """Single-row gram kernel (module-level so properties are testable
-    without a SparkSession): sorted distinct non-empty word n-grams.
-
-    Word n-grams joined by single spaces: ASCII ``\\s+`` split,
-    empties dropped; texts shorter than ``n`` words contribute their
-    whole word sequence as one gram, so a verbatim short benchmark
-    answer still matches a verbatim copy.
+    without a SparkSession): the sorted distinct word n-grams of
+    ``functions/text.py``'s :func:`py_words` and :func:`py_word_ngrams`
+    (a text shorter than ``n`` words is one gram); no words, no grams.
     """
-    if not text:
-        return []
-    w = [x for x in _WS_RE.split(text) if x]
-    if not w:
-        return []
-    if len(w) < n:
-        return [" ".join(w)]
-    return sorted(set(" ".join(w[i:i + n]) for i in range(len(w) - n + 1)))
+    w = py_words(text)
+    return sorted(set(py_word_ngrams(w, n))) if w else []
 
 
 def _grams_udf(n: int):
@@ -109,18 +97,10 @@ def _contaminated_udf(n: int, bc):
     @pandas_udf("boolean")
     def contaminated(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         S = bc.value
-        split, join = _WS_RE.split, " ".join
 
         def one(t):
-            if not t:
-                return False
-            w = [x for x in split(t) if x]
-            if not w:
-                return False
-            if len(w) < n:
-                return join(w) in S
-            return any(join(w[i:i + n]) in S
-                       for i in range(len(w) - n + 1))
+            w = py_words(t)
+            return bool(w) and any(g in S for g in py_word_ngrams(w, n))
 
         for s in batches:
             yield s.map(one)

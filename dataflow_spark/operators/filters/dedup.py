@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from dataflow_spark.core.operator import Operator, ROW_ID, with_row_id
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
 from dataflow_spark.functions import hashing as H
+from dataflow_spark.functions import text as T
 from dataflow_spark.functions import vector as V
 from dataflow_spark.functions.pulls import bounded_pull
 from dataflow_spark.functions.spread import spread_for_udf
@@ -343,8 +344,7 @@ class CCNetDeduplicateFilter(_BaseDedup):
         c = F.lower(c)
         c = F.regexp_replace(c, r"[0-9]+", "")
         c = F.regexp_replace(c, r"[^\p{L}\s]", "")
-        c = F.trim(F.regexp_replace(c, r"\s+", " "))
-        return c
+        return T.squash_spaces(c)
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
         df, order_col = self._ordered(df)

@@ -202,9 +202,8 @@ class BM25RetrievalOperator(Operator):
 
     @staticmethod
     def tokenize(q: str) -> list[str]:
-        import re
-
-        return [t for t in re.split(r"\s+", q.strip().lower()) if t]
+        """Query twin of the document tokens ``lower(T.words(text))``."""
+        return [t.lower() for t in T.py_words(q)]
 
     def run(self, df: DataFrame, **kw: Any) -> DataFrame:
         from pyspark.sql import Window
@@ -425,11 +424,11 @@ class SourceOverlapMatrixOperator(Operator):
     duplicate each other (and should be cross-deduped or downweighted)
     BEFORE mixing a training corpus.
 
-    Gram semantics mirror the decontamination family
-    (``filters.decontaminate.word_ngrams``: ASCII whitespace split,
-    empties dropped, texts shorter than n words contribute their whole
-    word sequence), so the overlap matrix and the decontamination ops
-    agree on what a "gram" is.
+    Grams are ``filters.decontaminate.word_ngrams``, built on
+    ``functions/text.py``'s ``py_words`` and ``py_word_ngrams`` (texts
+    shorter than n words contribute their whole word sequence), so the
+    overlap matrix and the decontamination ops agree on what a "gram"
+    is.
 
     Scale shape: ONE shuffle of the distinct (group, gram) set — grams
     hash uniformly, map-side combinable — then a per-gram group-set

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from dataflow_spark.core.operator import Operator, with_row_id
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
+from dataflow_spark.functions import text as T
 from dataflow_spark.serving.base import LLMServing
 
 
@@ -211,8 +212,7 @@ class ReasoningTokenDatasetEvaluator(Operator):
         self.output_keys = ("n", "total_tokens", "avg_tokens", "min_tokens", "max_tokens")
 
     def run(self, df: DataFrame, **kw: Any) -> DataFrame:
-        toks = F.size(F.split(F.trim(F.col(self.input_key)), r"\s+"))
-        toks = F.when(F.length(F.trim(F.col(self.input_key))) == 0, 0).otherwise(toks)
+        toks = T.word_count(F.col(self.input_key))
         return df.select(toks.alias("_t")).agg(
             F.count("*").alias("n"),
             F.sum("_t").alias("total_tokens"),

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from dataflow_spark.core.operator import FilterOperator, Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
 from dataflow_spark.functions import text as T
+from dataflow_spark.functions.text import py_words
 
 
 def _extract_final_answer(src: Column) -> Column:
@@ -127,7 +128,6 @@ class ReasoningAnswerNgramFilter(Operator):
         n = self.ngrams
         cjk = re.compile(r"[\u4e00-\u9fff]")
         keep_zh = re.compile(r"[^\u4e00-\u9fff0-9a-z]")
-        ws = re.compile(r"\s+")
 
         def score_one(text) -> float:
             if text is None:
@@ -136,7 +136,7 @@ class ReasoningAnswerNgramFilter(Operator):
             if cjk.search(t):
                 units = list(keep_zh.sub("", t))
             else:
-                units = [w for w in ws.split(t) if w]
+                units = py_words(t)
             if len(units) < n:
                 return 1.0  # too short to repeat at this n
             grams = [tuple(units[i:i + n]) for i in range(len(units) - n + 1)]

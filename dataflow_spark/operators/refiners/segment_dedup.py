@@ -34,9 +34,8 @@ from pyspark.sql import functions as F
 from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
 from dataflow_spark.functions.pulls import bounded_pull
+from dataflow_spark.functions.text import py_words
 
-
-_WS_RE = _re.compile(r"\s+", _re.ASCII)
 
 # duplicated-tail collect budget for the broadcast-rebuild path:
 # entries and approximate key bytes; past either bound the original
@@ -48,12 +47,9 @@ _DUP_BYTES_BUDGET = 64 << 20
 def word_segments(text: str | None, k: int) -> list[str]:
     """Single-row segment kernel (module-level so properties are
     testable without a SparkSession): ordered consecutive
-    non-overlapping k-word windows (last may be shorter); empty/null
-    text -> empty list. ASCII ``\\s+`` split, empties dropped (mirror
-    of functions/text.words)."""
-    if not text:
-        return []
-    w = [x for x in _WS_RE.split(text) if x]
+    non-overlapping k-word windows of ``functions/text.py``'s
+    :func:`py_words` (last may be shorter); no words, no segments."""
+    w = py_words(text)
     return [" ".join(w[i * k:(i + 1) * k])
             for i in range((len(w) + k - 1) // k)]
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from dataflow_spark.core.operator import RefineOperator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
+from dataflow_spark.functions import text as T
 from dataflow_spark.operators.filters.rule_based import EN_STOPWORDS
 
 
@@ -33,7 +34,7 @@ class RemoveExtraSpacesRefiner(RefineOperator):
     remove_extra_spaces_refiner.py)."""
 
     def refine_expr(self, col: Column) -> Column:
-        return F.trim(F.regexp_replace(col, r"\s+", " "))
+        return T.squash_spaces(col)
 
 
 @OPERATOR_REGISTRY.register()
@@ -131,10 +132,8 @@ class RemoveStopwordsRefiner(RefineOperator):
         self.stopwords = stopwords or EN_STOPWORDS
 
     def refine_expr(self, col: Column) -> Column:
-        from dataflow_spark.functions.text import words
-
         sw = F.array(*[F.lit(s) for s in self.stopwords])
-        kept = F.filter(words(col), lambda x: ~F.array_contains(sw, F.lower(x)))
+        kept = F.filter(T.words(col), lambda x: ~F.array_contains(sw, F.lower(x)))
         return F.concat_ws(" ", kept)
 
 
@@ -160,8 +159,7 @@ class TextNormalizationRefiner(RefineOperator):
     text_normalization_refiner.py)."""
 
     def refine_expr(self, col: Column) -> Column:
-        c = F.translate(col, "‘’“”–—", "''\"\"--")
-        return F.trim(F.regexp_replace(c, r"\s+", " "))
+        return T.squash_spaces(F.translate(col, "‘’“”–—", "''\"\"--"))
 
 
 @OPERATOR_REGISTRY.register()

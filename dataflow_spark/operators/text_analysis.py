@@ -22,6 +22,7 @@ from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
 from dataflow_spark.functions import hashing as H
 from dataflow_spark.functions import text as T
+from dataflow_spark.functions.text import py_word_ngrams, py_words
 from dataflow_spark.operators.filters.rule_based import EN_STOPWORDS
 
 # Marker (stopword-like) vocabularies for the n-gram/marker-word language
@@ -51,12 +52,16 @@ def langid_expr(col: Column) -> Column:
     with no CSE, re-tokenizing every row 4x (~3x slower at sf0.1). The
     SQL-mirrorable definition is pinned by the t_langid oracle.
     """
+    return _langid_udf()(col)
+
+
+def _langid_udf():
+    """Arrow-batched marker-word langid UDF (see :func:`langid_expr`)."""
     import re
 
     from pyspark.sql.functions import pandas_udf
 
     markers = {lang: frozenset(ms) for lang, ms in LANG_MARKERS.items()}
-    ws_re = re.compile(r"\s+", re.ASCII)  # mirror Java \s
     cjk_re = re.compile(CJK_RE)
 
     def one(text: str | None) -> str | None:
@@ -64,7 +69,7 @@ def langid_expr(col: Column) -> Column:
             return None
         if cjk_re.search(text):
             return "zh"
-        toks = [w.lower() for w in ws_re.split(text) if w]
+        toks = [w.lower() for w in py_words(text)]
         best_lang, best_n = "und", 0
         for lang in ["es", "fr", "de", "en"]:  # later wins ties (en first)
             n = sum(1 for t in toks if t in markers[lang])
@@ -78,7 +83,7 @@ def langid_expr(col: Column) -> Column:
     def langid(s: pd.Series) -> pd.Series:
         return s.map(one)
 
-    return langid(col)
+    return langid
 
 
 @OPERATOR_REGISTRY.register()
@@ -183,21 +188,13 @@ def _ngram_ratio_udf(n: int):
     """Arrow-batched distinct-ngram-ratio UDF (lowercased whitespace
     words, n-grams joined by single spaces; whole sequence as one gram
     for docs shorter than n words)."""
-    import re
-
     from pyspark.sql.functions import pandas_udf
-
-    ws_re = re.compile(r"\s+", re.ASCII)  # mirror Java/RE2 ASCII \s
 
     def one(text: str):
         if text is None:
             return None
-        w = [x for x in ws_re.split(text.lower()) if x]
-        if len(w) >= n:
-            grams = [" ".join(w[i:i + n]) for i in range(len(w) - n + 1)]
-        else:
-            grams = [" ".join(w)]
-        return len(set(grams)) / len(grams) if grams else None
+        grams = py_word_ngrams(py_words(text.lower()), n)
+        return len(set(grams)) / len(grams)
 
     @pandas_udf("double")
     def ratio(s: pd.Series) -> pd.Series:
@@ -250,27 +247,20 @@ def _gopher_rep_udf(n: int, k: int):
     """Arrow-batched Gopher-repetition UDF: one pass computes
     (dup_segment_frac, top_ngram_char_frac, dup_ngram_char_frac) per
     the class docstring's exact definitions."""
-    import re
     from collections import Counter
 
     from pyspark.sql.functions import pandas_udf
 
-    ws_re = re.compile(r"\s+", re.ASCII)
-
     def one(text):
         if text is None:
             return (None, None, None)
-        w = [x for x in ws_re.split(text.lower()) if x]
+        w = py_words(text.lower())
         if not w:
             return (0.0, 0.0, 0.0)
         segs = [" ".join(w[i * k:(i + 1) * k])
                 for i in range((len(w) + k - 1) // k)]
         dup_seg = 1.0 - len(set(segs)) / len(segs)
-        if len(w) >= n:
-            grams = [" ".join(w[i:i + n]) for i in range(len(w) - n + 1)]
-        else:
-            grams = [" ".join(w)]
-        cnt = Counter(grams)
+        cnt = Counter(py_word_ngrams(w, n))
         cover = {g: c * len(g) for g, c in cnt.items()}
         total = sum(cover.values())
         if total == 0:

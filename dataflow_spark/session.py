@@ -25,10 +25,11 @@ def get_spark(
       - AQE enabled: runtime partition coalescing, skew-join splitting,
         and dynamic join-strategy switch (sort-merge -> broadcast).
       - Arrow enabled: vectorized pandas_udf / mapInPandas transfers.
-      - ``spark.sql.shuffle.partitions`` from $SPARK_GRAFT_CPUS locally;
+      - ``local[N]`` and ``spark.sql.shuffle.partitions`` = max(2N, 8),
+        N from $SPARK_GRAFT_CPUS, else the CPUs this process may run on;
         on a real cluster set it ~2-3x total cores (AQE coalesces down).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -9,7 +9,7 @@ Pipeline.py:624-713). Two Spark-native equivalents:
      This is the default and the honest mapping: Spark already streams
      partitions through the operator chain.
   2. ``stream_pipeline`` — Structured Streaming foreachBatch with a
-     checkpointLocation for exactly-once resume across restarts, for
+     checkpointLocation for at-least-once resume across restarts, for
      genuinely unbounded sources (file drops, Kafka).
 
 Event-time helpers (watermark + tumbling window) are provided for the
@@ -63,7 +63,11 @@ def stream_pipeline(stream_df: DataFrame, pipeline: Pipeline, output_path: str,
                     fmt: str = "parquet"):
     """readStream source -> pipeline per micro-batch -> sink with
     checkpointed resume. trigger_once processes available data and
-    stops (the reference's batch-resume semantics)."""
+    stops (the reference's batch-resume semantics).
+
+    Delivery is at-least-once: each batch appends, and Spark re-runs a
+    batch whose write finished but whose commit did not, so a restart
+    can write that batch twice (ROADMAP item 3)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         out = pipeline.forward(batch_df)

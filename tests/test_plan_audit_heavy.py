@@ -14,9 +14,9 @@ from dataflow_spark.plans import audit
 
 SF = "/root/testdata/sf0.001"
 
-# name -> max allowed Exchange nodes (ceiling = audited count at r5
-# plus headroom; q_pagerank's 10 shuffles are inherent to exact
-# fixed-point iteration, documented in VERDICT r4)
+# name -> max allowed Exchange nodes (ceiling = audited count plus
+# headroom; q_pagerank's 10 shuffles are inherent to exact fixed-point
+# iteration: every iteration joins the ranks back to the edges)
 HEAVY = {
     "q_pagerank": 14,
     "q_bm25_topk": 8,

@@ -1,5 +1,6 @@
 """Paired threshold filters, code filters, reasoning filters, and the
-MinerU-shaped converters (VERDICT r1 items 2, 4, 5)."""
+MinerU-shaped converters: reference operator families the first port
+left out."""
 
 import os
 

@@ -6,9 +6,10 @@ and zero vectors, at band widths 2, 8 and 16, and the sha256 of the band
 keys must not move. The digests were taken before the band keys moved
 to the shared ``hyperplane_keys`` kernel.
 
-The UDF closures of the vector and signature families must also unpickle
-in a Python process that cannot import ``dataflow_spark``: their modules
-are pickled by value, so a worker never imports the package.
+The UDF closures of the vector and signature families, and the text UDFs
+that call ``functions/text.py``'s word helpers, must also unpickle in a
+Python process that cannot import ``dataflow_spark``: those modules are
+pickled by value, so a worker never imports the package.
 """
 
 import hashlib
@@ -107,11 +108,17 @@ def _plain(s: pd.Series) -> list:
 def test_udf_closures_unpickle_without_the_package(spark, tmp_path):
     from dataflow_spark.functions import hashing as H
     from dataflow_spark.operators import similarity as S
+    from dataflow_spark.operators import text_analysis as TA
+    from dataflow_spark.operators.filters import decontaminate as D
 
     vecs = pd.Series([None if v is None else np.asarray(v, dtype=np.float64)
                       for v in _vectors(200)], dtype=object)
     texts = pd.Series(["", None, "a near duplicate text",
                        "a near duplicate text!"] * 5, dtype=object)
+    prose = pd.Series([None, "", " \t", "the cat and the hat is in",
+                       "die Katze und der Hut", "x\u00a0y x y x y",
+                       "a b a b a b a b a b a b"], dtype=object)
+    bench = types.SimpleNamespace(value=frozenset({"x y x", "a b"}))
     rng = np.random.default_rng(3)
     qm = rng.normal(size=(6, 16))
     bc = types.SimpleNamespace(value=(
@@ -129,6 +136,11 @@ def test_udf_closures_unpickle_without_the_package(spark, tmp_path):
         "simhash64_udf": (H.simhash64_udf(4).func, (texts,)),
         "_dense_topk_worker": (
             worker_rows, (S._dense_topk_worker(bc, 3, False), batch)),
+        "_langid_udf": (TA._langid_udf().func, (prose,)),
+        "_ngram_ratio_udf": (TA._ngram_ratio_udf(3).func, (prose,)),
+        "_gopher_rep_udf": (TA._gopher_rep_udf(2, 3).func, (prose,)),
+        "_contaminated_udf": (
+            worker_rows, (D._contaminated_udf(3, bench).func, prose)),
     }
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
@@ -141,6 +153,8 @@ def test_udf_closures_unpickle_without_the_package(spark, tmp_path):
         want = fn(*args)
         if isinstance(want, pd.DataFrame):
             pd.testing.assert_frame_equal(got[name], want)
+        elif want.dtype.kind == "f":  # NULL text scores NaN
+            pd.testing.assert_series_equal(got[name], want)
         else:
             assert _plain(got[name]) == _plain(want), name
     assert len(got["_dense_topk_worker"]) == 6 * 3
