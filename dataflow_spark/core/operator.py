@@ -15,6 +15,10 @@ Archetypes (SURVEY.md §2.1):
   - Evaluator: adds score column(s)             -> ``Operator``
   - Filter:    label column + keep predicate    -> ``FilterOperator``
   - Refiner:   rewrite a column in place        -> ``RefineOperator``
+
+A column that a later filter may read (a refined text, a score, a kept
+label) is attached with :func:`with_columns_once`, so the filter reads
+the stored value instead of re-running the expression.
 """
 
 from __future__ import annotations
@@ -60,6 +64,34 @@ def with_row_id(df: DataFrame, order_by: str | None = None) -> DataFrame:
     return df.withColumn(ROW_ID, F.monotonically_increasing_id())
 
 
+def with_columns_once(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
+    """``df.withColumns(cols)``, with each expression computed once per row.
+
+    A filter on a ``withColumn`` output is pushed below the defining
+    ``Project`` with the expression substituted in
+    (``PushPredicateThroughNonJoin``), so the expression runs twice.
+    Here one ``Generate`` node, ``inline(array(struct(expr AS _once_i,
+    ...)))``, computes the expressions: exactly one row per input row
+    (NULL inputs included), nullability kept. A predicate on a generated
+    column stays above it and reads the stored value; a predicate on a
+    pass-through column still moves below it into the scan. One
+    ``selectExpr`` then restores ``withColumn``'s order and names: a
+    replaced column (matched case-insensitively, as Spark resolves
+    names) keeps its position, a new one is appended. ``df``'s column
+    names must be unique; ``_once_<i>`` names are reserved.
+    """
+    from pyspark.sql import functions as F
+
+    from dataflow_spark.functions.text import sql_ident
+
+    out = {name.lower(): f"_once_{i} AS {sql_ident(name)}"
+           for i, name in enumerate(cols)}
+    gen = F.inline(F.array(F.struct(
+        *[c.alias(f"_once_{i}") for i, c in enumerate(cols.values())])))
+    order = [out.pop(c.lower(), sql_ident(c)) for c in df.columns]
+    return df.select("*", gen).selectExpr(*order, *out.values())
+
+
 class Operator(ABC):
     """Base class for all engine operators.
 
@@ -97,7 +129,10 @@ class FilterOperator(Operator):
     append column, drop rows; e.g. rule_based_filter.py:47-63). Subclasses
     implement ``compute_label`` as a pure Column expression whenever
     possible so the predicate stays inside whole-stage codegen and can be
-    pushed into the scan by Catalyst.
+    pushed into the scan by Catalyst. With ``keep_label`` the label is
+    attached by :func:`with_columns_once` and the keep predicate reads
+    it, so the label is computed once; without it the label is only a
+    predicate, free to move below earlier steps.
     """
 
     def __init__(self, input_key: str = "text", label_key: str | None = None,
@@ -118,8 +153,9 @@ class FilterOperator(Operator):
         label = self.compute_label(df).cast("int")
         if self.keep_label:
             # keep the label column for downstream inspection (reference
-            # writes it to the step file)
-            return df.withColumn(self.label_key, label).filter(F.col(self.label_key) == 1)
+            # writes it to the step file); the filter reads the stored label
+            return (with_columns_once(df, {self.label_key: label})
+                    .filter(F.col(self.label_key) == 1))
         return df.filter(label == 1)
 
 
@@ -127,7 +163,10 @@ class RefineOperator(Operator):
     """Refiner archetype: rewrite ``input_key`` in place.
 
     Reference pattern: remove_emoji_refiner.py:57-82 — transform one text
-    column, same rows out.
+    column, same rows out. The rewritten column is attached by
+    :func:`with_columns_once`: a later filter on it reads the rewritten
+    value rather than re-running ``refine_expr``, and a filter on any
+    other column still reaches the scan.
     """
 
     def __init__(self, input_key: str = "text"):
@@ -142,4 +181,5 @@ class RefineOperator(Operator):
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
         from pyspark.sql import functions as F
 
-        return df.withColumn(self.input_key, self.refine_expr(F.col(self.input_key)))
+        return with_columns_once(
+            df, {self.input_key: self.refine_expr(F.col(self.input_key))})

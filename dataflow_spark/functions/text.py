@@ -17,7 +17,7 @@ from pyspark import cloudpickle
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# UDF closures call py_words and py_word_ngrams. Pickled by value, they
+# UDF closures call the py_* twins below. Pickled by value, they
 # reach the Python workers without an import of the whole dataflow_spark
 # package, as in functions/hashing.py.
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
@@ -57,6 +57,23 @@ def py_word_ngrams(ws: list[str], n: int) -> list[str]:
     if len(ws) < n:
         return [" ".join(ws)]
     return [" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)]
+
+
+def py_distinct_word_ngrams(text: str | None, n: int) -> list[str]:
+    """The sorted distinct word n-grams of ``text`` (:func:`py_words`,
+    :func:`py_word_ngrams`; a text shorter than ``n`` words is one
+    gram); no words, no grams."""
+    w = py_words(text)
+    return sorted(set(py_word_ngrams(w, n))) if w else []
+
+
+def py_word_segments(text: str | None, k: int) -> list[str]:
+    """Ordered consecutive non-overlapping ``k``-word windows of
+    :func:`py_words`, each joined by single spaces (the last may be
+    shorter); no words, no segments."""
+    w = py_words(text)
+    return [" ".join(w[i * k:(i + 1) * k])
+            for i in range((len(w) + k - 1) // k)]
 
 
 def sentence_count(col: Column) -> Column:
@@ -138,8 +155,18 @@ def token_count_bpe_ish(col: Column) -> Column:
     return F.regexp_count(col, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"))
 
 
-def quality_score(col: Column, stopwords: list[str]) -> Column:
-    """Composite document-quality heuristic in [0,1].
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal (``\\`` and ``'`` escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def quality_score(name: str, stopwords: list[str]) -> Column:
+    """Composite document-quality heuristic in [0,1] of column ``name``.
 
     0.25*len_score + 0.25*stopword_score + 0.25*punct_score + 0.25*alpha
       - len_score: min(word_count/100, 1)
@@ -152,28 +179,32 @@ def quality_score(col: Column, stopwords: list[str]) -> Column:
 
     The text is tokenized once: one ``split`` and one ``aggregate`` that
     counts tokens, stopword hits and ASCII-alpha tokens per non-empty
-    token. The stopword test is ``isin`` over literals, which Catalyst
-    turns into a hash ``InSet`` above 10 items.
+    token. The stopword test is ``IN`` over literals, which Catalyst
+    turns into a hash ``InSet`` above 10 items. The expression is built
+    as one SQL text, so the plan build is one parse instead of some 80
+    py4j calls; the name is backtick-quoted and the regexes and the
+    (non-empty) stopwords are escaped as SQL literals.
     """
-    sw = list(stopwords)  # isin takes a list, not a tuple
-    zero = F.struct(F.lit(0).alias("n"), F.lit(0).alias("sw"),
-                    F.lit(0).alias("alpha"))
-
-    def count(acc: Column, x: Column) -> Column:
-        return F.when(x == F.lit(""), acc).otherwise(F.struct(
-            (acc["n"] + 1).alias("n"),
-            (acc["sw"] + F.lower(x).isin(sw).cast("int")).alias("sw"),
-            (acc["alpha"] + x.rlike("[A-Za-z]").cast("int")).alias("alpha")))
-
+    col = sql_ident(name)
+    # lambda variables shadow columns: keep them off the column's name
+    acc, w = ("acc", "w") if name.lower() not in ("acc", "w") else ("acc_", "w_")
+    sw = ", ".join(sql_str(s) for s in stopwords)
+    count = (f"CASE WHEN {w} = '' THEN {acc} ELSE named_struct("
+             f"'n', {acc}.n + 1, "
+             f"'sw', {acc}.sw + CAST(lower({w}) IN ({sw}) AS INT), "
+             f"'alpha', {acc}.alpha + CAST({w} RLIKE '[A-Za-z]' AS INT)) END")
     # \z: absolute end (Java $ also matches before a final \r or \n)
-    punct = F.when(F.trim(col).rlike(r"[.!?]\z"), 1.0).otherwise(0.0)
-
-    def score(acc: Column) -> Column:
-        n = acc["n"]
-        len_score = F.least(n.cast("double") / 100.0, F.lit(1.0))
-        sw_ratio = F.when(n > 0, acc["sw"].cast("double") / n).otherwise(0.0)
-        sw_score = F.least(sw_ratio / 0.3, F.lit(1.0))
-        alpha = F.when(n > 0, acc["alpha"].cast("double") / n).otherwise(0.0)
-        return 0.25 * len_score + 0.25 * sw_score + 0.25 * punct + 0.25 * alpha
-
-    return F.aggregate(F.split(col, WS_RE), zero, count, score)
+    end_punct = sql_str(r"[.!?]\z")
+    punct = f"CASE WHEN trim({col}) RLIKE {end_punct} THEN 1.0D ELSE 0.0D END"
+    n = f"{acc}.n"
+    score = (
+        f"least(CAST({n} AS DOUBLE) / 100.0D, 1.0D) * 0.25D"
+        f" + least(CASE WHEN {n} > 0 THEN CAST({acc}.sw AS DOUBLE) / {n}"
+        f" ELSE 0.0D END / 0.3D, 1.0D) * 0.25D"
+        f" + {punct} * 0.25D"
+        f" + CASE WHEN {n} > 0 THEN CAST({acc}.alpha AS DOUBLE) / {n}"
+        f" ELSE 0.0D END * 0.25D")
+    return F.expr(
+        f"aggregate(split({col}, {sql_str(WS_RE)}), "
+        f"named_struct('n', 0, 'sw', 0, 'alpha', 0), "
+        f"({acc}, {w}) -> {count}, {acc} -> {score})")

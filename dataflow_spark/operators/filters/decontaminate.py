@@ -47,7 +47,8 @@ from pyspark.sql import functions as F
 
 from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
-from dataflow_spark.functions.text import py_word_ngrams, py_words
+from dataflow_spark.functions.text import (py_distinct_word_ngrams, py_word_ngrams,
+                                           py_words)
 
 # benchmark gram set budget for the broadcast-set path (approx bytes of
 # gram text; python set overhead adds ~2-3x on top). Benchmarks are
@@ -56,26 +57,16 @@ from dataflow_spark.functions.text import py_word_ngrams, py_words
 _BENCH_SET_BUDGET = 64 << 20
 
 
-def word_ngrams(text: str | None, n: int) -> list[str]:
-    """Single-row gram kernel (module-level so properties are testable
-    without a SparkSession): the sorted distinct word n-grams of
-    ``functions/text.py``'s :func:`py_words` and :func:`py_word_ngrams`
-    (a text shorter than ``n`` words is one gram); no words, no grams.
-    """
-    w = py_words(text)
-    return sorted(set(py_word_ngrams(w, n))) if w else []
-
-
 def _grams_udf(n: int):
-    """Vectorized ``word_ngrams``: Arrow-batched pandas_udf rather than
-    the Column HOF form — the higher-order-function lambda tree is
-    CodegenFallback in Spark (interpreted per gram), measured ~8x
-    slower at sf0.1."""
+    """Vectorized ``py_distinct_word_ngrams``: Arrow-batched pandas_udf
+    rather than the Column HOF form — the higher-order-function lambda
+    tree is CodegenFallback in Spark (interpreted per gram), measured
+    ~8x slower at sf0.1."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<string>")
     def grams(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: word_ngrams(t, n))
+        return s.map(lambda t: py_distinct_word_ngrams(t, n))
 
     return grams
 
@@ -120,7 +111,7 @@ def _contam_counts_udf(n: int, bc):
         S = bc.value
 
         def one(t):
-            g = word_ngrams(t, n)
+            g = py_distinct_word_ngrams(t, n)
             return sum(x in S for x in g), len(g)
 
         for s in batches:
@@ -187,7 +178,7 @@ class ContaminationScoreEvaluator(Operator):
         tp = benchmark.select(F.col(self.bench_key).alias("_t")).toPandas()
         s: set[str] = set()
         for t in tp["_t"]:
-            s.update(word_ngrams(t, self.n))
+            s.update(py_distinct_word_ngrams(t, self.n))
         sc = benchmark.sparkSession.sparkContext
         return sc.broadcast(frozenset(s))
 

@@ -38,11 +38,6 @@ from dataflow_spark.functions.pulls import bounded_pull
 from dataflow_spark.functions.spread import spread_for_udf
 
 
-def _bq(name: str) -> str:
-    """Backtick-quote an identifier for trusted engine-built SQL text."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _keep_first(df: DataFrame, key: Column, order_col: str) -> DataFrame:
     """Keep the min-``order_col`` row per ``key`` via min_by aggregation.
 
@@ -80,10 +75,10 @@ def _keep_first(df: DataFrame, key: Column, order_col: str) -> DataFrame:
     # instead of the min_by/col/struct py4j chain — same trees, same
     # results, ~3x fewer driver round trips on wide inputs
     if ROW_ID in df.columns and order_col != ROW_ID:
-        okey_sql = f"struct({_bq(order_col)}, {_bq(ROW_ID)})"
+        okey_sql = f"struct({T.sql_ident(order_col)}, {T.sql_ident(ROW_ID)})"
     else:
-        okey_sql = _bq(order_col)
-    aggs = [F.expr(f"min_by({_bq(c)}, {okey_sql})").alias(c)
+        okey_sql = T.sql_ident(order_col)
+    aggs = [F.expr(f"min_by({T.sql_ident(c)}, {okey_sql})").alias(c)
             for c in df.columns]
     return df.groupBy(key.alias("_dedup_k")).agg(*aggs).drop("_dedup_k")
 
@@ -408,7 +403,7 @@ class _NearDupBase(_BaseDedup):
         localCheckpoint contraction), so every pinned frame is released
         before returning and no cached block outlives the run.
         """
-        df = df.withColumn("_nd_id", F.expr(f"cast({_bq(order_col)} as long)"))
+        df = df.withColumn("_nd_id", F.expr(f"cast({T.sql_ident(order_col)} as long)"))
         pins: list[DataFrame] = []
         try:
             comp = connected_components(

@@ -424,11 +424,10 @@ class SourceOverlapMatrixOperator(Operator):
     duplicate each other (and should be cross-deduped or downweighted)
     BEFORE mixing a training corpus.
 
-    Grams are ``filters.decontaminate.word_ngrams``, built on
-    ``functions/text.py``'s ``py_words`` and ``py_word_ngrams`` (texts
-    shorter than n words contribute their whole word sequence), so the
-    overlap matrix and the decontamination ops agree on what a "gram"
-    is.
+    Grams are ``functions/text.py``'s ``py_distinct_word_ngrams``
+    (texts shorter than n words contribute their whole word sequence),
+    so the overlap matrix and the decontamination ops agree on what a
+    "gram" is.
 
     Scale shape: ONE shuffle of the distinct (group, gram) set — grams
     hash uniformly, map-side combinable — then a per-gram group-set

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
 from dataflow_spark.functions.pulls import bounded_pull
-from dataflow_spark.functions.text import py_words
+from dataflow_spark.functions.text import py_word_segments
 
 
 # duplicated-tail collect budget for the broadcast-rebuild path:
@@ -42,16 +42,6 @@ from dataflow_spark.functions.text import py_words
 # join + reassembly-shuffle plan runs unchanged
 _DUP_COLLECT_CAP = 1 << 21
 _DUP_BYTES_BUDGET = 64 << 20
-
-
-def word_segments(text: str | None, k: int) -> list[str]:
-    """Single-row segment kernel (module-level so properties are
-    testable without a SparkSession): ordered consecutive
-    non-overlapping k-word windows of ``functions/text.py``'s
-    :func:`py_words` (last may be shorter); no words, no segments."""
-    w = py_words(text)
-    return [" ".join(w[i * k:(i + 1) * k])
-            for i in range((len(w) + k - 1) // k)]
 
 
 def _rebuild_udf(keep_first: bool, joiner: str, bc):
@@ -96,14 +86,14 @@ def _rebuild_udf(keep_first: bool, joiner: str, bc):
 
 
 def word_windows_udf(k: int):
-    """Vectorized ``word_segments``: Arrow-batched pandas_udf — the
+    """Vectorized ``py_word_segments``: Arrow-batched pandas_udf — the
     Column HOF form (sequence + slice + concat_ws per window) is
     CodegenFallback-interpreted, measured ~8x slower at sf0.1."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<string>")
     def windows(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: word_segments(t, k))
+        return s.map(lambda t: py_word_segments(t, k))
 
     return windows
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
+from dataflow_spark.functions import text as T
 
 
 @OPERATOR_REGISTRY.register()
@@ -213,7 +214,7 @@ class TableProfileOperator(Operator):
         # make the expression unparseable. Backtick-quoting makes F.col
         # treat dots as part of the name, not nested-field access.
         for i, c in enumerate(cols):
-            col = F.col("`" + c.replace("`", "``") + "`")
+            col = F.col(T.sql_ident(c))
             # orderable rendering for any type (arrays/structs included)
             s = col.cast("string")
             aggs += [
@@ -226,8 +227,7 @@ class TableProfileOperator(Operator):
         stack = F.expr("stack({}, {})".format(
             len(cols),
             ", ".join(
-                "'{}', _null_{i}, _nd_{i}, _min_{i}, _max_{i}".format(
-                    c.replace("\\", "\\\\").replace("'", "\\'"), i=i)
+                f"{T.sql_str(c)}, _null_{i}, _nd_{i}, _min_{i}, _max_{i}"
                 for i, c in enumerate(cols))
         )).alias("column", "_nulls", "n_distinct", "min_value", "max_value")
         return (

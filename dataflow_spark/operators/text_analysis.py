@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dataflow_spark.core.operator import Operator
+from dataflow_spark.core.operator import Operator, with_columns_once
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
 from dataflow_spark.functions import hashing as H
 from dataflow_spark.functions import text as T
@@ -103,9 +103,11 @@ class LanguageIdEvaluator(Operator):
 class QualityScoreEvaluator(Operator):
     """Add a [0,1] composite quality score (functions/text.py:quality_score).
 
-    One JVM-side Column expression: the text is tokenized once and a
-    single ``aggregate`` counts tokens, stopword hits and alpha tokens,
-    so the plan has no Python stage. NULL text scores NULL.
+    One JVM-side expression, built as one SQL text: the text is tokenized
+    once and a single ``aggregate`` counts tokens, stopword hits and
+    alpha tokens, so the plan has no Python stage. NULL text scores NULL.
+    The score is attached by ``with_columns_once``, so a filter on it
+    reads the stored score instead of running the ``aggregate`` again.
     """
 
     def __init__(self, input_key: str = "text", output_key: str = "quality_score",
@@ -116,8 +118,8 @@ class QualityScoreEvaluator(Operator):
         self.output_keys = (output_key,)
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        return df.withColumn(
-            self.output_key, T.quality_score(F.col(self.input_key), self.stopwords))
+        return with_columns_once(df, {
+            self.output_key: T.quality_score(self.input_key, self.stopwords)})
 
 
 @OPERATOR_REGISTRY.register()
@@ -133,9 +135,8 @@ class TokenCountEvaluator(Operator):
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
         c = F.col(self.input_key)
-        return df.withColumn(self.word_key, T.word_count(c)).withColumn(
-            self.token_key, T.token_count_bpe_ish(c)
-        )
+        return with_columns_once(df, {self.word_key: T.word_count(c),
+                                      self.token_key: T.token_count_bpe_ish(c)})
 
 
 @OPERATOR_REGISTRY.register()
@@ -157,7 +158,7 @@ class FingerprintEvaluator(Operator):
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
         sh = F.array_distinct(H.char_shingles(F.col(self.input_key), self.n))
         fp = F.array_min(F.transform(sh, lambda s: F.md5(s)))
-        return df.withColumn(self.output_key, fp)
+        return with_columns_once(df, {self.output_key: fp})
 
 
 @OPERATOR_REGISTRY.register()
@@ -331,7 +332,7 @@ class PIICountEvaluator(Operator):
         for pat, _ in PIIAnonymizeRefiner.RULES:
             cnt = F.coalesce(F.regexp_count(c, F.lit(pat)), F.lit(0))
             total = cnt if total is None else total + cnt
-        return df.withColumn(self.output_key, total)
+        return with_columns_once(df, {self.output_key: total})
 
 
 @OPERATOR_REGISTRY.register()

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataflow_spark.core.pipeline import Pipeline
+from dataflow_spark.functions.text import sql_ident
 
 
 def _event_time(df: DataFrame, ts_key: str) -> DataFrame:
@@ -116,11 +117,8 @@ def sessionize(events: DataFrame, user_key: str = "user_id", ts_key: str = "ts",
     # as it did for the shared Column reference). unix_timestamp works
     # on both TIMESTAMP and TIMESTAMP_NTZ (a direct BIGINT cast raises
     # DATATYPE_MISMATCH on NTZ).
-    def bq(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
-    u, t = bq(user_key), bq(ts_key)
-    order = f"{t} ASC" + (f", {bq(tie_breaker)} ASC" if tie_breaker else "")
+    u, t = sql_ident(user_key), sql_ident(ts_key)
+    order = f"{t} ASC" + (f", {sql_ident(tie_breaker)} ASC" if tie_breaker else "")
     over = f"OVER (PARTITION BY {u} ORDER BY {order})"
     prev = f"lag({t}) {over}"
     new_session = (f"cast(({prev} IS NULL OR "

@@ -165,7 +165,7 @@ def test_source_overlap_hand_checkable(spark):
 
 def test_source_overlap_short_text_whole_sequence_gram(spark):
     # texts shorter than n words contribute ONE whole-sequence gram
-    # (decontaminate.word_ngrams mirror)
+    # (functions.text.py_distinct_word_ngrams mirror)
     df = spark.createDataFrame(
         [("a", "hi there"), ("b", "hi there"), ("c", "bye")],
         ["source", "text"])

@@ -261,12 +261,19 @@ def test_sem_dedup_null_embedding_rows_survive(spark):
 
 
 def _stage_spill_bytes(spark, group: str) -> int:
-    """Bytes spilled (memory + disk) by the stages of job group ``group``."""
+    """Bytes spilled (memory + disk) by the stages of job group ``group``.
+
+    A stage id of a job can be missing from the status store: a stage the
+    job skipped never ran, and once the session has run more than
+    ``spark.ui.retainedStages`` stages the store evicts such entries. A
+    missing stage adds nothing, so it can only lower the total."""
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
     total = 0
     for jid in sc.statusTracker().getJobIdsForGroup(group):
         for sid in sc.statusTracker().getJobInfo(jid).stageIds:
+            if sc.statusTracker().getStageInfo(sid) is None:
+                continue
             st = store.lastStageAttempt(sid)
             total += st.memoryBytesSpilled() + st.diskBytesSpilled()
     return total

@@ -172,14 +172,13 @@ def test_exact_dedup_aggregate_prunes_columns(spark, tmp_path):
     assert rows == {(0, "t0"), (1, "t1"), (2, "t2")}
 
 
-def test_curate_chain_has_no_python_stage(spark, docs):
-    """The refine -> filter -> score -> filter -> dedup -> split chain runs
-    entirely in the JVM: no Python worker is needed to execute it."""
+def _curate(docs):
+    """The refine -> filter -> score -> filter -> dedup -> split chain."""
     from dataflow_spark import Pipeline, get_operator
 
     stopwords = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
                  "for", "with"]
-    out = Pipeline([
+    return Pipeline([
         get_operator("RemoveExtraSpacesRefiner", {"input_key": "text"}),
         get_operator("ContentNullFilter", {"input_key": "text"}),
         get_operator("WordNumberFilter", {"input_key": "text", "min_words": 5}),
@@ -192,7 +191,25 @@ def test_curate_chain_has_no_python_stage(spark, docs):
                      {"key": "doc_id",
                       "splits": {"train": 0.9, "val": 0.05, "test": 0.05}}),
     ]).forward(docs)
+
+
+def test_curate_chain_has_no_python_stage(spark, docs):
+    """The curate chain runs entirely in the JVM: no Python worker is
+    needed to execute it."""
+    from dataflow_spark import get_operator
+
+    out = _curate(docs)
     assert audit(out)["python_ops"] == []
     # positive control: a pandas-UDF operator on the same chain is seen
     langid = get_operator("LanguageIdEvaluator", {}).run(out)
     assert audit(langid)["python_ops"] == ["ArrowEvalPython"]
+
+
+def test_curate_chain_computes_each_derived_column_once(spark, docs):
+    """The filters after the refiner and the score read the stored
+    columns: the optimized plan holds the whitespace squash and the score
+    once each (``withColumn`` columns are re-substituted into every
+    pushed-down conjunct)."""
+    plan = _curate(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("aggregate(") == 1
+    assert plan.count("regexp_replace(") == 1

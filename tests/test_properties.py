@@ -147,27 +147,26 @@ def test_md5_simhash_matches_independent_reimpl(t):
 
 import re
 
-from dataflow_spark.operators.filters.decontaminate import word_ngrams
-from dataflow_spark.operators.refiners.segment_dedup import word_segments
+from dataflow_spark.functions.text import py_distinct_word_ngrams, py_word_segments
 
 
 @settings(max_examples=300, deadline=None)
 @given(texts, st.integers(min_value=1, max_value=8))
 def test_word_ngrams_shape_and_normalization_invariance(t, n):
-    g = word_ngrams(t, n)
+    g = py_distinct_word_ngrams(t, n)
     # sorted, distinct, non-empty grams; each gram has <= n words
     assert g == sorted(set(g))
     assert all(x and len(x.split(" ")) <= n for x in g)
     # whitespace-normalization invariance: grams depend only on the
     # word sequence (ASCII \s, the engine's Java-regex convention)
     renorm = " ".join(x for x in re.split(r"\s+", t, flags=re.ASCII) if x)
-    assert word_ngrams(renorm, n) == g
+    assert py_distinct_word_ngrams(renorm, n) == g
 
 
 @settings(max_examples=300, deadline=None)
 @given(texts, st.integers(min_value=1, max_value=8))
 def test_word_segments_lossless_reassembly(t, k):
-    segs = word_segments(t, k)
+    segs = py_word_segments(t, k)
     # joining the segments reproduces the normalized word stream —
     # the invariant CorpusSegmentDedup's reassembly relies on
     norm = " ".join(x for x in re.split(r"\s+", t, flags=re.ASCII) if x)

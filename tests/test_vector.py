@@ -110,6 +110,7 @@ def test_udf_closures_unpickle_without_the_package(spark, tmp_path):
     from dataflow_spark.operators import similarity as S
     from dataflow_spark.operators import text_analysis as TA
     from dataflow_spark.operators.filters import decontaminate as D
+    from dataflow_spark.operators.refiners import segment_dedup as SD
 
     vecs = pd.Series([None if v is None else np.asarray(v, dtype=np.float64)
                       for v in _vectors(200)], dtype=object)
@@ -141,6 +142,10 @@ def test_udf_closures_unpickle_without_the_package(spark, tmp_path):
         "_gopher_rep_udf": (TA._gopher_rep_udf(2, 3).func, (prose,)),
         "_contaminated_udf": (
             worker_rows, (D._contaminated_udf(3, bench).func, prose)),
+        "_grams_udf": (D._grams_udf(3).func, (prose,)),
+        "_contam_counts_udf": (
+            worker_rows, (D._contam_counts_udf(3, bench).func, prose)),
+        "word_windows_udf": (SD.word_windows_udf(3).func, (prose,)),
     }
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
