@@ -16,9 +16,10 @@ Archetypes (SURVEY.md §2.1):
   - Filter:    label column + keep predicate    -> ``FilterOperator``
   - Refiner:   rewrite a column in place        -> ``RefineOperator``
 
-A column that a later filter may read (a refined text, a score, a kept
-label) is attached with :func:`with_columns_once`, so the filter reads
-the stored value instead of re-running the expression.
+A refined text and the quality score are attached with
+:func:`with_columns_once`, so a later filter on them reads the stored
+value instead of re-running the expression (docs/engineering-notes.md,
+"Computed once").
 """
 
 from __future__ import annotations
@@ -74,22 +75,23 @@ def with_columns_once(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     ...)))``, computes the expressions: exactly one row per input row
     (NULL inputs included), nullability kept. A predicate on a generated
     column stays above it and reads the stored value; a predicate on a
-    pass-through column still moves below it into the scan. One
-    ``selectExpr`` then restores ``withColumn``'s order and names: a
-    replaced column (matched case-insensitively, as Spark resolves
-    names) keeps its position, a new one is appended. ``df``'s column
-    names must be unique; ``_once_<i>`` names are reserved.
+    pass-through column still moves below it into the scan. Then
+    ``withColumns`` puts the generated values in place and the
+    temporaries are dropped, so names, order and duplicate-name handling
+    are ``withColumns``'s own. ``_once_<i>`` names are reserved.
+
+    The price: Catalyst never prunes a ``Generate``, so the expressions
+    run even when nothing downstream reads them. Use it only where a
+    filter on the output is expected.
     """
     from pyspark.sql import functions as F
 
-    from dataflow_spark.functions.text import sql_ident
-
-    out = {name.lower(): f"_once_{i} AS {sql_ident(name)}"
-           for i, name in enumerate(cols)}
+    tmp = [f"_once_{i}" for i in range(len(cols))]
     gen = F.inline(F.array(F.struct(
-        *[c.alias(f"_once_{i}") for i, c in enumerate(cols.values())])))
-    order = [out.pop(c.lower(), sql_ident(c)) for c in df.columns]
-    return df.select("*", gen).selectExpr(*order, *out.values())
+        *[c.alias(t) for t, c in zip(tmp, cols.values())])))
+    return (df.select("*", gen)
+            .withColumns({name: F.col(t) for name, t in zip(cols, tmp)})
+            .drop(*tmp))
 
 
 class Operator(ABC):
@@ -129,10 +131,10 @@ class FilterOperator(Operator):
     append column, drop rows; e.g. rule_based_filter.py:47-63). Subclasses
     implement ``compute_label`` as a pure Column expression whenever
     possible so the predicate stays inside whole-stage codegen and can be
-    pushed into the scan by Catalyst. With ``keep_label`` the label is
-    attached by :func:`with_columns_once` and the keep predicate reads
-    it, so the label is computed once; without it the label is only a
-    predicate, free to move below earlier steps.
+    pushed into the scan by Catalyst. The label stays a plain predicate
+    (with ``keep_label``, a plain ``withColumn``), so it is free to move
+    below earlier, more expensive steps; the price is that a kept label
+    is computed twice.
     """
 
     def __init__(self, input_key: str = "text", label_key: str | None = None,
@@ -153,9 +155,8 @@ class FilterOperator(Operator):
         label = self.compute_label(df).cast("int")
         if self.keep_label:
             # keep the label column for downstream inspection (reference
-            # writes it to the step file); the filter reads the stored label
-            return (with_columns_once(df, {self.label_key: label})
-                    .filter(F.col(self.label_key) == 1))
+            # writes it to the step file)
+            return df.withColumn(self.label_key, label).filter(F.col(self.label_key) == 1)
         return df.filter(label == 1)
 
 

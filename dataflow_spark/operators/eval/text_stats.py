@@ -12,7 +12,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dataflow_spark.core.operator import Operator, with_columns_once
+from dataflow_spark.core.operator import Operator
 from dataflow_spark.core.registry import OPERATOR_REGISTRY
 from dataflow_spark.functions import text as T
 
@@ -36,9 +36,9 @@ class LexicalDiversityEvaluator(Operator):
         w = F.transform(T.words(F.col(self.input_key)), lambda x: F.lower(x))
         n = F.size(w)
         ty = F.size(F.array_distinct(w))
-        return with_columns_once(df, {
-            self.ttr_key: F.when(n > 0, ty.cast("double") / n),
-            self.rttr_key: F.when(n > 0, ty / F.sqrt(n.cast("double")))})
+        return df.withColumn(
+            self.ttr_key, F.when(n > 0, ty.cast("double") / n)
+        ).withColumn(self.rttr_key, F.when(n > 0, ty / F.sqrt(n.cast("double"))))
 
 
 @OPERATOR_REGISTRY.register()
@@ -56,11 +56,14 @@ class CodeTextCompositionEvaluator(Operator):
         n = F.length(c)
         alnum = F.length(F.regexp_replace(c, r"[^A-Za-z0-9]", ""))
         sym = F.length(F.regexp_replace(c, r"[A-Za-z0-9\s]", ""))
-        return with_columns_once(df, {
-            "alnum_ratio": F.when(n > 0, alnum.cast("double") / n),
-            "symbol_ratio": F.when(n > 0, sym.cast("double") / n),
-            "max_line_len": F.array_max(
-                F.transform(F.split(c, r"\n"), lambda ln: F.length(ln)))})
+        return (
+            df.withColumn("alnum_ratio", F.when(n > 0, alnum.cast("double") / n))
+            .withColumn("symbol_ratio", F.when(n > 0, sym.cast("double") / n))
+            .withColumn(
+                "max_line_len",
+                F.array_max(F.transform(F.split(c, r"\n"), lambda ln: F.length(ln))),
+            )
+        )
 
 
 @OPERATOR_REGISTRY.register()
@@ -92,6 +95,7 @@ class LangkitSampleEvaluator(Operator):
         flesch = (F.lit(206.835) - F.lit(1.015) * (w / sentences)
                   - F.lit(84.6) * (syllables / w))
         p = self.prefix
-        return with_columns_once(df, {
-            p + "words": words, p + "sentences": sentences,
-            p + "syllables": syllables, p + "flesch": F.round(flesch, 4)})
+        return (df.withColumn(p + "words", words)
+                .withColumn(p + "sentences", sentences)
+                .withColumn(p + "syllables", syllables)
+                .withColumn(p + "flesch", F.round(flesch, 4)))

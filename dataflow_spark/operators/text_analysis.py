@@ -135,8 +135,9 @@ class TokenCountEvaluator(Operator):
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
         c = F.col(self.input_key)
-        return with_columns_once(df, {self.word_key: T.word_count(c),
-                                      self.token_key: T.token_count_bpe_ish(c)})
+        return df.withColumn(self.word_key, T.word_count(c)).withColumn(
+            self.token_key, T.token_count_bpe_ish(c)
+        )
 
 
 @OPERATOR_REGISTRY.register()
@@ -158,7 +159,7 @@ class FingerprintEvaluator(Operator):
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
         sh = F.array_distinct(H.char_shingles(F.col(self.input_key), self.n))
         fp = F.array_min(F.transform(sh, lambda s: F.md5(s)))
-        return with_columns_once(df, {self.output_key: fp})
+        return df.withColumn(self.output_key, fp)
 
 
 @OPERATOR_REGISTRY.register()
@@ -332,7 +333,7 @@ class PIICountEvaluator(Operator):
         for pat, _ in PIIAnonymizeRefiner.RULES:
             cnt = F.coalesce(F.regexp_count(c, F.lit(pat)), F.lit(0))
             total = cnt if total is None else total + cnt
-        return with_columns_once(df, {self.output_key: total})
+        return df.withColumn(self.output_key, total)
 
 
 @OPERATOR_REGISTRY.register()

@@ -81,13 +81,33 @@ def test_pass_through_filter_after_refiner_reaches_the_scan(spark, tmp_path):
         (i, "x y") for i in range(1, 20, 2)}
 
 
-def test_keep_label_filter_computes_its_label_once(spark):
+def test_with_columns_once_keeps_duplicate_names(spark):
+    """A frame with a duplicated name (an un-deduplicated join) works as
+    with ``withColumns`` when the duplicate is not the written column."""
+    df = spark.createDataFrame([(1, " a  b ", 7, 8)],
+                               "id long, text string, x int, y int")
+    dup = df.select("id", "text", "x", F.col("y").alias("x"))
+    cols = {"text": F.trim("text"), "n": F.length("text")}
+    got = with_columns_once(dup, cols)
+    want = dup.withColumns(cols)
+    assert got.columns == want.columns == ["id", "text", "x", "x", "n"]
+    assert got.collect() == want.collect() == [(1, "a  b", 7, 8, 6)]
+
+
+def test_cheap_filter_still_moves_below_the_score(spark):
+    """A label filter on a pass-through column (``keep_label`` included)
+    moves below the score's ``Generate``, so the score runs only on the
+    kept rows."""
     df = spark.createDataFrame([(1, "abcdef"), (2, "ab"), (3, None)],
                                "doc_id long, text string")
-    op = get_operator("CharNumberFilter", {"min_chars": 4, "keep_label": True})
-    out = op.run(df)
-    assert _optimized(out).count("length(") == 1
-    assert [tuple(r) for r in out.collect()] == [(1, "abcdef", 1)]
+    scored = get_operator("QualityScoreEvaluator", {"stopwords": ["the"]}).run(df)
+    for keep_label in (False, True):
+        out = get_operator("CharNumberFilter",
+                           {"min_chars": 4, "keep_label": keep_label}).run(scored)
+        plan = _optimized(out)
+        below = plan[plan.index("Generate"):].splitlines()[1:]
+        assert any("Filter" in ln and "length(" in ln for ln in below), plan
+        assert [r.doc_id for r in out.collect()] == [1]
 
 
 def test_quality_score_sql_quotes_names_and_escapes_stopwords(spark):
