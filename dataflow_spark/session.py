@@ -28,6 +28,15 @@ def get_spark(
       - ``local[N]`` and ``spark.sql.shuffle.partitions`` = max(2N, 8),
         N from $SPARK_GRAFT_CPUS, else the CPUs this process may run on;
         on a real cluster set it ~2-3x total cores (AQE coalesces down).
+      - Python workers run under ``dataflow_spark.pyworker``, a PySpark
+        daemon that stops each task from re-reading the unchanged
+        pyspark.zip and spark-core jar (0.2-0.3 s per task otherwise).
+        In local mode the directory holding the package goes on the
+        workers' ``PYTHONPATH``, so the daemon imports from any cwd; on
+        a cluster, executors need the package installed, as the
+        serving-backed operators already do. ``extra_conf`` overrides
+        any default, e.g. ``{"spark.python.daemon.module":
+        "pyspark.daemon"}``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     if master is None:
@@ -60,7 +69,12 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "dataflow_spark.pyworker")
     )
+    if master.startswith("local"):
+        package_root = os.path.dirname(os.path.dirname(__file__))
+        builder = builder.config("spark.executorEnv.PYTHONPATH",
+                                 os.path.abspath(package_root))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
