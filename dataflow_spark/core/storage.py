@@ -12,24 +12,46 @@ debuggability. Spark-first differences:
   - each step's schema is recorded in ``_steps.json``, so reading a step
     back plans no schema-inference job (a parquet-footer scan).
 
-A write is crash-safe: the step goes to a temporary sibling directory,
-is renamed into place, and only then is ``_steps.json`` updated (the
-reference's ``LazyFileStorage`` tmp + ``os.replace`` pattern). A job
-that fails mid-write leaves the previous snapshot of that step and the
-metadata as they were. The renames and the metadata update are not one
-atomic step: a process killed between them can leave step k missing or
-newer than its metadata entry.
+A write commits at one point: the ``os.replace`` of ``_steps.json``
+(the reference's ``LazyFileStorage`` tmp + ``os.replace`` pattern,
+applied to the manifest). The step's data goes to a fresh directory
+``step_00003.<8 hex>.parquet``; the manifest entry names it, and readers
+open only the directory the manifest names. After the commit the writer
+deletes the step's other directories. A process killed at any point
+leaves the manifest naming either the previous snapshot or the new one,
+each complete; the next write of that step deletes what the kill left.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 import time
+import uuid
+from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+
+def commit_file(path: str, write: Callable[[str], object]) -> None:
+    """Write one file so that readers see the old or the new content,
+    never a torn one: ``write(tmp)`` fills a sibling ``.tmp-<name>`` (same
+    extension, so pandas picks its engine and compression from it), then
+    ``os.replace`` moves it over ``path``. If ``write`` raises, ``path``
+    is untouched."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, ".tmp-" + name)
+    try:
+        write(tmp)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    os.replace(tmp, path)
 
 
 class StepStore:
@@ -47,13 +69,30 @@ class StepStore:
         return {"steps": []}
 
     def _write_meta(self, meta: dict) -> None:
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(tmp, self._meta_path)  # atomic, like the reference's flush
+        commit_file(self._meta_path,
+                    lambda tmp: Path(tmp).write_text(json.dumps(meta, indent=1)))
+
+    def _entry(self, k: int) -> dict:
+        for s in self._read_meta()["steps"]:
+            if s["step"] == k:
+                return s
+        raise FileNotFoundError(f"no step {k} in {self.cache_dir}")
+
+    def _dir_of(self, entry: dict) -> str:
+        # entries name their directory relative to cache_dir; older ones
+        # hold an absolute path, which resolves through its basename
+        return os.path.join(self.cache_dir, os.path.basename(entry["path"]))
+
+    def _step_dirs(self, k: int | None = None) -> list[str]:
+        """Directories of step ``k`` (default: of every step), committed
+        or left by a killed write."""
+        digits = "[0-9]*" if k is None else f"{k:05d}"
+        return glob.glob(os.path.join(glob.escape(self.cache_dir),
+                                      f"{glob.escape(self.prefix)}_{digits}.*"))
 
     def step_path(self, k: int) -> str:
-        return os.path.join(self.cache_dir, f"{self.prefix}_{k:05d}.parquet")
+        """The directory the manifest names for step ``k``."""
+        return self._dir_of(self._entry(k))
 
     @property
     def last_step(self) -> int:
@@ -62,29 +101,23 @@ class StepStore:
 
     # -- read/write -------------------------------------------------------
     def write(self, df: DataFrame, step: int, op_name: str = "") -> str:
-        path = self.step_path(step)
-        tmp, old = path + ".tmp", path + ".old"
-        for leftover in (tmp, old):  # from a write that crashed midway
-            shutil.rmtree(leftover, ignore_errors=True)
+        name = f"{self.prefix}_{step:05d}.{uuid.uuid4().hex[:8]}.parquet"
+        path = os.path.join(self.cache_dir, name)
         try:
-            df.write.parquet(tmp)
+            df.write.parquet(path)
         except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(path, ignore_errors=True)
             raise
-        # a directory cannot be renamed over a non-empty one: move the
-        # previous snapshot aside first, drop it once the metadata points
-        # at the new one
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
         meta = self._read_meta()
         meta["steps"] = [s for s in meta["steps"] if s["step"] != step]
-        meta["steps"].append({"step": step, "path": path, "op": op_name,
+        meta["steps"].append({"step": step, "path": name, "op": op_name,
                               "ts": time.time(),
                               "schema": df.schema.json()})
         meta["steps"].sort(key=lambda s: s["step"])
-        self._write_meta(meta)
-        shutil.rmtree(old, ignore_errors=True)
+        self._write_meta(meta)  # the commit point
+        for d in self._step_dirs(step):
+            if d != path:
+                shutil.rmtree(d, ignore_errors=True)
         return path
 
     def read(self, spark: SparkSession, step: int | None = None) -> DataFrame:
@@ -95,17 +128,19 @@ class StepStore:
         k = self.last_step if step is None else step
         if k < 0:
             raise FileNotFoundError(f"no steps in {self.cache_dir}")
-        schema = next((s.get("schema") for s in self.lineage()
-                       if s["step"] == k), None)
+        entry = self._entry(k)
+        schema = entry.get("schema")
         reader = spark.read
         if schema:
             reader = reader.schema(StructType.fromJson(json.loads(schema)))
-        return reader.parquet(self.step_path(k))
+        return reader.parquet(self._dir_of(entry))
 
     def lineage(self) -> list[dict]:
         return self._read_meta()["steps"]
 
     def clear(self) -> None:
-        for s in self._read_meta()["steps"]:
-            shutil.rmtree(s["path"], ignore_errors=True)
+        """Commit the empty manifest, then delete every step directory,
+        including those of crashed writes."""
         self._write_meta({"steps": []})
+        for d in self._step_dirs():
+            shutil.rmtree(d, ignore_errors=True)

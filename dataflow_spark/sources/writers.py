@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from dataflow_spark.core.storage import commit_file
+
 
 def write_any(df: DataFrame, path: str, fmt: str | None = None,
               mode: str = "overwrite", partition_by: list[str] | None = None,
@@ -40,10 +42,7 @@ def write_pickle(df: DataFrame, path: str, limit: int = 1_000_000) -> None:
     """Driver-side pandas-pickle export (reference storage.py:683-696
     write dispatch). Bounded collect — exports, not datasets; use
     parquet for anything that should stay distributed."""
-    pdf = df.limit(limit).toPandas()
-    tmp = path + ".tmp"
-    pdf.to_pickle(tmp)
-    os.replace(tmp, path)
+    commit_file(path, df.limit(limit).toPandas().to_pickle)
 
 
 def write_xlsx(df: DataFrame, path: str, limit: int = 100_000) -> None:
@@ -55,7 +54,8 @@ def write_xlsx(df: DataFrame, path: str, limit: int = 100_000) -> None:
         raise ImportError(
             "write_xlsx requires the optional openpyxl package; "
             "use write_any(..., fmt='parquet'/'csv') instead") from e
-    df.limit(limit).toPandas().to_excel(path, index=False)
+    pdf = df.limit(limit).toPandas()
+    commit_file(path, lambda tmp: pdf.to_excel(tmp, index=False))
 
 
 def export_training_corpus(df: DataFrame, path: str,
@@ -128,52 +128,3 @@ def export_training_corpus(df: DataFrame, path: str,
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.options(**options).parquet(path)
-
-
-def compact_parquet(spark, path: str, target_file_bytes: int = 128 * 1024 * 1024,
-                    cluster_by: list[str] | None = None) -> int:
-    """Compact a small-file parquet directory in place: read, coalesce
-    to ceil(total_bytes / target_file_bytes) outputs (optionally
-    re-clustered on ``cluster_by``), swap directories. Returns the new
-    file count.
-
-    The small-file problem is the canonical 100 TB table-maintenance
-    task: a streaming/incremental writer leaves thousands of KB-sized
-    files whose per-file open/footer cost dominates scans. Compaction
-    restores ~target-sized files; with ``cluster_by`` it also restores
-    range clustering (parquet min/max skipping) in the same pass.
-
-    LIMITATIONS (this helper is a local-filesystem maintenance tool,
-    not the cluster-scale path): ``os.walk``/``os.rename`` require a
-    POSIX filesystem — on an object store or HDFS, compact via a table
-    format's native rewrite (e.g. a transactional REPLACE / rewrite-
-    data-files operation), which gives atomic commits. The directory
-    swap here is two renames, NOT atomic: a crash between them leaves
-    the dataset at ``<path>.compact_tmp`` (new data, complete) and/or
-    ``<path>.compact_old`` (original data, untouched) — recovery is
-    renaming whichever is complete back to ``path``; no data is lost,
-    but readers racing the swap can observe a missing path.
-    """
-    import math
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    total = sum(os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path) for f in fs
-                if f.endswith(".parquet"))
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    if cluster_by:
-        out = df.repartitionByRange(n_files, *[F.col(c) for c in cluster_by]) \
-                .sortWithinPartitions(*cluster_by)
-    else:
-        out = df.coalesce(n_files)
-    tmp = path.rstrip("/") + ".compact_tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".compact_old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return sum(1 for r, _, fs in os.walk(path)
-               for f in fs if f.endswith(".parquet"))

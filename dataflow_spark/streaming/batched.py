@@ -9,7 +9,7 @@ Pipeline.py:624-713). Two Spark-native equivalents:
      This is the default and the honest mapping: Spark already streams
      partitions through the operator chain.
   2. ``stream_pipeline`` — Structured Streaming foreachBatch with a
-     checkpointLocation for at-least-once resume across restarts, for
+     checkpointLocation for exactly-once output across restarts, for
      genuinely unbounded sources (file drops, Kafka).
 
 Event-time helpers (watermark + tumbling window) are provided for the
@@ -19,12 +19,15 @@ training-data-pipeline surface even though the reference has none
 
 from __future__ import annotations
 
+import os
+from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataflow_spark.core.pipeline import Pipeline
+from dataflow_spark.core.storage import commit_file
 from dataflow_spark.functions.text import sql_ident
 
 
@@ -66,13 +69,16 @@ def stream_pipeline(stream_df: DataFrame, pipeline: Pipeline, output_path: str,
     checkpointed resume. trigger_once processes available data and
     stops (the reference's batch-resume semantics).
 
-    Delivery is at-least-once: each batch appends, and Spark re-runs a
-    batch whose write finished but whose commit did not, so a restart
-    can write that batch twice (ROADMAP item 3)."""
+    Each micro-batch overwrites its own partition
+    ``output_path/batch_id=N``, so a batch Spark re-runs after a restart
+    (its write finished, its commit did not) replaces its output instead
+    of adding a second copy: the sink holds each batch once. Readers of
+    ``output_path`` see a ``batch_id`` provenance column."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         out = pipeline.forward(batch_df)
-        out.write.mode("append").format(fmt).save(output_path)
+        out.write.mode("overwrite").format(fmt).save(
+            os.path.join(output_path, f"batch_id={batch_id}"))
 
     writer = (
         stream_df.writeStream.foreachBatch(process)
@@ -222,7 +228,6 @@ def drain_complete(agg: DataFrame, out_dir: str | None = None) -> DataFrame:
     own the result's lifetime yourself).
     """
     import atexit
-    import os
     import shutil
     import tempfile
     import uuid
@@ -263,12 +268,13 @@ def stream_bloom_dedup(stream_df: DataFrame, state_dir: str,
     Per micro-batch (foreachBatch):
       1. dedup the batch against ALL history via
          BloomIncrementalDedupFilter with the in-memory bloom and the
-         digest table restricted to ``batch_id < current`` — a RETRIED
-         batch never sees its own partial digest write, so the step is
-         idempotent under foreachBatch's at-least-once contract;
+         digest table restricted to ``batch_id < current`` — a batch
+         Spark re-runs after a restart never sees its own partial digest
+         write, so the step is idempotent;
       2. write survivors to ``deduped/batch_id=N`` (overwrite);
       3. write survivors' (h1, h2) pairs to ``digests/batch_id=N``;
-      4. OR the survivors' filter into the bloom; persist ``bloom.bin``.
+      4. OR the survivors' filter into the bloom; replace ``bloom.bin``
+         (tmp + ``os.replace``: a torn write leaves the previous filter).
 
     Crash-safety costs nothing extra: a bloom that over-approximates
     (rebuilt after a partial step 3/4) only adds exact probes, never a
@@ -281,8 +287,6 @@ def stream_bloom_dedup(stream_df: DataFrame, state_dir: str,
     ``batch_id`` provenance column); otherwise it returns the running
     StreamingQuery.
     """
-    import os
-
     from dataflow_spark.core.registry import get_operator
 
     key_list = [keys] if isinstance(keys, str) else list(keys)
@@ -322,8 +326,8 @@ def stream_bloom_dedup(stream_df: DataFrame, state_dir: str,
         state["bloom"] = bytes(np.bitwise_or(
             np.frombuffer(state["bloom"], dtype=np.uint8),
             np.frombuffer(delta, dtype=np.uint8)))
-        with open(bloom_path, "wb") as f:
-            f.write(state["bloom"])
+        commit_file(bloom_path,
+                    lambda tmp: Path(tmp).write_bytes(state["bloom"]))
 
     ckpt = os.path.join(state_dir, "ckpt")
     writer = (stream_df.writeStream.foreachBatch(process)

@@ -94,25 +94,6 @@ def test_export_training_corpus_prunes_and_clusters(spark, tmp_path):
     assert spark.read.parquet(out).count() == docs.count()
 
 
-def test_compact_parquet(spark, tmp_path):
-    import glob
-
-    path = str(tmp_path / "frag")
-    # fragment: 64 tiny files
-    spark.range(10_000).repartition(64).write.parquet(path)
-    assert len(glob.glob(f"{path}/*.parquet")) == 64
-
-    from dataflow_spark.sources.writers import compact_parquet
-
-    n = compact_parquet(spark, path, target_file_bytes=10 * 1024 * 1024,
-                        cluster_by=["id"])
-    assert n < 8
-    assert len(glob.glob(f"{path}/*.parquet")) == n
-    back = spark.read.parquet(path)
-    assert back.count() == 10_000
-    assert back.agg({"id": "min"}).collect()[0][0] == 0
-
-
 def test_export_training_corpus_shuffled(spark, tmp_path):
     import glob
     import hashlib

@@ -45,6 +45,45 @@ def test_stream_pipeline_foreachbatch(spark, events_dir, tmp_path):
     assert spark.read.parquet(out_path).count() == want
 
 
+def test_stream_pipeline_rerun_batch_is_written_once(spark, tmp_path,
+                                                     monkeypatch):
+    """Spark re-runs a batch whose write finished but whose commit did
+    not. The first batch raises right after its write (foreachBatch runs
+    in this driver process); the restarted query re-runs it, and the sink
+    still holds each of the 100 source rows once."""
+    from pyspark.sql import DataFrameWriter
+
+    in_dir = str(tmp_path / "in")
+    spark.range(100).withColumnRenamed("id", "doc_id").coalesce(1) \
+        .write.parquet(in_dir)
+    schema = spark.read.parquet(in_dir).schema
+    pipe = Pipeline([
+        get_operator("GeneralFilter", {"predicates": [F.col("doc_id") >= 0]}),
+    ])
+    out_path, chk = str(tmp_path / "out"), str(tmp_path / "chk")
+    real_save = DataFrameWriter.save
+    saves = []
+
+    def save_then_die(self, *args, **kwargs):
+        real_save(self, *args, **kwargs)
+        saves.append(1)
+        if len(saves) == 1:
+            raise RuntimeError("driver died after the batch write")
+
+    monkeypatch.setattr(DataFrameWriter, "save", save_then_die)
+    q = stream_pipeline(spark.readStream.schema(schema).parquet(in_dir),
+                        pipe, out_path, chk)
+    with pytest.raises(Exception, match="driver died"):
+        q.awaitTermination(120)
+    q2 = stream_pipeline(spark.readStream.schema(schema).parquet(in_dir),
+                         pipe, out_path, chk)
+    q2.awaitTermination(120)
+    assert len(saves) == 2  # the batch did run twice
+    back = spark.read.parquet(out_path)
+    assert back.count() == 100
+    assert back.select("doc_id").distinct().count() == 100
+
+
 def test_tumbling_counts_streaming_matches_batch(spark, events_dir):
     schema = spark.read.parquet(events_dir).schema
     stream = spark.readStream.schema(schema).parquet(events_dir)
@@ -368,3 +407,67 @@ def test_stream_bloom_dedup_resume(spark, tmp_path):
     out2 = stream_bloom_dedup(stream2, state, keys="text", order_key="doc_id")
     got = sorted(r["doc_id"] for r in out2.select("doc_id").collect())
     assert got == [1, 2, 11]  # 10 ("alpha") deduped against day 1
+
+
+def test_stream_bloom_dedup_torn_bloom_write_keeps_previous(spark, tmp_path,
+                                                            monkeypatch):
+    """A ``bloom.bin`` rewrite that raises partway leaves the previous
+    filter on disk, so the restarted stream resumes with the expected
+    survivors instead of rejecting a truncated filter."""
+    import builtins
+    import io
+
+    from dataflow_spark.streaming import stream_bloom_dedup
+
+    in_dir = str(tmp_path / "bloom_in3")
+    state = tmp_path / "bloom_state3"
+    schema = "doc_id bigint, text string"
+
+    def run():
+        stream = spark.readStream.schema(schema).parquet(in_dir)
+        return stream_bloom_dedup(stream, str(state), keys="text",
+                                  order_key="doc_id", bits_log2=16)
+
+    spark.createDataFrame([(1, "alpha"), (2, "beta")], ["doc_id", "text"]) \
+        .coalesce(1).write.mode("append").parquet(in_dir)
+    assert run().count() == 2
+    before = (state / "bloom.bin").read_bytes()
+
+    real_open = builtins.open
+
+    class Torn:
+        """Writes half of what it is given, then fails like a full disk."""
+
+        def __init__(self, f):
+            self.f = f
+
+        def write(self, data):
+            data = bytes(data)
+            self.f.write(data[:len(data) // 2])
+            self.f.flush()
+            raise OSError(28, "No space left on device")
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+    def torn_open(file, mode="r", *args, **kwargs):
+        f = real_open(file, mode, *args, **kwargs)
+        if ("w" in mode and isinstance(file, (str, os.PathLike))
+                and os.fspath(file).endswith("bloom.bin")):
+            return Torn(f)
+        return f
+
+    spark.createDataFrame([(10, "alpha"), (11, "gamma")], ["doc_id", "text"]) \
+        .coalesce(1).write.mode("append").parquet(in_dir)
+    with monkeypatch.context() as m:
+        m.setattr(builtins, "open", torn_open)
+        m.setattr(io, "open", torn_open)
+        with pytest.raises(Exception, match="No space left"):
+            run()
+    assert (state / "bloom.bin").read_bytes() == before
+
+    got = sorted(r["doc_id"] for r in run().select("doc_id").collect())
+    assert got == [1, 2, 11]
